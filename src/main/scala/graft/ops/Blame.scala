@@ -147,30 +147,6 @@ object Blame {
       .drop("repo_name")
   }
 
-  /** J7 — blame cache diff (collectors.py:334-373): decide which files
-    * can reuse the cached blame snapshot and which need a refresh,
-    * from the current tree listing and the compare-API change set.
-    *
-    * Set semantics: reusable = cached ∩ desired − changed (any status
-    * — removed/renamed drop the cache entry, modified invalidates it);
-    * refresh = desired − reusable. Expressed as anti/semi joins on the
-    * path key, the engine's only set-operation surface (§2.8).
-    *
-    * @param cachedPaths  paths present in the cached snapshot ("path")
-    * @param desiredPaths paths in the current tree ("path")
-    * @param changedPaths compare-API change set ("path", "status")
-    * @return (reusable, refresh) path DataFrames
-    */
-  def diffPaths(cachedPaths: DataFrame, desiredPaths: DataFrame,
-      changedPaths: DataFrame): (DataFrame, DataFrame) = {
-    val reusable = cachedPaths.select("path")
-      .join(desiredPaths.select("path"), Seq("path"), "left_semi")
-      .join(changedPaths.select("path"), Seq("path"), "left_anti")
-    val refresh = desiredPaths.select("path")
-      .join(reusable, Seq("path"), "left_anti")
-    (reusable, refresh)
-  }
-
   /** The refresh decision for one repo's blame snapshot
     * (collectors.py:310-373). `reuseWholeSnapshot` short-circuits all
     * file work (head SHA unchanged); otherwise `reusable` names cached

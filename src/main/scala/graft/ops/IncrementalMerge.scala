@@ -38,9 +38,11 @@ object IncrementalMerge {
     * so join strategy is left to Catalyst/AQE: a shuffle join on the
     * key at scale, auto-broadcast when the runtime size is small.
     * The semi and anti branches each evaluate `merged` (Spark reuses
-    * identical exchanges, not arbitrary subtrees) — callers re-running
-    * this over an expensive upstream should persist/checkpoint
-    * `merged` first.
+    * identical exchanges, not arbitrary subtrees), so `merged` should
+    * be materialized first when its upstream is expensive.
+    * LivePipeline passes a driver-local snapshot of the merged commits
+    * and snapshots the result, so neither the merge window nor the
+    * enrichment join re-runs per consumer.
     *
     * @param merged       post-merge record set (all rows)
     * @param enrichedKeys key set already carrying detail

@@ -36,6 +36,19 @@ import graft.ops.{Blame, IncrementalMerge}
   * constant in the number of fetched items; all heavy derivation
   * stays in Spark. Tests drive the whole thing through a scripted
   * transport (no network), live runs pass `new HttpTransport()`.
+  *
+  * Snapshot once: as soon as fetch, merge and enrichment produce a
+  * per-repo input frame (repo meta, merged issues, PRs, contributors,
+  * merged and enriched commits, PR commits, commit details, the
+  * external/target details, blame ranges), it is [[snapshot]]ted into
+  * a driver-local relation. The probe derive, the final derive, the
+  * repo_blame assembly and the nine concurrent writes of
+  * `Pipeline.persist` all read those rows, so no JSON parse, merge
+  * window or enrichment join re-runs per consumer, and no frame that
+  * reaches `persist` scans the repo's own output directory. Memory
+  * bound: a snapshot is one repo's parsed rows — no larger than the
+  * response strings `paginate` already holds on the driver — and it
+  * occupies no executor storage (nothing is cached or checkpointed).
   */
 object LivePipeline {
 
@@ -43,11 +56,14 @@ object LivePipeline {
       apiBase: String = "https://api.github.com",
       graphql: String = "https://api.github.com/graphql")
 
+  /** Empty local relation: the optimizer prunes plans over it. */
+  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
   private def readEntity(spark: SparkSession, records: Seq[String],
       schema: StructType): DataFrame = {
     import spark.implicits._
-    if (records.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    if (records.isEmpty) emptyOf(spark, schema)
     else spark.read.schema(schema).json(records.toDS())
   }
 
@@ -59,23 +75,28 @@ object LivePipeline {
         .withZone(java.time.ZoneOffset.UTC).format(ts.toInstant),
       java.nio.charset.StandardCharsets.UTF_8)
 
+  /** Materialize one repo's frame into a driver-local relation: one
+    * job evaluates the lineage, every later reader replays the rows
+    * (a frame that already is a local relation collects without a
+    * job). Only for per-repo, repo-bounded frames — see the class doc
+    * for the memory bound. */
+  private def snapshot(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** Read a prior run's persisted artifact as the refresh cache
     * (collectors.py:432-440 _load_cached_list: absent → no cache).
     * The rows are SNAPSHOTTED off the files (the reference holds its
     * cache in driver memory the same way): the run ends by
     * overwriting these very directories, and a lazy file-backed plan
-    * would be reading its own write target. Per-repo artifacts are
-    * repo-bounded, so the snapshot is the reference's own memory
-    * footprint, not a corpus-scale collect. */
+    * would be reading its own write target. It is one more input
+    * [[snapshot]], under the class doc's snapshot-once contract and
+    * memory bound. */
   private def cachedArtifact(spark: SparkSession, dir: String,
       name: String, schema: StructType): Option[DataFrame] = {
     val d = new java.io.File(dir, name)
     if (!d.isDirectory) None
-    else {
-      val rows = spark.read.schema(schema).json(d.getAbsolutePath).collect()
-      Some(spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema))
-    }
+    else Some(snapshot(spark.read.schema(schema).json(d.getAbsolutePath)))
   }
 
   /** Compare-API change set → ("path", "previous", "status") rows;
@@ -126,15 +147,15 @@ object LivePipeline {
     // Raw entities (runner.py:36-53): paginated REST scans. repo_meta,
     // PRs and contributors are always full fetches (the reference has
     // no incremental path for them).
-    val repoMeta = readEntity(spark,
-      paginate(transport, cfg, base, repoName), Entities.repoMeta)
-    val prs = readEntity(spark,
+    val repoMeta = snapshot(readEntity(spark,
+      paginate(transport, cfg, base, repoName), Entities.repoMeta))
+    val prs = snapshot(readEntity(spark,
       paginate(transport, capped(limits.maxPagesPrs),
         s"$base/pulls?state=all", repoName),
-      Entities.pullRequest)
-    val contributors = readEntity(spark,
+      Entities.pullRequest))
+    val contributors = snapshot(readEntity(spark,
       paginate(transport, cfg, s"$base/contributors", repoName),
-      Entities.contributor)
+      Entities.contributor))
 
     // Issues (collectors.py:572-609): cached snapshot → watermark →
     // ?since= delta → PR filter BEFORE merge → fetched-wins merge.
@@ -155,7 +176,7 @@ object LivePipeline {
     // the cache untouched means the next run retries the same window.
     // (Full fetches keep the reference's partial-data behavior,
     // http_client.py:395-401 — the next run recovers them anyway.)
-    val issues = issuesWm match {
+    val issues = snapshot(issuesWm match {
       case Some(_) if !issuesFetch.complete =>
         System.err.println(s"[warn] partial issues delta for $repoName " +
           "discarded; keeping cached snapshot")
@@ -164,7 +185,7 @@ object LivePipeline {
         .mergeLatest(cachedIssues.get, fetchedIssues, Seq("number"))
         .drop("from_fetched")
       case None => fetchedIssues
-    }
+    })
 
     // Commits (collectors.py:617-657): same shape, keyed by sha. Only
     // the nested git-actor dates exist in this schema (the reference's
@@ -180,8 +201,8 @@ object LivePipeline {
     }
     val commitsFetch = GithubClient.paginateChecked(transport,
       capped(limits.maxPagesCommits), commitsUrl, repoName)
-    val fetchedCommits = readEntity(spark, commitsFetch.records,
-      Entities.commit)
+    val fetchedCommits = snapshot(readEntity(spark, commitsFetch.records,
+      Entities.commit))
     // same partial-delta rule as issues: an incomplete ?since= fetch
     // is discarded rather than merged, so the watermark cannot skip
     // the lost pages. A delta cut off by the caller's OWN page cap is
@@ -197,9 +218,9 @@ object LivePipeline {
         System.err.println(s"[warn] partial commits delta for $repoName " +
           "discarded; keeping cached snapshot")
         cachedCommits.get
-      case Some(_) => IncrementalMerge
+      case Some(_) => snapshot(IncrementalMerge
         .mergeLatest(cachedCommits.get, fetchedCommits, Seq("sha"))
-        .drop("from_fetched")
+        .drop("from_fetched"))
       case None => fetchedCommits
     }
 
@@ -235,7 +256,7 @@ object LivePipeline {
       case None => mergedCommits.select(col("sha")).limit(0)
     }
     val statsType = Entities.commit("stats").dataType
-    val commits = IncrementalMerge.enrichNew(mergedCommits,
+    val commits = snapshot(IncrementalMerge.enrichNew(mergedCommits,
       alreadyEnriched, Seq("sha")) { fresh =>
       val shas = fresh.select(col("sha")).filter(col("sha").isNotNull)
         .distinct().collect().map(_.getString(0))
@@ -263,7 +284,7 @@ object LivePipeline {
       fresh.drop("files_changed", "files_changed_count", "stats")
         .join(details, Seq("sha"), "left")
         .select(cols.map(col): _*)
-    }
+    })
 
     // S4/S5 point lookups over deduplicated key sets, each parsed in
     // ONE batched Spark read.
@@ -272,11 +293,11 @@ object LivePipeline {
       paginate(transport, cfg, s"$base/pulls/$n/commits", repoName)
         .map(r => s"""{"pr_number":$n,"rec":$r}""")
     }.toSeq
-    val prCommits = readEntity(spark, prCommitRecords,
+    val prCommits = snapshot(readEntity(spark, prCommitRecords,
       StructType(Seq(
         StructField("pr_number", LongType),
         StructField("rec", Entities.commit))))
-      .select(col("pr_number"), col("rec.commit.message").as("message"))
+      .select(col("pr_number"), col("rec.commit.message").as("message")))
 
     val mergeShas = prs.select(col("merge_commit_sha"))
       .filter(col("merge_commit_sha").isNotNull)
@@ -297,28 +318,26 @@ object LivePipeline {
       StructField("sha", StringType),
       StructField("message", StringType),
       StructField("error", StringType)))
-    val commitDetails = readEntity(spark, mergeOk,
+    val commitDetails = snapshot(readEntity(spark, mergeOk,
       StructType(Seq(
         StructField("req_sha", StringType),
         StructField("rec", Entities.commit))))
       .select(col("req_sha").as("sha"),
         col("rec.commit.message").as("message"),
         lit(null).cast(StringType).as("error"))
-      .unionByName(readEntity(spark, mergeErr, detailSchema))
+      .unionByName(readEntity(spark, mergeErr, detailSchema)))
 
     // External refs: first extraction pass with empty details surfaces
     // the distinct misses (the reference's unique_refs set,
     // linkers.py:132-134); fetch each once; the final derive joins the
     // resolved authors. Targets of cross-repo links get the same
     // treatment (linkers.py:251,283-287).
-    def emptyOf(s: StructType): DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
     val probe = Pipeline.deriveAll(repoName, Pipeline.RepoInputs(
       repoMeta, issues, prs, contributors, commits,
       prCommits, commitDetails,
-      emptyOf(Pipeline.issueDetailsSchema),
-      emptyOf(Pipeline.targetDetailsSchema),
-      emptyOf(Pipeline.blameRangesSchema)), generatedAt, limits)
+      emptyOf(spark, Pipeline.issueDetailsSchema),
+      emptyOf(spark, Pipeline.targetDetailsSchema),
+      emptyOf(spark, Pipeline.blameRangesSchema)), generatedAt, limits)
 
     val issueWrapSchema = StructType(Seq(
       StructField("repo_name", StringType),
@@ -349,7 +368,7 @@ object LivePipeline {
     val extResponses = externalRefs.toIndexedSeq.map { case (r, n) =>
       (r, n, issueDetailResp(r, n))
     }
-    val extDetails = readEntity(spark, extResponses.collect {
+    val extDetails = snapshot(readEntity(spark, extResponses.collect {
       case (r, n, resp) if resp.status >= 200 && resp.status < 300 =>
         s"""{"repo_name":${jsonString(r)},"number":$n,"rec":${resp.body}}"""
     }, issueWrapSchema)
@@ -358,7 +377,7 @@ object LivePipeline {
       .unionByName(readEntity(spark, extResponses.collect {
         case (r, n, resp) if resp.status < 200 || resp.status >= 300 =>
           s"""{"repo_name":${jsonString(r)},"number":$n,"author":null}"""
-      }, Pipeline.issueDetailsSchema))
+      }, Pipeline.issueDetailsSchema)))
 
     val targetRefs = probe.crossRepoLinks
       .select(lower(col("target.repo_name")).as("r"),
@@ -380,7 +399,7 @@ object LivePipeline {
           StructField("url", StringType)))))))))
     // 404 targets are skipped entirely ⇒ join miss ⇒ null-target row
     // kept downstream (docs/project_analytics.md:18).
-    val targetDetails = readEntity(spark, targetRefs.toIndexedSeq.flatMap {
+    val targetDetails = snapshot(readEntity(spark, targetRefs.toIndexedSeq.flatMap {
       case (r, n) =>
         val resp = issueDetailResp(r, n)
         if (resp.status >= 200 && resp.status < 300)
@@ -391,7 +410,7 @@ object LivePipeline {
         col("rec.pull_request").isNotNull.as("is_pr"),
         col("rec.created_at").as("created_at"),
         col("rec.html_url").as("url"),
-        col("rec.user.login").as("author"))
+        col("rec.user.login").as("author")))
 
     // Blame (collectors.py:280-430): head-SHA short-circuit, else
     // compare-diff-driven partial refresh via Blame.planRefresh.
@@ -428,7 +447,7 @@ object LivePipeline {
     // Fetch + summarize helper for a set of paths (per-file failures
     // warn and skip, exactly collectors.py:386-389; empty blame
     // results union to nothing — the reference's skip).
-    def fetchRanges(paths: Seq[String]): DataFrame =
+    def fetchRanges(paths: Seq[String]): DataFrame = snapshot(
       paths.flatMap { p =>
         scala.util.Try(BlameFetch.fetchFileBlame(spark, transport, cfg,
           endpoints.graphql, owner, repo, defaultBranch, p)) match {
@@ -439,14 +458,14 @@ object LivePipeline {
             None
         }
       } match {
-        case Seq() => emptyOf(Pipeline.blameRangesSchema)
+        case Seq() => emptyOf(spark, Pipeline.blameRangesSchema)
         case dfs => dfs.reduce(_ unionByName _)
-      }
+      })
 
     val (blameRanges, reusablePaths): (DataFrame, Seq[String]) =
       if (headsEqual) {
         // collectors.py:310-317 early return: zero tree or blame work.
-        (emptyOf(Pipeline.blameRangesSchema), Seq.empty)
+        (emptyOf(spark, Pipeline.blameRangesSchema), Seq.empty)
       } else {
         // Tree listing → capped blob paths (runner.py:73-75, W2).
         val treeResp = getWithRetry(transport, cfg,
@@ -481,8 +500,13 @@ object LivePipeline {
         }
         val plan = Blame.planRefresh(cachedHead, currentHead,
           cachedPathsDf, desiredPaths.toDF("path"), changed)
-        val refreshSet = plan.refresh.collect().map(_.getString(0)).toSet
-        val reusableSet = plan.reusable.collect().map(_.getString(0)).toSet
+        // both sets in one action: label each side, union, collect once
+        val (refreshRows, reusableRows) = plan.refresh
+          .select(col("path"), lit(true).as("refresh"))
+          .unionByName(plan.reusable.select(col("path"), lit(false).as("refresh")))
+          .collect().partition(_.getBoolean(1))
+        val refreshSet = refreshRows.map(_.getString(0)).toSet
+        val reusableSet = reusableRows.map(_.getString(0)).toSet
         (fetchRanges(desiredPaths.filter(refreshSet)),
           desiredPaths.filter(reusableSet))
       }

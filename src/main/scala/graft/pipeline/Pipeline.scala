@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructFiel
 
 import graft.io.JsonEntities
 import graft.model.Entities
-import graft.ops.{Blame, Linkers}
+import graft.ops.{Blame, Jobs, Linkers}
 
 /** End-to-end per-repo derivation DAG (reference
   * src/retrieval/runner.py:27-77 process_repo): from the raw entity
@@ -207,27 +207,29 @@ object Pipeline {
   }
 
   /** Persist all nine artifacts under `outDir/{owner_repo}/` as
-    * deterministic sorted JSON (K1 contract; runner.py save_json ×9). */
+    * deterministic sorted JSON (K1 contract; runner.py save_json ×9).
+    * The nine writes target independent directories, so they run
+    * concurrently (`Jobs.par`); each is still one sorted part file.
+    * No output frame may read `outDir/{owner_repo}/` itself — a write
+    * would race the reads of its own target. */
   def persist(repoName: String, out: RepoOutputs, outDir: String): Unit = {
     val dir = s"$outDir/${repoName.replace("/", "_")}"
-    JsonEntities.writeDeterministic(out.repoMeta, s"$dir/repo_meta",
-      Seq("repo_name"))
-    JsonEntities.writeDeterministic(out.issues, s"$dir/issues",
-      Seq("number"))
-    JsonEntities.writeDeterministic(out.pullRequests, s"$dir/pull_requests",
-      Seq("number"))
-    JsonEntities.writeDeterministic(out.contributors, s"$dir/contributors",
-      Seq("login"))
-    JsonEntities.writeDeterministic(out.commits, s"$dir/commits",
-      Seq("sha"))
-    JsonEntities.writeDeterministic(out.prsWithLinkedIssues,
-      s"$dir/prs_with_linked_issues", Seq("pr_number"))
-    JsonEntities.writeDeterministic(out.issuesClosedByCommits,
-      s"$dir/issues_closed_by_commits", Seq("commit_sha", "issue_number"))
-    JsonEntities.writeDeterministic(out.crossRepoLinks,
-      s"$dir/cross_repo_links", Seq("source.number", "target.number"))
-    JsonEntities.writeDeterministic(out.repoBlame, s"$dir/repo_blame",
-      Seq("repo_name"))
+    val writes = Seq(
+      (out.repoMeta, "repo_meta", Seq("repo_name")),
+      (out.issues, "issues", Seq("number")),
+      (out.pullRequests, "pull_requests", Seq("number")),
+      (out.contributors, "contributors", Seq("login")),
+      (out.commits, "commits", Seq("sha")),
+      (out.prsWithLinkedIssues, "prs_with_linked_issues", Seq("pr_number")),
+      (out.issuesClosedByCommits, "issues_closed_by_commits",
+        Seq("commit_sha", "issue_number")),
+      (out.crossRepoLinks, "cross_repo_links",
+        Seq("source.number", "target.number")),
+      (out.repoBlame, "repo_blame", Seq("repo_name"))
+    ).map { case (df, name, keys) =>
+      () => JsonEntities.writeDeterministic(df, s"$dir/$name", keys)
+    }
+    Jobs.par(writes, parallelism = writes.size)
   }
 
   /** Multi-repo run (runner.py:80-94 main): process each repo with

@@ -173,4 +173,58 @@ class IoSpec extends SparkSpecBase {
     val back = spark.read.json(dir).orderBy("number").collect()
     assert(back.map(_.getAs[Long]("number")).toSeq == Seq(1L, 2L, 3L))
   }
+
+  test("concurrent persist writes the same part files as sequential writes") {
+    // nine shuffled multi-partition frames; persist fans the writes out
+    // concurrently, the reference writes them one by one
+    def frame(cols: String*): org.apache.spark.sql.DataFrame =
+      spark.range(0, 300, 1, 4).repartition(4).selectExpr(cols: _*)
+    // every sort key is unique (multipliers coprime to 300), as in the
+    // real artifacts, so the sorted bytes are fully determined
+    val repoMeta = frame("concat('o/r', id) AS repo_name",
+      "concat('b', id) AS default_branch")
+    val issues = frame("'o/r' AS repo_name", "id * 7 % 300 AS number",
+      "concat('t', id) AS title")
+    val prs = frame("'o/r' AS repo_name", "id * 11 % 300 AS number")
+    val contributors = frame("concat('u', id * 13 % 300) AS login",
+      "id AS contributions")
+    val commits = frame("sha1(cast(id AS string)) AS sha",
+      "concat('m', id) AS message")
+    val prLinks = frame("id * 17 % 300 AS pr_number",
+      "array(id, id + 1) AS issues")
+    val closedBy = frame("sha1(cast(id % 50 AS string)) AS commit_sha",
+      "id * 19 % 300 AS issue_number")
+    val crossLinks = frame("named_struct('number', id % 40) AS source",
+      "named_struct('number', id * 23 % 300) AS target")
+    val repoBlame = frame("concat('o/r', id) AS repo_name",
+      "array(named_struct('path', concat('f', id))) AS files")
+    val out = graft.pipeline.Pipeline.RepoOutputs(repoMeta, issues, prs,
+      contributors, commits, prLinks, closedBy, crossLinks, repoBlame)
+    val root = Files.createTempDirectory("graft-persist").toString
+    graft.pipeline.Pipeline.persist("o/r", out, s"$root/par")
+    val sequential = Seq(
+      (repoMeta, "repo_meta", Seq("repo_name")),
+      (issues, "issues", Seq("number")),
+      (prs, "pull_requests", Seq("number")),
+      (contributors, "contributors", Seq("login")),
+      (commits, "commits", Seq("sha")),
+      (prLinks, "prs_with_linked_issues", Seq("pr_number")),
+      (closedBy, "issues_closed_by_commits", Seq("commit_sha", "issue_number")),
+      (crossLinks, "cross_repo_links", Seq("source.number", "target.number")),
+      (repoBlame, "repo_blame", Seq("repo_name")))
+    sequential.foreach { case (df, name, keys) =>
+      JsonEntities.writeDeterministic(df, s"$root/seq/o_r/$name", keys)
+    }
+    def part(dir: String): Array[Byte] = {
+      val parts = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("part-"))
+      assert(parts.length == 1, s"$dir: ${parts.map(_.getName).toSeq}")
+      Files.readAllBytes(parts.head.toPath)
+    }
+    sequential.foreach { case (_, name, _) =>
+      val p = part(s"$root/par/o_r/$name")
+      assert(p.nonEmpty, name)
+      assert(java.util.Arrays.equals(p, part(s"$root/seq/o_r/$name")), name)
+    }
+  }
 }

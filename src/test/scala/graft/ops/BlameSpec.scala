@@ -112,16 +112,23 @@ class BlameSpec extends SparkSpecBase {
       .map(_.getAs[String]("path")).toSet == Set("a.txt", "b.txt"))
   }
 
-  test("diffPaths: reusable = cached ∩ desired − changed; refresh = rest") {
+  test("planRefresh: reusable = cached ∩ desired − changed; refresh = rest") {
     val pathT = StructType(Seq(StructField("path", StringType)))
     val chT = StructType(Seq(StructField("path", StringType),
+      StructField("previous", StringType),
       StructField("status", StringType)))
-    val cached = df(pathT, Row("a"), Row("b"), Row("c"), Row("gone"))
+    // "capped" is cached and unchanged but no longer desired (e.g. past
+    // the file cap): it is neither reused nor refreshed
+    val cached = df(pathT, Row("a"), Row("b"), Row("c"), Row("gone"),
+      Row("capped"))
     val desired = df(pathT, Row("a"), Row("b"), Row("c"), Row("new"))
-    val changed = df(chT, Row("b", "modified"), Row("gone", "removed"))
-    val (reuse, refresh) = Blame.diffPaths(cached, desired, changed)
-    assert(reuse.collect().map(_.getString(0)).toSet == Set("a", "c"))
-    assert(refresh.collect().map(_.getString(0)).toSet == Set("b", "new"))
+    val changed = df(chT, Row("b", null, "modified"),
+      Row("gone", null, "removed"))
+    val plan = Blame.planRefresh(Some("h1"), Some("h2"), cached, desired,
+      Some(changed))
+    assert(!plan.reuseWholeSnapshot)
+    assert(plan.reusable.collect().map(_.getString(0)).toSet == Set("a", "c"))
+    assert(plan.refresh.collect().map(_.getString(0)).toSet == Set("b", "new"))
   }
 
   test("summarizeBlameAll keys on (repo_name, path): same path, two repos") {

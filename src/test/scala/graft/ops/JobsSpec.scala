@@ -18,6 +18,41 @@ class JobsSpec extends SparkSpecBase {
     assert(e.getMessage == "boom")
   }
 
+  test("fan-out jobs keep the caller's job group and description") {
+    // the pool threads must not overwrite the caller's group: a
+    // caller's cancelJobGroup and job counting by group reach the
+    // fan-out jobs, and listeners see the caller's description
+    val sc = spark.sparkContext
+    val group = s"jobs-par-caller-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(String.valueOf(
+            j.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "caller description")
+    try {
+      val counts = Jobs.par(Seq(
+        () => spark.range(10).count(),
+        () => spark.range(20).count(),
+        () => spark.range(30).count()))
+      assert(counts == Seq(10L, 20L, 30L))
+      // job submission is synchronous: the tracker already has them
+      assert(sc.statusTracker.getJobIdsForGroup(group).length >= 3)
+      val deadline = System.currentTimeMillis() + 10000
+      while (seen.size < 3 && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(seen.size >= 3, seen.toString)
+      seen.forEach(d => assert(d == "caller description", seen.toString))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("a failing thunk cancels the sibling's in-flight Spark job") {
     // sibling: a Spark job whose tasks would run ~30 s unless
     // cancelled; failer: throws once the sibling's job has STARTED

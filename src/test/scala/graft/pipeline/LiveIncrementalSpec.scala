@@ -431,6 +431,92 @@ class LiveIncrementalSpec extends SparkSpecBase {
       s"job count grew with item count: $jobsSmall -> $jobsBig")
   }
 
+  // ---- refresh vs cold crawl over one evolving corpus ----
+  // cold: issues 5 (v1) and 9, commit c1 touching src/a.js. The delta
+  // updates issue 5 and adds commit c2, which adds src/b.js; the blame
+  // of src/a.js does not change.
+
+  private val c1Detail = page(
+    """{"sha":"c1","files":[{"filename":"src/a.js"}],
+      |"stats":{"additions":5,"deletions":1,"total":6}}"""
+      .stripMargin.replaceAll("\n", ""))
+  private val c2Detail = page(
+    """{"sha":"c2","files":[{"filename":"src/b.js"}],
+      |"stats":{"additions":3,"deletions":0,"total":3}}"""
+      .stripMargin.replaceAll("\n", ""))
+  private val treeA = page("""{"tree":[{"path":"src/a.js","type":"blob"}]}""")
+  private val treeAB = page(
+    """{"tree":[{"path":"src/a.js","type":"blob"},
+      |{"path":"src/b.js","type":"blob"}]}""".stripMargin.replaceAll("\n", ""))
+  private val blames = Map(
+    "src/a.js" -> blameBody("root1", "c1", 12, "2024-02-01T00:00:00Z"),
+    "src/b.js" -> blameBody("root2", "c2", 5, "2024-03-01T00:00:00Z"))
+  private val coldCorpus = common ++ Map(
+    s"$base/issues?state=all&per_page=100" -> page(s"[$issue5v1,$issue9]"),
+    s"$base/commits?per_page=100" -> page(s"[$c1]"),
+    s"$base/commits/c1" -> c1Detail,
+    s"$base/git/trees/trunk?recursive=1" -> treeA)
+  private val deltaCorpus = common ++ Map(
+    s"$base/issues?state=all&since=2024-01-02T23%3A55%3A00Z&per_page=100" ->
+      page(s"[$issue5v2]"),
+    s"$base/commits?since=2024-01-31T23%3A55%3A00Z&per_page=100" ->
+      page(s"[$c2]"),
+    s"$base/commits/c2" -> c2Detail,
+    s"$base/git/trees/trunk?recursive=1" -> treeAB,
+    s"$base/compare/c1...c2" -> page(
+      """{"files":[{"filename":"src/b.js","status":"added"}]}"""))
+  private val finalCorpus = common ++ Map(
+    s"$base/issues?state=all&per_page=100" -> page(s"[$issue5v2,$issue9]"),
+    s"$base/commits?per_page=100" -> page(s"[$c2,$c1]"),
+    s"$base/commits/c1" -> c1Detail,
+    s"$base/commits/c2" -> c2Detail,
+    s"$base/git/trees/trunk?recursive=1" -> treeAB)
+
+  private val artifacts = Seq("repo_meta", "issues", "pull_requests",
+    "contributors", "commits", "prs_with_linked_issues",
+    "issues_closed_by_commits", "cross_repo_links", "repo_blame")
+
+  test("a refresh writes the same nine artifacts as a cold crawl") {
+    val refreshed = java.nio.file.Files
+      .createTempDirectory("graft-live-refreshed").toString
+    run(new ScriptedGithub(coldCorpus, blames), refreshed)
+    val t = new ScriptedGithub(deltaCorpus, blames)
+    run(t, refreshed)
+    // it really was the incremental path: only b.js was re-blamed
+    assert(t.posts.length == 1 && t.posts.head.contains("src/b.js"),
+      t.posts.toString)
+    val cold = java.nio.file.Files
+      .createTempDirectory("graft-live-cold").toString
+    run(new ScriptedGithub(finalCorpus, blames), cold)
+    def part(root: String, name: String): String = {
+      val parts = new java.io.File(s"$root/o_r/$name").listFiles()
+        .filter(_.getName.startsWith("part-"))
+      assert(parts.length == 1, s"$root/$name")
+      new String(java.nio.file.Files.readAllBytes(parts.head.toPath), "UTF-8")
+    }
+    for (name <- artifacts)
+      assert(part(refreshed, name) == part(cold, name), name)
+    assert(part(cold, "issues").contains("crash (fixed)"))
+    assert(part(cold, "repo_blame").contains("src/b.js"))
+  }
+
+  test("refresh job budget: head-moving delta on the fixture repo") {
+    // A refresh snapshots its inputs once, so the nine writes, the two
+    // derives and the blame assembly do not re-run the JSON parse,
+    // merge window and enrichment joins. Budget = the measured 79 jobs
+    // plus the same ±2 AQE slack as the job-count test above; raising
+    // it needs a reason.
+    val outDir = java.nio.file.Files
+      .createTempDirectory("graft-live-budget").toString
+    run(new ScriptedGithub(coldCorpus, blames), outDir)
+    val group = s"live-refresh-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, "live refresh budget")
+    try run(new ScriptedGithub(deltaCorpus, blames), outDir)
+    finally spark.sparkContext.clearJobGroup()
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    assert(jobs <= 79 + 2, s"refresh ran $jobs Spark jobs")
+  }
+
   test("full pipeline: retrieval completes, then the lake indexes") {
     // pipeline/runner.py:11-14 — one call fetches the corpus live and
     // bulk-indexes every produced artifact.
