@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * that response errors or the ref target is not a Commit (e.g. a
   * lightweight-tag default branch), the same ranges are re-requested
   * through `object(expression:)`. Responses parse through Spark's
-  * JSON reader with an explicit schema — never string matching — and
+  * `from_json` with an explicit schema — never string matching — and
   * flatten to the `Pipeline.blameRangesSchema` row shape
   * `Blame.summarizeBlameAll` consumes.
   */
@@ -78,9 +78,14 @@ object BlameFetch {
       StructField("root_commit_oid", StringType) +:
       range.fields.toIndexedSeq)
 
+  /** `from_json` over a one-row local relation: the optimizer folds
+    * the parse into the relation, so the per-file response check in
+    * [[commitRows]] runs on the driver with no Spark job. */
   private def parse(spark: SparkSession, body: String): DataFrame = {
     import spark.implicits._
-    spark.read.schema(responseSchema).json(Seq(body).toDS())
+    Seq(body).toDF("v")
+      .select(from_json(col("v"), responseSchema).as("j"))
+      .select(col("j.*"))
   }
 
   /** (root_commit_oid, ranges rows) from a parsed Commit target, None

@@ -56,38 +56,6 @@ object Layout {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Effectively-once guard for foreachBatch index MAINTENANCE:
-    * Structured Streaming's foreachBatch is AT-LEAST-ONCE — a crash
-    * between sink work and checkpoint commit re-delivers the same
-    * (batchId, rows) on restart. An idempotent body (tombstone
-    * deletes) shrugs replay off; an APPEND body would double-insert,
-    * so it runs under the canonical batch-commit-log defense: skip if
-    * `<dir>/_batch_commits/<id>` exists, else run the body and touch
-    * the marker AFTER it completes. Returns whether the body ran.
-    * The residual window — body finished, crash before the marker —
-    * re-runs the body once on replay. NOTHING in the engine uses
-    * this guard anymore: both index families' refresh streams commit
-    * through the staged-segment manifest protocol (see
-    * [[graft.ops.FullText.appendToTextIndex]] /
-    * [[graft.queries.SimilarityQueries.appendToIvfPqIndex]]), where
-    * the batch's segment id in the applied-segments registry IS the
-    * commit record, with no residual window. Kept as the generic
-    * defense for EXTERNAL foreachBatch bodies that write unversioned
-    * targets. Markers accumulate one EMPTY file per micro-batch;
-    * they are metadata of the stream, dropped whenever the index is
-    * rebuilt. */
-  def onceForBatch(spark: SparkSession, indexDir: String,
-      batchId: Long)(body: => Unit): Boolean = {
-    val marker = new Path(s"$indexDir/_batch_commits/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) false
-    else {
-      body
-      fs.create(marker, true).close()
-      true
-    }
-  }
-
   // ---------------------------------------------------------------
   // Mutation lease: SINGLE MUTATOR AT A TIME, enforced
   // ---------------------------------------------------------------
@@ -97,8 +65,7 @@ object Layout {
     * refresh+takedown deployment — block here and run one at a
     * time, never seeing each other's filesystem lease). Keyed by the
     * normalized path string; ReentrantLock so a mutator that calls
-    * another mutator (multi-field delete delegating to the
-    * single-field path, a refresh stream's compaction hook) nests
+    * another mutator (a refresh stream's compaction hook) nests
     * freely. */
   private val jvmLocks =
     new java.util.concurrent.ConcurrentHashMap[String,

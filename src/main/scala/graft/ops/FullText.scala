@@ -73,9 +73,7 @@ object FullText {
       queryTerms: Seq[String], k: Int = 20,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val analyzed = docs
-      .select(col(idCol).as("doc_id"), analyze(col(textCol)).as("toks"))
-      .withColumn("doclen", size(col("toks")))
+    val analyzed = analyzedText(docs, idCol, textCol)
     // One broadcast row; at index scale this comes from segment stats.
     val stats = analyzed.agg(
       count(lit(1)).as("n_docs"), avg(col("doclen")).as("avgdl"))
@@ -166,9 +164,7 @@ object FullText {
       queryTerms: Seq[String], k: Int = 20, maxEdits: Int = 1,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val analyzed = docs
-      .select(col(idCol).as("doc_id"), analyze(col(textCol)).as("toks"))
-      .withColumn("doclen", size(col("toks")))
+    val analyzed = analyzedText(docs, idCol, textCol)
     val stats = analyzed.agg(
       count(lit(1)).as("n_docs"), avg(col("doclen")).as("avgdl"))
     // query-term frame: tiny literal side of the vocab expansion
@@ -256,41 +252,34 @@ object FullText {
       storePositions: Boolean = true,
       storeTermVectors: Boolean = false): Unit =
     graft.io.Layout.withMutationLease(docs.sparkSession, indexDir) {
-      writeTextIndexImpl(docs, idCol, textCol, indexDir, buckets,
-        storePositions, storeTermVectors)
+      writeTextIndexImpl(docs, analyzedText(docs, idCol, textCol),
+        IndexStats(Nil, Seq((Nil, 0L, 0L)), storePositions,
+          storeTermVectors, buckets), indexDir)
     }
 
-  private def writeTextIndexImpl(docs: DataFrame, idCol: String,
-      textCol: String, indexDir: String, buckets: Int,
-      storePositions: Boolean, storeTermVectors: Boolean): Unit = {
+  /** The writer of BOTH layouts. `analyzed` is the `(keys…, doc_id,
+    * toks, doclen)` frame; `layout` is the stats artifact to record
+    * with zero counts — its key columns (Nil = single-field,
+    * Seq("field") = multi-field), the key values it keeps a row for,
+    * and the layout options. */
+  private def writeTextIndexImpl(docs: DataFrame, analyzed: DataFrame,
+      layout: IndexStats, indexDir: String): Unit = {
     val spark = docs.sparkSession
     // mode("overwrite") semantics for the WHOLE layout: a previous
     // index at this path may hold committed generations, segments,
     // folded dirs, or a tombstone set (see liveArtifactDir) that
     // would SHADOW or mask the fresh root artifacts
     clearDerivedLayout(spark, indexDir)
-    val analyzed = docs
-      .select(col(idCol).as("doc_id"), analyze(col(textCol)).as("toks"))
-      .withColumn("doclen", size(col("toks")))
-    val tf0 = analyzed
-      .select(col("doc_id"), col("doclen"),
-        posexplode_outer(col("toks")).as(Seq("pos", "term")))
-      .filter(col("term").isNotNull)
-      .groupBy(col("term"), col("doc_id"), col("doclen"))
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
     // storePositions=false is Lucene's IndexOptions DOCS_AND_FREQS:
     // roughly halves postings bytes for term-only deployments;
-    // phraseSearchStored then (correctly) fails on the missing column
-    val tf = if (storePositions) tf0 else tf0.drop("positions")
-    // cluster by bucket before the partitioned write: one file per
+    // phraseSearchStored then (correctly) fails on the missing column.
+    // Clustered by bucket before the partitioned write: one file per
     // bucket instead of tasks x buckets part-files (the compacted
     // layout from day one; a 32-task write into 16 bucket dirs
     // otherwise lands up to 512 files, and every bucket-pruned scan
     // pays the file count)
-    tf.withColumn("bucket", pmod(hash(col("term")), lit(buckets)))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("term"))
+    bucketedPostings(
+      termFreqs(analyzed, layout.keys, layout.hasPositions), layout.buckets)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$indexDir/postings")
     // ONE analyzer pass, genuinely: the postings write above is the
@@ -305,49 +294,38 @@ object FullText {
     // just written (and of the raw input) — fan them out on driver
     // threads (guide §2.6) instead of four sequential round-trips
     val statParts = graft.ops.Jobs.par(Seq[() => Any](
-      () => post.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      () => post.groupBy((layout.keys :+ "term").map(col): _*)
+        .agg(count(lit(1)).as("df"))
         .write.mode("overwrite").parquet(s"$indexDir/df"),
       // term vectors = Lucene's optional FORWARD index (doc → terms),
       // DOC-bucketed so a single document's vector is a file-pruned
-      // point read — what more_like_this and highlighting-by-stored-
-      // vector need at query time (off by default, as in Lucene)
-      () => if (storeTermVectors)
-        post.select(col("doc_id"), col("term"), col("tf"))
-          .withColumn("dbucket", pmod(hash(col("doc_id")), lit(buckets)))
-          .repartition(col("dbucket"))
-          .sortWithinPartitions(col("dbucket"), col("doc_id"))
+      // point read — what more_like_this, highlighting-by-stored-
+      // vector and the exact delete decrement need (off by default,
+      // as in Lucene)
+      () => if (layout.hasTermVectors)
+        bucketedTermVectors(post, layout.keys, layout.buckets)
           .write.mode("overwrite").partitionBy("dbucket")
           .parquet(s"$indexDir/termvectors"),
       () => docs.count(),
-      () => post.agg(coalesce(sum(col("tf")), lit(0L)))
-        .head().getLong(0)))
+      () => sumsByKey(post, layout.keys, "tf")))
     // Statistics without re-touching documents: n_docs is a plain
-    // count of the input (zero-token docs included — they have no
-    // posting rows), and sum_doclen = Σ tf over all postings, since
-    // a doc's analyzer doclen IS the sum of its term frequencies.
-    // sum_doclen (a long) makes minus-one-document statistics EXACT:
-    // avg over long input is sum.toDouble/count in Spark, so
-    // (sum_doclen − seedLen)/(n_docs − 1) reproduces a re-aggregation
-    // bit-for-bit (the moreLikeThisStored contract).
-    // has_positions/has_termvectors record the writer's layout
-    // options IN the 1-row artifact — the append path reads them
-    // there instead of probing the filesystem (a java.io.File probe
-    // resolves only locally; on hdfs://-s3a:// index dirs it reports
-    // "absent" and the forward artifact silently stops refreshing)
+    // count of the input (zero-token docs — and zero-token fields —
+    // included: they have no posting rows), and sum_doclen = Σ tf
+    // per key, since a doc's analyzer doclen IS the sum of its term
+    // frequencies. sum_doclen (a long) makes minus-one-document
+    // statistics EXACT: avg over long input is sum.toDouble/count in
+    // Spark, so (sum_doclen − seedLen)/(n_docs − 1) reproduces a
+    // re-aggregation bit-for-bit (the moreLikeThisStored contract).
+    // The layout options and the term-bucket count are recorded IN
+    // the artifact: append/delete/search read them there instead of
+    // probing the filesystem (a java.io.File probe resolves only
+    // locally) or trusting a caller parameter (a mismatched bucket
+    // count would land postings in, and prune scans to, the WRONG
+    // bucket partitions with no error anywhere)
     val nDocs = statParts(2).asInstanceOf[Long]
-    require(nDocs > 0, "writeTextIndex: empty corpus")
-    val sumLen = statParts(3).asInstanceOf[Long]
-    import spark.implicits._
-    // `buckets` records the layout's term-bucket count IN the stats
-    // artifact: append/delete/search read it from there (statsBuckets)
-    // instead of trusting a caller parameter — a mismatched parameter
-    // would land postings in, and prune scans to, the WRONG bucket
-    // partitions with no error anywhere
-    graft.io.TinyParquet.write(
-      Seq((nDocs, sumLen.toDouble / nDocs, sumLen, storePositions,
-        storeTermVectors, buckets))
-        .toDF("n_docs", "avgdl", "sum_doclen", "has_positions",
-          "has_termvectors", "buckets"),
+    require(nDocs > 0, "empty corpus: an index needs at least one document")
+    writeStats(spark, layout.shifted(nDocs,
+      statParts(3).asInstanceOf[Map[Seq[String], Long]]),
       s"$indexDir/stats")
   }
 
@@ -402,13 +380,17 @@ object FullText {
       indexDir: String, buckets: Int = 16,
       segmentId: Option[String] = None): Unit =
     graft.io.Layout.withMutationLease(spark, indexDir) {
-      appendToTextIndexImpl(spark, fresh, idCol, textCol, indexDir,
-        buckets, segmentId)
+      appendToTextIndexImpl(spark, fresh,
+        analyzedText(fresh, idCol, textCol), Nil, indexDir, buckets,
+        segmentId)
     }
 
+  /** The append of BOTH layouts: `analyzed` is the delta's `(keys…,
+    * doc_id, toks, doclen)` frame, and `keys` must be the key
+    * columns the index's stats artifact records. */
   private def appendToTextIndexImpl(
       spark: org.apache.spark.sql.SparkSession,
-      fresh: DataFrame, idCol: String, textCol: String,
+      fresh: DataFrame, analyzed: DataFrame, keys: Seq[String],
       indexDir: String, buckets: Int,
       segmentId: Option[String]): Unit = {
     val art = liveArtifactDir(spark, indexDir)
@@ -418,10 +400,10 @@ object FullText {
     val (oldPost, oldTv, applied) = manifestState(spark, indexDir, art)
     if (segmentId.isDefined && applied.contains(segName))
       return // the batch's commit record exists: full replay no-op
-    val st = graft.io.TinyParquet.readFrame(spark, s"$art/stats").head()
-    val bk = statsBuckets(st, buckets)
-    val hasPos = statsFlag(st, "has_positions", default = true)
-    val hasTv = hasTermVectors(spark, indexDir, art, st)
+    val st = readStats(spark, indexDir, art, buckets)
+    require(st.keys == keys,
+      s"$indexDir is keyed by (${st.keys.mkString(",")}), the append " +
+        s"by (${keys.mkString(",")}): append through the writer's face")
     // stage into WRITER-UNIQUE names (gen dir + the segment's data
     // dir) — renamed to their final names inside the commit, after
     // the lease fence re-read, so a fenced-out zombie's staging I/O
@@ -439,19 +421,8 @@ object FullText {
     // tf frame) serves postings, term vectors, the df merge and the
     // stats increment — the delta's doc count needs no analysis and
     // its token total is Σ tf
-    val analyzed = fresh
-      .select(col(idCol).as("doc_id"), analyze(col(textCol)).as("toks"))
-      .withColumn("doclen", size(col("toks")))
-    val freshTf0 = analyzed
-      .select(col("doc_id"), col("doclen"),
-        posexplode_outer(col("toks")).as(Seq("pos", "term")))
-      .filter(col("term").isNotNull)
-      .groupBy(col("term"), col("doc_id"), col("doclen"))
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-    val freshTf =
-      (if (hasPos) freshTf0 else freshTf0.drop("positions"))
-        .localCheckpoint()
+    val freshTf = termFreqs(analyzed, keys, st.hasPositions)
+      .localCheckpoint()
     // a non-empty batch can still analyze to ZERO tokens (all-stopword
     // docs — a case the layout supports): an empty partitionBy write
     // leaves a _SUCCESS-only directory that poisons every later
@@ -467,52 +438,41 @@ object FullText {
     // stats increment (which needs the counts) runs after
     val newPost = if (deltaEmpty) oldPost else oldPost :+ s"$segName/postings"
     val newTv = if (deltaEmpty) oldTv else oldTv :+ s"$segName/termvectors"
+    val termKey = keys :+ "term"
     val parts = graft.ops.Jobs.par(Seq[() => Any](
       () => if (!deltaEmpty)
-        freshTf
-          .withColumn("bucket", pmod(hash(col("term")), lit(bk)))
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("bucket"), col("term"))
+        bucketedPostings(freshTf, st.buckets)
           .write.partitionBy("bucket")
           .parquet(s"$indexDir/$segStaged/postings"),
-      () => if (!deltaEmpty && hasTv)
-        freshTf.select(col("doc_id"), col("term"), col("tf"))
-          .withColumn("dbucket", pmod(hash(col("doc_id")), lit(bk)))
-          .repartition(col("dbucket"))
-          .sortWithinPartitions(col("dbucket"), col("doc_id"))
+      () => if (!deltaEmpty && st.hasTermVectors)
+        bucketedTermVectors(freshTf, keys, st.buckets)
           .write.partitionBy("dbucket")
           .parquet(s"$indexDir/$segStaged/termvectors"),
       // dictionary merge: old df ⟗ delta df — the ONLY non-delta input
       // is the dictionary artifact itself (Heaps-law-sized, never the
       // postings); staged into the NEW generation, never in place
       () => spark.read.parquet(s"$art/df")
-        .join(freshTf.groupBy(col("term"))
-          .agg(count(lit(1)).as("df_delta")), Seq("term"), "full_outer")
-        .select(col("term"),
+        .join(freshTf.groupBy(termKey.map(col): _*)
+          .agg(count(lit(1)).as("df_delta")), termKey, "full_outer")
+        .select(termKey.map(col) :+
           (coalesce(col("df"), lit(0L)) +
-            coalesce(col("df_delta"), lit(0L))).as("df"))
+            coalesce(col("df_delta"), lit(0L))).as("df"): _*)
         .write.parquet(s"$stage/df"),
       () => fresh.count(),
-      () => freshTf.agg(coalesce(sum(col("tf")), lit(0L)))
-        .head().getLong(0),
+      () => sumsByKey(freshTf, keys, "tf"),
       () => if (graft.io.Layout.pathExists(spark, s"$art/tombstones"))
         graft.io.Layout.copyArtifact(spark, s"$art/tombstones",
           s"$stage/tombstones"),
       () => writeManifest(spark, stage,
         newPost.map(("postings", _)) ++
-          (if (hasTv) newTv.map(("termvectors", _)) else Nil) ++
+          (if (st.hasTermVectors) newTv.map(("termvectors", _)) else Nil) ++
           (applied :+ segName).distinct.map(("applied", _)))))
-    // stats increment: counters + delta aggregates (1-row artifact,
-    // already collected above, so the overwrite never races the read)
-    val nDocs = st.getAs[Long]("n_docs") + parts(3).asInstanceOf[Long]
-    val sumLen = st.getAs[Long]("sum_doclen") +
-      parts(4).asInstanceOf[Long]
-    import spark.implicits._
-    graft.io.TinyParquet.write(
-      Seq((nDocs, sumLen.toDouble / nDocs, sumLen, hasPos, hasTv, bk))
-        .toDF("n_docs", "avgdl", "sum_doclen", "has_positions",
-          "has_termvectors", "buckets"),
-      s"$stage/stats")
+    // stats increment: every delta doc counts in every key (zero-token
+    // fields included, like the writer); per-key Σ tf is the token
+    // total; avgdl = sum/n in exact-integer arithmetic — bit-identical
+    // to a rebuild (integer double sums are exact < 2^53)
+    writeStats(spark, st.shifted(parts(3).asInstanceOf[Long],
+      parts(4).asInstanceOf[Map[Seq[String], Long]]), s"$stage/stats")
     graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
       gen, art,
       sideRenames = if (deltaEmpty) Nil else Seq(segStaged -> segName))
@@ -853,16 +813,7 @@ object FullText {
       .orderBy(col("qid"))
   }
 
-  /** The live view of a stored index's postings: the raw
-    * bucket-partitioned table minus any TOMBSTONED documents. Every
-    * stored search face reads through this, so a delete is visible
-    * the moment [[deleteFromTextIndex]] lands — the Lucene liveDocs
-    * bitset as an anti-join. Hint-free: AQE broadcasts the usual
-    * small set and falls back to a shuffle join for a
-    * takedown-backlog-sized one (the delete faces write tombstones
-    * DISTRIBUTED, so the set is bounded by deletes-since-compaction,
-    * not by driver memory; [[compactTextIndex]] keeps it small). */
-  /** A recorded layout flag from the 1-row stats artifact, with the
+  /** A recorded layout flag from the stats artifact, with the
     * pre-flag-layout default for indexes written before the flags
     * existed. */
   private def statsFlag(st: org.apache.spark.sql.Row, name: String,
@@ -880,9 +831,9 @@ object FullText {
     if (st.schema.fieldNames.contains("buckets")) st.getAs[Int]("buckets")
     else fallback
 
-  /** Compaction-time bucket RESIZE, shared by both compactors: the
-    * fold reassigns the hash partition of the rows it is already
-    * rewriting; None keeps every row's recorded bucket untouched. */
+  /** Compaction-time bucket RESIZE: the fold reassigns the hash
+    * partition of the rows it is already rewriting; None keeps every
+    * row's recorded bucket untouched. */
   private def rebucketed(df: DataFrame, keyCol: String,
       bucketCol: String, rebucket: Option[Int]): DataFrame =
     rebucket match {
@@ -891,17 +842,141 @@ object FullText {
       case None => df
     }
 
-  /** The exact-mode stats carry under a rebucket: only the recorded
-    * bucket count — the value searches and appends derive their
-    * pruning from — changes; every other statistic carries verbatim
-    * (works for single-field, multi-field, and pre-column legacy
-    * schemas alike, since withColumn replaces or adds). */
-  private def statsWithBuckets(stDf: DataFrame,
-      rebucket: Option[Int]): DataFrame =
-    rebucket match {
-      case Some(nb) => stDf.withColumn("buckets", lit(nb))
-      case None => stDf
+  /** The `stats` artifact in memory. [[readStats]] and [[writeStats]]
+    * are its only reader and writer, so they own the on-disk format:
+    * one row per value of the layout's KEY columns.
+    *
+    *  - `keys` = Nil, the single-field layout: one row `(n_docs,
+    *    avgdl, sum_doclen, has_positions, has_termvectors, buckets)`.
+    *  - `keys` = Seq("field"), the multi-field layout: a row
+    *    `(field, n_docs, avgdl, sum_doclen, has_termvectors,
+    *    buckets)` per field. That layout stores no positions, so it
+    *    records no `has_positions`.
+    *
+    * `counts` holds (key value, n_docs, sum_doclen); avgdl is always
+    * sum_doclen / n_docs, and 0 for a key with no documents left (a
+    * full purge records no NaN). */
+  private final case class IndexStats(keys: Seq[String],
+      counts: Seq[(Seq[String], Long, Long)], hasPositions: Boolean,
+      hasTermVectors: Boolean, buckets: Int) {
+    /** Every key's n_docs shifted by `dN`, its sum_doclen by its
+      * entry in `dSums` (absent = 0). */
+    def shifted(dN: Long, dSums: Map[Seq[String], Long]): IndexStats =
+      copy(counts = counts.map { case (k, n, s) =>
+        (k, n + dN, s + dSums.getOrElse(k, 0L)) })
+  }
+
+  /** The live stats artifact, read driver-side (no Spark job). The
+    * key columns come from the artifact itself — a `field` column
+    * marks the multi-field layout — and legacy artifacts from before
+    * a flag or the bucket column get the pre-flag defaults
+    * ([[statsFlag]], [[hasTermVectors]], [[statsBuckets]]). */
+  private def readStats(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, art: String, fallbackBuckets: Int): IndexStats = {
+    val rows = graft.io.TinyParquet.readFrame(spark, s"$art/stats")
+      .collect()
+    val st = rows.head
+    val keys = Seq("field").filter(st.schema.fieldNames.contains)
+    IndexStats(keys,
+      rows.map(r => (keys.map(k => r.getAs[String](k)),
+        r.getAs[Long]("n_docs"), r.getAs[Long]("sum_doclen"))).toSeq,
+      hasPositions = keys.isEmpty &&
+        statsFlag(st, "has_positions", default = true),
+      hasTermVectors = hasTermVectors(spark, indexDir, art, st),
+      buckets = statsBuckets(st, fallbackBuckets))
+  }
+
+  /** Write `s` as a stats artifact at `dir` (driver-side, no Spark
+    * job) — the one place the artifact's columns are assembled. */
+  private def writeStats(spark: org.apache.spark.sql.SparkSession,
+      s: IndexStats, dir: String): Unit = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(s.keys.map(StructField(_, StringType)) ++
+      Seq(StructField("n_docs", LongType), StructField("avgdl", DoubleType),
+        StructField("sum_doclen", LongType),
+        StructField("has_positions", BooleanType),
+        StructField("has_termvectors", BooleanType),
+        StructField("buckets", IntegerType)))
+    val rows = s.counts.map { case (k, n, sum) =>
+      org.apache.spark.sql.Row.fromSeq(k ++ Seq(n,
+        if (n == 0L) 0.0 else sum.toDouble / n, sum, s.hasPositions,
+        s.hasTermVectors, s.buckets))
     }
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    graft.io.TinyParquet.write(
+      if (s.keys.isEmpty) df else df.drop("has_positions"), dir)
+  }
+
+  /** The single-field analysed frame: `(doc_id, toks, doclen)`. */
+  private def analyzedText(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"), analyze(col(textCol)).as("toks"))
+      .withColumn("doclen", size(col("toks")))
+
+  /** The multi-field STACKED analysed frame: one `(doc_id, field,
+    * toks, doclen)` row per document per field, so every document
+    * counts in every field — a field that analyzes to zero tokens
+    * included. */
+  private def analyzedFields(docs: DataFrame, idCol: String,
+      fields: Seq[String]): DataFrame = {
+    require(fields.nonEmpty, "fields must be non-empty")
+    docs.select(col(idCol).as("doc_id"),
+      explode(array(fields.map { f =>
+        struct(lit(f).as("field"), analyze(col(f)).as("toks"))
+      }: _*)).as("f"))
+      .select(col("doc_id"), col("f.field").as("field"),
+        col("f.toks").as("toks"))
+      .withColumn("doclen", size(col("toks")))
+  }
+
+  /** Postings rows `(keys…, term, doc_id, doclen, tf[, positions])` of
+    * an analysed frame; `positions` is the sorted analysed-stream
+    * position list, dropped for a positions-free layout. */
+  private def termFreqs(analyzed: DataFrame, keys: Seq[String],
+      positions: Boolean): DataFrame = {
+    val tf = analyzed
+      .select(keys.map(col) ++ Seq(col("doc_id"), col("doclen"),
+        posexplode_outer(col("toks")).as(Seq("pos", "term"))): _*)
+      .filter(col("term").isNotNull)
+      .groupBy((keys ++ Seq("term", "doc_id", "doclen")).map(col): _*)
+      .agg(count(lit(1)).as("tf"),
+        sort_array(collect_list(col("pos"))).as("positions"))
+    if (positions) tf else tf.drop("positions")
+  }
+
+  /** Postings clustered for the `bucket`-partitioned write: one file
+    * per term bucket, rows term-sorted inside it. */
+  private def bucketedPostings(tf: DataFrame, bk: Int): DataFrame =
+    clustered(tf.withColumn("bucket", pmod(hash(col("term")), lit(bk))),
+      "bucket", "term")
+
+  /** Term-vector rows `(keys…, doc_id, term, tf)` clustered for the
+    * `dbucket`-partitioned write: doc-bucketed, doc-sorted. */
+  private def bucketedTermVectors(tf: DataFrame, keys: Seq[String],
+      bk: Int): DataFrame =
+    clustered(tf.select((keys ++ Seq("doc_id", "term", "tf")).map(col): _*)
+      .withColumn("dbucket", pmod(hash(col("doc_id")), lit(bk))),
+      "dbucket", "doc_id")
+
+  /** One partition per bucket value, rows sorted by `sortCol` inside
+    * it — the file and row-group order every postings and
+    * term-vector write keeps. */
+  private def clustered(df: DataFrame, bucketCol: String,
+      sortCol: String): DataFrame =
+    df.repartition(col(bucketCol))
+      .sortWithinPartitions(col(bucketCol), col(sortCol))
+
+  /** Σ `c` per key value (`keys` = Nil: one global sum) — one bounded
+    * collect of |key values| rows. */
+  private def sumsByKey(df: DataFrame, keys: Seq[String],
+      c: String): Map[Seq[String], Long] =
+    df.groupBy(keys.map(col): _*).agg(coalesce(sum(col(c)), lit(0L)))
+      .collect().map(r => keyOf(r, keys.length) -> r.getLong(keys.length))
+      .toMap
+
+  /** The key value in the leading `n` string columns of `r`. */
+  private def keyOf(r: org.apache.spark.sql.Row, n: Int): Seq[String] =
+    (0 until n).map(r.getString)
 
   /** Where this index's MUTATION-COMMITTED artifacts (df / stats /
     * tombstones / the segment manifest) live: the highest COMMITTED
@@ -1045,6 +1120,15 @@ object FullText {
         .map(d => s"$indexDir/$d"))
   }
 
+  /** The live view of a stored index's postings: the raw
+    * bucket-partitioned table minus any TOMBSTONED documents. Every
+    * stored search face reads through this, so a delete is visible
+    * the moment [[deleteFromTextIndex]] lands — the Lucene liveDocs
+    * bitset as an anti-join. Hint-free: AQE broadcasts the usual
+    * small set and falls back to a shuffle join for a
+    * takedown-backlog-sized one (the delete faces write tombstones
+    * DISTRIBUTED, so the set is bounded by deletes-since-compaction,
+    * not by driver memory; [[compactTextIndex]] keeps it small). */
   private def livePostings(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, art: String): DataFrame = {
     val post = readUnion(spark,
@@ -1136,6 +1220,11 @@ object FullText {
     * Lucene/ES behavior, where docFreq includes deleted docs until
     * segments merge.
     *
+    * Both layouts: the key columns come from the stats artifact, so
+    * a multi-field index ([[writeMultiFieldTextIndex]]) decrements
+    * its per-(field, term) dictionary and every field's statistics
+    * the same way when it stores per-field term vectors.
+    *
     * Contract: deleting is PRESENT-ONLY — the batch is reduced to
     * ids the forward artifact actually holds before anything records
     * (free on the term-vector path, one postings doc_id semi-join on
@@ -1209,7 +1298,7 @@ object FullText {
       .filter(col("doc_id").isNotNull).distinct()
     // first delete of an index (no tombstones yet — every lifecycle
     // gate's case) skips the idempotence join and the union outright.
-    // The fresh-ids materialization and the 1-row stats read are
+    // The fresh-ids materialization and the stats read are
     // independent — overlap them (guide §2.6)
     val ((fresh, nFresh), st) = graft.ops.Jobs.par2(
       () => {
@@ -1218,15 +1307,9 @@ object FullText {
           else dedup).localCheckpoint()
         (f, f.count())
       },
-      () => graft.io.TinyParquet.readFrame(spark, s"$art/stats").head())
+      () => readStats(spark, indexDir, art, buckets))
     if (nFresh == 0L) { Checkpoints.unpersist(fresh); return }
-    val bk = statsBuckets(st, buckets)
-    // the exact-decrement path needs the single-field forward
-    // artifact; a multi-field index (stats keyed by `field`) takes
-    // the Lucene-stale path here — its exact twin is
-    // [[deleteFromMultiFieldTextIndex]]
-    val multiField = st.schema.fieldNames.contains("field")
-    val hasTv = !multiField && hasTermVectors(spark, indexDir, art, st)
+    val keys = st.keys
     // PRESENT-ONLY recording (the discipline the r16 exact-stats fix
     // applied to the DECREMENT, now applied to the tombstone artifact
     // itself — and the text twin of the vector delete's codes
@@ -1238,20 +1321,21 @@ object FullText {
     // rows there) and (b) riding every later delete's `old ∪ batch`
     // rewrite until the next fold. On the term-vector path the
     // present set falls out of the dead-vector lookup the stats
-    // decrement already needs (dbucket-pruned, delete-batch-bounded);
-    // on the stale path it costs one postings doc_id-column pass —
-    // the same class as the vector family's codes pass, paid per
-    // delete batch, never per search. A ZERO-TOKEN doc has no
-    // postings/vector rows, so its id records nothing and its n_docs
-    // slot stands until a fold re-derives stats from survivors — the
-    // r16-documented imprecision, unchanged in kind.
+    // decrement already needs (dbucket-pruned, delete-batch-bounded;
+    // a doc present in ANY field counts); on the stale path it costs
+    // one postings doc_id-column pass — the same class as the vector
+    // family's codes pass, paid per delete batch, never per search. A
+    // ZERO-TOKEN doc has no postings/vector rows, so its id records
+    // nothing and its n_docs slot stands until a fold re-derives
+    // stats from survivors — the r16-documented imprecision,
+    // unchanged in kind.
     val deadVecsOpt =
-      if (!hasTv) None
+      if (!st.hasTermVectors) None
       else {
         // bucket PRUNE list: ≤ `buckets` distinct values by
         // construction — a bounded driver artifact, unlike the ids
         val dBuckets = fresh
-          .select(pmod(hash(col("doc_id")), lit(bk)).as("b"))
+          .select(pmod(hash(col("doc_id")), lit(st.buckets)).as("b"))
           .distinct().collect().map(_.getInt(0)).toSeq
         Some(termVectorsFrame(spark, indexDir)
           .filter(col("dbucket").isInCollection(dBuckets))
@@ -1303,52 +1387,51 @@ object FullText {
       if (graft.io.Layout.pathExists(spark, s"$art/segments"))
         graft.io.Layout.copyArtifact(spark, s"$art/segments",
           s"$stage/segments")
-    if (!hasTv) {
-      // Lucene mode: stats stay stale until compaction — the new
-      // generation carries the dictionary/statistics values forward
-      // UNCHANGED: driver byte copies, like the manifest carry
-      graft.ops.Jobs.par(Seq[() => Any](tombThunk, segThunk,
-        () => graft.io.Layout.copyArtifact(spark, s"$art/df",
-          s"$stage/df"),
-        () => graft.io.Layout.copyArtifact(spark, s"$art/stats",
-          s"$stage/stats")))
-    } else {
-      val deadVecs = deadVecsOpt.get // hoisted for the present set
-      val parts = graft.ops.Jobs.par(Seq[() => Any](tombThunk, segThunk,
-        () => spark.read.parquet(s"$art/df")
-          .join(deadVecs.groupBy(col("term"))
-              .agg(count(lit(1)).as("df_dead")),
-            Seq("term"), "left_outer")
-          .select(col("term"),
-            (col("df") - coalesce(col("df_dead"), lit(0L))).as("df"))
-          .filter(col("df") > 0) // a rebuild has no zero-df dict row
-          .write.parquet(s"$stage/df"),
-        () => deadVecs.agg(coalesce(sum(col("tf")), lit(0L)))
-          .head().getLong(0)))
-      val deadLen = parts(3).asInstanceOf[Long]
-      // decrement by the dead docs PRESENT in the index (nDeleted is
-      // exactly that count — the tombstone artifact and the stats now
-      // share one present set), never by the raw batch count: a
-      // replayed id whose doc was already physically folded away (an
-      // at-least-once ruling feed crossing a compaction boundary —
-      // the fold clears the tombstone set, so the idempotence
-      // anti-join no longer recognizes it) or a never-indexed id
-      // would otherwise corrupt n_docs/avgdl for every later search
-      // (ObjectStoreStreamsSpec's nost:// lifecycle caught exactly
-      // that). The one imprecision left: a ZERO-TOKEN doc has no
-      // vector rows, so deleting one leaves its n_docs slot counted
-      // until a rebuild — it has no postings to mask, and no
-      // artifact records its id.
-      val nDocs = st.getAs[Long]("n_docs") - nDeleted
-      val sumLen = st.getAs[Long]("sum_doclen") - deadLen
-      require(nDocs > 0, "deleting every document: rebuild instead")
-      graft.io.TinyParquet.write(
-        Seq((nDocs, sumLen.toDouble / nDocs, sumLen,
-          statsFlag(st, "has_positions", default = true), true, bk))
-          .toDF("n_docs", "avgdl", "sum_doclen", "has_positions",
-            "has_termvectors", "buckets"),
-        s"$stage/stats")
-      Checkpoints.unpersist(deadVecs)
+    deadVecsOpt match {
+      case None =>
+        // Lucene mode: stats stay stale until compaction — the new
+        // generation carries the dictionary/statistics values forward
+        // UNCHANGED: driver byte copies, like the manifest carry
+        graft.ops.Jobs.par(Seq[() => Any](tombThunk, segThunk,
+          () => graft.io.Layout.copyArtifact(spark, s"$art/df",
+            s"$stage/df"),
+          () => graft.io.Layout.copyArtifact(spark, s"$art/stats",
+            s"$stage/stats")))
+      case Some(deadVecs) =>
+        val termKey = keys :+ "term"
+        val parts = graft.ops.Jobs.par(Seq[() => Any](tombThunk, segThunk,
+          () => spark.read.parquet(s"$art/df")
+            .join(deadVecs.groupBy(termKey.map(col): _*)
+                .agg(count(lit(1)).as("df_dead")),
+              termKey, "left_outer")
+            .select(termKey.map(col) :+
+              (col("df") - coalesce(col("df_dead"), lit(0L))).as("df"): _*)
+            .filter(col("df") > 0) // a rebuild has no zero-df dict row
+            .write.parquet(s"$stage/df"),
+          // per-key Σ tf of the dead vectors = the dead docs' doclen
+          // (a zero-token FIELD of a deleted doc has no vector rows —
+          // it contributes 0, exactly as the writer counted it)
+          () => sumsByKey(deadVecs, keys, "tf")))
+        // decrement by the dead docs PRESENT in the index (nDeleted is
+        // exactly that count — the tombstone artifact and the stats
+        // now share one present set), never by the raw batch count: a
+        // replayed id whose doc was already physically folded away (an
+        // at-least-once ruling feed crossing a compaction boundary —
+        // the fold clears the tombstone set, so the idempotence
+        // anti-join no longer recognizes it) or a never-indexed id
+        // would otherwise corrupt n_docs/avgdl for every later search
+        // (ObjectStoreStreamsSpec's nost:// lifecycle caught exactly
+        // that). The one imprecision left: a ZERO-TOKEN doc has no
+        // vector rows, so deleting one leaves its n_docs slot counted
+        // until a rebuild — it has no postings to mask, and no
+        // artifact records its id.
+        val next = st.shifted(-nDeleted,
+          parts(3).asInstanceOf[Map[Seq[String], Long]]
+            .map { case (k, s) => k -> -s })
+        require(next.counts.forall(_._2 > 0),
+          "deleting every document: rebuild instead")
+        writeStats(spark, next, s"$stage/stats")
+        Checkpoints.unpersist(deadVecs)
     }
     // (the segment manifest carried forward in segThunk above — a
     // delete masks rows, it does not move postings data)
@@ -1375,7 +1458,9 @@ object FullText {
     * the maintenance-window full rewrite by definition (the
     * delete-time exact path never pays it). TextIndexLayoutSpec pins
     * file reclamation, tombstone reclamation, and stored-search
-    * frame equality across the rewrite.
+    * frame equality across the rewrite. Both layouts: a multi-field
+    * index (its key read from the stats artifact) re-derives per
+    * field, and a field the fold saw nothing of keeps a zeroed row.
     *
     * `rebucket = Some(n)` RESIZES the term-bucket partitioning during
     * the fold — the text twin of the vector layout's compaction-time
@@ -1406,13 +1491,13 @@ object FullText {
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String, buckets: Int,
       rebucket: Option[Int]): (Long, Long, Long) = {
-    import spark.implicits._
     gcUnreferenced(spark, indexDir) // crashed predecessors' orphans
     val art = liveArtifactDir(spark, indexDir)
     val tombPath = s"$art/tombstones"
     val hasTomb = graft.io.Layout.pathExists(spark, tombPath)
-    val st = graft.io.TinyParquet.readFrame(spark, s"$art/stats").head()
-    val hasTv = hasTermVectors(spark, indexDir, art, st)
+    val st = readStats(spark, indexDir, art, buckets)
+    val keys = st.keys
+    val hasTv = st.hasTermVectors
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def countFiles(dirs: Seq[String]): Long = {
@@ -1455,7 +1540,9 @@ object FullText {
     // the postings fold, the term-vector fold, the (exact-mode)
     // df/stats carries and the manifest write are independent staged
     // writes — fan out (guide §2.6); the stale-mode stats re-derive
-    // needs the folded postings and runs after the fan-out
+    // needs the folded postings and runs after the fan-out. Term
+    // buckets are key-agnostic (one hash space over terms), so a
+    // rebucket resizes every layout the same way.
     val exactMode = !(hasTomb && !hasTv)
     val parts = graft.ops.Jobs.par(Seq[() => Any](
       () => {
@@ -1463,8 +1550,7 @@ object FullText {
           minus(readUnion(spark,
             liveDirs(spark, indexDir, art, "postings")
               .map(d => s"$indexDir/$d"))), "term", "bucket", rebucket)
-        src.repartition(col("bucket"))
-          .sortWithinPartitions(col("bucket"), col("term"))
+        clustered(src, "bucket", "term")
           .write.partitionBy("bucket").parquet(s"$indexDir/$stPost")
         // a FULL PURGE (every doc tombstoned) folds to zero rows, and
         // a zero-row partitionBy write is schema-less — keep it
@@ -1476,8 +1562,7 @@ object FullText {
       () => if (hasTv) {
         val src = rebucketed(minus(termVectorsFrame(spark, indexDir)),
           "doc_id", "dbucket", rebucket)
-        src.repartition(col("dbucket"))
-          .sortWithinPartitions(col("dbucket"), col("doc_id"))
+        clustered(src, "dbucket", "doc_id")
           .write.partitionBy("dbucket").parquet(s"$indexDir/$stTv")
         graft.io.Layout.ensureReadableParquet(spark,
           s"$indexDir/$stTv", src.schema)
@@ -1501,9 +1586,8 @@ object FullText {
         () => rebucket match {
           case None => graft.io.Layout.copyArtifact(spark,
             s"$art/stats", s"$stage/stats")
-          case Some(_) => graft.io.TinyParquet.write(statsWithBuckets(
-            graft.io.TinyParquet.readFrame(spark, s"$art/stats"),
-            rebucket), s"$stage/stats")
+          case Some(nb) =>
+            writeStats(spark, st.copy(buckets = nb), s"$stage/stats")
         })
        else Nil))
     val rows = parts(0).asInstanceOf[Long]
@@ -1511,21 +1595,26 @@ object FullText {
       // Lucene mode: statistics were left stale at delete time — true
       // them up from the survivors into the new generation
       val folded = spark.read.parquet(s"$indexDir/$stPost")
-      folded.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      folded.groupBy((keys :+ "term").map(col): _*)
+        .agg(count(lit(1)).as("df"))
         .write.parquet(s"$stage/df")
-      val r = folded.select(col("doc_id"), col("doclen")).distinct()
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(col("doclen")), lit(0L)).as("s")).head()
-      val hasPos = statsFlag(st, "has_positions", default = true)
-      graft.io.TinyParquet.write(
-        Seq((r.getLong(0),
-          if (r.getLong(0) == 0L) 0.0 // full purge: no NaN in stats
-          else r.getLong(1).toDouble / r.getLong(0),
-          r.getLong(1), hasPos, false,
-          rebucket.getOrElse(statsBuckets(st, buckets))))
-          .toDF("n_docs", "avgdl", "sum_doclen", "has_positions",
-            "has_termvectors", "buckets"),
-        s"$stage/stats")
+      val survivors = folded
+        .select((keys ++ Seq("doc_id", "doclen")).map(col): _*).distinct()
+        .groupBy(keys.map(col): _*)
+        .agg(count(lit(1)), coalesce(sum(col("doclen")), lit(0L)))
+        .collect().map(r => keyOf(r, keys.length) ->
+          (r.getLong(keys.length), r.getLong(keys.length + 1))).toMap
+      // a FULL PURGE leaves no survivor rows for some (or all) keys;
+      // the key values are a durable layout property, so a key the
+      // fold saw nothing of keeps a zeroed row instead of vanishing
+      // (a later stats read must never find an empty artifact)
+      writeStats(spark, st.copy(
+        counts = st.counts.map { case (k, _, _) =>
+          val (n, s) = survivors.getOrElse(k, (0L, 0L))
+          (k, n, s)
+        },
+        hasTermVectors = false,
+        buckets = rebucket.getOrElse(st.buckets)), s"$stage/stats")
     }
     graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
       gen, art, sideRenames = Seq(stPost -> newPost) ++
@@ -1860,7 +1949,7 @@ object FullText {
     * `text_en` on several fields per entity, schema.py:46,77-78 —
     * a real index is multi-field from day one):
     *
-    *   <indexDir>/stats/     (field, n_docs, avgdl) — per-field
+    *   <indexDir>/stats/     (field, n_docs, avgdl, …) — per-field
     *                         segment stats (Lucene keeps per-field
     *                         norms/statistics exactly so)
     *   <indexDir>/df/        (field, term, df) — per-field dictionary
@@ -1871,92 +1960,21 @@ object FullText {
     *                         prefixes terms with their field in one
     *                         dictionary — same idea)
     *
-    * One stacked analyzer pass builds all three artifacts. */
+    * `storeTermVectors` adds per-FIELD term vectors — the forward
+    * artifact the EXACT delete decrement needs; without them
+    * deletes stay Lucene-stale until compaction. Positions are not
+    * stored. One stacked analyzer pass builds every artifact, through
+    * [[writeTextIndex]]'s implementation keyed by `field`; delete and
+    * compaction are [[deleteFromTextIndex]] and [[compactTextIndex]],
+    * which read the key from the stats artifact. */
   def writeMultiFieldTextIndex(docs: DataFrame, idCol: String,
       fields: Seq[String], indexDir: String, buckets: Int = 16,
       storeTermVectors: Boolean = false): Unit =
     graft.io.Layout.withMutationLease(docs.sparkSession, indexDir) {
-      writeMultiFieldTextIndexImpl(docs, idCol, fields, indexDir,
-        buckets, storeTermVectors)
+      writeTextIndexImpl(docs, analyzedFields(docs, idCol, fields),
+        IndexStats(Seq("field"), fields.map(f => (Seq(f), 0L, 0L)),
+          hasPositions = false, storeTermVectors, buckets), indexDir)
     }
-
-  private def writeMultiFieldTextIndexImpl(docs: DataFrame,
-      idCol: String, fields: Seq[String], indexDir: String,
-      buckets: Int, storeTermVectors: Boolean): Unit = {
-    require(fields.nonEmpty, "fields must be non-empty")
-    val spark = docs.sparkSession
-    // whole-layout overwrite: drop stale generations / segments /
-    // folded dirs / tombstones of a previous index at this path
-    clearDerivedLayout(spark, indexDir)
-    val stacked = docs.select(col(idCol).as("doc_id"),
-      explode(array(fields.map { f =>
-        struct(lit(f).as("field"), analyze(col(f)).as("toks"))
-      }: _*)).as("f"))
-      .select(col("doc_id"), col("f.field").as("field"),
-        col("f.toks").as("toks"))
-      .withColumn("doclen", size(col("toks")))
-    val tf = stacked
-      .select(col("doc_id"), col("field"), col("doclen"),
-        explode_outer(col("toks")).as("term"))
-      .filter(col("term").isNotNull)
-      .groupBy(col("field"), col("term"), col("doc_id"), col("doclen"))
-      .agg(count(lit(1)).as("tf"))
-    // cluster by bucket before the partitioned write: one file per
-    // bucket instead of tasks x buckets part-files (the compacted
-    // layout from day one; a 32-task write into 16 bucket dirs
-    // otherwise lands up to 512 files, and every bucket-pruned scan
-    // pays the file count)
-    tf.withColumn("bucket", pmod(hash(col("term")), lit(buckets)))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("term"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$indexDir/postings")
-    // ONE stacked analyzer pass (the postings write above); df and
-    // statistics derive from the written postings, column-pruned —
-    // the single-field writer's discipline. Every document counts in
-    // every field (a zero-token field has no posting rows but still
-    // counts toward that field's n_docs, exactly as the stacked
-    // frame's per-field row count would have it); per-field
-    // sum_doclen = Σ tf, additive under append (exact-integer
-    // discipline, as in the single-field layout).
-    val post = spark.read.parquet(s"$indexDir/postings")
-    // df rollup, forward index, and the two stats aggregates are
-    // independent consumers of the postings just written — fan out
-    // (guide §2.6), the single-field writer's discipline
-    val statParts = graft.ops.Jobs.par(Seq[() => Any](
-      () => post.groupBy(col("field"), col("term"))
-        .agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(s"$indexDir/df"),
-      // per-FIELD term vectors — the forward artifact the EXACT
-      // multi-field delete decrement needs
-      // ([[deleteFromMultiFieldTextIndex]]); doc-bucketed like the
-      // single-field layout so a deleted doc's vectors are
-      // file-pruned point reads. Off by default, as in Lucene —
-      // without it multi-field deletes stay Lucene-stale until
-      // compaction.
-      () => if (storeTermVectors)
-        post.select(col("field"), col("doc_id"), col("term"), col("tf"))
-          .withColumn("dbucket", pmod(hash(col("doc_id")), lit(buckets)))
-          .repartition(col("dbucket"))
-          .sortWithinPartitions(col("dbucket"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("dbucket")
-          .parquet(s"$indexDir/termvectors"),
-      () => docs.count(),
-      () => post.groupBy(col("field"))
-        .agg(coalesce(sum(col("tf")), lit(0L)).as("s"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap))
-    val nDocs = statParts(2).asInstanceOf[Long]
-    require(nDocs > 0, "writeMultiFieldTextIndex: empty corpus")
-    val sums = statParts(3).asInstanceOf[Map[String, Long]]
-    import spark.implicits._
-    graft.io.TinyParquet.write(
-      fields.map { f =>
-        val s = sums.getOrElse(f, 0L)
-        (f, nDocs, s.toDouble / nDocs, s, storeTermVectors, buckets)
-      }.toDF("field", "n_docs", "avgdl", "sum_doclen",
-        "has_termvectors", "buckets"),
-      s"$indexDir/stats")
-  }
 
   /** Batch refresh of the multi-field index — the
     * [[appendToTextIndex]] contract per field, equally DELTA-SIZED:
@@ -1972,434 +1990,19 @@ object FullText {
     * pre-existing postings files are never opened.
     *
     * Same staged-segment exactly-once protocol as
-    * [[appendToTextIndex]]: immutable `seg-<id>/` data, manifest +
-    * dictionary + statistics committed by one marker, `segmentId`
-    * replay resolved against the live manifest. */
+    * [[appendToTextIndex]] — it is the same implementation, keyed by
+    * `field`: immutable `seg-<id>/` data, manifest + dictionary +
+    * statistics committed by one marker, `segmentId` replay resolved
+    * against the live manifest. */
   def appendToMultiFieldTextIndex(spark: org.apache.spark.sql.SparkSession,
       fresh: DataFrame, idCol: String, fields: Seq[String],
       indexDir: String, buckets: Int = 16,
       segmentId: Option[String] = None): Unit =
     graft.io.Layout.withMutationLease(spark, indexDir) {
-      appendToMultiFieldTextIndexImpl(spark, fresh, idCol, fields,
-        indexDir, buckets, segmentId)
+      appendToTextIndexImpl(spark, fresh,
+        analyzedFields(fresh, idCol, fields), Seq("field"), indexDir,
+        buckets, segmentId)
     }
-
-  private def appendToMultiFieldTextIndexImpl(
-      spark: org.apache.spark.sql.SparkSession,
-      fresh: DataFrame, idCol: String, fields: Seq[String],
-      indexDir: String, buckets: Int,
-      segmentId: Option[String]): Unit = {
-    require(fields.nonEmpty, "fields must be non-empty")
-    val art = liveArtifactDir(spark, indexDir)
-    val gen = graft.io.Layout.liveGeneration(spark, indexDir)
-      .getOrElse(0L) + 1
-    val segName = segmentId.map(s => s"seg-$s").getOrElse(s"seg-gen$gen")
-    val (oldPost, oldTv, applied) = manifestState(spark, indexDir, art)
-    if (segmentId.isDefined && applied.contains(segName))
-      return // the batch's commit record exists: full replay no-op
-    // ONE stats read serves the layout flags AND the per-field
-    // increment below (it previously read the artifact twice)
-    val stRows = graft.io.TinyParquet.readFrame(spark, s"$art/stats").collect()
-    val st0 = stRows.head
-    val bk = statsBuckets(st0, buckets)
-    val hasTv = statsFlag(st0, "has_termvectors", default = false)
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    val segStaged = graft.io.Layout.stagedSideName(spark, indexDir, segName)
-    locally { // clear a crashed predecessor's partial staging
-      val fs = new org.apache.hadoop.fs.Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$segName"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    }
-    val stacked = fresh.select(col(idCol).as("doc_id"),
-      explode(array(fields.map { f =>
-        struct(lit(f).as("field"), analyze(col(f)).as("toks"))
-      }: _*)).as("f"))
-      .select(col("doc_id"), col("f.field").as("field"),
-        col("f.toks").as("toks"))
-      .withColumn("doclen", size(col("toks")))
-    val freshTf = stacked
-      .select(col("doc_id"), col("field"), col("doclen"),
-        explode_outer(col("toks")).as("term"))
-      .filter(col("term").isNotNull)
-      .groupBy(col("field"), col("term"), col("doc_id"), col("doclen"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-    // empty analyzed delta (every doc's every field all-stopword):
-    // write and reference NO segment dirs — see appendToTextIndex
-    val deltaEmpty = freshTf.isEmpty
-    // segment writes, dictionary merge, stats aggregates, tombstone
-    // carry and manifest are independent consumers of the
-    // checkpointed delta / old artifacts — ONE fan-out (guide §2.6),
-    // the single-field append's discipline
-    val newPost = if (deltaEmpty) oldPost else oldPost :+ s"$segName/postings"
-    val newTv = if (deltaEmpty) oldTv else oldTv :+ s"$segName/termvectors"
-    val parts = graft.ops.Jobs.par(Seq[() => Any](
-      () => if (!deltaEmpty)
-        freshTf
-          .withColumn("bucket", pmod(hash(col("term")), lit(bk)))
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("bucket"), col("term"))
-          .write.partitionBy("bucket")
-          .parquet(s"$indexDir/$segStaged/postings"),
-      () => if (!deltaEmpty && hasTv)
-        freshTf.select(col("field"), col("doc_id"), col("term"),
-            col("tf"))
-          .withColumn("dbucket", pmod(hash(col("doc_id")), lit(bk)))
-          .repartition(col("dbucket"))
-          .sortWithinPartitions(col("dbucket"), col("doc_id"))
-          .write.partitionBy("dbucket")
-          .parquet(s"$indexDir/$segStaged/termvectors"),
-      () => spark.read.parquet(s"$art/df")
-        .join(freshTf.groupBy(col("field"), col("term"))
-            .agg(count(lit(1)).as("df_delta")),
-          Seq("field", "term"), "full_outer")
-        .select(col("field"), col("term"),
-          (coalesce(col("df"), lit(0L)) +
-            coalesce(col("df_delta"), lit(0L))).as("df"))
-        .write.parquet(s"$stage/df"),
-      () => fresh.count(),
-      () => freshTf.groupBy(col("field"))
-        .agg(coalesce(sum(col("tf")), lit(0L)).as("s"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-      () => if (graft.io.Layout.pathExists(spark, s"$art/tombstones"))
-        graft.io.Layout.copyArtifact(spark, s"$art/tombstones",
-          s"$stage/tombstones"),
-      () => writeManifest(spark, stage,
-        newPost.map(("postings", _)) ++
-          (if (hasTv) newTv.map(("termvectors", _)) else Nil) ++
-          (applied :+ segName).distinct.map(("applied", _)))))
-    // |fields|-row statistics: collected, incremented, staged —
-    // every delta doc counts in every field (zero-token fields
-    // included, like the writer); per-field Σ tf = per-field token
-    // total; avgdl = sum/n in exact-integer arithmetic (bit-equal to
-    // a rebuild; see appendToTextIndex)
-    val dN = parts(3).asInstanceOf[Long]
-    val dSums = parts(4).asInstanceOf[Map[String, Long]]
-    val updated = stRows.map { r =>
-        val f = r.getString(r.fieldIndex("field"))
-        val n = r.getAs[Long]("n_docs") + dN
-        val s = r.getAs[Long]("sum_doclen") + dSums.getOrElse(f, 0L)
-        (f, n, s.toDouble / n, s, hasTv, bk)
-      }
-    import spark.implicits._
-    graft.io.TinyParquet.write(
-      updated.toSeq
-        .toDF("field", "n_docs", "avgdl", "sum_doclen",
-          "has_termvectors", "buckets"),
-      s"$stage/stats")
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-      gen, art,
-      sideRenames = if (deltaEmpty) Nil else Seq(segStaged -> segName))
-    Checkpoints.unpersist(freshTf)
-  }
-
-  /** Tombstone DELETE from the MULTI-FIELD stored index — the exact
-    * twin of [[deleteFromTextIndex]] per field: when the layout
-    * stores per-field TERM VECTORS
-    * ([[writeMultiFieldTextIndex]]'s `storeTermVectors`), the
-    * deleted docs' vectors are doc-bucket-pruned point reads and the
-    * per-(field, term) dictionary plus every field's statistics
-    * decrement EXACTLY — multi-field search-after-delete is then
-    * bit-identical to a rebuild without the deleted docs
-    * (TextIndexLayoutSpec's pin, widened from the single-field
-    * layout). Without term vectors (the default, as in Lucene) the
-    * statistics stay Lucene-stale until compaction — the
-    * [[deleteFromTextIndex]] Lucene mode.
-    *
-    * Same generation-commit crash story as the single-field delete:
-    * tombstones + df + stats stage into `gen-(N+1)` together and one
-    * marker makes them visible — no ordering window. */
-  def deleteFromMultiFieldTextIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ids: Seq[Long], buckets: Int = 16): Unit = {
-    import spark.implicits._
-    deleteFromMultiFieldTextIndex(spark, indexDir, ids.toDF("doc_id"),
-      buckets)
-  }
-
-  /** DataFrame face of the multi-field delete — the same
-    * nothing-through-the-driver contract as the single-field
-    * [[deleteFromTextIndex]] overload: anti-join idempotence,
-    * distributed `old ∪ batch` tombstone rewrite, semi-join dead
-    * term-vector lookup. `ids`' first column (cast to long) is the
-    * doc ids. */
-  def deleteFromMultiFieldTextIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ids: DataFrame, buckets: Int): Unit =
-    graft.io.Layout.withMutationLease(spark, indexDir) {
-      deleteFromMultiFieldTextIndexImpl(spark, indexDir, ids, buckets)
-    }
-
-  private def deleteFromMultiFieldTextIndexImpl(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ids: DataFrame, buckets: Int): Unit = {
-    import spark.implicits._
-    val art = liveArtifactDir(spark, indexDir)
-    // ONE stats read serves the layout flags AND the per-field
-    // decrement below (it previously read the artifact twice)
-    val stRows = graft.io.TinyParquet.readFrame(spark, s"$art/stats").collect()
-    val st = stRows.head
-    val bk = statsBuckets(st, buckets)
-    val hasTv = hasTermVectors(spark, indexDir, art, st)
-    if (!hasTv) { // Lucene mode: identical to the single-field path
-      deleteFromTextIndex(spark, indexDir, ids, bk)
-      return
-    }
-    val hadTomb = graft.io.Layout.pathExists(spark, s"$art/tombstones")
-    val oldTomb =
-      if (hadTomb)
-        spark.read.parquet(s"$art/tombstones")
-          .select(col("doc_id")).distinct()
-      else Seq.empty[Long].toDF("doc_id")
-    val dedup = ids
-      .select(col(ids.columns.head).cast("long").as("doc_id"))
-      .filter(col("doc_id").isNotNull).distinct()
-    // first delete of an index (no tombstones yet — every lifecycle
-    // gate's case) skips the idempotence join and the union outright
-    val fresh =
-      (if (hadTomb) dedup.join(oldTomb, Seq("doc_id"), "left_anti")
-       else dedup).localCheckpoint()
-    val nFresh = fresh.count()
-    if (nFresh == 0L) { Checkpoints.unpersist(fresh); return }
-    val dBuckets = fresh
-      .select(pmod(hash(col("doc_id")), lit(bk)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val deadVecs = termVectorsFrame(spark, indexDir)
-      .filter(col("dbucket").isInCollection(dBuckets))
-      .join(fresh, Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    // PRESENT-ONLY recording, the single-field discipline: the
-    // tombstone artifact records only ids the forward artifact holds
-    // (any field), falling out of the dead-vector lookup the stats
-    // decrement needs anyway — a replayed-past-fold or never-indexed
-    // id records nothing and `n_docs_live` stays true
-    val present = deadVecs.select(col("doc_id")).distinct()
-      .localCheckpoint()
-    val nDeleted = present.count()
-    if (nDeleted == 0L) {
-      Checkpoints.unpersist(present)
-      Checkpoints.unpersist(deadVecs)
-      Checkpoints.unpersist(fresh)
-      return
-    }
-    val gen = graft.io.Layout.liveGeneration(spark, indexDir)
-      .getOrElse(0L) + 1
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    locally {
-      val p = new org.apache.hadoop.fs.Path(stage)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    }
-    val nOld =
-      if (hadTomb)
-        graft.io.Layout.tombstoneRowCount(spark, s"$art/tombstones",
-          oldTomb)
-      else 0L
-    // tombstone rewrite, dictionary merge, dead-length aggregate, and
-    // segment-manifest copy are independent staged writes — fan out
-    // (guide §2.6), the single-field delete's discipline
-    val parts = graft.ops.Jobs.par(Seq[() => Any](
-      () => graft.io.Layout.writeTombstoneArtifact(spark,
-        if (hadTomb) oldTomb.unionByName(present) else present,
-        s"$stage/tombstones", nOld + nDeleted),
-      () => spark.read.parquet(s"$art/df")
-        .join(deadVecs.groupBy(col("field"), col("term"))
-            .agg(count(lit(1)).as("df_dead")),
-          Seq("field", "term"), "left_outer")
-        .select(col("field"), col("term"),
-          (col("df") - coalesce(col("df_dead"), lit(0L))).as("df"))
-        .filter(col("df") > 0)
-        .write.parquet(s"$stage/df"),
-      // per-field Σ tf of the dead vectors = per-field dead doclen
-      // (a zero-token FIELD of a deleted doc has no vector rows —
-      // contributes 0, exactly as the writer counted it)
-      () => deadVecs.groupBy(col("field"))
-        .agg(coalesce(sum(col("tf")), lit(0L)).as("s"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-      // manifest carried unchanged: driver byte copy, no Spark job
-      () => if (graft.io.Layout.pathExists(spark, s"$art/segments"))
-        graft.io.Layout.copyArtifact(spark, s"$art/segments",
-          s"$stage/segments")))
-    val deadSums = parts(2).asInstanceOf[Map[String, Long]]
-    // present-docs discipline, same as the single-field exact path:
-    // n_docs decrements only for ids the forward artifact actually
-    // holds (any field) — replayed-past-fold and never-indexed ids
-    // decrement nothing (nDeleted IS the present count; the tombstone
-    // artifact above records exactly the same set)
-    val updated = stRows.map { r =>
-        val f = r.getString(r.fieldIndex("field"))
-        val n = r.getAs[Long]("n_docs") - nDeleted
-        require(n > 0, "deleting every document: rebuild instead")
-        val s = r.getAs[Long]("sum_doclen") - deadSums.getOrElse(f, 0L)
-        (f, n, s.toDouble / n, s, true, bk)
-      }
-    graft.io.TinyParquet.write(
-      updated.toSeq
-        .toDF("field", "n_docs", "avgdl", "sum_doclen",
-          "has_termvectors", "buckets"),
-      s"$stage/stats")
-    Checkpoints.unpersist(deadVecs)
-    // (segment manifest carried forward in the fan-out above —
-    // delete = mask)
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-      gen, art)
-    Checkpoints.unpersist(present)
-    Checkpoints.unpersist(fresh)
-  }
-
-  /** Compactor for the multi-field layout — [[compactTextIndex]]'s
-    * fold-and-cutover on the same manifest machinery: base + segments
-    * fold (minus tombstones) into fresh versioned dirs, one marker
-    * cuts the generation over, unreferenced dirs reclaim. With
-    * per-field term vectors the statistics were decremented exactly
-    * at delete time and carry forward; without them they re-derive
-    * from the survivors. */
-  def compactMultiFieldTextIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, buckets: Int = 16,
-      rebucket: Option[Int] = None): (Long, Long, Long) = {
-    rebucket.foreach(nb => require(nb > 0,
-      s"rebucket bucket count must be positive (got $nb) — " +
-        "pmod against 0 dies mid-fold and a committed non-positive " +
-        "count would corrupt every later search's pruning"))
-    graft.io.Layout.withMutationLease(spark, indexDir) {
-      compactMultiFieldTextIndexImpl(spark, indexDir, buckets, rebucket)
-    }
-  }
-
-  private def compactMultiFieldTextIndexImpl(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, buckets: Int,
-      rebucket: Option[Int]): (Long, Long, Long) = {
-    import spark.implicits._
-    gcUnreferenced(spark, indexDir)
-    val art = liveArtifactDir(spark, indexDir)
-    val tombPath = s"$art/tombstones"
-    val hasTomb = graft.io.Layout.pathExists(spark, tombPath)
-    val st = graft.io.TinyParquet.readFrame(spark, s"$art/stats").head()
-    val hasTv = hasTermVectors(spark, indexDir, art, st)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def countFiles(dirs: Seq[String]): Long = {
-      var n = 0L
-      dirs.foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(s"$indexDir/$d")
-        if (fs.exists(p)) {
-          val it = fs.listFiles(p, true)
-          while (it.hasNext)
-            if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-        }
-      }
-      n
-    }
-    def minus(df: DataFrame): DataFrame =
-      if (hasTomb)
-        df.join(spark.read.parquet(tombPath)
-          .select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      else df
-    val before = countFiles(liveDirs(spark, indexDir, art, "postings"))
-    val gen = graft.io.Layout.liveGeneration(spark, indexDir)
-      .getOrElse(0L) + 1
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    val newPost = s"postings-v$gen"
-    val newTv = s"termvectors-v$gen"
-    // writer-unique staging names for the folded dirs — renamed to
-    // the final `-v$gen` names inside the commit, after the fence
-    val stPost = graft.io.Layout.stagedSideName(spark, indexDir, newPost)
-    val stTv = graft.io.Layout.stagedSideName(spark, indexDir, newTv)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$newPost"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$newTv"), true)
-    // rebucket: same fold-time partition resize as the single-field
-    // compactor (term buckets are field-agnostic — one hash space).
-    // The two folds, the exact-mode df/stats carries, and the
-    // manifest write fan out (guide §2.6), as in compactTextIndex.
-    val exactMode = !(hasTomb && !hasTv)
-    val parts = graft.ops.Jobs.par(Seq[() => Any](
-      () => {
-        val src = rebucketed(
-          minus(readUnion(spark,
-            liveDirs(spark, indexDir, art, "postings")
-              .map(d => s"$indexDir/$d"))), "term", "bucket", rebucket)
-        src.repartition(col("bucket"))
-          .sortWithinPartitions(col("bucket"), col("term"))
-          .write.partitionBy("bucket").parquet(s"$indexDir/$stPost")
-        // a full purge folds to zero rows; a zero-row partitionBy
-        // write is schema-less — keep it readable
-        graft.io.Layout.ensureReadableParquet(spark,
-          s"$indexDir/$stPost", src.schema)
-        spark.read.parquet(s"$indexDir/$stPost").count()
-      },
-      () => if (hasTv) {
-        val src = rebucketed(minus(termVectorsFrame(spark, indexDir)),
-          "doc_id", "dbucket", rebucket)
-        src.repartition(col("dbucket"))
-          .sortWithinPartitions(col("dbucket"), col("doc_id"))
-          .write.partitionBy("dbucket").parquet(s"$indexDir/$stTv")
-        graft.io.Layout.ensureReadableParquet(spark,
-          s"$indexDir/$stTv", src.schema)
-      },
-      () => writeManifest(spark, stage, Seq(("postings", newPost)) ++
-        (if (hasTv) Seq(("termvectors", newTv)) else Nil) ++
-        appliedSegments(spark, indexDir, art).map(("applied", _)))) ++
-      (if (exactMode) Seq[() => Any](
-        // unchanged carries are driver byte copies (the single-field
-        // fold's discipline); a rebucket edits only the recorded
-        // bucket count — a driver-side rewrite of the tiny artifact
-        () => graft.io.Layout.copyArtifact(spark, s"$art/df",
-          s"$stage/df"),
-        () => rebucket match {
-          case None => graft.io.Layout.copyArtifact(spark,
-            s"$art/stats", s"$stage/stats")
-          case Some(_) => graft.io.TinyParquet.write(statsWithBuckets(
-            graft.io.TinyParquet.readFrame(spark, s"$art/stats"),
-            rebucket), s"$stage/stats")
-        })
-       else Nil))
-    val rows = parts(0).asInstanceOf[Long]
-    val folded = spark.read.parquet(s"$indexDir/$stPost")
-    if (!exactMode) {
-      // Lucene mode: true the per-field statistics up from survivors
-      folded.groupBy(col("field"), col("term"))
-        .agg(count(lit(1)).as("df"))
-        .write.parquet(s"$stage/df")
-      val bk2 = rebucket.getOrElse(statsBuckets(st, buckets))
-      val rws = folded
-        .select(col("field"), col("doc_id"), col("doclen")).distinct()
-        .groupBy(col("field"))
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(col("doclen")), lit(0L)).as("s"))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1),
-          r.getLong(2).toDouble / r.getLong(1), r.getLong(2),
-          false, bk2))
-      // a FULL PURGE leaves no survivor rows for some (or all) fields
-      // — the field list is a durable layout property, so fields the
-      // fold saw nothing of keep a zeroed row instead of vanishing
-      // (a later stats read must never find an empty artifact)
-      val seen = rws.map(_._1).toSet
-      val zeroed = graft.io.TinyParquet.readFrame(spark, s"$art/stats")
-        .select(col("field")).collect().map(_.getString(0))
-        .filterNot(seen)
-        .map(f => (f, 0L, 0.0, 0L, false, bk2))
-      graft.io.TinyParquet.write(
-        (rws ++ zeroed).toSeq.toDF("field", "n_docs", "avgdl",
-          "sum_doclen", "has_termvectors", "buckets"),
-        s"$stage/stats")
-    }
-    // (exact-mode df/stats carries and the manifest were staged in
-    // the fan-out above)
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-      gen, art, sideRenames = Seq(stPost -> newPost) ++
-        (if (hasTv) Seq(stTv -> newTv) else Nil))
-    // the ROOT postings/termvectors dirs reclaim through the same
-    // liveness check as seg-/-v dirs: under retainGenerations > 1 an
-    // older retained generation's manifest may still reference them,
-    // and deleting them unconditionally would break the lock-free
-    // reader guarantee for any index compacted before its first fold
-    gcUnreferenced(spark, indexDir)
-    (before, countFiles(Seq(newPost)), rows)
-  }
 
   /** multi_match over the STORED multi-field index: per-field
     * df/stats come from the artifacts (df_blend = max over the

@@ -1432,10 +1432,11 @@ object TextQueries {
     * gate (the single-field twin is q155): write a (title, body)
     * index over the first 4/5 of the corpus with term vectors on,
     * append the rest, tombstone-delete every doc_id ≡ 5 (mod 97)
-    * through the multi-field EXACT-decrement dispatch (per-field
-    * n_docs/sum_doclen trued at delete time), rebucket-fold 4 → 10
-    * ([[graft.ops.FullText.compactMultiFieldTextIndex]]), then serve
-    * a body-only multi_match from the artifacts.
+    * through [[graft.ops.FullText.deleteFromTextIndex]]'s EXACT
+    * per-field decrement (per-field n_docs/sum_doclen trued at
+    * delete time), rebucket-fold 4 → 10
+    * ([[graft.ops.FullText.compactTextIndex]]), then serve a
+    * body-only multi_match from the artifacts.
     *
     * The oracle is the q145/q155 single-field BM25 SQL (projected to
     * the multi_match column shape): `title` is the first three
@@ -1444,8 +1445,8 @@ object TextQueries {
     * fields) collapses to the body df — a body-only query over the
     * two-field index must therefore serve EXACTLY the single-field
     * page. The mutation path varies (per-field stats/df/postings,
-    * the multi-field compactor, the exact decrement the r16 status
-    * fix gates on); the served answer doesn't — the q155 pattern. */
+    * the per-field fold, the exact decrement the r16 status fix
+    * gates on); the served answer doesn't — the q155 pattern. */
   def multiFieldTextLifecycle(spark: SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
@@ -1461,10 +1462,9 @@ object TextQueries {
       storeTermVectors = true)
     FullText.appendToMultiFieldTextIndex(spark,
       mf.filter($"doc_id" > wm), "doc_id", Seq("title", "body"), idx)
-    FullText.deleteFromMultiFieldTextIndex(spark, idx,
+    FullText.deleteFromTextIndex(spark, idx,
       docs.filter($"doc_id" % 97 === 5).select($"doc_id"), 16)
-    FullText.compactMultiFieldTextIndex(spark, idx,
-      rebucket = Some(10))
+    FullText.compactTextIndex(spark, idx, rebucket = Some(10))
     FullText.multiMatchSearchStored(spark, idx, bm25QueryTerms,
       Seq(("body", 1.0)), k = 20)
   }

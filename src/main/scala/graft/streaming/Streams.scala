@@ -656,7 +656,8 @@ object Streams {
   /** [[indexRefreshStream]] for the MULTI-FIELD text layout: the
     * same staged-segment exactly-once protocol around
     * [[graft.ops.FullText.appendToMultiFieldTextIndex]] (per-field
-    * additive df/stats, delta-only analyzer work) — a multi-field
+    * additive df/stats, delta-only analyzer work), with the same
+    * [[graft.ops.FullText.compactTextIndex]] cadence — a multi-field
     * search deployment refreshes from a stream exactly like the
     * single-field one. */
   def multiFieldRefreshStream(docs: DataFrame, idCol: String,
@@ -674,7 +675,7 @@ object Streams {
           if (compactEvery > 0 && graft.ops.FullText
               .liveSegmentCount(batch.sparkSession, indexDir)
               >= compactEvery)
-            graft.ops.FullText.compactMultiFieldTextIndex(
+            graft.ops.FullText.compactTextIndex(
               batch.sparkSession, indexDir)
           ()
         }

@@ -69,8 +69,9 @@ object RunCompact {
         .exists(n => graft.io.Layout.pathExists(spark, s"$indexDir/$n")))
       "band"
     else {
+      // the stats artifact is metadata-class: read on the driver
       val art = FullText.liveArtifactDir(spark, indexDir)
-      if (spark.read.parquet(s"$art/stats")
+      if (graft.io.TinyParquet.readFrame(spark, s"$art/stats")
           .schema.fieldNames.contains("field")) "multifield"
       else "text"
     }
@@ -142,11 +143,10 @@ object RunCompact {
           "re-resolves its physical grouping automatically at the fold")
     val (b, a, r) = fam match {
       case "vector" => SimilarityQueries.compactIvfPqIndex(spark, indexDir)
-      case "multifield" =>
-        FullText.compactMultiFieldTextIndex(spark, indexDir,
-          rebucket = rebucket)
-      case "text" => FullText.compactTextIndex(spark, indexDir,
-        rebucket = rebucket)
+      // one compactor for both text layouts: it reads the layout's
+      // key columns from the stats artifact
+      case "text" | "multifield" => FullText.compactTextIndex(spark,
+        indexDir, rebucket = rebucket)
       case "band" =>
         // the near-dup admission index: the compactor's observable is
         // ROW counts (its swap-rotation dedups replay-appended rows),

@@ -61,15 +61,15 @@ object RunStatus {
     fam match {
       case "text" | "multifield" =>
         val art = FullText.liveArtifactDir(spark, indexDir)
-        val st = spark.read.parquet(s"$art/stats")
+        // metadata-class artifact: read on the driver, no Spark job
+        val st = graft.io.TinyParquet.readFrame(spark, s"$art/stats")
         val tombs = tombRows(spark, s"$art/tombstones")
         // whether the recorded n_docs already EXCLUDES tombstoned
-        // docs: BOTH families' exact-decrement delete paths (single-
-        // field AND multi-field with term vectors — the multi-field
-        // dispatch in deleteFromMultiFieldTextIndexImpl trues the
-        // per-field statistics at delete time while still recording
-        // tombstones) leave the recorded value live; positions-only
-        // layouts of either family are Lucene-stale until the fold
+        // docs: the exact-decrement delete path (any text layout with
+        // term vectors — FullText.deleteFromTextIndex trues the
+        // single- or per-field statistics at delete time while still
+        // recording tombstones) leaves the recorded value live;
+        // layouts without term vectors are Lucene-stale until the fold
         val statsExact = (fam == "text" || fam == "multifield") &&
           FullText.hasTermVectors(spark, indexDir, art, st.head())
         def emitLive(nDocs: Long): Unit = {

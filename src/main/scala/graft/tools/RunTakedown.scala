@@ -14,9 +14,9 @@ import graft.queries.SimilarityQueries
   * index through the DataFrame delete faces (anti-join idempotence,
   * distributed tombstone rewrite — a million-id ruling file never
   * touches the driver), and optionally compact immediately to
-  * reclaim the rows physically. Multi-field text layouts are
-  * auto-detected from the stats artifact and take the exact-stats
-  * multi-field face.
+  * reclaim the rows physically. Single- and multi-field text
+  * layouts take the same delete face, which reads the layout from
+  * the index's stats artifact.
   *
   * Usage: RunTakedown <ids: parquet path | comma list>
   *          [--text <indexDir>] [--vector <indexDir>] [--compact]
@@ -66,18 +66,8 @@ object RunTakedown {
     val ids = idsFrame(spark, idsSpec)
     val n = ids.count()
     textIdx.foreach { t =>
-      val art = FullText.liveArtifactDir(spark, t)
-      val multiField = spark.read.parquet(s"$art/stats")
-        .schema.fieldNames.contains("field")
-      if (multiField)
-        FullText.deleteFromMultiFieldTextIndex(spark, t, ids, 16)
-      else
-        FullText.deleteFromTextIndex(spark, t, ids, 16)
-      if (compact) {
-        if (multiField) FullText.compactMultiFieldTextIndex(spark, t)
-        else FullText.compactTextIndex(spark, t)
-        ()
-      }
+      FullText.deleteFromTextIndex(spark, t, ids, 16)
+      if (compact) { FullText.compactTextIndex(spark, t); () }
     }
     vectorIdx.foreach { v =>
       SimilarityQueries.deleteFromIvfPqIndex(spark, v,

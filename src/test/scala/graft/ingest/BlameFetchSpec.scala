@@ -96,6 +96,32 @@ class BlameFetchSpec extends SparkSpecBase {
     }
   }
 
+  test("checking a Commit target runs no Spark job") {
+    // the response check runs per blamed file, so it must stay on the
+    // driver: count jobs in a dedicated (thread-local) job group
+    def jobsOf(respond: String => GithubClient.Response): Int = {
+      val group = s"blame-jobs-${System.nanoTime()}"
+      spark.sparkContext.setJobGroup(group, "blame check job count")
+      try BlameFetch.fetchFileBlame(spark, new GqlTransport(respond),
+        cfg, endpoint, "o", "r", "main", "p")
+      finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    }
+    assert(jobsOf(_ => GithubClient.Response(200, body = refBody)) == 0,
+      "ref hit")
+    assert(jobsOf(body =>
+      if (body.contains("BlameByRef"))
+        GithubClient.Response(200, body =
+          """{"data":{"repository":{"ref":{"target":{"__typename":"Tag"}}}}}""")
+      else GithubClient.Response(200, body = objBody)) == 0,
+      "object fallback")
+    assert(jobsOf(_ => GithubClient.Response(200, body =
+      """{"data":{"repository":{"ref":{"target":{
+        |  "__typename":"Commit","oid":"root1",
+        |  "blame":{"ranges":[]}}}}}}""".stripMargin)) == 0,
+      "empty ranges")
+  }
+
   test("already-qualified refs pass through unprefixed") {
     assert(BlameFetch.qualifiedRef("main") == "refs/heads/main")
     assert(BlameFetch.qualifiedRef("refs/tags/v1") == "refs/tags/v1")

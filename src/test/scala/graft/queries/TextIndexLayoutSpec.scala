@@ -262,7 +262,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     val pre = search(idxA)
     assert(pre == search(idxB),
       "append must shift per-field df/stats exactly like a rebuild")
-    val (fb, fa, rows) = FullText.compactMultiFieldTextIndex(spark, idxA)
+    val (fb, fa, rows) = FullText.compactTextIndex(spark, idxA)
     assert(fa < fb, s"compaction must reclaim append files: $fb -> $fa")
     assert(rows == FullText.postingsFrame(spark, idxA).count())
     assert(search(idxA) == pre, "search must be compaction-invariant")
@@ -753,7 +753,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     FullText.deleteFromTextIndex(spark, idxD, Seq(hit))
     assert(!search(idxD).exists(_._1 == hit),
       "a deleted doc must never be served from any field face")
-    FullText.compactMultiFieldTextIndex(spark, idxD)
+    FullText.compactTextIndex(spark, idxD)
     assert(!graft.io.Layout.pathExists(spark,
       s"${FullText.liveArtifactDir(spark, idxD)}/tombstones"))
     val idxR = java.nio.file.Files.createTempDirectory("mf-del-r")
@@ -839,6 +839,41 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     // flat tombstones never existed (the trio lives inside the gen dir)
     assert(graft.io.Layout.liveGeneration(spark, idx).contains(1L))
     assert(!graft.io.Layout.pathExists(spark, s"$idx/tombstones"))
+    // multi-field twin: the same crashed staging under a (title, body)
+    // index with per-field term vectors — invisible, then the replayed
+    // exact per-field decrement equals a rebuild
+    val mdocs = docs.select($"doc_id",
+      array_join(slice(split($"text", " "), 1, 2), " ").as("title"),
+      $"text".as("body"))
+    val midx = java.nio.file.Files.createTempDirectory("mf-crash")
+      .toFile.getAbsolutePath
+    FullText.writeMultiFieldTextIndex(mdocs, "doc_id",
+      Seq("title", "body"), midx, storeTermVectors = true)
+    def msearch(i: String) = FullText.multiMatchSearchStored(spark, i,
+      Seq("fast", "vector", "query"), Seq("title" -> 2.0, "body" -> 1.0),
+      tieBreaker = 0.3)
+      .collect().map(r => (r.getLong(0), r.getDouble(1),
+        r.getDouble(2), r.getDouble(3))).toSeq
+    val mpre = msearch(midx)
+    val mstage = graft.io.Layout.generationDir(midx, 1L)
+    Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$mstage/tombstones")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(mstage, "df"), "garbage".getBytes)
+    assert(FullText.liveArtifactDir(spark, midx) == midx,
+      "an uncommitted multi-field generation must not resolve as live")
+    assert(msearch(midx) == mpre,
+      "a crashed multi-field delete's staging must be invisible")
+    FullText.deleteFromTextIndex(spark, midx, Seq(1L))
+    FullText.deleteFromTextIndex(spark, midx, Seq(1L))
+    val midxR = java.nio.file.Files.createTempDirectory("mf-crash-r")
+      .toFile.getAbsolutePath
+    FullText.writeMultiFieldTextIndex(mdocs.filter($"doc_id" =!= 1L),
+      "doc_id", Seq("title", "body"), midxR, storeTermVectors = true)
+    assert(msearch(midx) == msearch(midxR),
+      "replayed multi-field delete over crashed staging must equal a " +
+        "rebuild")
+    assert(graft.io.Layout.liveGeneration(spark, midx).contains(1L))
+    assert(!graft.io.Layout.pathExists(spark, s"$midx/tombstones"))
   }
 
   test("applied-segments registry: a batch replayed AFTER compaction is still a no-op") {
@@ -936,6 +971,91 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     assert(s1(idx) == s1(idxR),
       "recorded buckets must drive append + delete + search")
     assert(s1(idx).nonEmpty)
+    // multi-field twin: 5 recorded buckets, default-parameter calls
+    val mdocs = docs.select($"doc_id",
+      array_join(slice(split($"text", "\\s+"), 1, 6), " ").as("title"),
+      $"text".as("body"))
+    val fields = Seq("title", "body")
+    val midx = java.nio.file.Files.createTempDirectory("mf-bk")
+      .toFile.getAbsolutePath
+    FullText.writeMultiFieldTextIndex(mdocs.filter($"doc_id" <= w),
+      "doc_id", fields, midx, buckets = 5, storeTermVectors = true)
+    FullText.appendToMultiFieldTextIndex(spark,
+      mdocs.filter($"doc_id" > w), "doc_id", fields, midx)
+    FullText.deleteFromTextIndex(spark, midx, dead)
+    val midxR = java.nio.file.Files.createTempDirectory("mf-bk-r")
+      .toFile.getAbsolutePath
+    FullText.writeMultiFieldTextIndex(
+      mdocs.filter(!$"doc_id".isInCollection(dead)), "doc_id", fields,
+      midxR, buckets = 5, storeTermVectors = true)
+    def m1(i: String) = FullText.multiMatchSearchStored(spark, i, terms,
+      Seq("title" -> 2.0, "body" -> 1.0), tieBreaker = 0.3)
+      .collect().map(r => (r.getLong(0), r.getDouble(1),
+        r.getDouble(2), r.getDouble(3))).toSeq
+    assert(m1(midx) == m1(midxR),
+      "recorded buckets must drive the multi-field append + delete + " +
+        "search")
+    assert(m1(midx).nonEmpty)
+  }
+
+  test("stats schema: both layouts keep their exact column lists through every mutation") {
+    // postings keep their column sets too: positions only single-field
+    val singlePost = Set("term", "doc_id", "doclen", "tf", "positions",
+      "bucket")
+    val multiPost = singlePost - "positions" + "field"
+    val single = Seq("n_docs" -> "bigint", "avgdl" -> "double",
+      "sum_doclen" -> "bigint", "has_positions" -> "boolean",
+      "has_termvectors" -> "boolean", "buckets" -> "int")
+    val multi = ("field" -> "string") +:
+      single.filterNot(_._1 == "has_positions")
+    def schemaOf(idx: String) = spark.read
+      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+      .schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
+    val docs = Seq(
+      (1L, "fast vector engines win races", "fast vector"),
+      (2L, "fast vector query engines", "query engines"),
+      (3L, "slow scalar fallback path", "slow path"),
+      (4L, "fast query planners everywhere", "fast planners"))
+      .toDF("doc_id", "text", "title")
+    val extra = Seq((5L, "fast query rewrites", "query rewrites"))
+      .toDF("doc_id", "text", "title")
+    val fields = Seq("title", "text")
+    // with term vectors the delete decrements exactly and the fold
+    // carries the stats; without them the delete carries stale stats
+    // and the fold re-derives them; a rebucket rewrites either way
+    for (tv <- Seq(true, false)) {
+      val sIdx = java.nio.file.Files.createTempDirectory("stats-s")
+        .toFile.getAbsolutePath
+      val mIdx = java.nio.file.Files.createTempDirectory("stats-m")
+        .toFile.getAbsolutePath
+      def check(step: String): Unit = {
+        assert(schemaOf(sIdx) == single,
+          s"single-field stats after $step (term vectors $tv)")
+        assert(schemaOf(mIdx) == multi,
+          s"multi-field stats after $step (term vectors $tv)")
+        assert(FullText.postingsFrame(spark, sIdx).columns.toSet ==
+          singlePost, s"single-field postings after $step")
+        assert(FullText.postingsFrame(spark, mIdx).columns.toSet ==
+          multiPost, s"multi-field postings after $step")
+      }
+      FullText.writeTextIndex(docs, "doc_id", "text", sIdx,
+        storeTermVectors = tv)
+      FullText.writeMultiFieldTextIndex(docs, "doc_id", fields, mIdx,
+        storeTermVectors = tv)
+      check("write")
+      FullText.appendToTextIndex(spark, extra, "doc_id", "text", sIdx)
+      FullText.appendToMultiFieldTextIndex(spark, extra, "doc_id",
+        fields, mIdx)
+      check("append")
+      Seq(sIdx, mIdx).foreach(FullText.deleteFromTextIndex(spark, _,
+        Seq(2L)))
+      check(if (tv) "exact delete" else "Lucene-stale delete")
+      Seq(sIdx, mIdx).foreach(FullText.compactTextIndex(spark, _))
+      check("compact")
+      Seq(sIdx, mIdx).foreach(FullText.compactTextIndex(spark, _,
+        rebucket = Some(3)))
+      check("rebucket")
+    }
   }
 
   test("rebucket at compaction: pages identical, recorded count updates, appends follow") {
@@ -1002,7 +1122,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
       Seq("title" -> 2.0, "body" -> 1.0), tieBreaker = 0.3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val mBefore = mpage()
-    FullText.compactMultiFieldTextIndex(spark, midx,
+    FullText.compactTextIndex(spark, midx,
       rebucket = Some(8))
     assert(mpage() == mBefore,
       "multi-field rebucket must serve the same page")
@@ -1025,7 +1145,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     val dead = docs.filter($"doc_id" % 7 === 3)
       .select($"doc_id").collect().map(_.getLong(0)).toSeq
     assert(dead.nonEmpty)
-    FullText.deleteFromMultiFieldTextIndex(spark, idxD, dead)
+    FullText.deleteFromTextIndex(spark, idxD, dead)
     val idxR = java.nio.file.Files.createTempDirectory("mf-tv-del-r")
       .toFile.getAbsolutePath
     val survivors = docs.filter(!$"doc_id".isInCollection(dead))
@@ -1046,7 +1166,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
       .sortBy(t => (t._1, t._2)).toSeq
     assert(dfOf(idxD) == dfOf(idxR))
     // idempotent replay
-    FullText.deleteFromMultiFieldTextIndex(spark, idxD, dead)
+    FullText.deleteFromTextIndex(spark, idxD, dead)
     assert(search(idxD) == search(idxR))
     // an append composes with the decremented state (delete → append
     // ≡ rebuild of survivors ∪ fresh), term vectors in lockstep
@@ -1064,7 +1184,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     // compaction applies tombstones physically (term vectors too) and
     // keeps every page bit-identical
     val pre = search(idxD)
-    FullText.compactMultiFieldTextIndex(spark, idxD)
+    FullText.compactTextIndex(spark, idxD)
     assert(!graft.io.Layout.pathExists(spark,
       s"${FullText.liveArtifactDir(spark, idxD)}/tombstones"))
     assert(FullText.termVectorsFrame(spark, idxD).count() ==

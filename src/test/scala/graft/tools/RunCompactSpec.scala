@@ -73,7 +73,7 @@ class RunCompactSpec extends SparkSpecBase {
     }
     assert(eZ.getMessage.contains("must be positive"))
     intercept[IllegalArgumentException] {
-      FullText.compactMultiFieldTextIndex(spark, tIdx,
+      FullText.compactTextIndex(spark, tIdx,
         rebucket = Some(-3))
     }
   }

@@ -176,7 +176,7 @@ class RunStatusSpec extends SparkSpecBase {
     val idxMfTv = tmp("status-live-mf-tv")
     FullText.writeMultiFieldTextIndex(mf, "doc_id",
       Seq("title", "body"), idxMfTv, storeTermVectors = true)
-    FullText.deleteFromMultiFieldTextIndex(spark, idxMfTv, dead)
+    FullText.deleteFromTextIndex(spark, idxMfTv, dead)
     val sMfTv = RunStatus.describe(spark, idxMfTv)
     assert(sMfTv.contains(s""""n_docs":${n - dead.size}""") &&
       sMfTv.contains(s""""n_docs_live":${n - dead.size}""") &&
