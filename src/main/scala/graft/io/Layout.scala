@@ -2,7 +2,6 @@ package graft.io
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Lease CONTENTION — another mutator currently holds (or just won
   * the race for) an index's `_mutation.lock`. A dedicated type so the
@@ -15,16 +14,9 @@ import org.apache.spark.sql.functions.{broadcast, col}
 final class LeaseHeldException(msg: String, cause: Throwable = null)
   extends IllegalStateException(msg, cause)
 
-/** Physical-layout helpers for the warehouse side of the engine: at
-  * 100 TB the cheapest shuffle is the one the table layout already
-  * paid for. Bucketed tables co-locate equal join keys, so repeated
-  * joins/aggregations on the bucket key read pre-partitioned data and
-  * plan no Exchange (LayoutSpec asserts this on the physical plan).
-  *
-  * Partition columns (coarse, low-cardinality — e.g. repo_name or an
-  * ingest date) prune whole directories at scan time; bucket columns
-  * (fine, high-cardinality join keys — custkey, doc_id) kill the
-  * shuffle. The two compose.
+/** Physical-layout helpers for the stored index families: the
+  * mutation lease, generation commit points, staging GC and the
+  * small-artifact writers they share.
   *
   * All filesystem operations here resolve through Hadoop's
   * `FileSystem` from the session's configuration — the same
@@ -34,19 +26,6 @@ final class LeaseHeldException(msg: String, cause: Throwable = null)
   * stored-index maintenance path stops firing with no error.
   */
 object Layout {
-
-  /** Write df as a bucketed (and optionally sorted-in-bucket) managed
-    * table. Joins/aggs on `bucketKeys` against tables bucketed the
-    * same way are exchange-free. */
-  def writeBucketed(df: DataFrame, table: String, bucketKeys: Seq[String],
-      numBuckets: Int, partitionCols: Seq[String] = Nil): Unit = {
-    var w = df.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, bucketKeys.head, bucketKeys.tail: _*)
-      .sortBy(bucketKeys.head, bucketKeys.tail: _*)
-    if (partitionCols.nonEmpty)
-      w = w.partitionBy(partitionCols: _*)
-    w.saveAsTable(table)
-  }
 
   /** Existence probe through the session's Hadoop FileSystem — the
     * only correct way to ask "does this artifact exist" for a path
@@ -135,8 +114,8 @@ object Layout {
   }
 
   /** Run `body` as THE single mutator of `indexDir` — every
-    * stored-index mutation (append, delete, compact, both index
-    * families) runs inside this. Two layers:
+    * stored-index mutation (append, delete, compact, every index
+    * family) runs inside this. Two layers:
     *
     *  1. a JVM-wide lock per index path: concurrent mutators in one
     *     JVM (the refresh + takedown stream pair) SERIALIZE — they
@@ -512,23 +491,6 @@ object Layout {
     }
   }
 
-  /** The fence re-read, exposed for mutators whose commit is NOT a
-    * generation marker (the near-dup band index's swap-rotation): when
-    * the calling thread holds a mutation lease for `indexDir`, abort
-    * unless the lock still carries our token — called immediately
-    * before the destructive renames, exactly like
-    * [[commitGeneration]]'s own fence, so a zombie holder that lost a
-    * stale-lease takeover mid-fold cannot rotate its pre-takeover
-    * artifacts over rows the intruder appended. A thread holding no
-    * lease (a legacy direct caller) passes through. */
-  private[graft] def fenceHeldLease(spark: SparkSession,
-      indexDir: String, when: String): Unit = {
-    val p = new Path(indexDir)
-    fenceOrAbort(spark,
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      indexDir, when)
-  }
-
   /** The per-thread generation PIN set by [[withPinnedGeneration]],
     * keyed like [[heldLeases]] by the fully-qualified index path. */
   private val pinnedGeneration = new ThreadLocal[Map[String, Long]] {
@@ -542,7 +504,7 @@ object Layout {
     * every read face re-resolves [[liveGeneration]] per call, so a
     * multi-query session (a repro run, a paginated scroll) could
     * still observe gen-N for one page and gen-N+1 for the next.
-    * Inside this scope both families' artifact-dir resolvers return
+    * Inside this scope every family's artifact-dir resolver returns
     * `gen` instead of the highest committed generation: pages are
     * bit-stable across a concurrent commit (GenerationPinSpec races
     * one mid-session).
@@ -593,7 +555,7 @@ object Layout {
   def liveGeneration(spark: SparkSession, indexDir: String): Option[Long] = {
     // an explicit generation pin ([[withPinnedGeneration]]) overrides
     // the highest-committed resolution for this thread: every read
-    // face of both families resolves its artifact dir through here,
+    // face of every family resolves its artifact dir through here,
     // so one pin holds a whole query session on one snapshot
     pinnedGeneration.get.get(leaseKey(spark, indexDir)).foreach { g =>
       val marker = new Path(s"${generationDir(indexDir, g)}/_COMMITTED")
@@ -853,6 +815,9 @@ object Layout {
     * additionally exclude anything the live manifest references. */
   private val tokenSuffixRe = "^(.+)\\.([0-9a-f]{12})$".r
 
+  /** The final name of a generation's side dir: `<kind>-v<gen>`. */
+  private val sideGenRe = "^([a-z]+)-v([0-9]+)$".r
+
   /** Per-generation manifest memo for [[manifestReferenced]]: a
     * committed generation's `segments` parquet is IMMUTABLE (every
     * mutation stages a NEW generation; nothing rewrites a committed
@@ -881,8 +846,9 @@ object Layout {
     }.sum
 
   /** Directories ANY retained committed generation's segment manifest
-    * references (both index families commit a `segments` parquet of
-    * (kind, dir) rows into the generation dir; a root manifest covers
+    * references (the text and vector families commit a `segments`
+    * parquet of (kind, dir) rows into the generation dir; the band
+    * family's dirs are named by generation; a root manifest covers
     * the legacy layout) — the belt-and-suspenders exclusion for the
     * orphan sweep: nothing a committed manifest points at is ever an
     * orphan, whatever its name looks like. ALL retained generations,
@@ -945,7 +911,10 @@ object Layout {
     * directories a writer that crashed (or was fenced out) mid-stage
     * leaves behind, plus — when no mutation is in flight —
     * finally-named `gen-N` dirs above the live generation that never
-    * got their `_COMMITTED` marker (a pre-token-staging crash).
+    * got their `_COMMITTED` marker (a pre-token-staging crash) and
+    * finally-named side dirs of such a generation (`postings-vN`,
+    * `bands-vN`: a commit that died after its renames, before the
+    * marker).
     * Invisible to every reader (correct) but reclaimed only by the
     * retire sweep of the NEXT committed mutation — an index that
     * crashes and then goes idle leaks them forever, which is what
@@ -959,49 +928,13 @@ object Layout {
     * the lock) is in-flight work, never reported.
     *
     * `underLease` = the caller IS the current holder (the GC face):
-    * the uncommitted-gen rule then applies even though a lock exists
+    * the uncommitted-gen rules then apply even though a lock exists
     * — the holder is the caller, which stages nothing before its
     * sweep, so an unmarked `gen-N` above live is provably a crashed
     * predecessor's, not in-flight work. The same flag marks DELETION
     * intent, so the manifest exclusion runs strict: a manifest read
     * failure aborts the sweep instead of degrading into an empty
     * protection set. */
-  /** Base names under `indexDir` sitting in the AMBIGUOUS rotation
-    * crash state — live base + `.old` + staging all present (see
-    * [[AmbiguousRotationException]]): every fold of such an artifact
-    * refuses until an operator resolves it, so the monitoring face
-    * must surface the halt without anyone running a mutation.
-    * Driver-side listing + two exists probes per backup — metadata
-    * RPCs only, safe to poll. */
-  def ambiguousRotations(spark: SparkSession,
-      indexDir: String): Seq[String] = {
-    val p = new Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val entries = fs.listStatus(p)
-    val trios = entries.iterator
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(n => n.endsWith(".old") && n.length > 4)
-      .map(_.dropRight(4))
-      .filter { base =>
-        fs.exists(new Path(p, base)) &&
-          Seq(".new", ".compact")
-            .exists(s => fs.exists(new Path(p, base + s)))
-      }
-    // a crashed guided resolution's intent marker is the same class
-    // of halt (every fold/sweep refuses until the arm re-runs), and
-    // its intermediate states need not still be the trio — surface
-    // those bases too
-    val midResolve = entries.iterator
-      .filter(_.isFile)
-      .map(_.getPath.getName)
-      .filter(n => n.endsWith(".resolve-intent") &&
-        n.length > ".resolve-intent".length)
-      .map(_.dropRight(".resolve-intent".length))
-    (trios ++ midResolve).toSeq.distinct.sorted
-  }
-
   def orphanedStaging(spark: SparkSession, indexDir: String,
       underLease: Boolean = false): Seq[(String, Long)] = {
     val p = new Path(indexDir)
@@ -1038,6 +971,12 @@ object Layout {
           // above the live generation with no marker and no active
           // writer (or the writer is the GC itself): a crashed
           // pre-token-staging writer's leftovers
+          sized
+        case sideGenRe(_, g) if (holderToken.isEmpty || underLease) &&
+            g.toLong > live && !fs.exists(
+              new Path(s"${generationDir(indexDir, g.toLong)}/_COMMITTED")) =>
+          // a side dir renamed to its final name for a generation
+          // whose marker never landed
           sized
         case _ => None
       }
@@ -1222,359 +1161,5 @@ object Layout {
       TinyParquet.write(spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         schema), path)
-  }
-
-  /** A swap rotation whose crash state cannot be resolved without
-    * risking data: live base + `.old` backup + staging dir all
-    * present. UNREACHABLE on atomic-rename stores (a rename is
-    * instant, so the observable states are base+tmp, `.old`+tmp,
-    * `.old`+base) — but a copy+delete-rename store (bare S3A) passes
-    * through it three ways, and in each a DIFFERENT artifact is the
-    * partial one: crash mid-copy of rename-1 (`.old` partial), crash
-    * mid-copy of rename-2 (base partial), crash during rename-2's
-    * source delete (staging partial). No automatic pick is safe in
-    * all three, so the engine STOPS — every mutator heals before
-    * touching a rotated artifact, and this exception turns what used
-    * to be silent enshrinement of a partial base (the old heal saw
-    * "base exists" and proceeded; the writer's purge then destroyed
-    * the complete copies) into a loud, resolvable halt. The message
-    * carries the operator resolution. */
-  final class AmbiguousRotationException(msg: String)
-    extends IllegalStateException(msg)
-
-  /** The rotation SELF-HEAL, public. Crash states of the shared
-    * swap-rotation sequence (purge tmp+old → write tmp → rename
-    * base→`.old` → rename tmp→base → delete `.old`) resolve here;
-    * returns whether a heal happened.
-    *
-    *  - base MISSING, exactly one staging dir (`.new`/`.compact`)
-    *    beside `.old`: the rename pair was in flight and BOTH
-    *    survivors are complete (`.old` because rename-1's source
-    *    delete only runs after its copy finished; the staging dir
-    *    because rename-2 had not consumed it). Heal FORWARD: promote
-    *    the staging dir, drop the backup — the fold is kept, not
-    *    recomputed. Idempotent under re-crash (the staging dir
-    *    outlives a failed promote on a copy-rename store).
-    *  - base MISSING, `.old` only (or ambiguous double staging): the
-    *    classic between-renames state — restore the backup, the one
-    *    artifact known complete; stray staging dirs become ordinary
-    *    garbage for the sweep.
-    *  - base PRESENT + `.old` + a staging dir: AMBIGUOUS on
-    *    copy-rename stores (three crash points, a different partial
-    *    artifact in each — see [[AmbiguousRotationException]]).
-    *    THROWS instead of guessing. The operator inspects and picks
-    *    — keep the base (delete `.old` + staging), rewind (delete
-    *    base + staging, rename `.old` back), or roll forward (delete
-    *    base + `.old`, rename the staging dir in) — then re-runs.
-    *
-    * `.old` beside a live base with NO staging dir (crash after
-    * rename-2, before the backup delete) needs no heal — the base is
-    * complete; the sweep reclaims the backup. A staging dir with NO
-    * `.old` is a crashed WRITE (the writer purges old first), i.e.
-    * garbage — never promoted.
-    *
-    * [[rewriteParquet]]/[[compactParquetDir]]/the band compactor call
-    * this internally before touching anything — but a caller whose
-    * replacement frame is COMPUTED FROM the live path
-    * (`spark.read.parquet(path)` before calling rewriteParquet) hits
-    * the missing/partial path first, so such callers (and operators)
-    * heal explicitly before reading. [[graft.tools.RunGc]] heals
-    * index-wide, reporting ambiguous rotations instead of dying on
-    * the first one. */
-  def healSwapRotation(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crashed GUIDED resolution ([[resolveAmbiguousRotation]]) left
-    // its intent marker: the intermediate states of a resolution arm
-    // are exactly the shapes this heal would mis-resolve (a rewind
-    // that died after deleting the base looks like a roll-forward
-    // candidate), so automation stands down until the arm is re-run
-    // to completion
-    if (fs.exists(new Path(path + ".resolve-intent")))
-      throw new AmbiguousRotationException(
-        s"a guided resolution of $path crashed mid-arm (marker " +
-          s"$path.resolve-intent records which) — re-run " +
-          "`RunGc <indexDir> --resolve` with the recorded arm to " +
-          "finish it; no automatic heal or sweep will touch this " +
-          "artifact until the marker is gone.")
-    val old = new Path(path + ".old")
-    if (!fs.exists(old)) return false
-    val tmps = Seq(".new", ".compact").map(s => new Path(path + s))
-      .filter(fs.exists)
-    if (fs.exists(p)) {
-      if (tmps.nonEmpty) throw new AmbiguousRotationException(
-        s"swap rotation of $path crashed mid-flight on a " +
-          "copy-rename store: base, .old and staging " +
-          s"(${tmps.map(_.getName).mkString(", ")}) all exist, and " +
-          "which one is partial depends on where the copy died. " +
-          "Resolve manually — keep the base (delete .old + staging), " +
-          "rewind (delete base + staging, rename .old back), or " +
-          "roll forward (delete base + .old, rename the staging dir " +
-          "in) — then re-run. On atomic-rename stores this state is " +
-          "unreachable.")
-      false // complete base, stray backup: the sweep reclaims it
-    } else tmps match {
-      case Seq(tmp) =>
-        require(fs.rename(tmp, p), s"self-heal: $tmp -> $path failed")
-        fs.delete(old, true)
-        true
-      case _ =>
-        require(fs.rename(old, p), s"self-heal: $path.old -> $path failed")
-        true
-    }
-  }
-
-  /** GUIDED resolution of the [[AmbiguousRotationException]] trio —
-    * the executable form of the exception's three-way operator
-    * message, so recovery stops being hand-run `fs.delete` calls on
-    * the exact state where deleting the wrong artifact destroys the
-    * last complete copy. `arm` picks which survivor is TRUSTED:
-    *
-    *  - `keep-base`   — the live base is complete (crash mid-rename-1:
-    *    its copy died before the source delete): delete `.old` +
-    *    staging.
-    *  - `rewind`      — the `.old` backup is complete (crash
-    *    mid-rename-2 left the base partial): delete base + staging,
-    *    rename `.old` back — the crashed fold re-runs from the
-    *    restored input.
-    *  - `roll-forward` — the staging dir is complete (crash during
-    *    rename-2's source delete: the new base fully landed): delete
-    *    base + `.old`, rename the staging dir in — the fold is KEPT.
-    *
-    * WHICH arm is right is an operator judgment (row counts, footer
-    * sanity, `_rowcount` side files — the artifacts alone cannot say;
-    * that is what made the state ambiguous), but the MECHANICS are
-    * precondition-checked here: each arm refuses when the artifact it
-    * trusts is absent, `roll-forward` refuses when BOTH `.new` and
-    * `.compact` exist (no principled pick between two staging dirs),
-    * and a state the automatic heal can already resolve (not the full
-    * trio) refuses with a pointer to [[healSwapRotation]] /
-    * [[graft.tools.RunGc]] — guided surgery must never race the
-    * self-heal's own arms. Runs are reported through `report` BEFORE
-    * each destructive step (the CLI prints them), and the returned
-    * action list is the executed plan. Callers hold the mutation
-    * lease ([[graft.tools.RunGc]]'s `--resolve` face does).
-    *
-    * CRASH SAFETY — the arm itself can die mid-sequence, and the
-    * intermediate states are exactly the shapes automation
-    * mis-resolves (a roll-forward that died after its deletes leaves
-    * a lone staging dir, which the sweep reads as crashed-write
-    * garbage; a rewind that died after deleting the base leaves
-    * `.old` + staging, which the self-heal rolls FORWARD — the
-    * opposite of the operator's judgment). So every resolution runs
-    * under an INTENT MARKER (`<path>.resolve-intent`, content = the
-    * arm): it is created before the first destructive step and
-    * removed after the last, [[healSwapRotation]] and the
-    * [[graft.tools.RunGc]] sweep refuse to touch a marked artifact,
-    * and re-running `--resolve` with the SAME arm RESUMES — each
-    * step is idempotent against the states the sequence can crash
-    * into. A different arm while a marker stands refuses (the
-    * recorded arm already destroyed what IT distrusted; switching
-    * horses mid-surgery is how the last copy dies). */
-  def resolveAmbiguousRotation(spark: SparkSession, path: String,
-      arm: String, report: String => Unit = _ => ()): Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(path + ".old")
-    val intent = new Path(path + ".resolve-intent")
-    require(Seq("keep-base", "rewind", "roll-forward").contains(arm),
-      s"unknown resolution arm '$arm' — one of keep-base, rewind, " +
-        "roll-forward (see AmbiguousRotationException).")
-    def stagings(): Seq[Path] = Seq(".new", ".compact")
-      .map(s => new Path(path + s)).filter(fs.exists)
-    if (fs.exists(intent)) {
-      val prev = {
-        val in = fs.open(intent)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      }
-      require(prev == arm,
-        s"a guided resolution of $path crashed mid-'$prev' (marker " +
-          s"$intent) — re-run --resolve with '$prev' to finish it; " +
-          s"'$arm' would delete artifacts the crashed arm already " +
-          "chose to trust. Remove the marker only after manual " +
-          "inspection.")
-    } else {
-      val baseExists = fs.exists(p)
-      val st = stagings()
-      require(baseExists && fs.exists(old) && st.nonEmpty,
-        s"$path is not in the ambiguous rotation state (base + .old " +
-          s"+ staging all present; found base=$baseExists " +
-          s"old=${fs.exists(old)} " +
-          s"staging=${st.map(_.getName).mkString(",")}) — " +
-          "anything less than the full trio self-heals: run RunGc " +
-          "without --resolve (or Layout.healSwapRotation) instead.")
-      if (arm == "roll-forward") require(st.size == 1,
-        s"refusing roll-forward: ${st.size} staging dirs exist " +
-          s"(${st.map(_.getName).mkString(", ")}) — roll-forward " +
-          "needs exactly one complete staging dir to promote; " +
-          "keep-base or rewind instead.")
-      val out = fs.create(intent, false)
-      try out.write(arm.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    val actions = scala.collection.mutable.ArrayBuffer[String]()
-    def destroy(t: Path): Unit = {
-      val a = s"delete $t"
-      report(a)
-      require(fs.delete(t, true), s"resolve $arm: $a failed")
-      actions += a
-    }
-    def promote(src: Path): Unit = {
-      val a = s"rename $src -> $p"
-      report(a)
-      require(fs.rename(src, p), s"resolve $arm: $a failed")
-      actions += a
-    }
-    // each arm is a sequence of idempotent steps ordered so that any
-    // crash point resumes (under the marker, nothing else touches
-    // the artifacts in between)
-    arm match {
-      case "keep-base" =>
-        require(fs.exists(p),
-          s"keep-base cannot complete: no base at $path — the marker" +
-            s" ($intent) guards a state this arm never produces; " +
-            "inspect manually.")
-        if (fs.exists(old)) destroy(old)
-        stagings().foreach(destroy)
-      case "rewind" =>
-        stagings().foreach(destroy)
-        if (fs.exists(old)) {
-          if (fs.exists(p)) destroy(p)
-          promote(old)
-        } else require(fs.exists(p),
-          s"rewind cannot complete: neither $old nor $path exists — " +
-            "inspect manually before removing the marker.")
-      case "roll-forward" =>
-        val st = stagings()
-        if (st.nonEmpty) {
-          require(st.size == 1,
-            s"refusing roll-forward: ${st.size} staging dirs exist")
-          if (fs.exists(p)) destroy(p)
-          promote(st.head)
-        } else require(fs.exists(p),
-          s"roll-forward cannot complete: no staging dir and no " +
-            s"base at $path — inspect manually before removing the " +
-            "marker.")
-        if (fs.exists(old)) destroy(old)
-    }
-    require(fs.delete(intent, false),
-      s"resolution complete but the intent marker $intent failed to " +
-        "delete — remove it manually (automation refuses the " +
-        "artifact until it is gone).")
-    actions.toSeq
-  }
-
-  /** Swap-safe overwrite of a parquet artifact whose REPLACEMENT is
-    * computed FROM its current content (a dictionary merge, a
-    * statistics decrement): `mode("overwrite")` on the path a plan is
-    * lazily reading deletes the input mid-scan, so the new frame
-    * lands in `<path>.new` first and directory renames make it live.
-    * Crash before the first rename leaves the live artifact
-    * untouched; crash between renames leaves a `<path>.old` backup
-    * that the NEXT run restores automatically before proceeding (the
-    * rotation self-heal, shared with the compactBandIndex rotation —
-    * previously a documented manual restore). */
-  def rewriteParquet(spark: SparkSession, frame: DataFrame, path: String,
-      partitionCols: Seq[String] = Nil): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + ".new")
-    val old = new Path(path + ".old")
-    // ROTATION SELF-HEAL: a crash between the two renames left the
-    // live path missing and `.old` holding the only copy — restore
-    // before the delete below destroys the backup. NOTE: a caller
-    // whose frame reads FROM `path` fails before reaching here; such
-    // callers heal explicitly ([[healSwapRotation]]) before reading.
-    healSwapRotation(spark, path)
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    var w = frame.write.mode("overwrite")
-    if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-    w.parquet(tmp.toString)
-    // an empty frame under partitionBy writes no schema-bearing file
-    // — swapping that live would replace a readable artifact with a
-    // poisoned one (the same hole the fold writers guard)
-    ensureReadableParquet(spark, tmp.toString, frame.schema)
-    if (fs.exists(p))
-      require(fs.rename(p, old), s"swap: $path -> .old failed")
-    require(fs.rename(tmp, p), s"swap: .new -> $path failed")
-    fs.delete(old, true)
-  }
-
-  /** In-place small-file compaction of a parquet directory — every
-    * `append` (a stored-index delta, a streaming micro-batch) lands
-    * new part-files, and a partitioned layout accumulates them PER
-    * PARTITION VALUE, degrading exactly the file-pruned scans the
-    * layout exists for. Rewrites the directory with rows clustered by
-    * `partitionCols` (one task per hash bucket → one file per
-    * partition value) and swaps directories keep-the-old-until-live
-    * (the compactBandIndex rotation: crash before the swap leaves the
-    * live dir untouched; crash between renames leaves a `.old` backup
-    * the next run restores automatically — the rotation self-heal).
-    * Run in a maintenance window; online compaction wants a
-    * transactional table format.
-    *
-    * `minus` applies a TOMBSTONE set during the rewrite: rows whose
-    * `minus` key columns match a tombstone row are dropped — the
-    * physical half of the stored layouts' delete contract (search
-    * faces anti-join the live tombstones; compaction reclaims them).
-    * The tombstone frame broadcasts: it is delete-batch-sized by
-    * contract, and compaction is exactly the mechanism that keeps it
-    * so. Without `minus`, content is untouched — appends are NEW rows
-    * here, not replays, so there is nothing to dedup, and callers'
-    * spec gates pin frame equality across the rewrite.
-    *
-    * Returns (dataFilesBefore, dataFilesAfter, rows) — the
-    * reclaimed-file observable the layout specs pin. */
-  def compactParquetDir(spark: SparkSession, path: String,
-      partitionCols: Seq[String] = Nil,
-      minus: Option[(DataFrame, Seq[String])] = None): (Long, Long, Long) = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(d: Path): Long = {
-      if (!fs.exists(d)) return 0L
-      var n = 0L
-      val it = fs.listFiles(d, true)
-      while (it.hasNext)
-        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      n
-    }
-    // ROTATION SELF-HEAL, as in rewriteParquet: restore a crashed
-    // predecessor's `.old` backup before reading or deleting anything
-    healSwapRotation(spark, path)
-    if (!fs.exists(p)) return (0L, 0L, 0L)
-    val before = dataFiles(p)
-    val df0 = spark.read.parquet(path)
-    val df1 = minus match {
-      case Some((tomb, keys)) =>
-        df0.join(broadcast(tomb.select(keys.map(col): _*).distinct()),
-          keys, "left_anti")
-      case None => df0
-    }
-    // partitioned: cluster rows so each partition value writes one
-    // file. Unpartitioned: the SCAN already packs small files into
-    // few splits (openCostInBytes file packing), so the plain rewrite
-    // shrinks the file count without a coalesce(1) single-thread trap.
-    val df = if (partitionCols.nonEmpty)
-      df1.repartition(partitionCols.map(col): _*) else df1
-    val tmp = new Path(path + ".compact")
-    val old = new Path(path + ".old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    var w = df.write.mode("overwrite")
-    if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-    w.parquet(tmp.toString)
-    // a fold whose tombstones cover every row writes zero rows, and a
-    // zero-row partitionBy write is schema-less — without this the
-    // read-back below crashes the fold (live stays, but the
-    // maintenance job reports failure for recoverable state)
-    ensureReadableParquet(spark, tmp.toString, df.schema)
-    val rows = spark.read.parquet(tmp.toString).count()
-    require(fs.rename(p, old), s"swap: $path -> .old failed")
-    require(fs.rename(tmp, p), s"swap: .compact -> $path failed")
-    fs.delete(old, true)
-    (before, dataFiles(p), rows)
   }
 }

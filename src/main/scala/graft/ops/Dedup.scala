@@ -383,36 +383,43 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(col("j"), 4).as("jaccard"))
   }
 
+  /** The live (bands, shingles) directories of a persisted near-dup
+    * index ([[minhashLshPairsAgainstIndex]]'s artifacts): the live
+    * generation's `bands-v<gen>`/`shingles-v<gen>`, or the root
+    * `bands`/`shingles` of an index no fold has committed yet (the
+    * flat layout the admission stream starts with). Every reader and
+    * appender resolves through here — the admission stream's probe
+    * and in-place append, [[compactBandIndex]], RunStatus and
+    * RunCompact's family detection. */
+  def liveBandDirs(spark: SparkSession,
+      indexDir: String): (String, String) =
+    graft.io.Layout.liveGeneration(spark, indexDir) match {
+      case Some(g) => (s"$indexDir/bands-v$g", s"$indexDir/shingles-v$g")
+      case None => (s"$indexDir/bands", s"$indexDir/shingles")
+    }
+
   /** Maintenance compactor for the persisted near-dup index artifacts
-    * ([[minhashLshPairsAgainstIndex]]'s `bands`/`shingles` dirs, the
-    * ones streaming.Streams.nearDupAdmissionStream appends to): an
-    * at-least-once replayed batch re-appends byte-identical (id, band,
-    * band_hash) and (id, sh) rows — verdict-neutral (pairs are
+    * (the ones streaming.Streams.nearDupAdmissionStream appends to):
+    * an at-least-once replayed batch re-appends byte-identical (id,
+    * band, band_hash) and (id, sh) rows — verdict-neutral (pairs are
     * distinct-ed before the verify) but dead weight in every future
     * collision scan, so like any append-only log the artifacts want a
     * scheduled rewrite. Dedups bands on the full (id, band, band_hash)
     * key and shingles to one row per id (replays are identical by
-    * construction — there is nothing to merge, only to drop), writes
-    * each to a fresh directory, then swaps directories with
-    * keep-the-old-until-the-new-is-live ordering: crash before the
-    * swap leaves the live index untouched; crash between the two
-    * renames leaves a `.old` backup to restore from.
+    * construction — there is nothing to merge, only to drop).
     *
-    * SINGLE MUTATOR AT A TIME, enforced like the text/vector
-    * families: the fold runs under [[graft.io.Layout
-    * .withMutationLease]] — a concurrent admission stream's batch
-    * (whose body holds the same lease) serializes with it in one JVM
-    * and excludes it across JVMs, so the swap can never rotate the
-    * directories out from under a batch's collision probe. The
-    * band index keeps its swap-rotation commit rather than
-    * generations: its artifacts are an append-only log whose replays
-    * are byte-identical by construction (verdicts distinct-ed before
-    * the verify), so generation atomicity would buy nothing the
-    * rotation doesn't already give. The rotation IS epoch-fenced like
-    * the generation commits: the lock token re-reads immediately
-    * before each rename pair ([[graft.io.Layout.fenceHeldLease]]), so
-    * a zombie that lost a stale-lease takeover mid-fold aborts instead
-    * of rotating away rows the intruder appended.
+    * Commits like the text fold ([[FullText.compactTextIndex]]): the
+    * deduped artifacts stage into token-unique `bands-v<gen>` /
+    * `shingles-v<gen>` dirs and ONE `_COMMITTED` marker on `gen-<gen>`
+    * makes them live ([[graft.io.Layout.commitGenerationAndRetire]] —
+    * lease fence, side renames, marker). A crash anywhere before the
+    * marker leaves the previous generation (or the flat root dirs)
+    * serving; the leftovers are invisible and reclaimed by the next
+    * fold or RunGc. Superseded band dirs are reclaimed after the
+    * commit, keeping those of generations `graft.index
+    * .retainGenerations` retains. The fold runs under [[graft.io
+    * .Layout.withMutationLease]], the lease the admission stream's
+    * batch body also holds.
     *
     * Returns ((bandsBefore, bandsAfter), (shinglesBefore,
     * shinglesAfter)) row counts — the reclaimed-volume observable
@@ -425,47 +432,62 @@ object Dedup {
 
   private def compactBandIndexImpl(spark: SparkSession,
       indexDir: String): ((Long, Long), (Long, Long)) = {
-    def compactOne(path: String, dedup: DataFrame => DataFrame)
-        : (Long, Long) = {
-      // All probes/renames through Hadoop's FileSystem (the resolution
-      // the parquet reads use) so hdfs://-, s3a://- and file:-schemed
-      // index dirs all compact; a java.io.File probe reports "absent"
-      // for URI paths and the compactor would silently reclaim nothing.
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(path + ".compact")
-      val old = new org.apache.hadoop.fs.Path(path + ".old")
-      // ROTATION SELF-HEAL: a predecessor that crashed BETWEEN the
-      // two swap renames left the live dir missing with `.old`
-      // holding the only copy — restore it before anything reads the
-      // missing path or deletes the backup (re-running after such a
-      // crash previously required the documented manual restore)
-      graft.io.Layout.healSwapRotation(spark, path)
-      if (!fs.exists(p)) return (0L, 0L)
-      val before = spark.read.parquet(path)
-      val nBefore = before.count()
-      val compacted = dedup(before)
-      fs.delete(tmp, true)
-      fs.delete(old, true)
-      compacted.write.mode("overwrite").parquet(tmp.toString)
-      val nAfter = spark.read.parquet(tmp.toString).count()
-      // EPOCH FENCE immediately before the destructive rename pair —
-      // the commitGeneration discipline, applied to the swap-rotation
-      // commit this family keeps: a zombie holder that lost a
-      // stale-lease takeover mid-fold re-reads the lock here, sees a
-      // token it no longer holds and ABORTS, instead of renaming its
-      // pre-takeover-computed artifacts over rows the intruder
-      // appended (which the rotation would silently lose)
-      graft.io.Layout.fenceHeldLease(spark, indexDir,
-        "while this compactor was folding the band artifacts")
-      require(fs.rename(p, old), s"swap: $path -> .old failed")
-      require(fs.rename(tmp, p), s"swap: .compact -> $path failed")
-      fs.delete(old, true)
-      (nBefore, nAfter)
+    gcBandDirs(spark, indexDir) // crashed predecessors' leftovers
+    val (liveBands, liveShingles) = liveBandDirs(spark, indexDir)
+    if (!graft.io.Layout.pathExists(spark, liveBands))
+      return ((0L, 0L), (0L, 0L))
+    val prev = graft.io.Layout.liveGeneration(spark, indexDir)
+    val gen = prev.getOrElse(0L) + 1
+    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
+    val fs = new org.apache.hadoop.fs.Path(indexDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+    // fold one artifact into its staged dir; None when it is absent
+    def foldInto(src: String, name: String,
+        dedup: DataFrame => DataFrame): Option[(String, (Long, Long))] =
+      if (!graft.io.Layout.pathExists(spark, src)) None
+      else {
+        val staged = graft.io.Layout.stagedSideName(spark, indexDir, name)
+        val before = spark.read.parquet(src)
+        val nBefore = before.count()
+        dedup(before).write.parquet(s"$indexDir/$staged")
+        Some(staged -> (nBefore,
+          spark.read.parquet(s"$indexDir/$staged").count()))
+      }
+    val bandsFold = foldInto(liveBands, s"bands-v$gen", _.distinct())
+    val shinglesFold =
+      foldInto(liveShingles, s"shingles-v$gen", _.dropDuplicates("id"))
+    // the generation dir carries only the marker: the band dirs are
+    // named by their generation, so no manifest is needed
+    fs.mkdirs(new org.apache.hadoop.fs.Path(stage))
+    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage, gen,
+      prev.map(graft.io.Layout.generationDir(indexDir, _))
+        .getOrElse(indexDir),
+      sideRenames = Seq(bandsFold.map(_._1 -> s"bands-v$gen"),
+        shinglesFold.map(_._1 -> s"shingles-v$gen")).flatten)
+    gcBandDirs(spark, indexDir)
+    (bandsFold.fold((0L, 0L))(_._2), shinglesFold.fold((0L, 0L))(_._2))
+  }
+
+  /** Reclaim band dirs no retained committed generation serves:
+    * superseded `bands-v<g>`/`shingles-v<g>` folds, a crashed fold's
+    * staged or renamed leftovers, and the root flat dirs once a fold
+    * has committed. Idempotent; called around every fold. */
+  private def gcBandDirs(spark: SparkSession, indexDir: String): Unit = {
+    val gens = graft.io.Layout.committedGenerations(spark, indexDir)
+    val live =
+      if (gens.isEmpty) Set("bands", "shingles")
+      else gens.flatMap(g => Seq(s"bands-v$g", s"shingles-v$g")).toSet
+    val p = new org.apache.hadoop.fs.Path(indexDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return
+    fs.listStatus(p).foreach { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory && !live.contains(n) &&
+          Seq("bands", "shingles")
+            .exists(k => n == k || n.startsWith(s"$k-v")))
+        fs.delete(st.getPath, true)
     }
-    val b = compactOne(s"$indexDir/bands", _.distinct())
-    val s = compactOne(s"$indexDir/shingles", _.dropDuplicates("id"))
-    (b, s)
   }
 
   /** Exact all-pairs n-gram Jaccard via an inverted shingle index:

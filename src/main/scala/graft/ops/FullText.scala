@@ -338,8 +338,9 @@ object FullText {
     * ADDITIVELY instead of re-aggregating the whole postings table:
     *
     *   df′         = old dictionary ⟗ delta df, counts summed
-    *                 (dictionary + delta I/O, swap-rewritten — the
-    *                 replacement reads the artifact it replaces)
+    *                 (dictionary + delta I/O, staged into the
+    *                 append's generation — the replacement reads the
+    *                 artifact it replaces)
     *   n_docs′     = n_docs + count(delta) (a plain row count, so
     *                 zero-token documents count exactly as the
     *                 writer counted them — a re-derivation from
@@ -1444,10 +1445,11 @@ object FullText {
   /** Maintenance compactor for the stored text layout's
     * bucket-partitioned postings: every [[appendToTextIndex]] lands a
     * new part-file PER BUCKET, degrading exactly the bucket-pruned
-    * scan the partitioning exists for —
-    * [[graft.io.Layout.compactParquetDir]]'s swap-safe rewrite
-    * restores one file per bucket. The df/stats artifacts are
-    * swap-rewritten on every append and never accumulate.
+    * scan the partitioning exists for — the fold rewrites base +
+    * segments into fresh `postings-v<gen>` dirs, one file per bucket,
+    * and commits them with one generation marker. The df/stats
+    * artifacts are restaged in every append's generation and never
+    * accumulate.
     *
     * Tombstones apply PHYSICALLY here (the Lucene merge): postings
     * (and term vectors, when stored) drop the tombstoned docs' rows
@@ -1512,10 +1514,14 @@ object FullText {
       }
       n
     }
+    // the using-join puts doc_id first; select the source's own
+    // column order back, so a folded generation's files keep the
+    // writer's row shape
     def minus(df: DataFrame): DataFrame =
       if (hasTomb)
         df.join(spark.read.parquet(tombPath)
           .select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
+          .select(df.columns.map(col): _*)
       else df
     val before = countFiles(liveDirs(spark, indexDir, art, "postings"))
     // fold base + every committed segment, minus tombstones, into

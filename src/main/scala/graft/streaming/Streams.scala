@@ -415,15 +415,16 @@ object Streams {
     * does.
     *
     * Each batch body runs under the index's MUTATION LEASE (the
-    * text/vector families' single-writer contract, extended to the
-    * band artifacts): the collision probe reads the same directories
-    * a maintenance [[graft.ops.Dedup.compactBandIndex]] swap-rotates
-    * (no generations here — see its scaladoc), so probe + append +
-    * in-stream fold hold the lease together. A second admission
-    * stream or an external compactor on the same index serializes in
-    * one JVM and fails fast (or polls, under
-    * `graft.index.leaseWaitMs` / RunCompact `--wait`) from another —
-    * instead of racing the rotation. */
+    * single-writer contract every stored family shares): the probe
+    * and the in-place append target the live generation's band dirs
+    * ([[graft.ops.Dedup.liveBandDirs]]), which a maintenance
+    * [[graft.ops.Dedup.compactBandIndex]] supersedes with a new
+    * generation commit, so probe + append + in-stream fold hold the
+    * lease together. A second admission stream or an external
+    * compactor on the same index serializes in one JVM and fails fast
+    * (or polls, under `graft.index.leaseWaitMs` / RunCompact
+    * `--wait`) from another — instead of appending to a generation a
+    * concurrent fold is about to supersede. */
   def nearDupAdmissionStream(docs: DataFrame, idCol: String,
       textCol: String, indexDir: String, checkpointDir: String,
       sink: DataFrame => Unit,
@@ -437,8 +438,10 @@ object Streams {
         val spark = batch.sparkSession
         import spark.implicits._
         graft.io.Layout.withMutationLease(spark, indexDir) {
-        val bandsPath = s"$indexDir/bands"
-        val shPath = s"$indexDir/shingles"
+        // the live generation's band dirs (or the flat root dirs of
+        // a never-folded index): probed and appended in place
+        val (bandsPath, shPath) =
+          graft.ops.Dedup.liveBandDirs(spark, indexDir)
         val prepped = batch
           .select(col(idCol).cast("long").as("id"),
             graft.ops.Dedup.shingles(graft.ops.Dedup.tokens(col(textCol)))

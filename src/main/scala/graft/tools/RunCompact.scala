@@ -15,9 +15,10 @@ import graft.queries.SimilarityQueries
   * and superseded dirs reclaim.
   *
   * Family detection mirrors the layouts' own self-description: a
-  * `meta` artifact marks the VECTOR layout; a `bands` directory the
-  * near-dup BAND index (the admission stream's artifacts — its fold
-  * dedups replay-appended rows under the same mutation lease); a
+  * `meta` artifact marks the VECTOR layout; a live bands directory
+  * the near-dup BAND index (the admission stream's artifacts — its
+  * fold dedups replay-appended rows into a new generation, under the
+  * same mutation lease and commit as the text fold); a
   * stats artifact with a `field` column the MULTI-FIELD text layout;
   * otherwise single-field text.
   * `--family text|multifield|vector|band` overrides.
@@ -55,19 +56,14 @@ object RunCompact {
 
   /** Detect which compactor owns the path. The band family (the
     * near-dup admission stream's `bands` + `shingles` artifacts) is
-    * recognized by its own directories BEFORE the text fallback — a
+    * recognized by its live bands directory
+    * ([[graft.ops.Dedup.liveBandDirs]]) BEFORE the text fallback — a
     * band index stores no stats artifact, and the text probe would
     * fail unreadably on it. */
   def detectFamily(spark: SparkSession, indexDir: String): String =
     if (graft.io.Layout.pathExists(spark, s"$indexDir/meta")) "vector"
-    // the band base itself can be legitimately absent mid-rotation
-    // (crashed between the swap renames) or mid-guided-resolution —
-    // the monitoring face must still classify the index instead of
-    // falling through to a text-stats read that explodes
-    else if (Seq("bands", "bands.old", "bands.compact", "bands.new",
-        "bands.resolve-intent")
-        .exists(n => graft.io.Layout.pathExists(spark, s"$indexDir/$n")))
-      "band"
+    else if (graft.io.Layout.pathExists(spark,
+        graft.ops.Dedup.liveBandDirs(spark, indexDir)._1)) "band"
     else {
       // the stats artifact is metadata-class: read on the driver
       val art = FullText.liveArtifactDir(spark, indexDir)
@@ -149,8 +145,8 @@ object RunCompact {
         indexDir, rebucket = rebucket)
       case "band" =>
         // the near-dup admission index: the compactor's observable is
-        // ROW counts (its swap-rotation dedups replay-appended rows),
-        // reported through the same (before, after, surviving) slots
+        // ROW counts (its fold dedups replay-appended rows), reported
+        // through the same (before, after, surviving) slots
         val ((bB, bA), (sB, sA)) =
           graft.ops.Dedup.compactBandIndex(spark, indexDir)
         (bB + sB, bA + sA, bA + sA)
@@ -162,7 +158,7 @@ object RunCompact {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
-      "usage: RunCompact <indexDir> [--family text|multifield|vector] " +
+      "usage: RunCompact <indexDir> [--family text|multifield|vector|band] " +
         "[--wait <sec>] [--buckets <n>] [--pin-layout]")
     def opt(flag: String): Option[String] =
       args.indexOf(flag) match {

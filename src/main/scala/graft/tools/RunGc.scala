@@ -8,18 +8,20 @@ import graft.io.Layout
 /** Staging GC CLI — the reclamation face for orphaned staging that
   * the normal retire sweep never reaches: token-suffixed
   * `gen-N.<token>` / side directories (a writer that crashed or was
-  * fenced out mid-stage) and unmarked `gen-N` dirs above the live
-  * generation (a pre-token-staging crash). Those are invisible to
+  * fenced out mid-stage), and unmarked `gen-N` dirs above the live
+  * generation with their finally-named side dirs (a commit that died
+  * after its renames, before the marker). Those are invisible to
   * every reader by construction, but [[graft.io.Layout
   * .dropSupersededGenerations]] runs only AFTER a committed mutation
   * — an index that crashes and then goes idle leaks them forever,
-  * and `RunStatus` now reports exactly that leak
-  * (`orphaned_staging`). This tool reclaims it WITHOUT folding:
-  * no corpus read, no new generation — the committed state (and
-  * every search page) is bit-identical before and after.
+  * and `RunStatus` reports exactly that leak (`orphaned_staging`).
+  * This tool reclaims it WITHOUT folding: no corpus read, no new
+  * generation — the committed state (and every search page) is
+  * bit-identical before and after. All three index families (text,
+  * vector, near-dup band) commit through the same generation
+  * protocol, so one sweep covers them.
   *
   * Usage: RunGc <indexDir> [--wait <sec>]
-  *        RunGc <indexDir> --resolve <base>:<keep-base|rewind|roll-forward> [--wait <sec>]
   *
   * Runs under the mutation lease (single-writer contract: a zombie
   * whose staging we are deleting is fenced by construction — if it
@@ -27,37 +29,16 @@ import graft.io.Layout
   * and deleting its staging is precisely this tool's job). `--wait`
   * polls the acquisition like RunCompact/RunTakedown. Safe to re-run
   * (an empty sweep deletes nothing). Prints one JSON line with the
-  * reclaimed dir count and bytes.
-  *
-  * `--resolve` is the OPERATOR arm for the one state the sweep
-  * refuses to touch — the ambiguous swap-rotation trio (see
-  * [[graft.io.Layout.AmbiguousRotationException]] and [[resolve]]):
-  * it executes exactly one resolution arm under the lease, printing
-  * each delete/rename before running it, and performs no sweep. */
+  * reclaimed dir count and bytes. */
 object RunGc {
 
-  /** Separated from main for RunGcSpec: reclaim orphaned staging and
-    * sweep rotation leftovers under the lease, returning
-    * (dirsReclaimed, bytesReclaimed, rotationsHealed). The rotation
-    * sweep covers the swap-rotation crash states the staging listing
-    * doesn't: any base with a `.old` backup heals through
-    * [[graft.io.Layout.healSwapRotation]] (missing base restores or
-    * rolls forward; an AMBIGUOUS copy-rename crash state — base +
-    * `.old` + staging all present — is REPORTED and left untouched,
-    * never guessed at); what the heal leaves behind (`.old` beside a
-    * live base, `.new`/`.compact` staging with no backup) is garbage
-    * and reclaims. Manifest-referenced names are excluded like
-    * everywhere else (STRICT: a manifest read failure aborts the
-    * sweep — this set is the only guard on deletion). Safe under the
-    * lease for every ENGINE mutator (all rotations run inside
-    * withMutationLease); legacy direct callers that rotate without
-    * the lease are covered by the `graft.index.gcRotationGraceMs`
-    * mtime grace window (default 15 min, 0 = sweep everything) —
-    * rotation dirs younger than the grace are skipped this run.
-    * Returns (dirsReclaimed, bytesReclaimed, rotationsHealed,
-    * ambiguousRotations). */
+  /** Separated from main for RunGcSpec: reclaim orphaned staging
+    * under the lease, returning (dirsReclaimed, bytesReclaimed).
+    * Manifest-referenced names are excluded (STRICT: a manifest read
+    * failure aborts the sweep — that set is the only guard on
+    * deletion). */
   def run(spark: SparkSession, indexDir: String,
-      waitSec: Option[Long] = None): (Int, Long, Int, Int) =
+      waitSec: Option[Long] = None): (Int, Long) =
     Layout.withLeaseWait(spark, waitSec) {
       Layout.withMutationLease(spark, indexDir) {
         val orphans = Layout.orphanedStaging(spark, indexDir,
@@ -68,186 +49,20 @@ object RunGc {
         // count an orphan reclaimed only when the delete SUCCEEDS —
         // a false return (permission, transient store error) must
         // not inflate the reported reclamation
-        var reclaimed = 0
-        var reclaimedBytes = 0L
-        orphans.foreach { case (name, bytes) =>
-          if (fs.delete(new Path(p, name), true)) {
-            reclaimed += 1
-            reclaimedBytes += bytes
-          }
+        val deleted = orphans.filter { case (name, _) =>
+          fs.delete(new Path(p, name), true)
         }
-        var healed = 0
-        val rotSuffixes = Seq(".old", ".new", ".compact")
-        // strict: this set is the ONLY thing keeping the sweep off
-        // manifest-referenced segment dirs whose caller-chosen names
-        // end in a rotation suffix — a manifest read failure aborts
-        // here rather than proceed with an empty exclusion
-        val referenced =
-          Layout.manifestReferenced(spark, indexDir, strict = true)
-        // grace window: every ENGINE rotation runs under the lease we
-        // hold, so none can be in flight — but fenceHeldLease admits
-        // legacy direct callers that rotate WITHOUT the lease, and
-        // sweeping their seconds-old staging would abort their
-        // rotation mid-flight. Rotation dirs younger than the grace
-        // are skipped (crashed leftovers are hours old by the time an
-        // operator runs GC; the next run picks up anything skipped).
-        val graceMs = spark.conf
-          .getOption("graft.index.gcRotationGraceMs")
-          .map(_.toLong).getOrElse(15L * 60 * 1000)
-        // the grace comparison is store-mtime vs "now" — but driver
-        // clock vs store clock can skew (and some stores stamp mtimes
-        // at copy COMPLETION), which could make seconds-old rotation
-        // dirs read as past the window. Derive "now" from the STORE:
-        // one probe file created under the index (we hold the lease),
-        // its mtime IS the store's clock. A store reporting no usable
-        // mtime for a fresh create (synthetic zeros) falls back to
-        // the driver clock — on such a store every listed mtime is
-        // synthetic too, so the comparison is degenerate either way.
-        val now = if (graceMs <= 0) 0L else {
-          // sweep a crashed predecessor's leaked probe first — probes
-          // are FILES, invisible to the dir-only sweeps below, so a
-          // RunGc killed between create and delete would otherwise
-          // leak one forever
-          fs.listStatus(p).filter(st => st.isFile &&
-              st.getPath.getName.startsWith("_gc.clockprobe."))
-            .foreach(st => fs.delete(st.getPath, false))
-          val probe = new Path(p, s"_gc.clockprobe.${
-            java.util.UUID.randomUUID().toString.take(12)}")
-          try {
-            fs.create(probe, true).close()
-            val t = fs.getFileStatus(probe).getModificationTime
-            if (t > 0) t else System.currentTimeMillis()
-          } catch {
-            case _: java.io.IOException => System.currentTimeMillis()
-          } finally fs.delete(probe, false)
-        }
-        val entries = fs.listStatus(p).filter(st => st.isDirectory &&
-          rotSuffixes.exists(st.getPath.getName.endsWith(_)))
-        def sweepable(
-            st: org.apache.hadoop.fs.FileStatus): Boolean = {
-          val n = st.getPath.getName
-          !referenced.contains(n) && (graceMs <= 0 ||
-            now - st.getModificationTime >= graceMs)
-        }
-        // PASS 1 — heal: every base with a `.old` backup goes through
-        // the one heal (restore, roll-forward, or the AMBIGUOUS
-        // throw). Ambiguous bases are remembered so pass 2 cannot
-        // reclaim the very artifacts an operator needs to resolve.
-        val ambiguousBases = scala.collection.mutable.Set[String]()
-        entries.foreach { st =>
-          val n = st.getPath.getName
-          if (n.endsWith(".old") && n.length > 4 && sweepable(st)) {
-            val base = n.dropRight(4)
-            try {
-              if (Layout.healSwapRotation(spark,
-                  new Path(p, base).toString)) healed += 1
-            } catch {
-              case _: Layout.AmbiguousRotationException =>
-                ambiguousBases += base
-            }
-          }
-        }
-        // PASS 2 — reclaim what the heal left as garbage: `.old`
-        // beside a live base, and staging with no backup (including a
-        // crashed FIRST-EVER write, where no base exists yet — a
-        // `.old` is only ever reclaimed against a live base, since a
-        // backup without one always went through the heal above).
-        // Anything whose base is ambiguous is untouchable this run —
-        // and so is staging whose `${base}.old` STILL EXISTS, however
-        // it got here: staging is written BEFORE the base→`.old`
-        // rename, so it ages past the grace first, and a recent
-        // copy-rename crash can present base + YOUNG `.old` + old
-        // staging — an ambiguous trio pass 1 couldn't flag (the
-        // graced `.old` never reached the heal). Reclaiming that
-        // staging dir would destroy one of the three artifacts the
-        // operator needs, and if the crash sat mid-copy of rename-2
-        // it was the only complete copy. A `.old` is re-checked live
-        // (`fs.exists`) because this very pass may have reclaimed it
-        // a few entries earlier — but only a SWEEPABLE `.old` beside
-        // a live base is ever deleted here, and that pairing passed
-        // through pass 1 un-thrown, so no ambiguity hides behind it.
-        entries.foreach { st =>
-          val n = st.getPath.getName
-          rotSuffixes.find(n.endsWith(_)).foreach { suf =>
-            val base = n.dropRight(suf.length)
-            if (base.nonEmpty && !ambiguousBases.contains(base) &&
-                sweepable(st) && fs.exists(st.getPath) &&
-                // a crashed guided resolution's intent marker makes
-                // the whole family untouchable — its intermediate
-                // states (e.g. a lone staging dir mid-roll-forward)
-                // are indistinguishable from sweepable garbage, and
-                // may be the only complete copy
-                !fs.exists(new Path(p, s"$base.resolve-intent")) &&
-                (if (suf == ".old") fs.exists(new Path(p, base))
-                 else !fs.exists(new Path(p, base + ".old")))) {
-              val bytes =
-                try fs.getContentSummary(st.getPath).getLength
-                catch { case _: java.io.IOException => 0L }
-              if (fs.delete(st.getPath, true)) {
-                reclaimed += 1
-                reclaimedBytes += bytes
-              }
-            }
-          }
-        }
-        (reclaimed, reclaimedBytes, healed, ambiguousBases.size)
-      }
-    }
-
-  /** `--resolve` face: execute ONE arm of the ambiguous-rotation
-    * three-way ([[graft.io.Layout.resolveAmbiguousRotation]]) under
-    * the mutation lease — the operator recovery for the
-    * `AmbiguousRotationException` halt that used to be hand-run raw
-    * deletes. `base` is the rotated artifact's name relative to
-    * `indexDir` (the name RunGc/RunStatus report in
-    * `ambiguous_rotations`, e.g. `bands`); `arm` is one of
-    * `keep-base` / `rewind` / `roll-forward`. Every destructive step
-    * prints BEFORE it runs; preconditions refuse an arm whose trusted
-    * artifact is missing. Returns the executed action list. */
-  def resolve(spark: SparkSession, indexDir: String, base: String,
-      arm: String, waitSec: Option[Long] = None): Seq[String] =
-    Layout.withLeaseWait(spark, waitSec) {
-      Layout.withMutationLease(spark, indexDir) {
-        Layout.resolveAmbiguousRotation(spark,
-          s"${indexDir.stripSuffix("/")}/$base", arm,
-          a => println(s"resolve[$arm] $a"))
+        (deleted.size, deleted.map(_._2).sum)
       }
     }
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: RunGc <indexDir> [--wait <sec>] " +
-      "[--resolve <base>:<keep-base|rewind|roll-forward>]")
+    require(args.nonEmpty, "usage: RunGc <indexDir> [--wait <sec>]")
     val waitSec = args.indexOf("--wait") match {
       case i if i >= 0 && i + 1 < args.length => Some(args(i + 1).toLong)
       case i if i >= 0 => throw new IllegalArgumentException(
         "--wait requires a value in seconds")
       case _ => None
-    }
-    val resolveArg = args.indexOf("--resolve") match {
-      case i if i >= 0 && i + 1 < args.length => Some(args(i + 1))
-      case i if i >= 0 => throw new IllegalArgumentException(
-        "--resolve requires <base>:<keep-base|rewind|roll-forward> " +
-          "(base = the name RunStatus reports in ambiguous_rotations)")
-      case _ => None
-    }
-    resolveArg.foreach { ra =>
-      val sep = ra.lastIndexOf(':')
-      require(sep > 0 && sep < ra.length - 1,
-        s"--resolve wants <base>:<arm>, got '$ra'")
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-        .appName("graft-gc-resolve")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val actions = resolve(spark, args(0), ra.take(sep),
-        ra.drop(sep + 1), waitSec)
-      println(s"""{"tool":"gc","resolved":"${ra.take(sep)}",""" +
-        s""""arm":"${ra.drop(sep + 1)}",""" +
-        s""""actions":[${actions.map(a => s""""$a"""").mkString(",")}]}""")
-      spark.stop()
-      return
     }
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
@@ -256,10 +71,9 @@ object RunGc {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val (dirs, bytes, healed, ambiguous) = run(spark, args(0), waitSec)
+    val (dirs, bytes) = run(spark, args(0), waitSec)
     println(s"""{"tool":"gc","reclaimed_dirs":$dirs,""" +
-      s""""reclaimed_bytes":$bytes,"rotations_healed":$healed,""" +
-      s""""ambiguous_rotations":$ambiguous}""")
+      s""""reclaimed_bytes":$bytes}""")
     spark.stop()
   }
 }

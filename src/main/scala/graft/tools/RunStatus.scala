@@ -36,11 +36,9 @@ import graft.ops.FullText
   * shifted at append, trued at fold; deletes derive live through
   * the tombstone count). `committed_generations` lists every
   * retained snapshot ascending — the values a `--generation` read
-  * face accepts. `ambiguous_rotations` (emitted only when non-empty)
-  * lists swap-rotated artifacts halted in the unresolvable
-  * copy-rename crash state — every fold of them refuses until an
-  * operator resolves (Layout.AmbiguousRotationException carries the
-  * options), so the status face is where the halt surfaces first. */
+  * face accepts. The near-dup band family reports its artifact
+  * names only (row counts would be corpus scans); its generation
+  * fields follow its folds like the other families'. */
 object RunStatus {
 
   private def jstr(s: String) = "\"" + s.replace("\"", "\\\"") + "\""
@@ -111,7 +109,8 @@ object RunStatus {
         val metaPath =
           if (Layout.pathExists(spark, s"$art/meta")) s"$art/meta"
           else s"$indexDir/meta"
-        val m = spark.read.parquet(metaPath).head()
+        // metadata-class artifacts: read on the driver, no Spark job
+        val m = graft.io.TinyParquet.readFrame(spark, metaPath).head()
         def opt[T](name: String, get: => T, default: T): T =
           if (m.schema.fieldNames.contains(name)) get else default
         sb ++= s""","codec":${jstr(m.getAs[String]("codec"))}"""
@@ -121,7 +120,7 @@ object RunStatus {
         val segPath = s"$art/segments"
         val segs =
           if (Layout.pathExists(spark, segPath))
-            spark.read.parquet(segPath).collect() // manifest: tiny
+            graft.io.TinyParquet.read(spark, segPath)._2
               .count(r => r.getAs[String]("kind") == "codes" &&
                 r.getAs[String]("dir").startsWith("seg-"))
           else 0
@@ -157,17 +156,6 @@ object RunStatus {
       val orphans = Layout.orphanedStaging(spark, indexDir)
       sb ++= s""","orphaned_staging":{"count":${orphans.size}"""
       sb ++= s""","bytes":${orphans.map(_._2).sum}}"""
-    }
-    // the HALTED state an operator must not discover via a failing
-    // fold: swap rotations whose copy-rename crash left base + .old +
-    // staging all present — every mutator refuses until resolved (see
-    // Layout.AmbiguousRotationException); listed only when non-empty
-    // so the steady-state line stays compact
-    locally {
-      val amb = Layout.ambiguousRotations(spark, indexDir)
-      if (amb.nonEmpty)
-        sb ++= amb.map(jstr).mkString(
-          ""","ambiguous_rotations":[""", ",", "]")
     }
     Layout.leaseInfo(spark, indexDir).foreach { case (epoch, owner, age) =>
       sb ++= s""","lease":{"epoch":$epoch,"owner":${jstr(owner)}"""

@@ -44,19 +44,13 @@ class CopyRenameFileSystem extends NoSetTimesFileSystem {
 
   override def rename(src: Path, dst: Path): Boolean = {
     if (!exists(src)) return false
-    // two independent crash hooks, each targeting one commit family:
-    // token-unique GENERATION staging renames (the original pin), and
-    // SWAP-ROTATION legs (base→.old / staging→base — the band family
-    // and the generic rewriters). Spark's parquet committer renames
-    // (_temporary task attempts) match neither and never crash.
+    // the crash hook targets token-unique staging renames only;
+    // Spark's parquet committer renames (_temporary task attempts)
+    // never match and never crash
     val tick: Option[Path => Unit] =
       if (CopyRenameFileSystem.stagedRe
           .pattern.matcher(src.getName).matches())
         Some(CopyRenameFileSystem.tick)
-      else if (src.getName.endsWith(".new") ||
-          src.getName.endsWith(".compact") ||
-          dst.getName.endsWith(".old"))
-        Some(CopyRenameFileSystem.rotTick)
       else None
     copyRec(src, dst, tick)
     delete(src, true) // only after the full copy — the S3A ordering
@@ -73,12 +67,6 @@ object CopyRenameFileSystem {
     * proceeds clean. */
   @volatile var crashStagedRenameAfterFiles: Int = -1
 
-  /** The SWAP-ROTATION twin of [[crashStagedRenameAfterFiles]]: fires
-    * inside renames whose src ends `.new`/`.compact` or whose dst
-    * ends `.old` — the rotation legs of the band family and the
-    * generic rewriters. Same Nth-file semantics, same auto-reset. */
-  @volatile var crashRotationRenameAfterFiles: Int = -1
-
   private def tick(src: Path): Unit = {
     val n = crashStagedRenameAfterFiles
     if (n == 0) {
@@ -86,14 +74,5 @@ object CopyRenameFileSystem {
       throw new java.io.IOException(
         s"simulated crash mid-copy-rename at $src")
     } else if (n > 0) crashStagedRenameAfterFiles = n - 1
-  }
-
-  private def rotTick(src: Path): Unit = {
-    val n = crashRotationRenameAfterFiles
-    if (n == 0) {
-      crashRotationRenameAfterFiles = -1
-      throw new java.io.IOException(
-        s"simulated crash mid-rotation-rename at $src")
-    } else if (n > 0) crashRotationRenameAfterFiles = n - 1
   }
 }

@@ -111,65 +111,135 @@ class CopyRenameFsSpec extends SparkSpecBase {
       "no lease artifact may outlive the mutations")
   }
 
-  test("a swap rotation crashed mid-copy leaves the AMBIGUOUS trio: the next fold refuses, nothing is guessed at, operator resolution recovers") {
-    // the band family commits by swap rotation (no generation
-    // marker), and on a copy-rename store a crash inside either
-    // rotation leg leaves base + .old + staging ALL present with a
-    // DIFFERENT one partial depending on where the copy died — the
-    // one crash state no automatic heal can resolve safely. The old
-    // behavior read the base as live and the next fold enshrined
-    // whatever it happened to hold; now every mutator stops loudly.
+  /** A band fold crashed at each point of its generation commit:
+    * before the side renames (a lease takeover fences it out), mid-
+    * copy of the first staged side rename (copy-rename stores only —
+    * a local rename is atomic), and after the renames but before the
+    * marker. Each crash must leave the previous generation serving
+    * the same collision verdicts; RunGc then reclaims every leftover
+    * and the re-run fold equals an uncrashed twin's fold row for
+    * row. */
+  private def bandFoldCrashes(scheme: String,
+      crashes: Seq[String]): Unit = {
+    import graft.ops.Dedup
     spark.sparkContext.hadoopConfiguration.set("fs.cprn.impl",
       classOf[CopyRenameFileSystem].getName)
-    val idx = "cprn://" + java.nio.file.Files
-      .createTempDirectory("cprn-rot").toFile.getAbsolutePath
-    Seq((1L, "a"), (2L, "b"), (2L, "b")).toDF("id", "v")
-      .write.parquet(s"$idx/bands")
-    Seq((9L, Seq("s"))).toDF("id", "sh")
-      .write.parquet(s"$idx/shingles")
-    val liveRows = spark.read.parquet(s"$idx/bands").count()
-    // crash the FIRST file copy of rename-1 (bands -> bands.old):
-    // bands stays complete (the delete leg never ran), bands.old is
-    // a partial skeleton, bands.compact was fully staged pre-fence
-    CopyRenameFileSystem.crashRotationRenameAfterFiles = 0
-    try {
-      val e = intercept[Exception] {
-        graft.ops.Dedup.compactBandIndex(spark, idx)
-      }
-      assert(e.getMessage != null &&
-        e.getMessage.contains("simulated crash mid-rotation-rename"),
-        s"the injected rotation crash must surface (got $e)")
-    } finally CopyRenameFileSystem.crashRotationRenameAfterFiles = -1
-    assert(Layout.pathExists(spark, s"$idx/bands") &&
-      Layout.pathExists(spark, s"$idx/bands.old") &&
-      Layout.pathExists(spark, s"$idx/bands.compact"),
-      "the crash must leave the ambiguous trio on disk")
-    assert(spark.read.parquet(s"$idx/bands").count() == liveRows,
-      "the live base must still serve (this crash point kept it)")
-    // the refold heals before reading — and must REFUSE: from the
-    // artifacts alone it cannot know WHICH of the three is partial
-    val refuse = intercept[Layout.AmbiguousRotationException] {
-      graft.ops.Dedup.compactBandIndex(spark, idx)
+    def tmp(prefix: String) = java.nio.file.Files
+      .createTempDirectory(prefix).toFile.getAbsolutePath
+    val idx = scheme + tmp("band-crash")
+    val twin = tmp("band-twin")
+    val docs = graft.io.Tables.documents(spark, dir).limit(40)
+    val prepped = docs.select($"doc_id".as("id"),
+      Dedup.shingles(Dedup.tokens($"text")).as("sh"))
+      .filter($"sh".isNotNull)
+    // the admission stream's append, replayed: byte-identical rows
+    // into the live band dirs, which each fold reclaims
+    def append(i: String): Unit = {
+      val (bands, shingles) = Dedup.liveBandDirs(spark, i)
+      prepped.withColumn("bandh", Dedup.bandHashesDirect($"sh", 16, 4))
+        .select($"id",
+          posexplode_outer($"bandh").as(Seq("band", "band_hash")))
+        .write.mode("append").parquet(bands)
+      prepped.select($"id", $"sh").write.mode("append").parquet(shingles)
     }
-    assert(refuse.getMessage.contains("Resolve manually"))
-    // RunGc reports the ambiguity and touches none of the trio
-    spark.conf.set("graft.index.gcRotationGraceMs", "0")
-    val (reclaimed, _, healed, ambiguous) =
-      try graft.tools.RunGc.run(spark, idx)
-      finally spark.conf.unset("graft.index.gcRotationGraceMs")
-    assert(ambiguous == 1 && reclaimed == 0 && healed == 0,
-      s"GC must report, not resolve (got r=$reclaimed h=$healed a=$ambiguous)")
-    // operator resolution: THIS crash point kept the base complete —
-    // keep it, through the CLI arm (RunGc --resolve bands:keep-base)
-    // instead of hand-run raw deletes on the store
-    val actions =
-      graft.tools.RunGc.resolve(spark, idx, "bands", "keep-base")
-    assert(actions.size == 2 && actions.forall(_.startsWith("delete")) &&
-      actions.exists(_.endsWith("bands.old")) &&
-      actions.exists(_.endsWith("bands.compact")),
-      s"keep-base must delete exactly the untrusted pair (got $actions)")
-    graft.ops.Dedup.compactBandIndex(spark, idx)
-    assert(spark.read.parquet(s"$idx/bands").count() == 2,
-      "the re-run fold must dedup the kept base exactly")
+    val batch = docs.limit(5)
+      .select(($"doc_id" + 9000000L).as("id"), $"text")
+      .select($"id", Dedup.shingles(Dedup.tokens($"text")).as("sh"))
+    def verdict(i: String) = {
+      val (bands, shingles) = Dedup.liveBandDirs(spark, i)
+      Dedup.minhashLshPairsAgainstIndex(spark.read.parquet(bands),
+        spark.read.parquet(shingles), batch, "id", "sh")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    def rows(i: String) = {
+      val (bands, shingles) = Dedup.liveBandDirs(spark, i)
+      Seq(bands, shingles).map(p => spark.read.parquet(p).collect()
+        .map(_.toSeq.map {
+          case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+          case v => String.valueOf(v)
+        }.mkString("|")).toSeq.sorted)
+    }
+    val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def names() = fs.listStatus(new Path(idx)).map(_.getPath.getName).toSet
+    Seq(idx, twin).foreach { i => append(i); append(i) }
+    Seq(idx, twin).foreach(Dedup.compactBandIndex(spark, _))
+    assert(Layout.liveGeneration(spark, idx).contains(1L))
+    crashes.foreach { crash =>
+      Seq(idx, twin).foreach(append)
+      val gen = Layout.liveGeneration(spark, idx).get
+      val served = names()
+      val before = verdict(idx)
+      assert(before.nonEmpty, "the fixture batch must collide")
+      crash match {
+        case "before renames" =>
+          // a takeover fences the fold out before its first rename
+          val e = intercept[IllegalStateException] {
+            Layout.withMutationLease(spark, idx) {
+              val out = fs.create(new Path(s"$idx/_mutation.lock"), true)
+              out.write("9 intruder-token otherhost:pid=31".getBytes("UTF-8"))
+              out.close()
+              Dedup.compactBandIndex(spark, idx)
+            }
+          }
+          assert(e.getMessage.contains("taken over"), e.getMessage)
+          fs.delete(new Path(s"$idx/_mutation.lock"), false)
+        case "mid-copy" =>
+          CopyRenameFileSystem.crashStagedRenameAfterFiles = 1
+          try {
+            val e = intercept[Exception] {
+              Dedup.compactBandIndex(spark, idx)
+            }
+            assert(e.getMessage != null &&
+              e.getMessage.contains("simulated crash mid-copy-rename"),
+              s"the injected crash must surface (got $e)")
+          } finally CopyRenameFileSystem.crashStagedRenameAfterFiles = -1
+          assert(names().contains(s"bands-v${gen + 1}"),
+            "the crash must leave a partially-copied final dir")
+        case "after renames" =>
+          Layout.beforeMarkerHook = () => {
+            Layout.beforeMarkerHook = () => ()
+            throw new IllegalStateException("simulated crash before marker")
+          }
+          try {
+            val e = intercept[IllegalStateException] {
+              Dedup.compactBandIndex(spark, idx)
+            }
+            assert(e.getMessage.contains("simulated crash before marker"))
+          } finally Layout.beforeMarkerHook = () => ()
+          assert(Set(s"gen-${gen + 1}", s"bands-v${gen + 1}",
+            s"shingles-v${gen + 1}").subsetOf(names()),
+            s"the renames must have landed (got ${names()})")
+      }
+      assert(Layout.liveGeneration(spark, idx).contains(gen),
+        s"$crash: a crashed fold must not move the live generation")
+      assert(verdict(idx) == before,
+        s"$crash: the previous generation must serve the same verdicts")
+      assert(Layout.orphanedStaging(spark, idx).nonEmpty,
+        s"$crash: the leftovers must report as orphans")
+      val (reclaimed, _) = graft.tools.RunGc.run(spark, idx)
+      assert(reclaimed > 0 && names() == served,
+        s"$crash: RunGc must reclaim exactly the leftovers " +
+          s"(got ${names()} vs $served)")
+      Dedup.compactBandIndex(spark, idx)
+      Dedup.compactBandIndex(spark, twin)
+      assert(Layout.liveGeneration(spark, idx).contains(gen + 1))
+      assert(rows(idx) == rows(twin),
+        s"$crash: the re-run fold must equal an uncrashed fold")
+      assert(verdict(idx) == before,
+        s"$crash: the re-run fold must keep the verdicts")
+      assert(names() == Set(s"gen-${gen + 1}", s"bands-v${gen + 1}",
+        s"shingles-v${gen + 1}"),
+        s"$crash: the fold must reclaim the superseded generation " +
+          s"(got ${names()})")
+    }
+  }
+
+  test("band fold crashes before and after its side renames leave the previous generation serving; RunGc reclaims; the re-run fold equals an uncrashed fold") {
+    bandFoldCrashes("", Seq("before renames", "after renames"))
+  }
+
+  test("cprn://: band fold crashes before, mid-copy of and after its side renames leave the previous generation serving; RunGc reclaims; the re-run fold equals an uncrashed fold") {
+    bandFoldCrashes("cprn://",
+      Seq("before renames", "mid-copy", "after renames"))
   }
 }

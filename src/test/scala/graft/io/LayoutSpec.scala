@@ -4,28 +4,6 @@ import graft.SparkSpecBase
 
 class LayoutSpec extends SparkSpecBase {
 
-  test("joins on co-bucketed tables plan no Exchange") {
-    import spark.implicits._
-    val facts = spark.range(10000)
-      .select(($"id" % 500).as("k"), $"id".as("v"))
-    val dims = spark.range(500).select($"id".as("k"), ($"id" * 2).as("w"))
-    try {
-      Layout.writeBucketed(facts, "t_facts_bucketed", Seq("k"), 8)
-      Layout.writeBucketed(dims, "t_dims_bucketed", Seq("k"), 8)
-      val joined = spark.table("t_facts_bucketed")
-        .join(spark.table("t_dims_bucketed"), Seq("k"))
-      // disable broadcast so the join would otherwise shuffle both sides
-      val plan = withNoBroadcast {
-        joined.queryExecution.executedPlan.toString
-      }
-      assert(!plan.contains("Exchange"), plan)
-      assert(withNoBroadcast { joined.count() } == 10000L)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS t_facts_bucketed")
-      spark.sql("DROP TABLE IF EXISTS t_dims_bucketed")
-    }
-  }
-
   test("copyArtifact carries _rowcount in both regimes; tombstoneRowCount never scans when recorded") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("layout-copy")
@@ -59,73 +37,6 @@ class LayoutSpec extends SparkSpecBase {
     ids.write.parquet(s"$base/legacy")
     assert(Layout.tombstoneRowCount(spark, s"$base/legacy",
       spark.read.parquet(s"$base/legacy")) == 500L)
-  }
-
-  private def withNoBroadcast[A](f: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try f finally spark.conf.set(key, old)
-  }
-
-  test("rotation self-heal: rewriteParquet and compactParquetDir restore a crashed predecessor's .old backup") {
-    import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path("/tmp")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def rot(path: String): Unit = assert(fs.rename(
-      new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + ".old")))
-    // rewriteParquet: the crash-between-renames state (live path
-    // missing, .old holding the only copy) previously hit the entry
-    // delete of .old — destroying the backup — or failed on the
-    // missing input; the heal restores it before either
-    val dir = java.nio.file.Files.createTempDirectory("rot-heal")
-      .toFile.getAbsolutePath
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/art")
-    rot(s"$dir/art")
-    Layout.rewriteParquet(spark,
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), s"$dir/art")
-    assert(spark.read.parquet(s"$dir/art").count() == 3,
-      "the healed rewrite must land the replacement frame")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/art.old")))
-    // compactParquetDir: same crash state; the fold must see the
-    // restored rows, not report an empty directory
-    Seq((1L, "x"), (1L, "x"), (2L, "y")).toDF("k", "v")
-      .write.parquet(s"$dir/cmp")
-    rot(s"$dir/cmp")
-    val (_, _, rows) = Layout.compactParquetDir(spark, s"$dir/cmp")
-    assert(rows == 3,
-      s"the healed fold must rewrite the restored rows (got $rows)")
-    assert(spark.read.parquet(s"$dir/cmp").count() == 3)
-  }
-
-  test("the generic swap writers refuse the ambiguous rotation trio and keep all three artifacts") {
-    // base + .old + staging all present: on a copy-rename store a
-    // different one is partial depending on the crash point, so
-    // rewriteParquet/compactParquetDir must NOT purge-and-proceed
-    // (the purge would destroy the only complete copies) — the heal
-    // they share throws before anything is touched
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("rot-amb")
-      .toFile.getAbsolutePath
-    def trio(base: String, stagingSuffix: String): Unit = {
-      Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/$base")
-      Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/$base.old")
-      Seq((2L, "b")).toDF("k", "v")
-        .write.parquet(s"$dir/$base$stagingSuffix")
-    }
-    trio("rw", ".new")
-    intercept[Layout.AmbiguousRotationException] {
-      Layout.rewriteParquet(spark,
-        Seq((9L, "z")).toDF("k", "v"), s"$dir/rw")
-    }
-    trio("cp", ".compact")
-    intercept[Layout.AmbiguousRotationException] {
-      Layout.compactParquetDir(spark, s"$dir/cp")
-    }
-    Seq("rw", "rw.old", "rw.new", "cp", "cp.old", "cp.compact")
-      .foreach(n => assert(Layout.pathExists(spark, s"$dir/$n"),
-        s"$n must survive the refusal — the operator needs it"))
   }
 
   test("CreateCommitMarker is create-IF-ABSENT and stamps the fence token") {

@@ -542,7 +542,7 @@ class LeaseSpec extends SparkSpecBase {
     // outside the single-writer contract (its compactor documented
     // "the foreachBatch reader takes no lock") — now the admission
     // stream's batch body and compactBandIndex hold the same lease,
-    // so a maintenance fold can never swap-rotate the directories out
+    // so a maintenance fold can never supersede the band dirs out
     // from under a probing batch
     import graft.ops.Dedup
     val docs = graft.io.Tables.documents(spark, dir).limit(60)
@@ -783,12 +783,13 @@ class LeaseSpec extends SparkSpecBase {
     } finally Layout.afterLeaseExistsHook = () => ()
   }
 
-  test("band-fold fence: a zombie compactor aborts before the swap renames instead of rotating away an intruder's rows") {
-    // the swap-rotation twin of the commitGeneration fence: a holder
-    // that lost a stale-lease takeover mid-fold re-reads the lock
-    // immediately before the rename pair and ABORTS — without it, the
-    // zombie's pre-takeover-computed bands/shingles would rename over
-    // whatever the intruder appended, silently losing those rows
+  test("band-fold fence: a zombie compactor aborts at the generation commit instead of superseding an intruder's rows") {
+    // the band fold commits through commitGeneration, so its fence is
+    // that commit's: a holder that lost a stale-lease takeover
+    // mid-fold re-reads the lock before its side renames and ABORTS —
+    // without it, the zombie's pre-takeover-computed bands/shingles
+    // would become the live generation over whatever the intruder
+    // appended, silently losing those rows
     import graft.ops.Dedup
     val docs = graft.io.Tables.documents(spark, dir).limit(40)
     val idx = tmp("lease-band-fence")
@@ -814,6 +815,8 @@ class LeaseSpec extends SparkSpecBase {
     }
     assert(e.getMessage.contains("taken over"),
       s"the fence must name the takeover (got: ${e.getMessage})")
+    assert(Layout.liveGeneration(spark, idx).isEmpty,
+      "an aborted fold must commit no generation")
     assert(spark.read.parquet(s"$idx/bands").count() == bandsBefore,
       "an aborted fold must leave the live band artifacts untouched")
     assert(Layout.pathExists(spark, s"$idx/_mutation.lock"),

@@ -432,12 +432,14 @@ class DedupSpec extends SparkSpecBase {
     val batch = docs((10L, base + " chi"),
       (11L, "unrelated words entirely different from everything here"))
       .select(col("doc_id").as("id"), col("shingles").as("sh"))
-    def probe() = Dedup.minhashLshPairsAgainstIndex(
-      spark.read.parquet(s"$indexDir/bands"),
-      spark.read.parquet(s"$indexDir/shingles"),
-      batch, "id", "sh")
-      .orderBy(col("doc_a"), col("doc_b")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    def probe() = {
+      val (liveBands, liveShingles) = Dedup.liveBandDirs(spark, indexDir)
+      Dedup.minhashLshPairsAgainstIndex(
+        spark.read.parquet(liveBands), spark.read.parquet(liveShingles),
+        batch, "id", "sh")
+        .orderBy(col("doc_a"), col("doc_b")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    }
     val pre = probe()
     assert(pre.distinct == Seq((1L, 10L, 0.9474)),
       s"fixture must collide 10 with stored 1: $pre")
@@ -450,29 +452,19 @@ class DedupSpec extends SparkSpecBase {
     assert(s0 == 2 * s1 && s1 == 2, s"shingles $s0 -> $s1")
     assert(probe() == pre.distinct,
       "post-compaction: identical verdicts, replay duplicates gone")
-    assert(!new java.io.File(s"$localDir/bands.old").exists() &&
-      !new java.io.File(s"$localDir/bands.compact").exists(),
-      "swap leaves no residue")
-    // a second compaction is a no-op rewrite
-    val ((b2, b3), _) = Dedup.compactBandIndex(spark, indexDir)
-    assert(b2 == b1 && b3 == b1)
-    // ROTATION SELF-HEAL: simulate a predecessor that crashed BETWEEN
-    // the two swap renames (live dir gone, `.old` holding the only
-    // copy) — the next fold must restore the backup and proceed,
-    // instead of reporting an empty index (or a collision probe
-    // failing on the missing path)
+    // the fold committed generation 1 and reclaimed the flat dirs
     val hfs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(hfs.rename(
-      new org.apache.hadoop.fs.Path(s"$indexDir/bands"),
-      new org.apache.hadoop.fs.Path(s"$indexDir/bands.old")))
-    val ((b4, b5), _) = Dedup.compactBandIndex(spark, indexDir)
-    assert(b4 == b1 && b5 == b1,
-      s"the healed fold must see the restored rows ($b4 -> $b5)")
-    assert(probe() == pre.distinct,
-      "verdicts must survive the crash-restore cycle")
-    assert(!new java.io.File(s"$localDir/bands.old").exists(),
-      "the healed rotation leaves no residue")
+    def names() = hfs.listStatus(new org.apache.hadoop.fs.Path(indexDir))
+      .map(_.getPath.getName).toSet
+    assert(graft.io.Layout.liveGeneration(spark, indexDir).contains(1L))
+    assert(names() == Set("gen-1", "bands-v1", "shingles-v1"),
+      "the fold leaves only the committed generation")
+    // a second compaction is a no-op rewrite into the next generation
+    val ((b2, b3), _) = Dedup.compactBandIndex(spark, indexDir)
+    assert(b2 == b1 && b3 == b1)
+    assert(probe() == pre.distinct)
+    assert(names() == Set("gen-2", "bands-v2", "shingles-v2"))
   }
 
   test("retentionPolicy: quality beats length; singletons always survive") {

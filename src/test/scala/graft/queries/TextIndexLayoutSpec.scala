@@ -1043,6 +1043,26 @@ class TextIndexLayoutSpec extends SparkSpecBase {
       FullText.writeMultiFieldTextIndex(docs, "doc_id", fields, mIdx,
         storeTermVectors = tv)
       check("write")
+      // the writer's column ORDER per artifact kind: a fold's
+      // `<kind>-v<gen>` files must keep it, whatever the fold applied
+      def columnsOf(idx: String, kind: String): Map[String, Seq[String]] =
+        new java.io.File(idx).listFiles().toSeq
+          .filter(f => f.isDirectory &&
+            (f.getName == kind || f.getName.startsWith(s"$kind-v")))
+          .map(f => f.getName ->
+            spark.read.parquet(f.getAbsolutePath).columns.toSeq).toMap
+      val kinds = if (tv) Seq("postings", "termvectors") else Seq("postings")
+      val written = for (i <- Seq(sIdx, mIdx); k <- kinds)
+        yield (i, k) -> columnsOf(i, k)(k)
+      def checkFolded(step: String): Unit = written.foreach {
+        case ((i, k), cols) =>
+          val folded = columnsOf(i, k) - k
+          assert(folded.nonEmpty, s"no folded $k dir after $step")
+          folded.foreach { case (d, c) =>
+            assert(c == cols, s"$d column order after $step " +
+              s"(term vectors $tv): $c, written $cols")
+          }
+      }
       FullText.appendToTextIndex(spark, extra, "doc_id", "text", sIdx)
       FullText.appendToMultiFieldTextIndex(spark, extra, "doc_id",
         fields, mIdx)
@@ -1052,9 +1072,11 @@ class TextIndexLayoutSpec extends SparkSpecBase {
       check(if (tv) "exact delete" else "Lucene-stale delete")
       Seq(sIdx, mIdx).foreach(FullText.compactTextIndex(spark, _))
       check("compact")
+      checkFolded("compact")
       Seq(sIdx, mIdx).foreach(FullText.compactTextIndex(spark, _,
         rebucket = Some(3)))
       check("rebucket")
+      checkFolded("rebucket")
     }
   }
 

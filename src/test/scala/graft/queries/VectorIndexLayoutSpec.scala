@@ -708,10 +708,10 @@ class VectorIndexLayoutSpec extends SparkSpecBase {
       numCells = 16, pgroups = -1)
     val legacy = spark.read.parquet(s"$idx/meta")
       .drop("pgroups_forced").collect().head
-    graft.io.Layout.rewriteParquet(spark,
-      spark.createDataFrame(
-        java.util.List.of(legacy),
-        legacy.schema), s"$idx/meta")
+    // the collected row is driver data, so overwriting the path it
+    // came from reads nothing mid-write
+    spark.createDataFrame(java.util.List.of(legacy), legacy.schema)
+      .write.mode("overwrite").parquet(s"$idx/meta")
     assert(!spark.read.parquet(s"$idx/meta")
       .schema.fieldNames.contains("pgroups_forced"))
     def page() = SimilarityQueries.ivfPqSearchStored(spark, idx, dir)

@@ -231,15 +231,15 @@ class ObjectStoreStreamsSpec extends SparkSpecBase {
         "the batch rebuild at fixed artifacts")
   }
 
-  test("cprn://: the admission stream probes, appends and swap-rotates the band index on a copy-rename store, verdict-equal to the local twin") {
+  test("cprn://: the admission stream probes, appends and folds the band index on a copy-rename store, verdict-equal to the local twin") {
     spark.sparkContext.hadoopConfiguration.set("fs.cprn.impl",
       classOf[CopyRenameFileSystem].getName)
     implicit val sqlCtx = spark.sqlContext
-    // the band family commits by SWAP ROTATION (bands.compact →
-    // bands.old/bands), not generation markers — on a copy-rename
-    // store every rotation leg is a recursive copy+delete; this pins
-    // the admission stream's probe → append → in-stream fold chain
-    // verdict- and artifact-equal to the local twin
+    // the band fold commits a generation like the other families —
+    // on a copy-rename store each of its side renames is a recursive
+    // copy+delete; this pins the admission stream's probe → append →
+    // in-stream fold chain verdict- and artifact-equal to the local
+    // twin
     val feed = Seq(
       (1L, "the quick brown fox jumps over the lazy dog tonight"),
       (2L, "the quick brown fox jumps over the lazy dog tonight!!"),
@@ -271,20 +271,20 @@ class ObjectStoreStreamsSpec extends SparkSpecBase {
       s"admission verdicts must match across schemes (got $cV vs $lV)")
     assert(cV.count(!_._2) >= 1,
       "the fixture must actually flag a near-duplicate")
-    // the in-stream fold swap-rotated on the copy-rename store: the
+    // the in-stream fold committed on the copy-rename store: the
     // admitted index state must equal the local twin's row-for-row
-    def rows(i: String, art: String) = spark.read.parquet(s"$i/$art")
-      .collect().map(_.toSeq).toSet
-    assert(rows(cIdx, "bands") == rows(lIdx, "bands") &&
-      rows(cIdx, "shingles") == rows(lIdx, "shingles"),
+    assert(graft.io.Layout.liveGeneration(spark, cIdx).contains(1L),
+      "the in-stream fold must have committed a generation")
+    def rows(i: String) = {
+      val (bands, shingles) = graft.ops.Dedup.liveBandDirs(spark, i)
+      Seq(bands, shingles).map(p =>
+        spark.read.parquet(p).collect().map(_.toSeq).toSet)
+    }
+    assert(rows(cIdx) == rows(lIdx),
       "band artifacts must be row-equal across schemes after the fold")
-    // no rotation leftovers linger on the copy-rename store
-    val fs = new org.apache.hadoop.fs.Path(cIdx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val leftovers = fs.listStatus(
-      new org.apache.hadoop.fs.Path(cIdx)).map(_.getPath.getName)
-      .filter(n => n.endsWith(".old") || n.endsWith(".compact"))
+    // no staging leftovers linger on the copy-rename store
+    val leftovers = graft.io.Layout.orphanedStaging(spark, cIdx)
     assert(leftovers.isEmpty,
-      s"a clean fold must leave no rotation suffixes (got ${leftovers.toSeq})")
+      s"a clean fold must leave no orphaned staging (got $leftovers)")
   }
 }

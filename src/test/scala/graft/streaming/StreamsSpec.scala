@@ -431,8 +431,8 @@ class StreamsSpec extends SparkSpecBase {
         if (!p.exists()) 0L
         else if (p.isDirectory) p.listFiles().map(files).sum
         else if (p.getName.endsWith(".parquet")) 1L else 0L
-      (verdicts.synchronized(verdicts.toMap),
-        files(new java.io.File(s"$indexDir/bands")))
+      (verdicts.synchronized(verdicts.toMap), files(new java.io.File(
+        graft.ops.Dedup.liveBandDirs(spark, indexDir)._1)))
     }
     val (vPlain, fPlain) = run(0)
     val (vCompact, fCompact) = run(1)
@@ -440,6 +440,61 @@ class StreamsSpec extends SparkSpecBase {
     assert(fCompact < fPlain,
       s"per-batch compaction must shrink the append log: " +
         s"$fPlain -> $fCompact files")
+  }
+
+  test("nearDupAdmissionStream on a flat band index: it probes and appends at the root, and the first fold migrates it to gen-1") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val indexDir = java.nio.file.Files
+      .createTempDirectory("graft-ndflat").toString
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
+      "lambda mu nu xi omicron pi rho sigma tau upsilon"
+    val colors = "red green blue cyan magenta yellow black white silver gold"
+    // the flat layout an index gets before any fold: bands/shingles
+    // appended at the root
+    val stored = Seq((1L, base)).toDF("id", "text")
+      .select($"id",
+        graft.ops.Dedup.shingles(graft.ops.Dedup.tokens($"text")).as("sh"))
+    stored.withColumn("bandh", graft.ops.Dedup.bandHashesDirect($"sh", 16, 4))
+      .select($"id", posexplode_outer($"bandh").as(Seq("band", "band_hash")))
+      .write.parquet(s"$indexDir/bands")
+    stored.select($"id", $"sh").write.parquet(s"$indexDir/shingles")
+    def feed(rows: (Long, String)*): Map[Long, Boolean] = {
+      val verdicts = scala.collection.mutable.Map[Long, Boolean]()
+      val src = MemoryStream[(Long, String)]
+      val q = Streams.nearDupAdmissionStream(
+        src.toDF().toDF("doc_id", "text"), "doc_id", "text", indexDir,
+        java.nio.file.Files.createTempDirectory("graft-ndflatck").toString,
+        sink = b => b.collect().foreach { r =>
+          verdicts.synchronized {
+            verdicts(r.getAs[Long]("doc_id")) = r.getAs[Boolean]("admitted")
+          }
+        })
+      try { src.addData(rows: _*); q.processAllAvailable() }
+      finally q.stop()
+      verdicts.synchronized(verdicts.toMap)
+    }
+    def ids(artifact: String) = spark.read.parquet(artifact)
+      .select($"id").collect().map(_.getLong(0)).toSet
+    // the probe reads the flat index, the append lands at the root
+    assert(feed((10L, base + " chi"), (13L, colors)) ==
+      Map(10L -> false, 13L -> true))
+    assert(graft.io.Layout.liveGeneration(spark, indexDir).isEmpty)
+    assert(ids(s"$indexDir/shingles") == Set(1L, 13L))
+    val ((b0, b1), (s0, s1)) =
+      graft.ops.Dedup.compactBandIndex(spark, indexDir)
+    assert(b0 == b1 && s0 == 2 && s1 == 2, "nothing to dedup here")
+    assert(graft.io.Layout.liveGeneration(spark, indexDir).contains(1L))
+    assert(graft.ops.Dedup.liveBandDirs(spark, indexDir) ==
+      ((s"$indexDir/bands-v1", s"$indexDir/shingles-v1")))
+    assert(!graft.io.Layout.pathExists(spark, s"$indexDir/bands") &&
+      !graft.io.Layout.pathExists(spark, s"$indexDir/shingles"),
+      "the migrated flat dirs must be reclaimed")
+    // the next batch probes and appends the migrated generation
+    assert(feed((20L, colors + " bronze"),
+      (21L, "uno dos tres quatro cinco seis siete ocho nueve diez")) ==
+      Map(20L -> false, 21L -> true))
+    assert(ids(s"$indexDir/shingles-v1") == Set(1L, 13L, 21L))
   }
 
   test("chunkStream: streaming chunks equal the batch chunker row-for-row") {

@@ -104,11 +104,12 @@ class RunCompactSpec extends SparkSpecBase {
     // the pair SET is what admission consumes (its dup_of aggregate is
     // multiplicity-insensitive); replayed shingle rows fan the verify
     // join out to duplicate ROWS pre-fold, which the fold reclaims
-    def verdict() = Dedup.minhashLshPairsAgainstIndex(
-        spark.read.parquet(s"$idx/bands"),
-        spark.read.parquet(s"$idx/shingles"),
-        newDocs, "id", "sh")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def verdict() = {
+      val (bands, shingles) = Dedup.liveBandDirs(spark, idx)
+      Dedup.minhashLshPairsAgainstIndex(spark.read.parquet(bands),
+        spark.read.parquet(shingles), newDocs, "id", "sh")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     val before = verdict()
     val (f, b, a, r) = RunCompact.run(spark, idx)
     assert(f == "band", s"bands+shingles dirs must detect as band (got $f)")

@@ -74,8 +74,8 @@ class RunGcSpec extends SparkSpecBase {
     // RunGc reclaims under the lease, WITHOUT folding: the live
     // generation number and the search page must not move
     val genBefore = Layout.liveGeneration(spark, idx)
-    val (nDirs, nBytes, healed0, amb0) = RunGc.run(spark, idx)
-    assert(nDirs == 3 && nBytes > 0 && healed0 == 0 && amb0 == 0,
+    val (nDirs, nBytes) = RunGc.run(spark, idx)
+    assert(nDirs == 3 && nBytes > 0,
       s"the sweep must reclaim all three orphans (got $nDirs)")
     assert(Layout.liveGeneration(spark, idx) == genBefore,
       "GC must not cut a generation — it reclaims, never folds")
@@ -85,7 +85,7 @@ class RunGcSpec extends SparkSpecBase {
     assert(!Layout.pathExists(spark, s"$idx/_mutation.lock"),
       "the GC's own lease must release")
     // idempotent: an empty re-sweep reclaims nothing
-    assert(RunGc.run(spark, idx) == ((0, 0L, 0, 0)))
+    assert(RunGc.run(spark, idx) == ((0, 0L)))
   }
 
   test("an ACTIVE writer's in-flight staging is never reported or reclaimed") {
@@ -109,7 +109,7 @@ class RunGcSpec extends SparkSpecBase {
     val st2 = RunStatus.describe(spark, idx)
     assert(st2.contains("\"orphaned_staging\":{\"count\":1"),
       s"released-without-commit staging must read as orphaned (got $st2)")
-    val (n, _, _, _) = RunGc.run(spark, idx)
+    val (n, _) = RunGc.run(spark, idx)
     assert(n == 1)
   }
 
@@ -125,7 +125,7 @@ class RunGcSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val before = page()
     crashMidStage(idx)
-    val (n, b, _, _) = RunGc.run(spark, idx)
+    val (n, b) = RunGc.run(spark, idx)
     assert(n == 2 && b > 0,
       s"the sweep must reclaim exactly the crashed stage's two dirs (got $n)")
     assert(Layout.pathExists(spark, s"$idx/seg-keepme"),
@@ -133,381 +133,6 @@ class RunGcSpec extends SparkSpecBase {
     assert(page() == before, "vector search must be GC-invariant")
     assert(SimilarityQueries.liveSegmentCount(spark, idx) == 1,
       "the committed segment must still be live after GC")
-  }
-
-  test("rotation sweep: a dangling .old restores, rotation garbage reclaims, live state untouched") {
-    import org.apache.spark.sql.functions._
-    val docs = graft.io.Tables.documents(spark, dir).limit(40)
-    val idx = tmp("gc-rot")
-    // the band family — the rotation-committing layout
-    val prepped = docs.select($"doc_id".as("id"),
-      graft.ops.Dedup.shingles(graft.ops.Dedup.tokens($"text")).as("sh"))
-      .filter($"sh".isNotNull)
-    prepped
-      .withColumn("bandh",
-        graft.ops.Dedup.bandHashesDirect($"sh", 16, 4))
-      .select($"id",
-        posexplode_outer($"bandh").as(Seq("band", "band_hash")))
-      .write.mode("append").parquet(s"$idx/bands")
-    prepped.select($"id", $"sh")
-      .write.mode("append").parquet(s"$idx/shingles")
-    val bandRows = spark.read.parquet(s"$idx/bands").count()
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hp(s: String) = new org.apache.hadoop.fs.Path(s)
-    // crash-between-renames: bands gone, bands.old = the only copy
-    assert(fs.rename(hp(s"$idx/bands"), hp(s"$idx/bands.old")))
-    // crash-before-any-rename: a stale .compact beside live shingles
-    // (no backup — the writer purges .old before staging, so a
-    // crashed WRITE never has one)
-    Seq((1L, Seq("x"))).toDF("id", "sh").write
-      .parquet(s"$idx/shingles.compact")
-    // crash-after-second-rename: a .old beside a live base — on a
-    // SEPARATE base (a .old AND a staging dir beside one live base
-    // is the ambiguous copy-rename signature, protocol-unreachable
-    // locally and pinned in its own test below)
-    Seq((3L, Seq("z"))).toDF("id", "sh").write.parquet(s"$idx/aux")
-    Seq((2L, Seq("y"))).toDF("id", "sh").write
-      .parquet(s"$idx/aux.old")
-    // under the DEFAULT grace window these seconds-old dirs read as
-    // possibly-in-flight legacy rotations and the sweep must skip
-    // them ALL — including the restore branch
-    val (r0, _, h0, _) = RunGc.run(spark, idx)
-    assert(r0 == 0 && h0 == 0,
-      s"fresh rotation dirs must survive the grace window (got $r0/$h0)")
-    assert(Layout.pathExists(spark, s"$idx/bands.old"),
-      "the graced .old must not be touched")
-    // 0 = the operator's explicit "nothing is in flight" override
-    spark.conf.set("graft.index.gcRotationGraceMs", "0")
-    val (reclaimed, bytes, healed, ambiguous) =
-      try RunGc.run(spark, idx)
-      finally spark.conf.unset("graft.index.gcRotationGraceMs")
-    assert(healed == 1,
-      s"the dangling bands.old must RESTORE, not reclaim (got $healed)")
-    assert(reclaimed == 2 && bytes > 0 && ambiguous == 0,
-      s"the two garbage dirs must reclaim (got $reclaimed)")
-    assert(spark.read.parquet(s"$idx/bands").count() == bandRows,
-      "the restored rotation must hold every pre-crash row")
-    assert(!Layout.pathExists(spark, s"$idx/bands.old") &&
-      !Layout.pathExists(spark, s"$idx/shingles.compact") &&
-      !Layout.pathExists(spark, s"$idx/aux.old"))
-    assert(spark.read.parquet(s"$idx/shingles").count() ==
-      prepped.count(), "live shingles must be untouched by the sweep")
-    assert(spark.read.parquet(s"$idx/aux").count() == 1,
-      "the live aux base must be untouched by the backup reclaim")
-  }
-
-  test("roll-forward heal: base missing with .old AND staging promotes the staging dir (the fold survives)") {
-    val idx = tmp("gc-fwd")
-    Seq((1L, "a"), (2L, "b"), (2L, "b")).toDF("id", "v")
-      .write.parquet(s"$idx/bands.old")
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .write.parquet(s"$idx/bands.compact")
-    // base missing: the crash sat between the two renames — both
-    // survivors are complete by construction, and the heal must keep
-    // the FOLD (promote .compact) instead of rewinding and redoing it
-    assert(Layout.healSwapRotation(spark, s"$idx/bands"),
-      "the in-flight rotation must heal")
-    assert(spark.read.parquet(s"$idx/bands").count() == 2,
-      "the promoted base must be the folded (.compact) content")
-    assert(!Layout.pathExists(spark, s"$idx/bands.old") &&
-      !Layout.pathExists(spark, s"$idx/bands.compact"),
-      "both rotation leftovers must be consumed by the heal")
-  }
-
-  test("ambiguous copy-rename crash state: reported, never guessed at, and the fold refuses to read through it") {
-    // base + .old + .compact all present: on a copy-rename store this
-    // arises from THREE different crash points, each leaving a
-    // DIFFERENT artifact partial — an automatic pick could destroy
-    // the only complete copy, so the engine must stop loudly instead
-    // (the old behavior read the possibly-partial base as live and
-    // the next fold enshrined the loss)
-    val idx = tmp("gc-amb")
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .write.parquet(s"$idx/bands")
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .write.parquet(s"$idx/bands.old")
-    Seq((1L, "a")).toDF("id", "v")
-      .write.parquet(s"$idx/bands.compact")
-    Seq((1L, Seq("s"))).toDF("id", "sh")
-      .write.parquet(s"$idx/shingles")
-    spark.conf.set("graft.index.gcRotationGraceMs", "0")
-    try {
-      val (reclaimed, _, healed, ambiguous) = RunGc.run(spark, idx)
-      assert(ambiguous == 1 && healed == 0,
-        s"the ambiguous rotation must be reported (got a=$ambiguous h=$healed)")
-      assert(reclaimed == 0 &&
-        Layout.pathExists(spark, s"$idx/bands") &&
-        Layout.pathExists(spark, s"$idx/bands.old") &&
-        Layout.pathExists(spark, s"$idx/bands.compact"),
-        "nothing of the ambiguous trio may be deleted — the operator " +
-          "needs all three to resolve")
-      // the monitoring face surfaces the halt WITHOUT a mutation
-      assert(RunStatus.describe(spark, idx)
-        .contains("\"ambiguous_rotations\":[\"bands\"]"),
-        "status must flag the halted rotation for the operator")
-      // the band fold heals before reading and must REFUSE too — the
-      // base it would read may be the partial artifact
-      val e = intercept[graft.io.Layout.AmbiguousRotationException] {
-        graft.ops.Dedup.compactBandIndex(spark, idx)
-      }
-      assert(e.getMessage.contains("Resolve manually"))
-      // operator resolution through the CLI face (roll forward, per
-      // the message — no more hand-run raw deletes), then both faces
-      // work again
-      val actions = RunGc.resolve(spark, idx, "bands", "roll-forward")
-      assert(actions.size == 3 &&
-        actions.count(_.startsWith("delete")) == 2 &&
-        actions.exists(_.startsWith("rename")),
-        s"roll-forward = two deletes + one promote (got $actions)")
-      assert(RunGc.run(spark, idx) == ((0, 0L, 0, 0)))
-      graft.ops.Dedup.compactBandIndex(spark, idx)
-      assert(spark.read.parquet(s"$idx/bands").count() == 1)
-    } finally spark.conf.unset("graft.index.gcRotationGraceMs")
-  }
-
-  /** Build a REAL ambiguous trio on the copy-rename store: a tiny
-    * band index whose fold is crashed inside one of the two rotation
-    * renames by [[graft.io.CopyRenameFileSystem]]'s injection hook.
-    * `afterFiles = 0` crashes at the first file of rename-1
-    * (base→`.old`): base stays COMPLETE, `.old` is a skeleton, the
-    * staged `.compact` (the folded frame) is complete. `afterFiles =
-    * <files in base>` survives rename-1 whole and crashes at the
-    * first file of rename-2 (`.compact`→base): base is an EMPTY
-    * SKELETON, `.old` and `.compact` complete — a different artifact
-    * partial in each, which is exactly what makes the state
-    * ambiguous. Returns the index dir. */
-  private def injectedTrio(prefix: String,
-      crashInRename2: Boolean): String = {
-    spark.sparkContext.hadoopConfiguration.set("fs.cprn.impl",
-      classOf[graft.io.CopyRenameFileSystem].getName)
-    val idx = "cprn://" + tmp(prefix)
-    Seq((1L, "a"), (2L, "b"), (2L, "b")).toDF("id", "v")
-      .write.parquet(s"$idx/bands")
-    Seq((9L, Seq("s"))).toDF("id", "sh")
-      .write.parquet(s"$idx/shingles")
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val baseFiles = {
-      val it = fs.listFiles(
-        new org.apache.hadoop.fs.Path(s"$idx/bands"), true)
-      var n = 0
-      while (it.hasNext) { it.next(); n += 1 }
-      n
-    }
-    graft.io.CopyRenameFileSystem.crashRotationRenameAfterFiles =
-      if (crashInRename2) baseFiles else 0
-    try {
-      val e = intercept[Exception] {
-        graft.ops.Dedup.compactBandIndex(spark, idx)
-      }
-      assert(e.getMessage != null &&
-        e.getMessage.contains("simulated crash mid-rotation-rename"),
-        s"the injected rotation crash must surface (got $e)")
-    } finally
-      graft.io.CopyRenameFileSystem.crashRotationRenameAfterFiles = -1
-    assert(graft.io.Layout.pathExists(spark, s"$idx/bands") &&
-      graft.io.Layout.pathExists(spark, s"$idx/bands.old") &&
-      graft.io.Layout.pathExists(spark, s"$idx/bands.compact"),
-      "the crash must leave the full ambiguous trio")
-    idx
-  }
-
-  test("RunGc --resolve keep-base on a real injected cprn:// trio: the complete base survives, the fold re-runs") {
-    // crash at the FIRST file of rename-1: the base never lost a file
-    // (rename-1's source delete only runs after its copy) — keep-base
-    // is the correct operator call for this crash point
-    val idx = injectedTrio("gc-res-kb", crashInRename2 = false)
-    val actions = RunGc.resolve(spark, idx, "bands", "keep-base")
-    assert(actions.size == 2 && actions.forall(_.startsWith("delete")) &&
-      actions.exists(_.endsWith("bands.old")) &&
-      actions.exists(_.endsWith("bands.compact")),
-      s"keep-base deletes exactly the two untrusted artifacts (got $actions)")
-    assert(spark.read.parquet(s"$idx/bands").count() == 3,
-      "the kept base must hold every pre-crash row")
-    assert(RunGc.run(spark, idx) == ((0, 0L, 0, 0)),
-      "nothing ambiguous or sweepable may remain after resolution")
-    graft.ops.Dedup.compactBandIndex(spark, idx)
-    assert(spark.read.parquet(s"$idx/bands").count() == 2,
-      "the re-run fold must dedup the kept base exactly")
-    assert(!graft.io.Layout.pathExists(spark, s"$idx/_mutation.lock"),
-      "the resolve CLI's lease must release")
-    assert(!graft.io.Layout.pathExists(spark,
-      s"$idx/bands.resolve-intent"),
-      "a completed resolution must leave no intent marker")
-  }
-
-  test("RunGc --resolve rewind on a real injected cprn:// trio: the backup restores, the fold re-runs from it") {
-    // crash at the first file of rename-2: rename-1 completed (.old
-    // holds every original row), the new base is an empty skeleton —
-    // rewind is the correct operator call for this crash point
-    val idx = injectedTrio("gc-res-rw", crashInRename2 = true)
-    assert(spark.read.parquet(s"$idx/bands.old").count() == 3,
-      "this crash point must leave the backup complete (fixture check)")
-    val actions = RunGc.resolve(spark, idx, "bands", "rewind")
-    assert(actions.last.startsWith("rename") &&
-      actions.last.contains("bands.old ->"),
-      s"rewind must promote the backup last (got $actions)")
-    assert(spark.read.parquet(s"$idx/bands").count() == 3,
-      "the restored base must hold every original row")
-    assert(!graft.io.Layout.pathExists(spark, s"$idx/bands.old") &&
-      !graft.io.Layout.pathExists(spark, s"$idx/bands.compact"))
-    graft.ops.Dedup.compactBandIndex(spark, idx)
-    assert(spark.read.parquet(s"$idx/bands").count() == 2,
-      "the crashed fold must re-run cleanly from the restored input")
-  }
-
-  test("RunGc --resolve roll-forward on a real injected cprn:// trio: the staged fold is kept, not recomputed") {
-    // crash at the first file of rename-1 again — but here the
-    // operator trusts the STAGED dir (also complete at this crash
-    // point, since rename-2 never consumed it): the fold survives
-    val idx = injectedTrio("gc-res-rf", crashInRename2 = false)
-    val actions = RunGc.resolve(spark, idx, "bands", "roll-forward")
-    // the promote sits BETWEEN the two deletes by design: delete base
-    // → promote staging → delete .old is the order whose every crash
-    // point resumes (a crash after the base delete leaves .old +
-    // staging — the exact state the arm itself completes from)
-    assert(actions.exists(a => a.startsWith("rename") &&
-      a.contains("bands.compact ->")) &&
-      actions.last.endsWith("bands.old"),
-      s"roll-forward must promote the staging dir and drop the " +
-        s"backup last (got $actions)")
-    assert(spark.read.parquet(s"$idx/bands").count() == 2,
-      "the promoted base must be the folded (deduped) content")
-    assert(RunGc.run(spark, idx) == ((0, 0L, 0, 0)))
-  }
-
-  test("a resolution arm that CRASHES mid-sequence is loud, untouchable, and resumes under its intent marker") {
-    // the worst former window: a roll-forward that died after its
-    // deletes leaves a LONE staging dir — precisely the shape the
-    // sweep reads as crashed-write garbage and reclaims, except here
-    // it is the only complete copy. The intent marker written before
-    // the first destructive step turns that into a loud, resumable
-    // halt: the heal throws, the sweep skips, the status face
-    // surfaces the base, a DIFFERENT arm refuses, and re-running the
-    // recorded arm completes idempotently.
-    val idx = tmp("gc-res-crash")
-    Seq((1L, "a"), (2L, "b"), (2L, "b")).toDF("id", "v")
-      .write.parquet(s"$idx/bands.compact")
-    Seq((9L, Seq("s"))).toDF("id", "sh")
-      .write.parquet(s"$idx/shingles")
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$idx/bands.resolve-intent")
-    val out = fs.create(marker, false)
-    out.write("roll-forward".getBytes("UTF-8")); out.close()
-    // (a) every fold refuses through the heal
-    val e = intercept[graft.io.Layout.AmbiguousRotationException] {
-      graft.ops.Dedup.compactBandIndex(spark, idx)
-    }
-    assert(e.getMessage.contains("crashed mid-arm"))
-    // (b) the sweep reclaims NOTHING of the family, even past grace
-    spark.conf.set("graft.index.gcRotationGraceMs", "0")
-    val (r, _, h, _) =
-      try RunGc.run(spark, idx)
-      finally spark.conf.unset("graft.index.gcRotationGraceMs")
-    assert(r == 0 && h == 0,
-      s"a marked family must be untouchable (got r=$r h=$h)")
-    assert(graft.io.Layout.pathExists(spark, s"$idx/bands.compact"),
-      "the lone staging dir — the only complete copy — must survive")
-    // (c) the monitoring face surfaces the halted base
-    assert(RunStatus.describe(spark, idx)
-      .contains("\"ambiguous_rotations\":[\"bands\"]"))
-    // (d) a different arm refuses — the crashed arm already deleted
-    // what IT distrusted
-    val e2 = intercept[IllegalArgumentException] {
-      RunGc.resolve(spark, idx, "bands", "rewind")
-    }
-    assert(e2.getMessage.contains("crashed mid-'roll-forward'"),
-      s"switching arms mid-surgery must refuse (got ${e2.getMessage})")
-    // (e) the RECORDED arm resumes and completes
-    val actions = RunGc.resolve(spark, idx, "bands", "roll-forward")
-    assert(actions.exists(_.contains("bands.compact ->")),
-      s"the resume must promote the staging dir (got $actions)")
-    assert(!fs.exists(marker), "completion must remove the marker")
-    assert(spark.read.parquet(s"$idx/bands").count() == 3)
-    graft.ops.Dedup.compactBandIndex(spark, idx)
-    assert(spark.read.parquet(s"$idx/bands").count() == 2,
-      "the fold must run clean after the resumed resolution")
-    assert(RunGc.run(spark, idx) == ((0, 0L, 0, 0)))
-  }
-
-  test("RunGc --resolve refuses an arm whose precondition fails and touches nothing") {
-    val idx = tmp("gc-res-refuse")
-    // not the ambiguous trio (no .old): EVERY arm refuses with a
-    // pointer to the self-heal — guided surgery must never race the
-    // states healSwapRotation already resolves
-    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$idx/bands")
-    Seq((2L, "b")).toDF("id", "v").write.parquet(s"$idx/bands.compact")
-    val e1 = intercept[IllegalArgumentException] {
-      RunGc.resolve(spark, idx, "bands", "rewind")
-    }
-    assert(e1.getMessage.contains("not in the ambiguous rotation state"),
-      s"rewind without a .old backup must refuse (got ${e1.getMessage})")
-    assert(graft.io.Layout.pathExists(spark, s"$idx/bands") &&
-      graft.io.Layout.pathExists(spark, s"$idx/bands.compact"),
-      "a refused arm must not delete anything")
-    // the full trio but BOTH staging dirs: roll-forward has no
-    // principled pick between .new and .compact and must refuse
-    Seq((3L, "c")).toDF("id", "v").write.parquet(s"$idx/bands.old")
-    Seq((4L, "d")).toDF("id", "v").write.parquet(s"$idx/bands.new")
-    val e2 = intercept[IllegalArgumentException] {
-      RunGc.resolve(spark, idx, "bands", "roll-forward")
-    }
-    assert(e2.getMessage.contains("refusing roll-forward"),
-      s"two staging dirs must refuse roll-forward (got ${e2.getMessage})")
-    Seq("bands", "bands.old", "bands.new", "bands.compact").foreach(n =>
-      assert(graft.io.Layout.pathExists(spark, s"$idx/$n"),
-        s"$n must survive the refusal"))
-    // an unknown arm refuses before touching anything
-    val e3 = intercept[IllegalArgumentException] {
-      RunGc.resolve(spark, idx, "bands", "pick-something")
-    }
-    assert(e3.getMessage.contains("unknown resolution arm"))
-    assert(!graft.io.Layout.pathExists(spark, s"$idx/_mutation.lock"),
-      "refusals must release the lease")
-  }
-
-  test("pass 2 never reclaims staging while ${base}.old exists: the skew window of a recent copy-rename crash is untouchable") {
-    // staging is written BEFORE the base→.old rename, so it ages past
-    // the grace window first: a recent copy-rename crash presents
-    // base + YOUNG .old + OLD staging — an ambiguous trio pass 1
-    // cannot flag (the graced .old never reaches the heal). The old
-    // sweep deleted that staging dir; if the crash sat mid-copy of
-    // rename-2 it was the ONLY complete copy, and the next GC run
-    // would then reclaim .old and silently enshrine the partial base.
-    val idx = tmp("gc-skew")
-    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$idx/bands")
-    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$idx/bands.old")
-    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$idx/bands.compact")
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // age the staging dir far past any grace; keep .old young
-    fs.setTimes(new org.apache.hadoop.fs.Path(s"$idx/bands.compact"),
-      System.currentTimeMillis() - 3600L * 1000, -1)
-    val (reclaimed, _, healed, ambiguous) = RunGc.run(spark, idx)
-    assert(reclaimed == 0 && healed == 0 && ambiguous == 0,
-      s"the skew window must be untouchable (got r=$reclaimed)")
-    Seq("bands", "bands.old", "bands.compact").foreach(n =>
-      assert(graft.io.Layout.pathExists(spark, s"$idx/$n"),
-        s"$n must survive the graced sweep"))
-    // GC's adjudication is graced, but the MONITORING face is
-    // age-blind: the operator sees the halted trio immediately, not
-    // fifteen minutes later
-    assert(RunStatus.describe(spark, idx)
-      .contains("\"ambiguous_rotations\":[\"bands\"]"),
-      "status must surface the trio even while the GC grace holds")
-    // once the grace passes, the trio reads as ambiguous — reported,
-    // still untouched
-    spark.conf.set("graft.index.gcRotationGraceMs", "0")
-    val (r2, _, h2, a2) =
-      try RunGc.run(spark, idx)
-      finally spark.conf.unset("graft.index.gcRotationGraceMs")
-    assert(a2 == 1 && r2 == 0 && h2 == 0,
-      s"past the grace the trio must report ambiguous (got a=$a2)")
-    Seq("bands", "bands.old", "bands.compact").foreach(n =>
-      assert(graft.io.Layout.pathExists(spark, s"$idx/$n")))
   }
 
   test("the GC faces run on a URI-schemed object-store filesystem") {
@@ -530,7 +155,7 @@ class RunGcSpec extends SparkSpecBase {
     val st = RunStatus.describe(spark, idx)
     assert(st.contains("\"orphaned_staging\":{\"count\":2"),
       s"the blind store's orphans must be visible (got $st)")
-    val (n, b, _, _) = RunGc.run(spark, idx)
+    val (n, b) = RunGc.run(spark, idx)
     assert(n == 2 && b > 0,
       s"the sweep must reclaim both orphan dirs on nost:// (got $n)")
     assert(page() == before, "search must be GC-invariant on nost://")

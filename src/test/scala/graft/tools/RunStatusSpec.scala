@@ -81,6 +81,14 @@ class RunStatusSpec extends SparkSpecBase {
     val sb0 = RunStatus.describe(spark, bIdx)
     assert(sb0.contains("\"family\":\"band\"") &&
       sb0.contains("\"artifacts\":[\"bands\",\"shingles\"]"))
+    // a fold moves the band index onto its first generation; the
+    // family still detects through the live band dirs
+    Dedup.compactBandIndex(spark, bIdx)
+    val sb1 = RunStatus.describe(spark, bIdx)
+    assert(sb1.contains("\"family\":\"band\"") &&
+      sb1.contains("\"generation\":1") &&
+      sb1.contains("\"orphaned_staging\":{\"count\":0,\"bytes\":0}"),
+      s"got $sb1")
     // a held lease surfaces with the staleness clock (the same read
     // the takeover check uses) — simulate the foreign holder the
     // established way and age it a little
@@ -97,6 +105,28 @@ class RunStatusSpec extends SparkSpecBase {
       .exists(_.group(1).toLong >= 5),
       s"the silence clock must reflect the aged mtime (got $sl)")
     fs.delete(lock, false)
+  }
+
+  test("vector describe reads its meta and segment manifest on the driver: no Spark job") {
+    val idx = tmp("status-vjobs")
+    SimilarityQueries.writeIvfPqIndex(spark, dir, idx)
+    // a committed segment, so describe reads the manifest as well as
+    // the meta
+    SimilarityQueries.appendToIvfPqIndex(spark, idx,
+      graft.io.Tables.embeddings(spark, dir)
+        .filter($"vec_id" % 13 === 4)
+        .select(($"vec_id" + 910000L).as("vec_id"), $"embedding"),
+      segmentId = Some("s1"))
+    // count jobs in a dedicated (thread-local) job group
+    val group = s"status-jobs-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, "vector describe job count")
+    val st =
+      try RunStatus.describe(spark, idx)
+      finally spark.sparkContext.clearJobGroup()
+    assert(st.contains("\"family\":\"vector\"") &&
+      st.contains("\"segments\":1"), s"got $st")
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.isEmpty, s"describe ran ${jobs.length} Spark jobs")
   }
 
   test("n_docs_live: Lucene-stale layouts subtract tombstones, exact layouts don't double-subtract") {
