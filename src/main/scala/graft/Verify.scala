@@ -9,7 +9,15 @@ object Verify {
     // subset runs; the driver always passes exactly (sfDir, outDir).
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, Set.empty[String])
-      case Array(s, o, f) => (s, o, f.split(",").toSet)
+      case Array(s, o, f) => (s, o, f.split(",").map(_.trim).toSet)
+    }
+    // a subset name that matches no query would otherwise run nothing
+    // and read as a pass
+    val unknown = only.filterNot(SparkEntry.queries.contains).toSeq.sorted
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] no query named: ${unknown.mkString(", ")}" +
+        " (use full names, e.g. q51_bm25_search)")
+      sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

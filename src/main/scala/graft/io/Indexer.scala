@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Entities
-import graft.ops.Blame
+import graft.ops.{Blame, Jobs}
 
 /** Lake → document-store export orchestration (reference
   * indexer.py:115-178 scan_and_index): ensure the target indices,
@@ -28,6 +28,14 @@ import graft.ops.Blame
   * (K4, indexer.py:87-112) and flushes in small batches — the huge
   * blame payloads are why the reference drops its batch to 50
   * (indexer.py:19).
+  *
+  * The nine entity exports read and write independent data, so they
+  * run concurrently (`Jobs.par`, one driver thread per entity, as
+  * `Pipeline.persist` writes the nine artifacts): each export's glob
+  * listing, planning and bulk flushes are latency-bound, and running
+  * them one after another leaves the executors idle between them.
+  * Transports already take concurrent flushes from executor tasks;
+  * the documents and `_id`s are those of a sequential export.
   */
 object Indexer {
 
@@ -99,7 +107,8 @@ object Indexer {
     * @param dryRun      parse and count only, no writes
     *                    (indexer.py:160-162).
     * @return entity → ok/fail counts (dry runs report parsed counts
-    *         as ok). */
+    *         as ok). Index creation runs first and sequentially; the
+    *         exports then run concurrently (see the object doc). */
   def scanAndIndex(
       spark: SparkSession,
       dataDir: String,
@@ -112,7 +121,7 @@ object Indexer {
     // dry run means NO store mutations — including index creation
     if (!dryRun) entityFiles.foreach(e =>
       ensureIndex(s"$indexPrefix$e", StoreMappings.forEntity.get(e)))
-    entityFiles.flatMap { entity =>
+    Jobs.par(entityFiles.map { entity => () =>
       readEntityLake(spark, dataDir, entity).map { df =>
         val docs =
           if (entity == "repo_blame") Blame.rechunk(df) else df
@@ -124,6 +133,6 @@ object Indexer {
             Ids.forEntity(entity), transport, batch)
         entity -> result
       }
-    }.toMap
+    }, parallelism = entityFiles.size).flatten.toMap
   }
 }

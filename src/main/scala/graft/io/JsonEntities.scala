@@ -51,11 +51,19 @@ object JsonEntities {
     * byte-comparable. The reference's per-repo artifact writer
     * (collectors.py:33-39) is single-file by construction; coalesce(1)
     * reproduces that contract — use partitioned writes for bulk export.
-    */
+    *
+    * One stage: coalesce to one partition, then sort within it. A
+    * global `orderBy` before the coalesce would cost a RangePartitioner
+    * sample job and a shuffle per artifact for a file that ends up in
+    * one partition anyway; the bytes are the same, since Spark's sort is
+    * stable and both forms feed it rows in input-partition order. A
+    * driver-local frame writes with exactly one Spark job. */
   def writeDeterministic(df: DataFrame, path: String,
       sortKeys: Seq[String]): Unit = {
+    val one = df.coalesce(1)
     val ordered =
-      if (sortKeys.nonEmpty) df.orderBy(sortKeys.map(col): _*) else df
-    ordered.coalesce(1).write.mode("overwrite").json(path)
+      if (sortKeys.nonEmpty) one.sortWithinPartitions(sortKeys.map(col): _*)
+      else one
+    ordered.write.mode("overwrite").json(path)
   }
 }

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Blame aggregation + re-chunking (reference collectors.py:145-217,
   * indexer.py:87-112), as distributed per-file transforms.
@@ -147,14 +149,29 @@ object Blame {
       .drop("repo_name")
   }
 
+  /** Spark's string order — binary UTF-8, unsigned bytes, nulls first
+    * — which `array_sort`/`orderBy` give paths; for path lists and file
+    * entries sorted on the driver. (Java's `String` order is UTF-16
+    * and differs above U+FFFF.) */
+  val pathOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      if (a == null || b == null) (a != null).compare(b != null)
+      else UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+  }
+
+  /** One compare-API change-set entry: `previous` is the rename source
+    * (null when none); `status` may be null. */
+  final case class Change(path: String, previous: String, status: String)
+
   /** The refresh decision for one repo's blame snapshot
     * (collectors.py:310-373). `reuseWholeSnapshot` short-circuits all
     * file work (head SHA unchanged); otherwise `reusable` names cached
-    * per-file entries to keep and `refresh` the paths to re-blame. */
+    * per-file entries to keep and `refresh` the paths to re-blame. Both
+    * lists are distinct and in [[pathOrder]]. */
   final case class RefreshPlan(
       reuseWholeSnapshot: Boolean,
-      reusable: DataFrame,
-      refresh: DataFrame)
+      reusable: Seq[String],
+      refresh: Seq[String])
 
   /** Blame refresh orchestration (collectors.py:310-373) — the piece
     * that makes blame cheap on a large repo:
@@ -164,59 +181,88 @@ object Blame {
     *  2. heads differ and the compare API listed the changes → drop
     *     removed paths and rename-sources from the cache, refresh
     *     changed paths that still exist, plus anything desired that the
-    *     cache lacks (collectors.py:344-364).
+    *     cache lacks (collectors.py:344-364). A change whose status is
+    *     null neither drops nor refreshes its path.
     *  3. compare unavailable (None) → refresh everything
     *     (collectors.py:346-347).
     *
+    * Pure driver-side set algebra: every input is a path list the
+    * caller already holds on the driver (a tree listing capped at
+    * BLAME_FILE_LIMIT, the cached doc's file entries, one compare
+    * response), so planning runs no Spark job.
+    *
     * @param cachedHead   head_commit_sha of the cached snapshot
     * @param currentHead  first commit SHA of the current history (A6)
-    * @param cachedPaths  ("path") per-file entries in the cached doc
-    * @param desiredPaths ("path") current tree listing (already
+    * @param cachedPaths  per-file entries in the cached doc
+    * @param desiredPaths current tree listing (already
     *                     BLAME_FILE_LIMIT-capped by the caller, W2)
-    * @param changed      compare-API change set ("path", "previous",
-    *                     "status"), None when the compare call failed.
-    *                     Consulted only when BOTH heads are known —
-    *                     with a head missing the reference never runs
-    *                     the compare (collectors.py:344-345), so a
+    * @param changed      compare-API change set, None when the compare
+    *                     call failed. Consulted only when BOTH heads are
+    *                     known — with a head missing the reference never
+    *                     runs the compare (collectors.py:344-345), so a
     *                     change set passed anyway is ignored and the
     *                     refresh set falls back to desired − cached.
     */
   def planRefresh(
       cachedHead: Option[String],
       currentHead: Option[String],
-      cachedPaths: DataFrame,
-      desiredPaths: DataFrame,
-      changed: Option[DataFrame]): RefreshPlan = {
-    val desired = desiredPaths.select("path")
-    val cached = cachedPaths.select("path")
-    val empty = desired.limit(0)
+      cachedPaths: Seq[String],
+      desiredPaths: Seq[String],
+      changed: Option[Seq[Change]]): RefreshPlan = {
+    def sorted(paths: Iterable[String]) = paths.toSeq.distinct.sorted(pathOrder)
     val headsEqual = cachedHead.isDefined && cachedHead == currentHead
     if (headsEqual)
-      return RefreshPlan(reuseWholeSnapshot = true, cached, empty)
+      return RefreshPlan(reuseWholeSnapshot = true, sorted(cachedPaths), Nil)
     val bothHeads = cachedHead.isDefined && currentHead.isDefined
     if (bothHeads && changed.isEmpty)
       // compare API failed: refresh the full desired set
-      return RefreshPlan(reuseWholeSnapshot = false, empty, desired)
-    val existing0 = cached.join(desired, Seq("path"), "left_semi")
+      return RefreshPlan(reuseWholeSnapshot = false, Nil, sorted(desiredPaths))
+    // null paths never match a key, as in a SQL join
+    val desired = desiredPaths.filter(_ != null).toSet
+    val existing0 = cachedPaths.filter(desired).toSet
     val (existing, extraRefresh) = changed.filter(_ => bothHeads) match {
       case Some(ch) =>
+        val status = (c: Change) =>
+          Option(c.status).map(_.toLowerCase(java.util.Locale.ROOT))
         // removed: drop path and rename-source; renamed: drop source
-        val dropped = ch.filter(lower(col("status")) === "removed")
-          .select(col("path"))
-          .unionByName(ch.filter(col("previous").isNotNull)
-            .select(col("previous").as("path")))
+        val dropped = ch.filter(c => status(c).contains("removed")).map(_.path) ++
+          ch.flatMap(c => Option(c.previous))
         // any still-desired changed path needs a fresh blame
-        val needs = ch.filter(lower(col("status")) =!= "removed")
-          .select(col("path"))
-          .join(desired, Seq("path"), "left_semi")
-        (existing0.join(dropped, Seq("path"), "left_anti"), needs)
-      case None => (existing0, empty)
+        val needs = ch.filter(c => status(c).exists(_ != "removed"))
+          .map(_.path).filter(desired)
+        (existing0 -- dropped, needs)
+      case None => (existing0, Nil)
     }
-    val refresh = desired.join(existing, Seq("path"), "left_anti")
-      .unionByName(extraRefresh)
-      .distinct()
-    val reusable = existing.join(refresh, Seq("path"), "left_anti")
-    RefreshPlan(reuseWholeSnapshot = false, reusable, refresh)
+    val refresh = desiredPaths.filterNot(existing) ++ extraRefresh
+    val reusable = existing -- refresh
+    RefreshPlan(reuseWholeSnapshot = false, sorted(reusable), sorted(refresh))
+  }
+
+  /** The one-row repo_blame document assembled on the driver from file
+    * entries already there (fresh summaries plus reused cached
+    * entries): `files` in [[pathOrder]] — the order
+    * [[repoBlameDoc]]'s `array_sort` gives — and the columns in
+    * [[repoBlameDoc]]'s order. Writing it is one Spark job.
+    *
+    * @param fileType the entries' struct type (Entities.repoBlame's)
+    */
+  def repoBlameDocOf(
+      spark: SparkSession,
+      repoName: String,
+      ref: String,
+      headCommitSha: Option[String],
+      generatedAt: String,
+      fileType: StructType,
+      files: Seq[Row]): DataFrame = {
+    val schema = StructType(Seq(
+      StructField("repo_name", StringType),
+      StructField("ref", StringType),
+      StructField("files", ArrayType(fileType)),
+      StructField("generated_at", StringType),
+      StructField("head_commit_sha", StringType)))
+    val ordered = files.sortBy(_.getAs[String]("path"))(pathOrder)
+    spark.createDataFrame(java.util.List.of(Row(repoName, ref, ordered,
+      generatedAt, headCommitSha.orNull)), schema)
   }
 
   /** Assemble the one-row repo_blame document (the collect_repo_blame

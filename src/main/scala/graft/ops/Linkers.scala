@@ -16,6 +16,13 @@ import graft.ops.TextRefs.{extract_issue_refs, extract_cross_repo_refs}
   * the memo dict (SURVEY §2.1 S4/S5), so the linkers themselves are pure
   * and shuffle only on small, already-aggregated keys.
   *
+  * Each linker is two halves: *extract* (the regex scans and the
+  * PR/commit joins; no lookup input) and *resolve* (the author or
+  * target lookup joined onto the extracted refs). The composed form
+  * is resolve ∘ extract. A live run extracts once, takes its fetch
+  * sets from the extracted refs, and resolves them with the fetched
+  * details — so every author and target rule has one implementation.
+  *
   * Each pipeline's PRIMARY form is multi-repo (`*All`): every input
   * carries a `repo_name` column and every key includes it, so a whole
   * corpus of repositories derives in ONE repo_name-partitioned job —
@@ -90,30 +97,30 @@ object Linkers {
   def mergeScanAllowed(body: Column): Column =
     body.isNull || length(body) < 10 || !lower(body).contains("squash")
 
-  /** find_prs_with_linked_issues (linkers.py:55-163) over a multi-repo
-    * corpus: every input frame carries `repo_name` and every join /
-    * aggregation key includes it, so the whole corpus derives as one
-    * partitioned job.
+  /** The extract half of find_prs_with_linked_issues: the (capped,
+    * poison-filtered) PR rows and one row per issue ref found in them.
+    * Both frames carry `repo_name` and `pr_number`; `refs` holds the
+    * ref's (src_rank, pos) order, target and flags but no author —
+    * the author lookup is [[resolvePrLinks]]'s. */
+  final case class PrRefs(prs: DataFrame, refs: DataFrame)
+
+  /** Extract half of [[prsWithLinkedIssuesAll]]: newest-N cap, whole-PR
+    * drop on a bad merge SHA, and the regex scans of PR text, PR
+    * commit messages and the squash-guarded merge commit.
     *
     * @param prs            pull_requests rows (repo_name, number, …)
-    * @param localIssues    issues rows (repo_name, number, user.login) —
-    *                       pre-seed the author lookup per repo
     * @param prCommits      (repo_name, pr_number, message) PR-commit rows
     * @param commitDetails  (sha, message[, error]) commit-detail lookups
     *                       for merge commits, keyed by SHA alone (commit
     *                       SHAs are globally unique); error="invalid_sha"
     *                       drops the WHOLE PR, replicating the
     *                       reference's `continue` (linkers.py:115-117)
-    * @param externalIssueDetails (repo_name, number, author) details for
-    *                       refs outside the corpus; misses → null author
     */
-  def prsWithLinkedIssuesAll(
+  def extractPrRefsAll(
       prs: DataFrame,
-      localIssues: DataFrame,
       prCommits: DataFrame,
       commitDetails: DataFrame,
-      externalIssueDetails: DataFrame,
-      maxPrs: Int = 0): DataFrame = {
+      maxPrs: Int = 0): PrRefs = {
 
     val base0 = newestPrsAll(prs, maxPrs)
       .select(
@@ -178,7 +185,7 @@ object Linkers {
       .withColumn("reference_type", lit("merge_commit_message"))
 
     val merged = base.select(col("repo_name"), col("pr_number"), col("merged"))
-    val allRefs = textRefs.unionByName(commitRefs).unionByName(mergeRefs)
+    val refs = textRefs.unionByName(commitRefs).unionByName(mergeRefs)
       .join(merged, prKey)
       .select(
         col("repo_name"), col("pr_number"), col("src_rank"), col("pos"),
@@ -188,11 +195,38 @@ object Linkers {
         col("ref.has_closing_kw").as("has_closing_kw"),
         (col("merged") && col("ref.has_closing_kw")).as("would_auto_close"))
 
-    // Author lookup: local issues pre-seed, external details fill misses
-    // (linkers.py:74-76,132-150). The dimension is a deduplicated
-    // key→author projection; join strategy is left to Catalyst/AQE —
-    // auto-broadcast for a per-repo run, shuffle join when the corpus
-    // of issues is itself huge.
+    PrRefs(
+      base.select(col("repo_name"), col("pr_number"), col("title"),
+        col("pr_author").as("author"), col("state"), col("merged"),
+        col("url"), col("created_at")),
+      refs)
+  }
+
+  /** Single-repo [[extractPrRefsAll]]: stamps the literal repo. */
+  def extractPrRefs(
+      repoName: String,
+      prs: DataFrame,
+      prCommits: DataFrame,
+      commitDetails: DataFrame,
+      maxPrs: Int = 0): PrRefs =
+    extractPrRefsAll(stamped(prs, repoName), stamped(prCommits, repoName),
+      commitDetails, maxPrs)
+
+  /** The issue-author dimension both issue linkers resolve against
+    * (linkers.py:74-76,132-150): local issues pre-seed, external
+    * details fill misses, and a key present in both keeps the LOCAL
+    * author — even a null one — like the reference's pre-seeded dict
+    * cache. One row per (lower(repo), number): `repo_l`,
+    * `issue_number`, `issue_author`. Join strategy is left to
+    * Catalyst/AQE — auto-broadcast for a per-repo run, shuffle join
+    * when the corpus of issues is itself huge.
+    *
+    * @param localIssues          issues rows (repo_name, number, user.login)
+    * @param externalIssueDetails (repo_name, number, author) details for
+    *                             refs outside the corpus
+    */
+  private def issueAuthors(localIssues: DataFrame,
+      externalIssueDetails: DataFrame): DataFrame = {
     val localAuthors = localIssues.select(
       lowerRepo(col("repo_name")).as("repo_l"),
       col("number").as("issue_number"),
@@ -203,18 +237,45 @@ object Linkers {
       col("number").as("issue_number"),
       col("author").as("issue_author"),
       lit(1).as("prio"))
-    val authors = localAuthors.unionByName(extAuthors)
+    localAuthors.unionByName(extAuthors)
       .groupBy(col("repo_l"), col("issue_number"))
       .agg(min_by(col("issue_author"), col("prio")).as("issue_author"))
+  }
 
-    val linked = allRefs
+  /** Left-join an `issueAuthors` dimension onto ref rows keyed by
+    * (referenced_repo, issue_number); misses keep a null author. */
+  private def withIssueAuthor(refs: DataFrame, authors: DataFrame): DataFrame =
+    refs
       .join(authors,
-        lowerRepo(allRefs("referenced_repo")) === authors("repo_l") &&
-          allRefs("issue_number") === authors("issue_number"),
+        lowerRepo(refs("referenced_repo")) === authors("repo_l") &&
+          refs("issue_number") === authors("issue_number"),
         "left")
       .drop(authors("issue_number")).drop("repo_l")
 
-    // Re-assemble per-PR links arrays in (source, position) order.
+  /** The refs of [[PrRefs]] that the local issues leave without an
+    * author: the distinct (lower(repo_name), number) keys a live run
+    * looks up as external issue details. A local issue with a null
+    * login counts as unresolved here, although [[issueAuthors]] keeps
+    * its null author. */
+  def unresolvedIssueRefs(refs: DataFrame, localIssues: DataFrame): DataFrame = {
+    val noExternal = localIssues.select(col("repo_name"), col("number"),
+      lit(null).cast("string").as("author")).limit(0)
+    withIssueAuthor(refs, issueAuthors(localIssues, noExternal))
+      .filter(col("issue_author").isNull)
+      .select(lowerRepo(col("referenced_repo")).as("repo_name"),
+        col("issue_number").as("number"))
+      .distinct()
+  }
+
+  /** Resolve half of [[prsWithLinkedIssuesAll]]: attach issue authors
+    * and re-assemble each PR's links array in (source, position)
+    * order; PRs without a ref drop out. */
+  def resolvePrLinks(
+      x: PrRefs,
+      localIssues: DataFrame,
+      externalIssueDetails: DataFrame): DataFrame = {
+    val linked = withIssueAuthor(x.refs,
+      issueAuthors(localIssues, externalIssueDetails))
     val links = linked
       .groupBy(col("repo_name"), col("pr_number"))
       .agg(transform(
@@ -226,13 +287,33 @@ object Linkers {
             .as("link")))),
         x => x.getField("link")).as("links"))
 
-    base.join(links, prKey)
+    x.prs.join(links, Seq("repo_name", "pr_number"))
       .select(
         col("repo_name"),
-        col("pr_number"), col("title"), col("pr_author").as("author"),
+        col("pr_number"), col("title"), col("author"),
         col("state"), col("merged"), col("links"), col("url"), col("created_at"))
       .orderBy(col("repo_name"), col("pr_number"))
   }
+
+  /** find_prs_with_linked_issues (linkers.py:55-163) over a multi-repo
+    * corpus: every input frame carries `repo_name` and every join /
+    * aggregation key includes it, so the whole corpus derives as one
+    * partitioned job. [[resolvePrLinks]] ∘ [[extractPrRefsAll]].
+    *
+    * @param localIssues    issues rows (repo_name, number, user.login) —
+    *                       pre-seed the author lookup per repo
+    * @param externalIssueDetails (repo_name, number, author) details for
+    *                       refs outside the corpus; misses → null author
+    */
+  def prsWithLinkedIssuesAll(
+      prs: DataFrame,
+      localIssues: DataFrame,
+      prCommits: DataFrame,
+      commitDetails: DataFrame,
+      externalIssueDetails: DataFrame,
+      maxPrs: Int = 0): DataFrame =
+    resolvePrLinks(extractPrRefsAll(prs, prCommits, commitDetails, maxPrs),
+      localIssues, externalIssueDetails)
 
   /** Single-repo find_prs_with_linked_issues (the reference's
     * process_repo granularity): stamps the literal repo and delegates
@@ -253,14 +334,11 @@ object Linkers {
       externalIssueDetails,
       maxPrs)
 
-  /** find_issues_closed_by_repo_commits (linkers.py:166-211) over a
-    * multi-repo corpus: explode closing refs out of commit messages,
-    * enrich with issue authors; a bare `#N` resolves against the
+  /** Extract half of [[issuesClosedByCommitsAll]]: one row per closing
+    * ref in a commit message; a bare `#N` resolves against the
     * commit's own repo. */
-  def issuesClosedByCommitsAll(
-      commits: DataFrame,
-      issueAuthors: DataFrame): DataFrame = {
-    val refs = commits
+  def extractClosingRefsAll(commits: DataFrame): DataFrame =
+    commits
       .select(
         col("repo_name"),
         col("sha").as("commit_sha"),
@@ -276,17 +354,19 @@ object Linkers {
           .as("referenced_repo"),
         col("ref.number").as("issue_number"))
 
-    val authors = issueAuthors.select(
-      lowerRepo(col("repo_name")).as("repo_l"),
-      col("number").as("issue_number"),
-      col("author").as("issue_author"))
+  /** Single-repo [[extractClosingRefsAll]]: stamps the literal repo. */
+  def extractClosingRefs(repoName: String, commits: DataFrame): DataFrame =
+    extractClosingRefsAll(stamped(commits, repoName))
 
-    refs
-      .join(authors,
-        lowerRepo(refs("referenced_repo")) === authors("repo_l") &&
-          refs("issue_number") === authors("issue_number"),
-        "left")
-      .drop(authors("issue_number")).drop("repo_l")
+  /** Resolve half of [[issuesClosedByCommitsAll]]: the same
+    * [[issueAuthors]] dimension as the PR linker, so a closing ref
+    * yields exactly one row even when its issue is both local and
+    * looked up externally. */
+  def resolveClosingRefs(
+      refs: DataFrame,
+      localIssues: DataFrame,
+      externalIssueDetails: DataFrame): DataFrame =
+    withIssueAuthor(refs, issueAuthors(localIssues, externalIssueDetails))
       .select(
         col("repo_name"),
         col("commit_sha"), col("commit_url"), col("commit_author"),
@@ -294,29 +374,34 @@ object Linkers {
         lit("commit_message").as("reference_type"),
         lit(true).as("has_closing_kw"),
         lit(true).as("would_auto_close"))
-  }
 
-  /** Single-repo form: stamps the literal repo and delegates. */
+  /** find_issues_closed_by_repo_commits (linkers.py:166-211) over a
+    * multi-repo corpus: explode closing refs out of commit messages,
+    * enrich with issue authors. [[resolveClosingRefs]] ∘
+    * [[extractClosingRefsAll]]. */
+  def issuesClosedByCommitsAll(
+      commits: DataFrame,
+      localIssues: DataFrame,
+      externalIssueDetails: DataFrame): DataFrame =
+    resolveClosingRefs(extractClosingRefsAll(commits), localIssues,
+      externalIssueDetails)
+
+  /** Single-repo form: stamps the literal repo onto the commits and
+    * delegates. The issues keep their own repo_name: a closing ref may
+    * name another repo's issue. */
   def issuesClosedByCommits(
       repoName: String,
       commits: DataFrame,
-      issueAuthors: DataFrame): DataFrame =
-    issuesClosedByCommitsAll(stamped(commits, repoName), issueAuthors)
+      localIssues: DataFrame,
+      externalIssueDetails: DataFrame): DataFrame =
+    issuesClosedByCommitsAll(stamped(commits, repoName), localIssues,
+      externalIssueDetails)
 
-  /** find_cross_project_links_issues_and_prs (linkers.py:245-320) over
-    * a multi-repo corpus: issues ∪ PRs → per-text-bucket regex scan →
-    * left join to target details (404 ⇒ null target fields kept,
-    * docs/project_analytics.md:18). Self-references are dropped per
-    * SOURCE repo (each row's own repo_name).
-    *
-    * @param targetDetails (repo_name, number, is_pr, created_at, url,
-    *                      author) for fetched targets; join misses
-    *                      classify as "issue" like classify_issue_or_pr({}).
-    */
-  def crossRepoLinksAll(
-      issues: DataFrame,
-      prs: DataFrame,
-      targetDetails: DataFrame): DataFrame = {
+  /** Extract half of [[crossRepoLinksAll]]: issues ∪ PRs →
+    * per-text-bucket regex scan, self-references dropped per SOURCE
+    * repo (each row's own repo_name). One row per (source, found_in,
+    * target_repo, target_number) hit. */
+  def extractCrossRefsAll(issues: DataFrame, prs: DataFrame): DataFrame = {
     def proj(df: DataFrame, tpe: String): DataFrame = df.select(
       col("repo_name"),
       lit(tpe).as("source_type"),
@@ -340,7 +425,7 @@ object Linkers {
         col("bucket.found_in").as("found_in"), col("bucket.text").as("text"))
       .filter(length(col("text")) > 0)
 
-    val refs = buckets
+    buckets
       .select(col("repo_name"), col("source_type"), col("source_number"),
         col("source_url"), col("source_created_at"), col("found_in"),
         explode(extract_cross_repo_refs(col("text"))).as("ref"))
@@ -349,7 +434,21 @@ object Linkers {
         col("source_url"), col("source_created_at"), col("found_in"),
         col("ref.full_repo").as("target_repo"),
         col("ref.number").as("target_number"))
+  }
 
+  /** Single-repo [[extractCrossRefsAll]]: stamps the literal repo. */
+  def extractCrossRefs(repoName: String, issues: DataFrame,
+      prs: DataFrame): DataFrame =
+    extractCrossRefsAll(stamped(issues, repoName), stamped(prs, repoName))
+
+  /** Resolve half of [[crossRepoLinksAll]]: left join to target details
+    * (404 ⇒ null target fields kept, docs/project_analytics.md:18).
+    *
+    * @param targetDetails (repo_name, number, is_pr, created_at, url,
+    *                      author) for fetched targets; join misses
+    *                      classify as "issue" like classify_issue_or_pr({}).
+    */
+  def resolveCrossRefs(refs: DataFrame, targetDetails: DataFrame): DataFrame = {
     val targets = targetDetails.select(
       lowerRepo(col("repo_name")).as("repo_l"),
       col("number").as("t_number"),
@@ -383,6 +482,14 @@ object Linkers {
           col("t_created_at").as("created_at"),
           col("t_author").as("author")).as("target"))
   }
+
+  /** find_cross_project_links_issues_and_prs (linkers.py:245-320) over
+    * a multi-repo corpus: [[resolveCrossRefs]] ∘ [[extractCrossRefsAll]]. */
+  def crossRepoLinksAll(
+      issues: DataFrame,
+      prs: DataFrame,
+      targetDetails: DataFrame): DataFrame =
+    resolveCrossRefs(extractCrossRefsAll(issues, prs), targetDetails)
 
   /** Single-repo form: stamps the literal repo and delegates. */
   def crossRepoLinks(

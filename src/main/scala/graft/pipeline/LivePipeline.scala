@@ -7,10 +7,11 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
 import graft.ingest.{BlameFetch, GithubClient}
 import graft.ingest.GithubClient.jsonString
 import graft.model.Entities
-import graft.ops.{Blame, IncrementalMerge}
+import graft.ops.{Blame, IncrementalMerge, Linkers}
 
 /** Live-mode process_repo (reference runner.py:27-77 against the real
-  * GitHub API): the same derivation DAG as `Pipeline.deriveAll`, with
+  * GitHub API): the same derivation DAG as `Pipeline.deriveAll`
+  * (`Pipeline.resolve` ∘ `Pipeline.extract`), with
   * every input fetched through the injectable transport — REST
   * pagination for the five raw entities, point lookups for PR commits
   * / merge-commit details / external issue details (the reference's
@@ -41,14 +42,19 @@ import graft.ops.{Blame, IncrementalMerge}
   * per-repo input frame (repo meta, merged issues, PRs, contributors,
   * merged and enriched commits, PR commits, commit details, the
   * external/target details, blame ranges), it is [[snapshot]]ted into
-  * a driver-local relation. The probe derive, the final derive, the
-  * repo_blame assembly and the nine concurrent writes of
-  * `Pipeline.persist` all read those rows, so no JSON parse, merge
-  * window or enrichment join re-runs per consumer, and no frame that
-  * reaches `persist` scans the repo's own output directory. Memory
-  * bound: a snapshot is one repo's parsed rows — no larger than the
-  * response strings `paginate` already holds on the driver — and it
-  * occupies no executor storage (nothing is cached or checkpointed).
+  * a driver-local relation. The linker extracts that feed a fetch set
+  * (PR refs, cross-repo refs) are snapshotted the same way, so every
+  * linker scan runs once per run: the fetch sets are read off the
+  * extracts, and `Pipeline.resolve` joins the same extracted rows with
+  * the fetched details — one author/target rule for both. The blame
+  * refresh plan and the repo_blame doc are built on the driver from
+  * rows already there (capped path lists, the cached doc's entries,
+  * the fresh summaries). So no JSON parse, merge window, enrichment
+  * join or regex scan re-runs per consumer, and no frame that reaches
+  * `persist` scans the repo's own output directory. Memory bound: a
+  * snapshot is one repo's parsed rows — no larger than the response
+  * strings `paginate` already holds on the driver — and it occupies
+  * no executor storage (nothing is cached or checkpointed).
   */
 object LivePipeline {
 
@@ -99,12 +105,12 @@ object LivePipeline {
     else Some(snapshot(spark.read.schema(schema).json(d.getAbsolutePath)))
   }
 
-  /** Compare-API change set → ("path", "previous", "status") rows;
-    * None when the compare call failed (collectors.py:535-556), which
-    * planRefresh maps to refresh-everything. */
+  /** Compare-API change set; None when the compare call failed
+    * (collectors.py:535-556), which planRefresh maps to
+    * refresh-everything. */
   private def fetchChangedFiles(spark: SparkSession,
       transport: GithubClient.Transport, cfg: GithubClient.Config,
-      base: String, fromSha: String, toSha: String): Option[DataFrame] = {
+      base: String, fromSha: String, toSha: String): Option[Seq[Blame.Change]] = {
     val resp = GithubClient.getWithRetry(transport, cfg,
       s"$base/compare/$fromSha...$toSha")
     if (resp.status < 200 || resp.status >= 300) None
@@ -115,9 +121,9 @@ object LivePipeline {
         StructField("previous_filename", StringType)))))))
       Some(readEntity(spark, Seq(resp.body), schema)
         .select(explode(coalesce(col("files"), array())).as("f"))
-        .select(col("f.filename").as("path"),
-          col("f.previous_filename").as("previous"),
-          col("f.status").as("status")))
+        .select(col("f.filename"), col("f.previous_filename"), col("f.status"))
+        .collect().toSeq
+        .map(r => Blame.Change(r.getString(0), r.getString(1), r.getString(2))))
     }
   }
 
@@ -299,9 +305,9 @@ object LivePipeline {
         StructField("rec", Entities.commit))))
       .select(col("pr_number"), col("rec.commit.message").as("message")))
 
-    val mergeShas = prs.select(col("merge_commit_sha"))
-      .filter(col("merge_commit_sha").isNotNull)
-      .distinct().collect().map(_.getString(0))
+    // distinct on the driver: `prs` is a snapshot, its rows are here
+    val mergeShas = prs.select(col("merge_commit_sha")).collect()
+      .flatMap(r => Option(r.getString(0))).distinct
     val mergeResponses = mergeShas.toIndexedSeq.map(sha =>
       sha -> commitDetailResp(sha))
     val mergeOk = mergeResponses.collect {
@@ -327,17 +333,22 @@ object LivePipeline {
         lit(null).cast(StringType).as("error"))
       .unionByName(readEntity(spark, mergeErr, detailSchema)))
 
-    // External refs: first extraction pass with empty details surfaces
-    // the distinct misses (the reference's unique_refs set,
-    // linkers.py:132-134); fetch each once; the final derive joins the
-    // resolved authors. Targets of cross-repo links get the same
-    // treatment (linkers.py:251,283-287).
-    val probe = Pipeline.deriveAll(repoName, Pipeline.RepoInputs(
+    // Linker extracts (Pipeline.extract: regex scans and PR/commit
+    // joins, no lookup input). The PR refs and cross-repo refs are
+    // snapshotted once: the two fetch sets below come from them (the
+    // reference's unique_refs set, linkers.py:132-134, and the cross
+    // link targets, linkers.py:251,283-287), and the final outputs
+    // resolve the same rows with the fetched details.
+    val in = Pipeline.normalize(repoName, Pipeline.RepoInputs(
       repoMeta, issues, prs, contributors, commits,
       prCommits, commitDetails,
       emptyOf(spark, Pipeline.issueDetailsSchema),
       emptyOf(spark, Pipeline.targetDetailsSchema),
-      emptyOf(spark, Pipeline.blameRangesSchema)), generatedAt, limits)
+      emptyOf(spark, Pipeline.blameRangesSchema)))
+    val extracted = Pipeline.extract(repoName, in, limits)
+    val refs = extracted.copy(
+      prRefs = extracted.prRefs.copy(refs = snapshot(extracted.prRefs.refs)),
+      crossRefs = snapshot(extracted.crossRefs))
 
     val issueWrapSchema = StructType(Seq(
       StructField("repo_name", StringType),
@@ -358,13 +369,11 @@ object LivePipeline {
         resp
       }
 
-    val externalRefs = probe.prsWithLinkedIssues
-      .select(explode(col("links")).as("l"))
-      .filter(col("l.issue_author").isNull) // cache miss after local seed
-      .select(lower(col("l.referenced_repo")).as("r"),
-        col("l.issue_number").as("n"))
-      .distinct().collect()
-      .map(r => (r.getString(0), r.getLong(1)))
+    // refs the local issues leave without an author (cache misses
+    // after the local seed)
+    val externalRefs = Linkers.unresolvedIssueRefs(refs.prRefs.refs,
+      Pipeline.localIssues(repoName, in))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
     val extResponses = externalRefs.toIndexedSeq.map { case (r, n) =>
       (r, n, issueDetailResp(r, n))
     }
@@ -379,10 +388,10 @@ object LivePipeline {
           s"""{"repo_name":${jsonString(r)},"number":$n,"author":null}"""
       }, Pipeline.issueDetailsSchema)))
 
-    val targetRefs = probe.crossRepoLinks
-      .select(lower(col("target.repo_name")).as("r"),
-        col("target.number").as("n"))
-      .distinct().collect().map(r => (r.getString(0), r.getLong(1)))
+    // distinct on the driver: the cross refs are a snapshot
+    val targetRefs = refs.crossRefs
+      .select(lower(col("target_repo")).as("r"), col("target_number").as("n"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).distinct
     // Projection of the issue body the target join needs
     // (linkers.py:283-287): html_url is not part of Entities.issue (the
     // engine's issues artifact never stores it), so the lookup parses
@@ -413,9 +422,11 @@ object LivePipeline {
         col("rec.user.login").as("author")))
 
     // Blame (collectors.py:280-430): head-SHA short-circuit, else
-    // compare-diff-driven partial refresh via Blame.planRefresh.
-    val defaultBranch = repoMeta.select(col("default_branch")).collect()
-      .headOption.flatMap(r => Option(r.getString(0))).getOrElse("main")
+    // compare-diff-driven partial refresh via Blame.planRefresh. The
+    // plan and the doc assembly run on the driver over rows already
+    // there: the capped tree listing, the cached doc (a snapshot) and
+    // one compare response.
+    val defaultBranch = Pipeline.defaultBranch(repoMeta)
     val cachedBlame = cachedArtifact(spark, cacheDir, "repo_blame",
       Entities.repoBlame)
     // _cached_blame_head_sha (collectors.py:521-532): doc head, else
@@ -426,23 +437,30 @@ object LivePipeline {
         .collect().headOption.flatMap(r => Option(r.getString(0)))
     }
     // Current head = newest commit: first fetched SHA (GitHub returns
-    // newest-first; the reference's merge puts fetched first). When
+    // newest-first; the reference's merge puts fetched first) — read
+    // off the snapshot's rows, which keep the response order. When
     // the delta was empty or discarded, the head comes from the
     // CACHED artifact — which persist() sorted by sha, so input-order
     // selection would return the lexicographically smallest sha and
-    // defeat the short-circuit; the date-based form recovers the
+    // defeat the short-circuit; the graph-based form recovers the
     // true head of the order-lost frame.
+    val fetchedHead = fetchedCommits.select(col("sha")).collect()
+      .iterator.map(_.getString(0)).find(_ != null)
     val currentHead: Option[String] = commitsWm match {
-      case Some(_) if commitsDeltaOk => Pipeline.headCommitSha(fetchedCommits)
-        .orElse(Pipeline.headCommitShaOfSnapshot(cachedCommits.get))
+      case Some(_) if commitsDeltaOk =>
+        fetchedHead.orElse(Pipeline.headCommitShaOfSnapshot(cachedCommits.get))
       case Some(_) => Pipeline.headCommitShaOfSnapshot(cachedCommits.get)
-      case None => Pipeline.headCommitSha(fetchedCommits)
+      case None => fetchedHead
     }
     val headsEqual = cachedBlame.isDefined && cachedHead.isDefined &&
       cachedHead == currentHead
 
     val blameFileType = Entities.repoBlame("files").dataType
-      .asInstanceOf[ArrayType].elementType
+      .asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    // the cached doc's file entries (a snapshot: no job)
+    val cachedFiles: Seq[Row] = cachedBlame.toSeq
+      .flatMap(_.select(col("files")).collect())
+      .flatMap(r => Option(r.getSeq[Row](0)).getOrElse(Nil))
 
     // Fetch + summarize helper for a set of paths (per-file failures
     // warn and skip, exactly collectors.py:386-389; empty blame
@@ -462,11 +480,18 @@ object LivePipeline {
         case dfs => dfs.reduce(_ unionByName _)
       })
 
-    val (blameRanges, reusablePaths): (DataFrame, Seq[String]) =
-      if (headsEqual) {
+    // Assemble the final repo_blame doc: short-circuit re-stamps the
+    // cached doc (collectors.py:314-317); otherwise the doc rebuilds
+    // from the freshly summarized files plus any reusable cached
+    // entries, ordered by path (collectors.py:375-381,405-419), and
+    // stamps `currentHead`.
+    val repoBlame =
+      if (headsEqual)
         // collectors.py:310-317 early return: zero tree or blame work.
-        (emptyOf(spark, Pipeline.blameRangesSchema), Seq.empty)
-      } else {
+        cachedBlame.get.select(col("repo_name"), col("ref"), col("files"),
+          lit(generatedAt).as("generated_at"),
+          lit(currentHead.orNull).cast(StringType).as("head_commit_sha"))
+      else {
         // Tree listing → capped blob paths (runner.py:73-75, W2).
         val treeResp = getWithRetry(transport, cfg,
           s"$base/git/trees/$defaultBranch?recursive=1")
@@ -483,13 +508,6 @@ object LivePipeline {
               .select(col("t.path")).collect().map(_.getString(0)).toSeq
               .take(if (blameFileLimit > 0) blameFileLimit else Int.MaxValue)
           }
-        import spark.implicits._
-        val cachedPathsDf = cachedBlame match {
-          case Some(doc) => doc
-            .select(explode(coalesce(col("files"), array())).as("f"))
-            .select(col("f.path").as("path"))
-          case None => Seq.empty[String].toDF("path")
-        }
         // Compare runs only when both heads are known
         // (collectors.py:344-345); a failed compare (None) makes
         // planRefresh refresh the full desired set.
@@ -499,59 +517,25 @@ object LivePipeline {
           case _ => None
         }
         val plan = Blame.planRefresh(cachedHead, currentHead,
-          cachedPathsDf, desiredPaths.toDF("path"), changed)
-        // both sets in one action: label each side, union, collect once
-        val (refreshRows, reusableRows) = plan.refresh
-          .select(col("path"), lit(true).as("refresh"))
-          .unionByName(plan.reusable.select(col("path"), lit(false).as("refresh")))
-          .collect().partition(_.getBoolean(1))
-        val refreshSet = refreshRows.map(_.getString(0)).toSet
-        val reusableSet = reusableRows.map(_.getString(0)).toSet
-        (fetchRanges(desiredPaths.filter(refreshSet)),
-          desiredPaths.filter(reusableSet))
+          cachedFiles.map(_.getAs[String]("path")), desiredPaths, changed)
+        val refreshPaths = desiredPaths.filter(plan.refresh.toSet)
+        val freshFiles: Seq[Row] =
+          if (refreshPaths.isEmpty) Nil
+          else Blame.repoBlameDoc(repoName, defaultBranch, None, generatedAt,
+            fetchRanges(refreshPaths), Pipeline.blameCommitDetails(in.commits))
+            .select(col("files").cast(ArrayType(blameFileType)))
+            .head().getSeq[Row](0)
+        val reusable = plan.reusable.toSet
+        Blame.repoBlameDocOf(spark, repoName, defaultBranch, currentHead,
+          generatedAt, blameFileType,
+          freshFiles ++ cachedFiles.filter(f => reusable(f.getAs[String]("path"))))
       }
 
-    val out = Pipeline.deriveAll(repoName, Pipeline.RepoInputs(
-      repoMeta, issues, prs, contributors, commits,
-      prCommits, commitDetails, extDetails, targetDetails, blameRanges),
-      generatedAt, limits)
-
-    // Assemble the final repo_blame doc: short-circuit re-stamps the
-    // cached doc (collectors.py:314-317); otherwise the doc rebuilds
-    // from the freshly summarized files plus any reusable cached
-    // entries, ordered by path (collectors.py:375-381,405-419). The
-    // rebuild ALWAYS stamps `currentHead` — deriveAll's own head came
-    // from input order, which the merge window no longer guarantees.
-    val repoBlame =
-      if (headsEqual)
-        cachedBlame.get.select(col("repo_name"), col("ref"), col("files"),
-          lit(generatedAt).as("generated_at"),
-          lit(currentHead.orNull).cast(StringType).as("head_commit_sha"))
-      else {
-        val freshFiles = out.repoBlame
-          .select(explode(col("files")).as("f"))
-          .select(col("f").cast(blameFileType).as("f"))
-        val allFiles =
-          if (reusablePaths.isEmpty) freshFiles
-          else freshFiles.unionByName(cachedBlame.get
-            .select(explode(col("files")).as("f"))
-            .filter(col("f.path").isin(reusablePaths: _*))
-            .select(col("f").cast(blameFileType).as("f")))
-        allFiles
-          .agg(transform(
-            array_sort(collect_list(struct(col("f.path").as("p"), col("f")))),
-            x => x.getField("f")).as("files"))
-          .select(
-            lit(repoName).as("repo_name"),
-            lit(defaultBranch).as("ref"),
-            col("files"),
-            lit(generatedAt).as("generated_at"),
-            lit(currentHead.orNull).cast(StringType).as("head_commit_sha"))
-      }
-
-    val outFinal = out.copy(repoBlame = repoBlame)
-    Pipeline.persist(repoName, outFinal, outDir)
-    outFinal
+    val out = Pipeline.resolve(repoName,
+      in.copy(externalIssueDetails = extDetails, targetDetails = targetDetails),
+      refs, repoBlame)
+    Pipeline.persist(repoName, out, outDir)
+    out
   }
 
   /** Multi-repo live run with per-repo crash isolation

@@ -104,19 +104,6 @@ object Pipeline {
       issues.filter(col("pull_request").isNull)
     else issues
 
-  /** A6 — head commit selection: first commit with a SHA in input
-    * order (GitHub returns newest-first; collectors.py:312). ONLY
-    * valid on frames that preserve API order — a persisted commits
-    * artifact is sorted by sha and must use
-    * [[headCommitShaByDate]] instead. */
-  def headCommitSha(commits: DataFrame): Option[String] = {
-    val withSeq = commits
-      .withColumn("_seq", monotonically_increasing_id())
-      .filter(col("sha").isNotNull)
-    withSeq.orderBy(col("_seq")).select(col("sha")).limit(1)
-      .collect().headOption.map(_.getString(0))
-  }
-
   /** Head of an order-lost commits frame (the persisted artifact is
     * sorted by sha, so "first row" is the lexicographically smallest
     * sha, not the branch head): newest git date wins, sha-desc
@@ -149,67 +136,106 @@ object Pipeline {
     else headCommitShaByDate(commits)
   }
 
-  /** The derivation DAG. Stages mirror runner.py:36-75; fan-ins:
-    * (prs, issues) → pr_links, commits → closed_by,
-    * (issues, prs) → cross_links, (repo_meta, commits, blame ranges)
-    * → repo_blame. */
+  /** deriveAll's input shaping: `repo_name` on every raw entity (P2)
+    * and the PRs GitHub mixes into /issues dropped (P1). Lookup and
+    * blame inputs pass through. */
+  def normalize(repoName: String, in: RepoInputs): RepoInputs = in.copy(
+    repoMeta = JsonEntities.ensureRepoName(in.repoMeta, repoName),
+    issues = filterRealIssues(JsonEntities.ensureRepoName(in.issues, repoName)),
+    pullRequests = JsonEntities.ensureRepoName(in.pullRequests, repoName),
+    contributors = JsonEntities.ensureRepoName(in.contributors, repoName),
+    commits = JsonEntities.ensureRepoName(in.commits, repoName))
+
+  /** The three linkers' extract halves for one repo: PR refs, closing
+    * commit refs and cross-repo refs, before any author or target
+    * lookup (see [[graft.ops.Linkers]]). */
+  final case class LinkerRefs(
+      prRefs: Linkers.PrRefs,
+      closingRefs: DataFrame,
+      crossRefs: DataFrame)
+
+  /** Extract every linker's refs from normalized inputs; reads no
+    * lookup input (external issue or target details). */
+  def extract(repoName: String, in: RepoInputs,
+      limits: Limits = Limits()): LinkerRefs = LinkerRefs(
+    Linkers.extractPrRefs(repoName, in.pullRequests, in.prCommits,
+      in.commitDetails, limits.maxPrsWithLinkedIssues),
+    Linkers.extractClosingRefs(repoName, in.commits),
+    Linkers.extractCrossRefs(repoName, in.issues, in.pullRequests))
+
+  /** The issues the author lookups pre-seed from: the repo's own,
+    * stamped with its name (the single-repo linkers' convention). */
+  def localIssues(repoName: String, in: RepoInputs): DataFrame =
+    in.issues.withColumn("repo_name", lit(repoName))
+
+  /** Resolve extracted refs against the inputs' local issues and lookup
+    * details into the nine outputs, with `repoBlame` as given. */
+  def resolve(repoName: String, in: RepoInputs, refs: LinkerRefs,
+      repoBlame: DataFrame): RepoOutputs = {
+    val local = localIssues(repoName, in)
+    RepoOutputs(in.repoMeta, in.issues, in.pullRequests, in.contributors,
+      in.commits,
+      Linkers.resolvePrLinks(refs.prRefs, local, in.externalIssueDetails),
+      Linkers.resolveClosingRefs(refs.closingRefs, local,
+        in.externalIssueDetails),
+      Linkers.resolveCrossRefs(refs.crossRefs, in.targetDetails),
+      repoBlame)
+  }
+
+  /** The repo's default branch from repo_meta, "main" when absent. */
+  def defaultBranch(repoMeta: DataFrame): String =
+    repoMeta.select(col("default_branch"))
+      .collect().headOption.flatMap(r => Option(r.getString(0)))
+      .getOrElse("main")
+
+  /** The commit-detail dimension repo_blame joins by SHA (J3's
+    * dict-lookup as a broadcast dimension, collectors.py:122-142).
+    * commit_author is the full git-actor struct (collectors.py:136:
+    * matching_commit carries commit["commit"]["author"] verbatim),
+    * matching Entities.matchingCommit so persisted docs round-trip
+    * through readEntity("repo_blame", ...). */
+  def blameCommitDetails(commits: DataFrame): DataFrame = commits.select(
+    col("sha"),
+    col("repo_name"),
+    col("html_url"),
+    col("author.login").as("author_login"),
+    col("commit.author").as("commit_author"),
+    col("files_changed"),
+    col("files_changed_count"))
+
+  /** The derivation DAG: [[resolve]] ∘ [[extract]] over [[normalize]]d
+    * inputs. Stages mirror runner.py:36-75; fan-ins: (prs, issues) →
+    * pr_links, commits → closed_by, (issues, prs) → cross_links,
+    * (repo_meta, commits, blame ranges) → repo_blame. Only the default
+    * branch is collected here; repo_blame's head SHA (A6, first commit
+    * with a SHA in input order) is a lazy join inside its plan, so it
+    * costs a job only when the doc is written. */
   def deriveAll(repoName: String, in: RepoInputs,
       generatedAt: String = "",
       limits: Limits = Limits()): RepoOutputs = {
-    val repoMeta = JsonEntities.ensureRepoName(in.repoMeta, repoName)
-    val issues = filterRealIssues(
-      JsonEntities.ensureRepoName(in.issues, repoName))
-    val prs = JsonEntities.ensureRepoName(in.pullRequests, repoName)
-    val contributors = JsonEntities.ensureRepoName(in.contributors, repoName)
-    val commits = JsonEntities.ensureRepoName(in.commits, repoName)
-
-    val prLinks = Linkers.prsWithLinkedIssues(repoName, prs, issues,
-      in.prCommits, in.commitDetails, in.externalIssueDetails,
-      limits.maxPrsWithLinkedIssues)
-
-    // J2's author lookup feeds from the local issues (plus any
-    // replayed remote details, same shape).
-    val issueAuthors = issues.select(
-      col("repo_name"), col("number"), col("user.login").as("author"))
-      .unionByName(in.externalIssueDetails
-        .select(col("repo_name"), col("number"), col("author")))
-    val closedBy = Linkers.issuesClosedByCommits(repoName, commits,
-      issueAuthors)
-
-    val crossLinks = Linkers.crossRepoLinks(repoName, issues, prs,
-      in.targetDetails)
-
-    // repo_blame (runner.py:73-75): default branch from repo_meta,
-    // head SHA from the commit history (A6), matching-commit detail
-    // joined from the commits table (J3's dict-lookup as a broadcast
-    // dimension, collectors.py:122-142).
-    val defaultBranch = repoMeta.select(col("default_branch"))
-      .collect().headOption.flatMap(r => Option(r.getString(0)))
-      .getOrElse("main")
-    // commit_author is the full git-actor struct (collectors.py:136:
-    // matching_commit carries commit["commit"]["author"] verbatim),
-    // matching Entities.matchingCommit so persisted docs round-trip
-    // through readEntity("repo_blame", ...).
-    val blameCommitDetails = commits.select(
-      col("sha"),
-      col("repo_name"),
-      col("html_url"),
-      col("author.login").as("author_login"),
-      col("commit.author").as("commit_author"),
-      col("files_changed"),
-      col("files_changed_count"))
-    val repoBlame = Blame.repoBlameDoc(repoName, defaultBranch,
-      headCommitSha(commits), generatedAt, in.blameRanges,
-      blameCommitDetails)
-
-    RepoOutputs(repoMeta, issues, prs, contributors, commits, prLinks,
-      closedBy, crossLinks, repoBlame)
+    val n = normalize(repoName, in)
+    // A6 — head commit: first commit with a SHA in input order (GitHub
+    // returns newest-first; collectors.py:312). Only valid on frames
+    // that keep API order — a persisted commits artifact is sorted by
+    // sha and needs [[headCommitShaOfSnapshot]].
+    val head = n.commits
+      .withColumn("_seq", monotonically_increasing_id())
+      .filter(col("sha").isNotNull)
+      .orderBy(col("_seq")).select(col("sha").as("head_commit_sha")).limit(1)
+    val repoBlame = Blame.repoBlameDoc(repoName, defaultBranch(n.repoMeta),
+      None, generatedAt, n.blameRanges, blameCommitDetails(n.commits))
+      .drop("head_commit_sha")
+      .join(head, lit(true), "left")
+    resolve(repoName, n, extract(repoName, n, limits), repoBlame)
   }
 
   /** Persist all nine artifacts under `outDir/{owner_repo}/` as
     * deterministic sorted JSON (K1 contract; runner.py save_json ×9).
     * The nine writes target independent directories, so they run
-    * concurrently (`Jobs.par`); each is still one sorted part file.
+    * concurrently (`Jobs.par`); each is one part file, sorted in one
+    * stage (`JsonEntities.writeDeterministic`): an artifact that is a
+    * driver-local relation writes with one Spark job, a derived one
+    * with its own shuffle stages plus that one.
     * No output frame may read `outDir/{owner_repo}/` itself — a write
     * would race the reads of its own target. */
   def persist(repoName: String, out: RepoOutputs, outDir: String): Unit = {

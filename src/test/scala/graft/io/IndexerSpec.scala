@@ -105,6 +105,43 @@ class IndexerSpec extends SparkSpecBase {
     assert(!res.contains("contributors"))
   }
 
+  test("concurrent export gives the docs and ids of a sequential one") {
+    // the sequential reference indexes one entity per call, one call
+    // after another, from single-entity copies of the lake
+    val lake = buildLake()
+    val sink = Files.createTempDirectory("graft-sink-par").toString
+    val all = Indexer.scanAndIndex(spark, lake, new BulkSink.FileTransport(sink))
+    val seqSink = Files.createTempDirectory("graft-sink-seq").toString
+    val entities = Seq("repo_meta", "issues", "pull_requests", "commits",
+      "contributors", "prs_with_linked_issues", "issues_closed_by_commits",
+      "cross_repo_links", "repo_blame")
+    val one = entities.flatMap { e =>
+      val root = Files.createTempDirectory(s"graft-lake-$e").toFile
+      for (repo <- new java.io.File(lake).listFiles();
+           src <- Seq(new java.io.File(repo, e), new java.io.File(repo, s"$e.json"))
+           if src.exists()) {
+        val to = new java.io.File(root, repo.getName).toPath
+        Files.walk(src.toPath).forEach { p =>
+          val d = to.resolve(repo.toPath.relativize(p))
+          if (Files.isDirectory(p)) Files.createDirectories(d)
+          else {
+            Files.createDirectories(d.getParent)
+            Files.copy(p, d)
+          }
+        }
+      }
+      Indexer.scanAndIndex(spark, root.getAbsolutePath,
+        new BulkSink.FileTransport(seqSink)).get(e).map(e -> _)
+    }.toMap
+    assert(all == one)
+    assert(all.keySet == Set("issues", "commits", "repo_blame"))
+    for (e <- entities) {
+      val par = readIndexed(sink, e).sorted
+      assert(par == readIndexed(seqSink, e).sorted, e)
+      assert(par.map(_._1).distinct.length == par.length, s"$e: duplicate ids")
+    }
+  }
+
   test("dry run counts without writing") {
     val lake = buildLake()
     val sink = Files.createTempDirectory("graft-sink-dry").toString

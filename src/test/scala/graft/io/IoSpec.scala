@@ -174,6 +174,51 @@ class IoSpec extends SparkSpecBase {
     assert(back.map(_.getAs[Long]("number")).toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("writeDeterministic: one-stage sort writes the bytes of orderBy + coalesce(1)") {
+    // a shuffled multi-partition frame with duplicate sort keys, written
+    // both ways; a global orderBy followed by coalesce(1) was the
+    // previous form
+    val df = spark.range(0, 400, 1, 4).repartition(5).selectExpr(
+      "id % 37 AS number", "named_struct('n', id % 11) AS source",
+      "concat('t', id) AS title")
+    val root = Files.createTempDirectory("graft-onestage").toString
+    def part(dir: String): Array[Byte] = {
+      val parts = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("part-"))
+      assert(parts.length == 1, s"$dir: ${parts.map(_.getName).toSeq}")
+      Files.readAllBytes(parts.head.toPath)
+    }
+    for (keys <- Seq(Seq("number"), Seq("source.n", "number"),
+        Seq("title"))) {
+      val name = keys.mkString("_")
+      JsonEntities.writeDeterministic(df, s"$root/one/$name", keys)
+      df.orderBy(keys.map(org.apache.spark.sql.functions.col): _*)
+        .coalesce(1).write.json(s"$root/two/$name")
+      assert(java.util.Arrays.equals(part(s"$root/one/$name"),
+        part(s"$root/two/$name")), name)
+    }
+  }
+
+  test("writeDeterministic: a driver-local frame writes with exactly one Spark job") {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "number BIGINT, title STRING")
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(3L, "c"), org.apache.spark.sql.Row(1L, "a"),
+      org.apache.spark.sql.Row(2L, "b")), schema)
+    val dir = Files.createTempDirectory("graft-onejob").toString + "/out"
+    val group = s"write-one-job-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, "one-stage write")
+    try JsonEntities.writeDeterministic(df, dir, Seq("number"))
+    finally spark.sparkContext.clearJobGroup()
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    assert(jobs == 1, s"$jobs jobs")
+    val lines = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-"))
+      .flatMap(f => Files.readAllLines(f.toPath).toArray.map(_.toString))
+    assert(lines.toSeq == Seq("""{"number":1,"title":"a"}""",
+      """{"number":2,"title":"b"}""", """{"number":3,"title":"c"}"""))
+  }
+
   test("concurrent persist writes the same part files as sequential writes") {
     // nine shuffled multi-partition frames; persist fans the writes out
     // concurrently, the reference writes them one by one

@@ -113,22 +113,17 @@ class BlameSpec extends SparkSpecBase {
   }
 
   test("planRefresh: reusable = cached ∩ desired − changed; refresh = rest") {
-    val pathT = StructType(Seq(StructField("path", StringType)))
-    val chT = StructType(Seq(StructField("path", StringType),
-      StructField("previous", StringType),
-      StructField("status", StringType)))
     // "capped" is cached and unchanged but no longer desired (e.g. past
     // the file cap): it is neither reused nor refreshed
-    val cached = df(pathT, Row("a"), Row("b"), Row("c"), Row("gone"),
-      Row("capped"))
-    val desired = df(pathT, Row("a"), Row("b"), Row("c"), Row("new"))
-    val changed = df(chT, Row("b", null, "modified"),
-      Row("gone", null, "removed"))
+    val cached = Seq("a", "b", "c", "gone", "capped")
+    val desired = Seq("a", "b", "c", "new")
+    val changed = Seq(Blame.Change("b", null, "modified"),
+      Blame.Change("gone", null, "removed"))
     val plan = Blame.planRefresh(Some("h1"), Some("h2"), cached, desired,
       Some(changed))
     assert(!plan.reuseWholeSnapshot)
-    assert(plan.reusable.collect().map(_.getString(0)).toSet == Set("a", "c"))
-    assert(plan.refresh.collect().map(_.getString(0)).toSet == Set("b", "new"))
+    assert(plan.reusable == Seq("a", "c"))
+    assert(plan.refresh == Seq("b", "new"))
   }
 
   test("summarizeBlameAll keys on (repo_name, path): same path, two repos") {
@@ -156,48 +151,80 @@ class BlameSpec extends SparkSpecBase {
   }
 
   test("planRefresh: equal head SHAs reuse the whole snapshot") {
-    val pathT = StructType(Seq(StructField("path", StringType)))
-    val cached = df(pathT, Row("a"), Row("b"))
-    val desired = df(pathT, Row("a"), Row("b"), Row("new"))
-    val plan = Blame.planRefresh(Some("h1"), Some("h1"), cached, desired,
-      changed = None)
+    val plan = Blame.planRefresh(Some("h1"), Some("h1"), Seq("a", "b"),
+      Seq("a", "b", "new"), changed = None)
     assert(plan.reuseWholeSnapshot)
-    assert(plan.refresh.count() == 0)
-    assert(plan.reusable.collect().map(_.getString(0)).toSet == Set("a", "b"))
+    assert(plan.refresh.isEmpty)
+    assert(plan.reusable == Seq("a", "b"))
   }
 
   test("planRefresh: compare-API changes drive the refresh set") {
-    val pathT = StructType(Seq(StructField("path", StringType)))
-    val chT = StructType(Seq(StructField("path", StringType),
-      StructField("previous", StringType),
-      StructField("status", StringType)))
-    val cached = df(pathT, Row("a"), Row("b"), Row("old_name"), Row("gone"))
-    val desired = df(pathT, Row("a"), Row("b"), Row("new_name"), Row("brand"))
-    val changed = df(chT,
-      Row("b", null, "modified"),             // refresh in place
-      Row("new_name", "old_name", "renamed"), // drops old, refreshes new
-      Row("gone", null, "removed"))           // cache entry dropped
+    val cached = Seq("a", "b", "old_name", "gone")
+    val desired = Seq("a", "b", "new_name", "brand")
+    val changed = Seq(
+      Blame.Change("b", null, "modified"),             // refresh in place
+      Blame.Change("new_name", "old_name", "renamed"), // drops old, refreshes new
+      Blame.Change("gone", null, "removed"))           // cache entry dropped
     val plan = Blame.planRefresh(Some("h1"), Some("h2"), cached, desired,
       Some(changed))
     assert(!plan.reuseWholeSnapshot)
-    assert(plan.reusable.collect().map(_.getString(0)).toSet == Set("a"))
-    assert(plan.refresh.collect().map(_.getString(0)).toSet ==
-      Set("b", "new_name", "brand"))
+    assert(plan.reusable == Seq("a"))
+    assert(plan.refresh == Seq("b", "brand", "new_name"))
   }
 
   test("planRefresh: compare failure or missing cache refreshes all") {
-    val pathT = StructType(Seq(StructField("path", StringType)))
-    val cached = df(pathT, Row("a"))
-    val desired = df(pathT, Row("a"), Row("b"))
     // heads differ, compare API failed -> everything refreshes
-    val failed = Blame.planRefresh(Some("h1"), Some("h2"), cached, desired,
-      changed = None)
+    val failed = Blame.planRefresh(Some("h1"), Some("h2"), Seq("a"),
+      Seq("a", "b"), changed = None)
     assert(!failed.reuseWholeSnapshot)
-    assert(failed.refresh.collect().map(_.getString(0)).toSet == Set("a", "b"))
+    assert(failed.refresh == Seq("a", "b"))
+    assert(failed.reusable.isEmpty)
     // no cached head (fresh repo) -> desired minus nothing cached
-    val fresh = Blame.planRefresh(None, Some("h2"), cached.limit(0), desired,
+    val fresh = Blame.planRefresh(None, Some("h2"), Nil, Seq("a", "b"),
       changed = None)
-    assert(fresh.refresh.collect().map(_.getString(0)).toSet == Set("a", "b"))
+    assert(fresh.refresh == Seq("a", "b"))
+    // a cached head with no current head never runs the compare: a
+    // change set passed anyway is ignored, refresh = desired − cached
+    val noHead = Blame.planRefresh(Some("h1"), None, Seq("a"),
+      Seq("a", "b"), Some(Seq(Blame.Change("a", null, "modified"))))
+    assert(noHead.reusable == Seq("a"))
+    assert(noHead.refresh == Seq("b"))
+  }
+
+  test("planRefresh: a null-status change neither drops nor refreshes its path") {
+    // SQL semantics the plan keeps: lower(null) is neither "removed"
+    // nor anything else, so the entry is ignored; a status match is
+    // case-insensitive
+    val plan = Blame.planRefresh(Some("h1"), Some("h2"), Seq("a", "b", "c"),
+      Seq("a", "b", "c"), Some(Seq(
+        Blame.Change("a", null, null),
+        Blame.Change("b", null, "MODIFIED"),
+        Blame.Change("c", null, "Removed"))))
+    assert(plan.reusable == Seq("a"))
+    // "c" is still in the tree, so although its cache entry is dropped
+    // it is re-blamed as a desired path the cache lacks
+    assert(plan.refresh == Seq("b", "c"))
+  }
+
+  test("planRefresh: a rename reuses nothing of the source, re-blames the target") {
+    // the renamed target was never cached; the source is still desired
+    // (copied, not moved, say) but its cache entry is dropped, so both
+    // are re-blamed; an unrelated cached path survives
+    val plan = Blame.planRefresh(Some("h1"), Some("h2"),
+      cachedPaths = Seq("src/old.scala", "keep.txt"),
+      desiredPaths = Seq("src/new.scala", "src/old.scala", "keep.txt"),
+      changed = Some(Seq(Blame.Change("src/new.scala", "src/old.scala", "renamed"))))
+    assert(plan.reusable == Seq("keep.txt"))
+    assert(plan.refresh == Seq("src/new.scala", "src/old.scala"))
+  }
+
+  test("pathOrder is Spark's binary UTF-8 string order") {
+    // U+FFFD sorts before U+1F600 in UTF-8 bytes, after it in UTF-16
+    val paths = Seq("b", "\uFFFD", "a/\uD83D\uDE00", "\uD83D\uDE00", "A", "a", "a/z")
+    import spark.implicits._
+    val bySpark = paths.toDF("path").orderBy("path").as[String].collect().toSeq
+    assert(paths.sorted(Blame.pathOrder) == bySpark)
+    assert(paths.sorted != bySpark, "fixture must tell UTF-16 order apart")
   }
 
   test("rechunk emits placeholder row for empty files") {

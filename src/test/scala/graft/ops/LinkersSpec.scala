@@ -168,17 +168,44 @@ class LinkersSpec extends SparkSpecBase {
     val commits = df(commitT,
       Row("s1", "u1", Row("alice"), Row("fixes #133", Row("Alice N"))),
       Row("s2", "u2", Row("bob"), Row("mention #7 only", Row("Bob N"))))
-    val authorsT = StructType(Seq(
-      StructField("repo_name", StringType),
-      StructField("number", IntegerType),
-      StructField("author", StringType)))
-    val authors = df(authorsT, Row("o/r", 133, "reporter"))
-    val out = Linkers.issuesClosedByCommits("o/r", commits, authors).collect()
+    val issueT = StructType(StructField("repo_name", StringType) +:
+      issueSchema.fields.toIndexedSeq)
+    val issues = df(issueT, Row("o/r", 133, Row("reporter")))
+    val out = Linkers.issuesClosedByCommits("o/r", commits, issues,
+      df(emptyExt)).collect()
     assert(out.length == 1)
     assert(out.head.getAs[String]("commit_sha") == "s1")
     assert(out.head.getAs[Long]("issue_number") == 133L)
     assert(out.head.getAs[String]("issue_author") == "reporter")
     assert(out.head.getAs[String]("commit_author") == "alice")
+  }
+
+  test("issuesClosedByCommits: a local issue also looked up externally yields one row, local wins") {
+    // a live run fetches a null-login local issue as external too; the
+    // closing ref must still resolve once, with the local (null)
+    // author, as the PR linker's author lookup does
+    val commitT = StructType(Seq(
+      StructField("sha", StringType),
+      StructField("author", userT),
+      StructField("commit", StructType(Seq(
+        StructField("message", StringType),
+        StructField("author", StructType(Seq(
+          StructField("name", StringType)))))))))
+    val commits = df(commitT,
+      Row("s1", Row("a"), Row("closes #2", Row("A"))),
+      Row("s2", Row("b"), Row("fixes #4", Row("B"))),
+      Row("s3", Row("c"), Row("resolves x/y#9", Row("C"))))
+    val issueT = StructType(StructField("repo_name", StringType) +:
+      issueSchema.fields.toIndexedSeq)
+    val issues = df(issueT, Row("o/r", 2, Row(null)), Row("o/r", 4, Row("dana")))
+    val ext = df(emptyExt, Row("o/r", 2, "bob"), Row("O/R", 4, "other"),
+      Row("x/y", 9, "xy"))
+    val out = Linkers.issuesClosedByCommits("o/r", commits, issues, ext)
+      .collect().map(r => (r.getAs[String]("commit_sha"),
+        r.getAs[Long]("issue_number"), r.getAs[String]("issue_author")))
+      .sorted.toSeq
+    assert(out == Seq(("s1", 2L, null), ("s2", 4L, "dana"), ("s3", 9L, "xy")),
+      out)
   }
 
   test("crossRepoLinks: typed targets, 404 misses kept with null target fields") {

@@ -150,13 +150,10 @@ class MultiRepoLinkersSpec extends SparkSpecBase {
   }
 
   test("issuesClosedByCommitsAll == union of per-repo runs") {
-    val authors = issues.select(
-      org.apache.spark.sql.functions.col("repo_name"),
-      org.apache.spark.sql.functions.col("number"),
-      org.apache.spark.sql.functions.col("user.login").as("author"))
-    val all = Linkers.issuesClosedByCommitsAll(commits, authors)
+    val noExt = df(extT)
+    val all = Linkers.issuesClosedByCommitsAll(commits, issues, noExt)
     val looped = Seq(repoA, repoB).map { r =>
-      Linkers.issuesClosedByCommits(r, perRepo(r, commits), authors)
+      Linkers.issuesClosedByCommits(r, perRepo(r, commits), issues, noExt)
     }.reduce(_ unionByName _)
     assert(sortedJson(all) == sortedJson(looped))
     // bare #1 resolved against the commit's own repo; the explicit

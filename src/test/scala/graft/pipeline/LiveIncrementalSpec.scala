@@ -501,12 +501,13 @@ class LiveIncrementalSpec extends SparkSpecBase {
   }
 
   test("refresh job budget: head-moving delta on the fixture repo") {
-    // A refresh snapshots its inputs once, so the nine writes, the two
-    // derives and the blame assembly do not re-run the JSON parse,
-    // merge window and enrichment joins, and the blame response check
-    // runs on the driver. Budget = the measured 78 jobs plus the same
-    // ±2 AQE slack as the job-count test above; raising it needs a
-    // reason.
+    // A refresh snapshots its inputs once, so the nine writes, the
+    // linker resolve and the blame assembly do not re-run the JSON
+    // parse, merge window and enrichment joins; the linker scans run
+    // once; each artifact sorts in one stage; the blame response check,
+    // refresh plan and doc assembly run on the driver. Budget = the
+    // measured 59 jobs plus the same ±2 AQE slack as the job-count test
+    // above; raising it needs a reason.
     val outDir = java.nio.file.Files
       .createTempDirectory("graft-live-budget").toString
     run(new ScriptedGithub(coldCorpus, blames), outDir)
@@ -515,7 +516,7 @@ class LiveIncrementalSpec extends SparkSpecBase {
     try run(new ScriptedGithub(deltaCorpus, blames), outDir)
     finally spark.sparkContext.clearJobGroup()
     val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    assert(jobs <= 78 + 2, s"refresh ran $jobs Spark jobs")
+    assert(jobs <= 59 + 2, s"refresh ran $jobs Spark jobs")
   }
 
   test("full pipeline: retrieval completes, then the lake indexes") {

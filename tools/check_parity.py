@@ -45,6 +45,13 @@ def main(sfdir, outdir, only=None):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     oracles = json.load(open(f"{outdir}/oracle_sql.json"))
+    # a subset name that matches no query would otherwise check nothing
+    # and report "0 ok, 0 bad"
+    unknown = sorted(set(only or ()) - set(oracles))
+    if unknown:
+        print(f"no oracle query named: {', '.join(unknown)} (use full names, e.g. q51_bm25_search)",
+              file=sys.stderr)
+        return 2
     n_ok = n_bad = 0
     for name, sql in sorted(oracles.items()):
         if only and name not in only:
@@ -101,5 +108,5 @@ def main(sfdir, outdir, only=None):
 
 
 if __name__ == "__main__":
-    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+    only = {q.strip() for q in sys.argv[3].split(",")} if len(sys.argv) > 3 else None
     sys.exit(main(sys.argv[1], sys.argv[2], only))
