@@ -15,8 +15,9 @@ final class LeaseHeldException(msg: String, cause: Throwable = null)
   extends IllegalStateException(msg, cause)
 
 /** Physical-layout helpers for the stored index families: the
-  * mutation lease, generation commit points, staging GC and the
-  * small-artifact writers they share.
+  * mutation lease, generation commit points, staging GC, the
+  * small-artifact writers they share, and the one segment manifest
+  * the text and vector families keep ([[Layout.Segments]]).
   *
   * All filesystem operations here resolve through Hadoop's
   * `FileSystem` from the session's configuration — the same
@@ -846,10 +847,9 @@ object Layout {
     }.sum
 
   /** Directories ANY retained committed generation's segment manifest
-    * references (the text and vector families commit a `segments`
-    * parquet of (kind, dir) rows into the generation dir; the band
-    * family's dirs are named by generation; a root manifest covers
-    * the legacy layout) — the belt-and-suspenders exclusion for the
+    * references ([[Segments.referenced]]; the band family's dirs are
+    * named by generation; a root manifest covers the legacy layout)
+    * — the belt-and-suspenders exclusion for the
     * orphan sweep: nothing a committed manifest points at is ever an
     * orphan, whatever its name looks like. ALL retained generations,
     * not just the live one: under `retainGenerations` > 1 an older
@@ -867,24 +867,21 @@ object Layout {
     *
     * Committed generations' manifests are served from [[manifestMemo]]
     * (mtime-guarded); the mutable root manifest of a legacy layout is
-    * read fresh every call. */
+    * read fresh every call. Returns the set and whether every manifest
+    * read (always true when `strict`). */
   private[graft] def manifestReferenced(spark: SparkSession,
-      indexDir: String, strict: Boolean = false): Set[String] = {
+      indexDir: String, strict: Boolean = false): (Set[String], Boolean) = {
     val arts = indexDir +: committedGenerations(spark, indexDir)
       .map(g => generationDir(indexDir, g))
-    arts.flatMap { art =>
-      val segPath = s"$art/segments"
-      def readSet(): Set[String] =
-        TinyParquet.read(spark, segPath)._2
-          .map(r => r.getString(r.fieldIndex("dir")).split('/').head)
-          .toSet
-      val p = new Path(segPath)
+    val sets = arts.map { art =>
+      def readSet(): Set[String] = readSegments(spark, art).referenced
+      val p = new Path(s"$art/segments")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       try {
         val st =
           try Some(fs.getFileStatus(p))
           catch { case _: java.io.FileNotFoundException => None }
-        st match {
+        Some(st match {
           case None => Set.empty[String]
           case Some(_) if art != indexDir =>
             // immutable committed-generation manifest: memoizable
@@ -899,11 +896,12 @@ object Layout {
                 set
             }
           case Some(_) => readSet()
-        }
+        })
       } catch {
-        case _: Exception if !strict => Set.empty[String]
+        case _: Exception if !strict => None
       }
-    }.toSet
+    }
+    (sets.flatten.flatten.toSet, sets.forall(_.isDefined))
   }
 
   /** ORPHANED staging artifacts of `indexDir`: the token-suffixed
@@ -914,7 +912,8 @@ object Layout {
     * got their `_COMMITTED` marker (a pre-token-staging crash) and
     * finally-named side dirs of such a generation (`postings-vN`,
     * `bands-vN`: a commit that died after its renames, before the
-    * marker).
+    * marker) and `seg-<id>` segment dirs no retained manifest
+    * references (an append that died the same way).
     * Invisible to every reader (correct) but reclaimed only by the
     * retire sweep of the NEXT committed mutation — an index that
     * crashes and then goes idle leaks them forever, which is what
@@ -947,7 +946,7 @@ object Layout {
           Some(readLease(fs, lp)._2.replace("-", "").take(12))
         else None
       } catch { case _: java.io.IOException => None }
-    val referenced =
+    val (referenced, allRead) =
       manifestReferenced(spark, indexDir, strict = underLease)
     val live = liveGeneration(spark, indexDir).getOrElse(0L)
     fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
@@ -978,6 +977,14 @@ object Layout {
           // a side dir renamed to its final name for a generation
           // whose marker never landed
           sized
+        case _ if allRead && (holderToken.isEmpty || underLease) &&
+            n.startsWith("seg-") =>
+          // an append segment no retained manifest references: an
+          // append that died after its commit renames, before its
+          // marker (`seg-<id>` has no generation in its name). Only
+          // when every manifest read: a status poll whose read failed
+          // would otherwise report every live segment
+          sized
         case _ => None
       }
     }
@@ -998,6 +1005,199 @@ object Layout {
       .map(_.drop(4).toLong)
       .filter(g => fs.exists(new Path(s"${generationDir(indexDir, g)}/_COMMITTED")))
       .toSeq.sorted
+  }
+
+  // ---------------------------------------------------------------
+  // Segment manifest: the text and vector families' (kind, dir) record
+  // ---------------------------------------------------------------
+
+  /** Where an index's MUTATION-COMMITTED artifacts (tombstones, the
+    * segment manifest, the text family's df/stats, the vector
+    * family's live meta) live: the highest committed generation dir
+    * ([[liveGeneration]], so a pin is honored), or the index root for
+    * a freshly written index. Segment and folded DATA live in
+    * immutable root dirs the manifest references. */
+  def liveArtifactDir(spark: SparkSession, indexDir: String): String =
+    liveGeneration(spark, indexDir).map(generationDir(indexDir, _))
+      .getOrElse(indexDir)
+
+  /** One generation's SEGMENT MANIFEST — the `segments` artifact of
+    * (kind, dir) rows the text (`postings`, `termvectors`) and vector
+    * (`codes`) families commit into each generation. `byKind` holds
+    * each kind's live dirs, relative to the index root and sorted;
+    * None when the generation has no manifest, whose one dir per kind
+    * is then the writer's root `<kind>/`. A kind the manifest does not
+    * name has no live dir (a text layout without term vectors).
+    *
+    * `applied` is the APPLIED-SEGMENTS registry (the `"applied"`
+    * rows): every segment id ever committed, carried through deletes
+    * AND folds. A fold's manifest forgets the segments it folded; the
+    * registry must not, or a micro-batch redelivered after it would
+    * re-apply, so the replay check reads this, never the live dirs.
+    * A manifest from before the registry derives it from its live
+    * `seg-*` dirs. */
+  final case class Segments(byKind: Option[Map[String, Seq[String]]],
+      applied: Seq[String]) {
+    def dirs(kind: String): Seq[String] =
+      byKind.fold(Seq(kind))(_.getOrElse(kind, Nil))
+
+    /** Root dir names every live dir lives under. */
+    def roots: Seq[String] =
+      byKind.toSeq.flatMap(_.values.flatten).map(_.split('/').head).distinct
+
+    /** Root names this manifest protects from every sweep: its live
+      * dirs' roots and its applied segment ids. */
+    def referenced: Set[String] = (roots ++ applied).toSet
+  }
+
+  /** THE manifest read: the segment manifest committed into the
+    * artifact dir `art`. A driver-side read of a tiny artifact, no
+    * Spark job; each mutation makes one. */
+  def readSegments(spark: SparkSession, art: String): Segments = {
+    val path = s"$art/segments"
+    if (!pathExists(spark, path)) Segments(None, Nil)
+    else {
+      val rows = TinyParquet.read(spark, path)._2.map(r =>
+        (r.getString(r.fieldIndex("kind")), r.getString(r.fieldIndex("dir"))))
+      val (registry, live) = rows.partition(_._1 == "applied")
+      val legacy = live.map(_._2.split('/').head).filter(_.startsWith("seg-"))
+      Segments(Some(live.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }),
+        (registry.map(_._2) ++ legacy).distinct)
+    }
+  }
+
+  /** Write a staged generation's segment manifest: `dirs` as (kind,
+    * dir) rows in the given order, then the applied registry. */
+  def writeSegments(spark: SparkSession, stage: String,
+      dirs: Seq[(String, String)], applied: Seq[String]): Unit = {
+    import spark.implicits._
+    TinyParquet.write((dirs ++ applied.distinct.map(("applied", _)))
+      .toDF("kind", "dir"), s"$stage/segments")
+  }
+
+  /** How many APPEND SEGMENTS the live manifest unions beyond the
+    * base. Each costs one extra scan node per stored read (~75-80 ms
+    * measured, ProbeSegments) until a fold removes it; refresh streams
+    * and monitoring size the compaction cadence against it. */
+  def segmentCount(spark: SparkSession, indexDir: String): Int =
+    readSegments(spark, liveArtifactDir(spark, indexDir)).roots
+      .count(_.startsWith("seg-"))
+
+  /** One frame over several live dirs of one kind. Each dir reads
+    * SEPARATELY (its own partition discovery: a shared multi-path read
+    * trips Spark's conflicting-directory-structures check when the
+    * roots sit at different depths) and the scans union, so filters on
+    * the partition column push into EVERY child scan and pruning
+    * survives segmentation. */
+  def readDirs(spark: SparkSession, indexDir: String,
+      dirs: Seq[String]): DataFrame = {
+    require(dirs.nonEmpty,
+      "no live directories for this artifact kind — the layout never " +
+        "stored it (check the stats artifact's recorded flags)")
+    dirs.map(d => spark.read.parquet(s"$indexDir/$d")).reduce(_ unionByName _)
+  }
+
+  /** Carry the tombstones and/or the segment manifest of `art`, where
+    * they exist, UNCHANGED into the staged generation — driver byte
+    * copies ([[copyArtifact]]), not read-rewrite Spark jobs. A
+    * mutation that moves no segment data carries the manifest; one
+    * that does not rewrite the tombstones carries them. */
+  def carryUnchanged(spark: SparkSession, art: String, stage: String,
+      tombstones: Boolean = false, manifest: Boolean = false): Unit =
+    Seq("tombstones" -> tombstones, "segments" -> manifest).foreach {
+      case (n, carry) =>
+        if (carry && pathExists(spark, s"$art/$n"))
+          copyArtifact(spark, s"$art/$n", s"$stage/$n")
+    }
+
+  /** Parquet data files under the given dirs (relative to the index
+    * root) — the file-count observable a fold reports. */
+  def countDataFiles(spark: SparkSession, indexDir: String,
+      dirs: Seq[String]): Long = {
+    val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    dirs.map(d => new Path(s"$indexDir/$d")).filter(fs.exists).map { p =>
+      var n = 0L
+      val it = fs.listFiles(p, true)
+      while (it.hasNext)
+        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
+      n
+    }.sum
+  }
+
+  /** Delete the root dirs of `indexDir` whose name `doomed` accepts. */
+  private def deleteRootDirs(spark: SparkSession, indexDir: String)
+      (doomed: String => Boolean): Unit = {
+    val p = new Path(indexDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p))
+      fs.listStatus(p).foreach { st =>
+        if (st.isDirectory && doomed(st.getPath.getName))
+          fs.delete(st.getPath, true)
+      }
+  }
+
+  /** Whether `n` names a data dir of the given kinds: an append
+    * segment, a fold's `<kind>-v<gen>` or the writer's root `<kind>`. */
+  private def isDataDir(kinds: Seq[String], n: String): Boolean =
+    n.startsWith("seg-") || kinds.exists(k => n == k || n.startsWith(s"$k-v"))
+
+  /** Reclaim root data dirs of `kinds` that no retained committed
+    * generation's manifest references: a crashed append's segment, a
+    * superseded fold, the writer's root dirs once a fold replaced
+    * them. Every retained generation counts, not just the newest, so
+    * `graft.index.retainGenerations` > 1 keeps older generations'
+    * dirs readable. Idempotent; the folds call it before and after
+    * their commit. */
+  def sweepUnreferenced(spark: SparkSession, indexDir: String,
+      kinds: Seq[String]): Unit = {
+    val gens = committedGenerations(spark, indexDir)
+    val arts =
+      if (gens.isEmpty) Seq(indexDir) else gens.map(generationDir(indexDir, _))
+    val live = arts.flatMap { a =>
+      val s = readSegments(spark, a)
+      kinds.flatMap(s.dirs)
+    }.map(_.split('/').head).toSet
+    deleteRootDirs(spark, indexDir)(n => !live.contains(n) && isDataDir(kinds, n))
+  }
+
+  /** `mode("overwrite")` for a WHOLE layout: drop everything a
+    * previous index at this path may have left beside the root
+    * artifacts the writer overwrites — committed generations,
+    * tombstones, segments, folded dirs of `kinds`, stream batch
+    * markers — any of which would shadow or mask the fresh index. */
+  def clearLayout(spark: SparkSession, indexDir: String,
+      kinds: Seq[String]): Unit = {
+    dropSupersededGenerations(spark, indexDir, keep = -1L)
+    deleteRootDirs(spark, indexDir)(n =>
+      n == "tombstones" || n == "_batch_commits" ||
+        (isDataDir(kinds, n) && !kinds.contains(n)))
+  }
+
+  /** A generation opened by [[openGeneration]]: its number, its
+    * writer-unique staging dir, and each side dir as (staged name,
+    * final name) — the `sideRenames` shape of
+    * [[commitGenerationAndRetire]]. */
+  final case class StagedGeneration(gen: Long, dir: String,
+      sides: Seq[(String, String)])
+
+  /** Open the next generation for staging — the prelude every staged
+    * mutation shares: generation live + 1, its token-unique stage
+    * dir, and the staged names of the side dirs `sides(gen)` names
+    * (an append's `seg-<id>`, a fold's `<kind>-v<gen>`). A crashed
+    * predecessor's leftovers under the stage dir or the sides' final
+    * names are cleared first; none of them can be referenced, as no
+    * marker names this generation. Call only after the mutation has
+    * decided to commit: an append's replay check comes first, because
+    * a replayed segment's final dir is live. */
+  def openGeneration(spark: SparkSession, indexDir: String,
+      sides: Long => Seq[String] = _ => Nil): StagedGeneration = {
+    val gen = liveGeneration(spark, indexDir).getOrElse(0L) + 1
+    val dir = stageGenerationDir(spark, indexDir, gen)
+    val names = sides(gen)
+    val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (dir +: names.map(n => s"$indexDir/$n")).foreach(d => fs.delete(new Path(d), true))
+    StagedGeneration(gen, dir,
+      names.map(n => stagedSideName(spark, indexDir, n) -> n))
   }
 
   /** The shared commit epilogue of every staged-generation mutation:

@@ -33,13 +33,15 @@ object Blame {
     *   range: (repo_name, path, startingLine, endingLine, age,
     *   commit{oid, committedDate, message, author{name,email,user{login}}}),
     *   in blame order (the input order drives example selection and
-    *   stable-sort tiebreaks, like the reference's list order).
+    *   stable-sort tiebreaks, like the reference's list order), with an
+    *   optional per-file root_commit_oid column.
     * @param commitDetails commit-detail dimension (repo_name, sha,
     *   html_url, author_login, commit_author, files_changed,
     *   files_changed_count) — the batch replacement for the
     *   COMMIT_CACHE memo dict, joined by SHA (globally unique).
     * @param exampleLimit BLAME_EXAMPLE_LIMIT; <=0 keeps all examples.
-    * @return one row per (repo_name, path): (+ total_lines,
+    * @return one row per (repo_name, path), in no particular order:
+    *   (+ root_commit_oid (null without the input column), total_lines,
     *   ranges_count, authors, examples) with authors sorted by
     *   total_lines desc (first-seen order on ties, matching Python's
     *   stable sort).
@@ -104,9 +106,15 @@ object Blame {
             col("ranges")).as("a")))),
         x => x.getField("a")).as("authors"))
 
+    // the file's root commit, when the fetch stamped one on its ranges
+    val root =
+      if (ranges.columns.contains("root_commit_oid"))
+        first(col("root_commit_oid"), ignoreNulls = true)
+      else lit(null).cast("string")
     val statsPerFile = enriched
       .groupBy(col("repo_name"), col("path"))
       .agg(
+        root.as("root_commit_oid"),
         sum(col("_count")).as("total_lines"),
         count(lit(1)).as("ranges_count"),
         transform(
@@ -125,9 +133,9 @@ object Blame {
       .drop("all_examples")
 
     statsPerFile.join(authorsPerFile, fileKey)
-      .select(col("repo_name"), col("path"), col("total_lines"),
-        col("ranges_count"), col("authors"), col("examples"))
-      .orderBy(col("repo_name"), col("path"))
+      .select(col("repo_name"), col("path"), col("root_commit_oid"),
+        col("total_lines"), col("ranges_count"), col("authors"),
+        col("examples"))
   }
 
   /** Single-repo summarize_blame_ranges (the reference's granularity):
@@ -285,15 +293,7 @@ object Blame {
       ranges: DataFrame,
       commitDetails: DataFrame,
       exampleLimit: Int = 5): DataFrame = {
-    val perFile = summarizeBlame(repoName, ranges, commitDetails, exampleLimit)
-    val roots =
-      if (ranges.columns.contains("root_commit_oid"))
-        ranges.groupBy(col("path"))
-          .agg(first(col("root_commit_oid"), ignoreNulls = true)
-            .as("root_commit_oid"))
-      else perFile.select(col("path"),
-        lit(null).cast("string").as("root_commit_oid"))
-    perFile.join(roots, Seq("path"), "left")
+    summarizeBlame(repoName, ranges, commitDetails, exampleLimit)
       .agg(transform(
         array_sort(collect_list(struct(col("path"), struct(
           col("path"),

@@ -436,35 +436,32 @@ object Dedup {
     val (liveBands, liveShingles) = liveBandDirs(spark, indexDir)
     if (!graft.io.Layout.pathExists(spark, liveBands))
       return ((0L, 0L), (0L, 0L))
-    val prev = graft.io.Layout.liveGeneration(spark, indexDir)
-    val gen = prev.getOrElse(0L) + 1
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    // fold one artifact into its staged dir; None when it is absent
-    def foldInto(src: String, name: String,
-        dedup: DataFrame => DataFrame): Option[(String, (Long, Long))] =
+    val next = graft.io.Layout.openGeneration(spark, indexDir,
+      gen => Seq(s"bands-v$gen", s"shingles-v$gen"))
+    // fold one artifact into its staged side dir; the (staged, final)
+    // rename and the row counts, or None when the artifact is absent
+    def foldInto(src: String, side: (String, String),
+        dedup: DataFrame => DataFrame): Option[((String, String), (Long, Long))] =
       if (!graft.io.Layout.pathExists(spark, src)) None
       else {
-        val staged = graft.io.Layout.stagedSideName(spark, indexDir, name)
         val before = spark.read.parquet(src)
         val nBefore = before.count()
-        dedup(before).write.parquet(s"$indexDir/$staged")
-        Some(staged -> (nBefore,
-          spark.read.parquet(s"$indexDir/$staged").count()))
+        dedup(before).write.parquet(s"$indexDir/${side._1}")
+        Some(side -> (nBefore,
+          spark.read.parquet(s"$indexDir/${side._1}").count()))
       }
-    val bandsFold = foldInto(liveBands, s"bands-v$gen", _.distinct())
+    val Seq(bandsSide, shinglesSide) = next.sides
+    val bandsFold = foldInto(liveBands, bandsSide, _.distinct())
     val shinglesFold =
-      foldInto(liveShingles, s"shingles-v$gen", _.dropDuplicates("id"))
+      foldInto(liveShingles, shinglesSide, _.dropDuplicates("id"))
     // the generation dir carries only the marker: the band dirs are
     // named by their generation, so no manifest is needed
-    fs.mkdirs(new org.apache.hadoop.fs.Path(stage))
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage, gen,
-      prev.map(graft.io.Layout.generationDir(indexDir, _))
-        .getOrElse(indexDir),
-      sideRenames = Seq(bandsFold.map(_._1 -> s"bands-v$gen"),
-        shinglesFold.map(_._1 -> s"shingles-v$gen")).flatten)
+    new org.apache.hadoop.fs.Path(next.dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .mkdirs(new org.apache.hadoop.fs.Path(next.dir))
+    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, next.dir,
+      next.gen, graft.io.Layout.liveArtifactDir(spark, indexDir),
+      sideRenames = Seq(bandsFold, shinglesFold).flatten.map(_._1))
     gcBandDirs(spark, indexDir)
     (bandsFold.fold((0L, 0L))(_._2), shinglesFold.fold((0L, 0L))(_._2))
   }

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.Layout
+import graft.io.Layout.liveArtifactDir
+
 /** Relevance-ranked full-text search — the Spark counterpart of the
   * reference's `text_en`-analyzed match queries (the ES `standard`
   * tokenizer with `"stopwords": "_english_"`,
@@ -267,9 +270,9 @@ object FullText {
     val spark = docs.sparkSession
     // mode("overwrite") semantics for the WHOLE layout: a previous
     // index at this path may hold committed generations, segments,
-    // folded dirs, or a tombstone set (see liveArtifactDir) that
-    // would SHADOW or mask the fresh root artifacts
-    clearDerivedLayout(spark, indexDir)
+    // folded dirs, or a tombstone set that would SHADOW or mask the
+    // fresh root artifacts
+    Layout.clearLayout(spark, indexDir, kinds)
     // storePositions=false is Lucene's IndexOptions DOCS_AND_FREQS:
     // roughly halves postings bytes for term-only deployments;
     // phraseSearchStored then (correctly) fails on the missing column.
@@ -395,11 +398,8 @@ object FullText {
       indexDir: String, buckets: Int,
       segmentId: Option[String]): Unit = {
     val art = liveArtifactDir(spark, indexDir)
-    val gen = graft.io.Layout.liveGeneration(spark, indexDir)
-      .getOrElse(0L) + 1
-    val segName = segmentId.map(s => s"seg-$s").getOrElse(s"seg-gen$gen")
-    val (oldPost, oldTv, applied) = manifestState(spark, indexDir, art)
-    if (segmentId.isDefined && applied.contains(segName))
+    val seg = Layout.readSegments(spark, art)
+    if (segmentId.exists(id => seg.applied.contains(s"seg-$id")))
       return // the batch's commit record exists: full replay no-op
     val st = readStats(spark, indexDir, art, buckets)
     require(st.keys == keys,
@@ -408,16 +408,11 @@ object FullText {
     // stage into WRITER-UNIQUE names (gen dir + the segment's data
     // dir) — renamed to their final names inside the commit, after
     // the lease fence re-read, so a fenced-out zombie's staging I/O
-    // can never land in a directory that gets committed. Clear a
-    // crashed predecessor's finally-named partial staging up front.
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    val segStaged = graft.io.Layout.stagedSideName(spark, indexDir, segName)
-    locally {
-      val fs = new org.apache.hadoop.fs.Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$segName"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    }
+    // can never land in a directory that gets committed
+    val next = Layout.openGeneration(spark, indexDir,
+      gen => Seq(segmentId.fold(s"seg-gen$gen")(id => s"seg-$id")))
+    val stage = next.dir
+    val (segStaged, segName) = next.sides.head
     // ONE analyzer materialization over the delta (the checkpointed
     // tf frame) serves postings, term vectors, the df merge and the
     // stats increment — the delta's doc count needs no analysis and
@@ -437,8 +432,8 @@ object FullText {
     // independent consumers of the checkpointed delta / the old
     // generation's artifacts — ONE fan-out (guide §2.6); only the
     // stats increment (which needs the counts) runs after
-    val newPost = if (deltaEmpty) oldPost else oldPost :+ s"$segName/postings"
-    val newTv = if (deltaEmpty) oldTv else oldTv :+ s"$segName/termvectors"
+    def dirsWith(kind: String) =
+      seg.dirs(kind) ++ (if (deltaEmpty) Nil else Seq(s"$segName/$kind"))
     val termKey = keys :+ "term"
     val parts = graft.ops.Jobs.par(Seq[() => Any](
       () => if (!deltaEmpty)
@@ -461,22 +456,19 @@ object FullText {
         .write.parquet(s"$stage/df"),
       () => fresh.count(),
       () => sumsByKey(freshTf, keys, "tf"),
-      () => if (graft.io.Layout.pathExists(spark, s"$art/tombstones"))
-        graft.io.Layout.copyArtifact(spark, s"$art/tombstones",
-          s"$stage/tombstones"),
-      () => writeManifest(spark, stage,
-        newPost.map(("postings", _)) ++
-          (if (st.hasTermVectors) newTv.map(("termvectors", _)) else Nil) ++
-          (applied :+ segName).distinct.map(("applied", _)))))
+      () => Layout.carryUnchanged(spark, art, stage, tombstones = true),
+      () => Layout.writeSegments(spark, stage,
+        (if (st.hasTermVectors) kinds else Seq("postings"))
+          .flatMap(k => dirsWith(k).map(k -> _)),
+        seg.applied :+ segName)))
     // stats increment: every delta doc counts in every key (zero-token
     // fields included, like the writer); per-key Σ tf is the token
     // total; avgdl = sum/n in exact-integer arithmetic — bit-identical
     // to a rebuild (integer double sums are exact < 2^53)
     writeStats(spark, st.shifted(parts(3).asInstanceOf[Long],
       parts(4).asInstanceOf[Map[Seq[String], Long]]), s"$stage/stats")
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-      gen, art,
-      sideRenames = if (deltaEmpty) Nil else Seq(segStaged -> segName))
+    Layout.commitGenerationAndRetire(spark, indexDir, stage, next.gen, art,
+      sideRenames = if (deltaEmpty) Nil else next.sides)
     Checkpoints.unpersist(freshTf)
   }
 
@@ -979,84 +971,19 @@ object FullText {
   private def keyOf(r: org.apache.spark.sql.Row, n: Int): Seq[String] =
     (0 until n).map(r.getString)
 
-  /** Where this index's MUTATION-COMMITTED artifacts (df / stats /
-    * tombstones / the segment manifest) live: the highest COMMITTED
-    * generation directory ([[graft.io.Layout.liveGeneration]] —
-    * deletes AND appends stage their artifact set into `gen-N/` and
-    * commit with one marker, so it can never be observed
-    * half-applied), or the index root for a freshly written index.
-    * Postings / positions / term-vector DATA live in immutable
-    * directories the manifest references. Public because layout specs
-    * (and any external artifact reader) must resolve through the same
-    * commit points the search faces use. */
-  def liveArtifactDir(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): String =
-    graft.io.Layout.liveGeneration(spark, indexDir)
-      .map(g => graft.io.Layout.generationDir(indexDir, g))
-      .getOrElse(indexDir)
-
-  /** The SEGMENT MANIFEST: which physical directories (relative to
-    * the index root) currently back an artifact `kind` ("postings" |
-    * "termvectors"). The writer leaves no manifest — the defaults ARE
-    * the root dirs; each APPEND adds an immutable `seg-<id>/` pair
-    * and commits a manifest that references it; COMPACTION folds
-    * everything into fresh `<kind>-v<gen>/` dirs and commits a
-    * one-entry manifest. A directory not referenced by the live
-    * manifest is invisible to every face — which is what makes an
-    * append crash-safe: its segment data lands first, unreferenced,
-    * and ONE marker makes segment + dictionary + statistics visible
-    * together (no window where postings are searchable but the
-    * statistics don't count them, and no replay that can double-apply
-    * — the manifest is the batch's commit record). */
-  private def liveDirs(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, art: String, kind: String): Seq[String] =
-    if (graft.io.Layout.pathExists(spark, s"$art/segments"))
-      graft.io.TinyParquet.readFrame(spark, s"$art/segments")
-        .filter(col("kind") === kind)
-        .collect().map(_.getAs[String]("dir")).toSeq.sorted
-    else Seq(kind)
-
-  /** The APPLIED-SEGMENTS registry: every segment id ever committed
-    * into this index, carried through deletes AND compactions (the
-    * manifest's live dirs forget a segment once compaction folds it —
-    * this registry must not, or a micro-batch redelivered after a
-    * compaction would re-apply; the replay check consults THIS, never
-    * the live dirs). One row per stream batch since the index was
-    * written — dictionary-small forever. Indexes from before the
-    * registry derive it from the live dirs' segment roots. */
-  private def appliedSegments(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, art: String): Seq[String] =
-    if (graft.io.Layout.pathExists(spark, s"$art/segments"))
-      appliedOf(graft.io.TinyParquet.readFrame(spark, s"$art/segments").collect())
-    else Seq.empty
-
-  private def appliedOf(
-      rows: Array[org.apache.spark.sql.Row]): Seq[String] = {
-    val explicit = rows.filter(_.getAs[String]("kind") == "applied")
-      .map(_.getAs[String]("dir"))
-    val legacy = rows.filter(_.getAs[String]("kind") != "applied")
-      .map(_.getAs[String]("dir").split('/').head)
-      .filter(_.startsWith("seg-"))
-    (explicit ++ legacy).distinct.toSeq
-  }
-
-  /** ONE manifest read per mutation: (postings dirs, termvectors
-    * dirs, applied segment ids) from a single collect of the tiny
-    * segments artifact — the append paths previously read it up to
-    * three times ([[liveDirs]] ×2 + [[appliedSegments]]), each a
-    * driver round-trip (guide §1.2). Exactly [[liveDirs]]' /
-    * [[appliedSegments]]' semantics, including the no-artifact
-    * defaults. */
-  private def manifestState(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, art: String)
-      : (Seq[String], Seq[String], Seq[String]) =
-    if (graft.io.Layout.pathExists(spark, s"$art/segments")) {
-      val rows = graft.io.TinyParquet.readFrame(spark, s"$art/segments").collect()
-      def dirs(kind: String) = rows
-        .filter(_.getAs[String]("kind") == kind)
-        .map(_.getAs[String]("dir")).toSeq.sorted
-      (dirs("postings"), dirs("termvectors"), appliedOf(rows))
-    } else (Seq("postings"), Seq("termvectors"), Seq.empty)
+  /** The artifact kinds of the text family's segment manifest
+    * ([[graft.io.Layout.Segments]]): an append adds a `seg-<id>/` pair
+    * of them, a fold replaces all with fresh `<kind>-v<gen>/` dirs. A
+    * dir the live manifest does not name is invisible to every face —
+    * which is what makes an append crash-safe: its segment data lands
+    * first, unreferenced, and ONE marker makes segment + dictionary +
+    * statistics visible together (no window where postings are
+    * searchable but the statistics don't count them, and no replay
+    * that can double-apply — the manifest is the batch's commit
+    * record). The manifest's read, write, carry, count, sweep and
+    * clear are [[graft.io.Layout]]'s, shared with the vector
+    * family. */
+  private val kinds = Seq("postings", "termvectors")
 
   /** Whether this layout stores term vectors: the stats artifact's
     * recorded flag when the column exists, else (legacy index from
@@ -1070,56 +997,29 @@ object FullText {
       st: org.apache.spark.sql.Row): Boolean =
     if (st.schema.fieldNames.contains("has_termvectors"))
       st.getAs[Boolean]("has_termvectors")
-    else liveDirs(spark, indexDir, art, "termvectors")
-      .exists(d => graft.io.Layout.pathExists(spark, s"$indexDir/$d"))
-
-  /** One frame over several physical roots: each directory reads
-    * SEPARATELY (its own partition discovery — a shared multi-path
-    * read trips Spark's conflicting-directory-structures check when
-    * the roots sit at different depths) and the scans union. Filters
-    * on the partition column push into EVERY child scan, so bucket
-    * pruning survives segmentation. */
-  private def readUnion(spark: org.apache.spark.sql.SparkSession,
-      paths: Seq[String]): DataFrame = {
-    require(paths.nonEmpty,
-      "no live directories for this artifact kind — the layout never " +
-        "stored it (check the stats artifact's recorded flags)")
-    paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
-  }
+    else Layout.readSegments(spark, art).dirs("termvectors")
+      .exists(d => Layout.pathExists(spark, s"$indexDir/$d"))
 
   /** Manifest-resolved postings frame WITHOUT the tombstone mask —
     * the raw physical union (base + committed segments). Public for
     * layout specs and maintenance tooling; query faces go through
     * [[livePostings]]. */
   def postingsFrame(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val art = liveArtifactDir(spark, indexDir)
-    readUnion(spark,
-      liveDirs(spark, indexDir, art, "postings").map(d => s"$indexDir/$d"))
-  }
-
-  /** How many APPEND SEGMENTS the live manifest currently unions
-    * beyond the base — each costs one extra scan node per stored
-    * read (~75-80 ms measured, ProbeSegments) until a compaction
-    * folds them. Public so refresh streams (and deployment
-    * monitoring) can size compaction cadence against it. */
-  def liveSegmentCount(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Int = {
-    val art = liveArtifactDir(spark, indexDir)
-    liveDirs(spark, indexDir, art, "postings")
-      .count(_.startsWith("seg-"))
-  }
+      indexDir: String): DataFrame =
+    liveFrame(spark, indexDir, liveArtifactDir(spark, indexDir), "postings")
 
   /** Manifest-resolved term-vectors frame (raw union) — the forward
     * artifact's physical view; empty-schema failure if the layout
     * never stored term vectors (callers guard on the stats flag). */
   def termVectorsFrame(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val art = liveArtifactDir(spark, indexDir)
-    readUnion(spark,
-      liveDirs(spark, indexDir, art, "termvectors")
-        .map(d => s"$indexDir/$d"))
-  }
+      indexDir: String): DataFrame =
+    liveFrame(spark, indexDir, liveArtifactDir(spark, indexDir),
+      "termvectors")
+
+  /** The union of `kind`'s live dirs under the manifest in `art`. */
+  private def liveFrame(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, art: String, kind: String): DataFrame =
+    Layout.readDirs(spark, indexDir, Layout.readSegments(spark, art).dirs(kind))
 
   /** The live view of a stored index's postings: the raw
     * bucket-partitioned table minus any TOMBSTONED documents. Every
@@ -1132,8 +1032,7 @@ object FullText {
     * not by driver memory; [[compactTextIndex]] keeps it small). */
   private def livePostings(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, art: String): DataFrame = {
-    val post = readUnion(spark,
-      liveDirs(spark, indexDir, art, "postings").map(d => s"$indexDir/$d"))
+    val post = liveFrame(spark, indexDir, art, "postings")
     // hint-free anti-join: AQE broadcasts the usual small set and
     // falls back to a shuffle join for a takedown-backlog-sized one
     // (the delete faces write tombstones distributed, so the set is
@@ -1144,63 +1043,6 @@ object FullText {
           .select(col("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
     else post
-  }
-
-  /** Write the staged generation's segment manifest (bounded rows:
-    * one per live directory). */
-  private def writeManifest(spark: org.apache.spark.sql.SparkSession,
-      stage: String, rows: Seq[(String, String)]): Unit = {
-    import spark.implicits._
-    graft.io.TinyParquet.write(rows.toDF("kind", "dir"),
-      s"$stage/segments")
-  }
-
-  /** Drop every derived-layout artifact a PREVIOUS index at this path
-    * may have left (committed generations, tombstones, segment dirs,
-    * folded `-v` dirs, stream batch markers) — `mode("overwrite")`
-    * semantics for the WHOLE layout, shared by both writers. */
-  private def clearDerivedLayout(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    graft.io.Layout.dropSupersededGenerations(spark, indexDir, keep = -1L)
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && (n == "tombstones" || n == "_batch_commits" ||
-          n.startsWith("seg-") || n.startsWith("postings-v") ||
-          n.startsWith("termvectors-v")))
-        fs.delete(st.getPath, true)
-    }
-  }
-
-  /** Reclaim root directories no longer referenced by ANY retained
-    * committed generation's manifest (crashed appends' orphan
-    * segments, superseded folded dirs) — idempotent, called around
-    * compaction. Scans every committed generation, not just the
-    * newest, so `graft.index.retainGenerations` > 1 keeps older
-    * generations' segment dirs readable. */
-  private def gcUnreferenced(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    val gens = graft.io.Layout.committedGenerations(spark, indexDir)
-    val arts =
-      if (gens.isEmpty) Seq(indexDir)
-      else gens.map(g => graft.io.Layout.generationDir(indexDir, g))
-    val live = arts.flatMap(a =>
-      liveDirs(spark, indexDir, a, "postings") ++
-        liveDirs(spark, indexDir, a, "termvectors"))
-      .map(_.split('/').head).toSet
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && !live.contains(n) &&
-          (n.startsWith("seg-") || n.startsWith("postings-v") ||
-            n.startsWith("termvectors-v") ||
-            n == "postings" || n == "termvectors"))
-        fs.delete(st.getPath, true)
-    }
   }
 
   /** Tombstone DELETE from the stored text index — the takedown path
@@ -1358,14 +1200,8 @@ object FullText {
       Checkpoints.unpersist(fresh)
       return
     }
-    val gen = graft.io.Layout.liveGeneration(spark, indexDir)
-      .getOrElse(0L) + 1
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    locally { // clear a crashed predecessor's partial staging
-      val p = new org.apache.hadoop.fs.Path(stage)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    }
+    val next = Layout.openGeneration(spark, indexDir)
+    val stage = next.dir
     // the live tombstone set rewrites per delete — bounded by
     // deletes-since-compaction, and written DISTRIBUTED so that
     // bound costs I/O, never driver memory; the old set's size reads
@@ -1385,9 +1221,7 @@ object FullText {
     // a delete carries the manifest UNCHANGED — a driver byte copy
     // (copyArtifact), not a read-rewrite Spark job
     val segThunk: () => Any = () =>
-      if (graft.io.Layout.pathExists(spark, s"$art/segments"))
-        graft.io.Layout.copyArtifact(spark, s"$art/segments",
-          s"$stage/segments")
+      Layout.carryUnchanged(spark, art, stage, manifest = true)
     deadVecsOpt match {
       case None =>
         // Lucene mode: stats stay stale until compaction — the new
@@ -1436,8 +1270,7 @@ object FullText {
     }
     // (the segment manifest carried forward in segThunk above — a
     // delete masks rows, it does not move postings data)
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-      gen, art)
+    Layout.commitGenerationAndRetire(spark, indexDir, stage, next.gen, art)
     Checkpoints.unpersist(present)
     Checkpoints.unpersist(fresh)
   }
@@ -1493,27 +1326,14 @@ object FullText {
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String, buckets: Int,
       rebucket: Option[Int]): (Long, Long, Long) = {
-    gcUnreferenced(spark, indexDir) // crashed predecessors' orphans
+    Layout.sweepUnreferenced(spark, indexDir, kinds) // crashed predecessors' orphans
     val art = liveArtifactDir(spark, indexDir)
     val tombPath = s"$art/tombstones"
-    val hasTomb = graft.io.Layout.pathExists(spark, tombPath)
+    val hasTomb = Layout.pathExists(spark, tombPath)
     val st = readStats(spark, indexDir, art, buckets)
     val keys = st.keys
     val hasTv = st.hasTermVectors
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def countFiles(dirs: Seq[String]): Long = {
-      var n = 0L
-      dirs.foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(s"$indexDir/$d")
-        if (fs.exists(p)) {
-          val it = fs.listFiles(p, true)
-          while (it.hasNext)
-            if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-        }
-      }
-      n
-    }
+    val seg = Layout.readSegments(spark, art)
     // the using-join puts doc_id first; select the source's own
     // column order back, so a folded generation's files keep the
     // writer's row shape
@@ -1523,7 +1343,7 @@ object FullText {
           .select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
           .select(df.columns.map(col): _*)
       else df
-    val before = countFiles(liveDirs(spark, indexDir, art, "postings"))
+    val before = Layout.countDataFiles(spark, indexDir, seg.dirs("postings"))
     // fold base + every committed segment, minus tombstones, into
     // FRESH versioned dirs (one file per bucket), then cut ONE
     // generation whose manifest points at them: the marker is the
@@ -1531,18 +1351,12 @@ object FullText {
     // generation (manifest, stats, tombstones) fully live and only
     // unreferenced new dirs on disk, which the next run's GC clears.
     // Re-running after any crash is therefore safe and complete.
-    val gen = graft.io.Layout.liveGeneration(spark, indexDir)
-      .getOrElse(0L) + 1
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    val newPost = s"postings-v$gen"
-    val newTv = s"termvectors-v$gen"
     // writer-unique staging names for the folded dirs — renamed to
-    // the final `-v$gen` names inside the commit, after the fence
-    val stPost = graft.io.Layout.stagedSideName(spark, indexDir, newPost)
-    val stTv = graft.io.Layout.stagedSideName(spark, indexDir, newTv)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$newPost"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$newTv"), true)
+    // the final `<kind>-v<gen>` names inside the commit, after the fence
+    val next = Layout.openGeneration(spark, indexDir,
+      gen => kinds.map(k => s"$k-v$gen"))
+    val stage = next.dir
+    val Seq((stPost, newPost), (stTv, newTv)) = next.sides
     // the postings fold, the term-vector fold, the (exact-mode)
     // df/stats carries and the manifest write are independent staged
     // writes — fan out (guide §2.6); the stale-mode stats re-derive
@@ -1553,9 +1367,8 @@ object FullText {
     val parts = graft.ops.Jobs.par(Seq[() => Any](
       () => {
         val src = rebucketed(
-          minus(readUnion(spark,
-            liveDirs(spark, indexDir, art, "postings")
-              .map(d => s"$indexDir/$d"))), "term", "bucket", rebucket)
+          minus(Layout.readDirs(spark, indexDir, seg.dirs("postings"))),
+          "term", "bucket", rebucket)
         clustered(src, "bucket", "term")
           .write.partitionBy("bucket").parquet(s"$indexDir/$stPost")
         // a FULL PURGE (every doc tombstoned) folds to zero rows, and
@@ -1566,7 +1379,8 @@ object FullText {
         spark.read.parquet(s"$indexDir/$stPost").count()
       },
       () => if (hasTv) {
-        val src = rebucketed(minus(termVectorsFrame(spark, indexDir)),
+        val src = rebucketed(
+          minus(Layout.readDirs(spark, indexDir, seg.dirs("termvectors"))),
           "doc_id", "dbucket", rebucket)
         clustered(src, "dbucket", "doc_id")
           .write.partitionBy("dbucket").parquet(s"$indexDir/$stTv")
@@ -1578,9 +1392,8 @@ object FullText {
       // live dirs forget the folded segments — a micro-batch
       // redelivered after this compaction must still read as
       // already-applied
-      () => writeManifest(spark, stage, Seq(("postings", newPost)) ++
-        (if (hasTv) Seq(("termvectors", newTv)) else Nil) ++
-        appliedSegments(spark, indexDir, art).map(("applied", _)))) ++
+      () => Layout.writeSegments(spark, stage, Seq(("postings", newPost)) ++
+        (if (hasTv) Seq(("termvectors", newTv)) else Nil), seg.applied)) ++
       (if (exactMode) Seq[() => Any](
         // exact mode (or nothing tombstoned): df/stats carry forward
         // unchanged — they were decremented exactly at delete time;
@@ -1622,17 +1435,16 @@ object FullText {
         hasTermVectors = false,
         buckets = rebucket.getOrElse(st.buckets)), s"$stage/stats")
     }
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-      gen, art, sideRenames = Seq(stPost -> newPost) ++
-        (if (hasTv) Seq(stTv -> newTv) else Nil))
+    Layout.commitGenerationAndRetire(spark, indexDir, stage, next.gen, art,
+      sideRenames = next.sides.take(if (hasTv) 2 else 1))
     // reclaim the superseded base/segment dirs (now unreferenced)
     // the ROOT postings/termvectors dirs reclaim through the same
     // liveness check as seg-/-v dirs: under retainGenerations > 1 an
     // older retained generation's manifest may still reference them,
     // and deleting them unconditionally would break the lock-free
     // reader guarantee for any index compacted before its first fold
-    gcUnreferenced(spark, indexDir)
-    (before, countFiles(Seq(newPost)), rows)
+    Layout.sweepUnreferenced(spark, indexDir, kinds)
+    (before, Layout.countDataFiles(spark, indexDir, Seq(newPost)), rows)
   }
 
   /** Query-time BM25 over a STORED index — no analyzer, no corpus

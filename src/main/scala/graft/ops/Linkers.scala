@@ -59,25 +59,11 @@ object Linkers {
     if (df.columns.contains("_seq")) df
     else df.withColumn("_seq", monotonically_increasing_id())
 
-  /** Newest-N cap on the PR scan (linkers.py:66-72): sort key is
-    * created_at, falling back to updated_at then "". `_seq` (input
-    * order) breaks ties exactly like Python's stable sort. Pure plan
-    * construction — no Spark job runs here (`limit(n)` on an empty
-    * frame is free, so there is no isEmpty guard). */
-  def newestPrs(prs: DataFrame, maxPrs: Int): DataFrame = {
-    val seqd = withSeq(prs)
-    if (maxPrs <= 0) seqd
-    else seqd
-      .withColumn("_sort_ts",
-        coalesce(col("created_at"), colOr(prs, "updated_at", lit(null)), lit("")))
-      .orderBy(col("_sort_ts").desc, col("_seq").asc)
-      .limit(maxPrs)
-      .drop("_sort_ts")
-  }
-
-  /** Per-repo newest-N cap for the multi-repo form: the same ordering
-    * as `newestPrs`, applied within each repo_name partition (the
-    * reference caps per repo, linkers.py:66-72). */
+  /** Per-repo newest-N cap on the PR scan (linkers.py:66-72), applied
+    * within each repo_name partition as the reference caps per repo:
+    * sort key is created_at, falling back to updated_at then "".
+    * `_seq` (input order) breaks ties exactly like Python's stable
+    * sort. Pure plan construction — no Spark job runs here. */
   def newestPrsAll(prs: DataFrame, maxPrs: Int): DataFrame = {
     val seqd = withSeq(prs)
     if (maxPrs <= 0) seqd

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Tables
+import graft.io.{Layout, Tables}
+import graft.io.Layout.liveArtifactDir
 import graft.ops.{Ann, ProductQuant}
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, 64-d).
@@ -1192,7 +1193,7 @@ object SimilarityQueries {
     require(Set("flat", "imi")(coarse),
       s"unknown coarse quantizer '$coarse' (flat | imi)")
     val spark = artifactsFrom.sparkSession
-    clearVecDerivedLayout(spark, indexDir)
+    Layout.clearLayout(spark, indexDir, Seq("codes"))
     val halfDim = m * subdim / 2
     // ---- ONE-PASS WRITE (guide §2.4 + §8: decide per row, move the
     // payload once). The coarse assignment, the vector norm and the
@@ -1454,7 +1455,7 @@ object SimilarityQueries {
 
   private def readMetaRow(spark: SparkSession,
       indexDir: String): Option[org.apache.spark.sql.Row] =
-    metaSrc(spark, indexDir, vectorArtifactDir(spark, indexDir))
+    metaSrc(spark, indexDir, liveArtifactDir(spark, indexDir))
       .map(graft.io.TinyParquet.readFrame(spark, _).head())
 
   private def metaPgroups(r: org.apache.spark.sql.Row): Int =
@@ -1558,30 +1559,17 @@ object SimilarityQueries {
 
   private def pinVectorLayoutImpl(spark: SparkSession,
       indexDir: String): Int = {
-    val art = vectorArtifactDir(spark, indexDir)
+    val art = liveArtifactDir(spark, indexDir)
     val r = readMetaRow(spark, indexDir).getOrElse(
       throw new IllegalArgumentException(
         s"$indexDir has no meta artifact — --pin-layout applies to " +
           "the stored vector family only"))
     val pg = metaPgroups(r)
-    val gen = graft.io.Layout.liveGeneration(spark, indexDir)
-      .getOrElse(0L) + 1
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    locally {
-      val p = new org.apache.hadoop.fs.Path(stage)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    }
-    stageMetaWithPgroups(spark, r, pg, stage, forced = true)
-    if (graft.io.Layout.pathExists(spark, s"$art/tombstones"))
-      graft.io.Layout.copyArtifact(spark, s"$art/tombstones",
-        s"$stage/tombstones")
-    locally {
-      val (dirs, applied) = vecManifestState(spark, indexDir, art)
-      writeVecManifest(spark, stage, dirs, applied)
-    }
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-      gen, art)
+    val next = Layout.openGeneration(spark, indexDir)
+    stageMetaWithPgroups(spark, r, pg, next.dir, forced = true)
+    Layout.carryUnchanged(spark, art, next.dir, tombstones = true,
+      manifest = true)
+    Layout.commitGenerationAndRetire(spark, indexDir, next.dir, next.gen, art)
     pg
   }
 
@@ -1732,37 +1720,6 @@ object SimilarityQueries {
       }.toDF("q_id", "cell_id")
   }
 
-  /** The vector index's MUTATION-COMMITTED artifact dir — the
-    * [[graft.ops.FullText.liveArtifactDir]] model: deletes and
-    * appends stage tombstones + the segment manifest into `gen-N/`
-    * and commit with one marker; a never-mutated index keeps its
-    * artifacts at the root. Cells / codebooks / rotation / sqstats /
-    * meta are training-time artifacts, immutable between retrains
-    * (the q106 stability contract), and stay at the root. */
-  def vectorArtifactDir(spark: SparkSession, indexDir: String): String =
-    graft.io.Layout.liveGeneration(spark, indexDir)
-      .map(g => graft.io.Layout.generationDir(indexDir, g))
-      .getOrElse(indexDir)
-
-  /** The live CODES directories (relative to the index root) — the
-    * segment manifest of the committed generation, or the root
-    * `codes/` default for a never-appended index. */
-  private def codesDirs(spark: SparkSession, indexDir: String,
-      art: String): Seq[String] =
-    if (graft.io.Layout.pathExists(spark, s"$art/segments"))
-      graft.io.TinyParquet.readFrame(spark, s"$art/segments")
-        .filter(col("kind") === "codes")
-        .collect().map(_.getAs[String]("dir")).toSeq.sorted
-    else Seq("codes")
-
-  /** How many APPEND SEGMENTS the live manifest unions beyond the
-    * base — the text twin is
-    * [[graft.ops.FullText.liveSegmentCount]]; refresh streams size
-    * their compaction cadence against it. */
-  def liveSegmentCount(spark: SparkSession, indexDir: String): Int =
-    codesDirs(spark, indexDir, vectorArtifactDir(spark, indexDir))
-      .count(_.startsWith("seg-"))
-
   /** Physical CODES write — the one place the cell partitioning is
     * chosen. `pgroups = 0` (the default): `partitionBy(cell_id)`,
     * one directory per cell — exact directory-level file pruning,
@@ -1819,99 +1776,15 @@ object SimilarityQueries {
 
   /** Manifest-resolved codes frame (base ∪ committed segments) — each
     * directory reads separately so cell_id partition filters push
-    * into every child scan (the FullText.readUnion discipline). Public
-    * for layout specs and maintenance tooling. */
-  def codesFrame(spark: SparkSession, indexDir: String): DataFrame = {
-    val art = vectorArtifactDir(spark, indexDir)
-    codesDirs(spark, indexDir, art)
-      .map(d => spark.read.parquet(s"$indexDir/$d"))
-      .reduce(_ unionByName _)
-  }
-
-  private def writeVecManifest(spark: SparkSession, stage: String,
-      dirs: Seq[String], applied: Seq[String]): Unit = {
-    import spark.implicits._
-    graft.io.TinyParquet.write(
-      (dirs.map(("codes", _)) ++ applied.distinct.map(("applied", _)))
-        .toDF("kind", "dir"),
-      s"$stage/segments")
-  }
-
-  /** The APPLIED-SEGMENTS registry (the FullText.appliedSegments
-    * twin): every segment id ever committed, surviving deletes AND
-    * compactions — the replay check consults this, never the live
-    * dirs, or a micro-batch redelivered after a compaction would
-    * re-apply. */
-  private def vecAppliedSegments(spark: SparkSession,
-      indexDir: String, art: String): Seq[String] =
-    if (graft.io.Layout.pathExists(spark, s"$art/segments"))
-      vecAppliedOf(graft.io.TinyParquet.readFrame(spark, s"$art/segments").collect())
-    else Seq.empty
-
-  private def vecAppliedOf(
-      rows: Array[org.apache.spark.sql.Row]): Seq[String] = {
-    val explicit = rows.filter(_.getAs[String]("kind") == "applied")
-      .map(_.getAs[String]("dir"))
-    val legacy = rows.filter(_.getAs[String]("kind") != "applied")
-      .map(_.getAs[String]("dir").split('/').head)
-      .filter(_.startsWith("seg-"))
-    (explicit ++ legacy).distinct.toSeq
-  }
-
-  /** ONE manifest read per mutation: (live codes dirs, applied
-    * segment ids) from a single collect of the tiny segments artifact
-    * — mutations previously read it twice ([[codesDirs]] +
-    * [[vecAppliedSegments]]), each a driver round-trip (guide §1.2).
-    * Exactly those helpers' semantics, no-artifact defaults
-    * included. */
-  private def vecManifestState(spark: SparkSession, indexDir: String,
-      art: String): (Seq[String], Seq[String]) =
-    if (graft.io.Layout.pathExists(spark, s"$art/segments")) {
-      val rows = graft.io.TinyParquet.readFrame(spark, s"$art/segments").collect()
-      (rows.filter(_.getAs[String]("kind") == "codes")
-        .map(_.getAs[String]("dir")).toSeq.sorted, vecAppliedOf(rows))
-    } else (Seq("codes"), Seq.empty)
-
-  /** Reclaim root dirs no longer referenced by the live manifest
-    * (crashed appends' orphan segments, superseded folds) —
-    * idempotent, called around compaction. */
-  private def vecGcUnreferenced(spark: SparkSession,
-      indexDir: String): Unit = {
-    val gens = graft.io.Layout.committedGenerations(spark, indexDir)
-    val arts =
-      if (gens.isEmpty) Seq(indexDir)
-      else gens.map(g => graft.io.Layout.generationDir(indexDir, g))
-    val live = arts.flatMap(a => codesDirs(spark, indexDir, a))
-      .map(_.split('/').head).toSet
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && !live.contains(n) &&
-          (n.startsWith("seg-") || n.startsWith("codes-v") ||
-            n == "codes"))
-        fs.delete(st.getPath, true)
-    }
-  }
-
-  /** Whole-layout overwrite semantics for [[writeIvfPqIndexFrames]]:
-    * a previous index at this path may hold committed generations,
-    * segments, folded dirs, or a tombstone set that would shadow or
-    * mask the fresh root artifacts. */
-  private def clearVecDerivedLayout(spark: SparkSession,
-      indexDir: String): Unit = {
-    graft.io.Layout.dropSupersededGenerations(spark, indexDir, keep = -1L)
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && (n == "tombstones" || n == "_batch_commits" ||
-          n.startsWith("seg-") || n.startsWith("codes-v")))
-        fs.delete(st.getPath, true)
-    }
-  }
+    * into every child scan ([[graft.io.Layout.readDirs]]). Public for
+    * layout specs and maintenance tooling. Training-time artifacts
+    * (cells, codebooks, rotation, sqstats, the write-time meta) stay
+    * at the root, immutable between retrains (the q106 stability
+    * contract); only tombstones, the manifest and the live meta move
+    * with the generations. */
+  def codesFrame(spark: SparkSession, indexDir: String): DataFrame =
+    Layout.readDirs(spark, indexDir,
+      Layout.readSegments(spark, liveArtifactDir(spark, indexDir)).dirs("codes"))
 
   /** The persisted OPQ rotation, reassembled row-major (d ≤ a few
     * hundred — a bounded driver artifact, like the ADC table). */
@@ -1951,24 +1824,17 @@ object SimilarityQueries {
       indexDir: String, fresh: DataFrame, m: Int, subdim: Int,
       segmentId: Option[String]): Unit = {
     import spark.implicits._
-    val art = vectorArtifactDir(spark, indexDir)
-    val gen = graft.io.Layout.liveGeneration(spark, indexDir)
-      .getOrElse(0L) + 1
-    val segName = segmentId.map(s => s"seg-$s").getOrElse(s"seg-gen$gen")
-    val (oldDirs, applied) = vecManifestState(spark, indexDir, art)
-    if (segmentId.isDefined && applied.contains(segName))
+    val art = liveArtifactDir(spark, indexDir)
+    val seg = Layout.readSegments(spark, art)
+    if (segmentId.exists(id => seg.applied.contains(s"seg-$id")))
       return // the batch's commit record exists: full replay no-op
     // writer-unique staging (gen dir + the segment's codes dir) —
     // renamed to the final names inside the commit, after the lease
-    // fence re-read (the text twin's discipline)
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    val segStaged = graft.io.Layout.stagedSideName(spark, indexDir, segName)
-    locally { // clear a crashed predecessor's partial staging
-      val fs = new org.apache.hadoop.fs.Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$segName"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    }
+    // fence re-read
+    val next = Layout.openGeneration(spark, indexDir,
+      gen => Seq(segmentId.fold(s"seg-gen$gen")(id => s"seg-$id")))
+    val stage = next.dir
+    val (segStaged, segName) = next.sides.head
     val (codec, mm, sd, coarse, cGrid, pgroups) =
       readIndexMeta(spark, indexDir, m, subdim)
     // the delta assigns through the SAME coarse quantizer the writer
@@ -2009,18 +1875,16 @@ object SimilarityQueries {
     // partitionBy write leaves a _SUCCESS-only directory that poisons
     // every later manifest union; the applied segment id still
     // commits so a replayed empty batch stays a no-op (the text
-    // twin's contract). A first-partition peek over the input; a
+    // append's contract). A first-partition peek over the input; a
     // degenerate empty coarse artifact assigns nothing (the old
     // assignment frame's contract), so it is "empty" too.
     val deltaEmpty = coarseEmpty || fresh.isEmpty
     if (deltaEmpty) {
-      if (graft.io.Layout.pathExists(spark, s"$art/tombstones"))
-        graft.io.Layout.copyArtifact(spark, s"$art/tombstones",
-          s"$stage/tombstones")
+      Layout.carryUnchanged(spark, art, stage, tombstones = true)
       carryMeta(spark, indexDir, art, stage)
-      writeVecManifest(spark, stage, oldDirs, applied :+ segName)
-      graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-        gen, art)
+      Layout.writeSegments(spark, stage, seg.dirs("codes").map(("codes", _)),
+        seg.applied :+ segName)
+      Layout.commitGenerationAndRetire(spark, indexDir, stage, next.gen, art)
       return
     }
     val withCell = fresh.select($"vec_id", cellCol.as("cell_id"),
@@ -2054,17 +1918,16 @@ object SimilarityQueries {
     // artifacts — fan out (guide §2.6), then commit once
     graft.ops.Jobs.par(Seq[() => Any](
       () => writeCodes(segCodes, s"$indexDir/$segStaged/codes", pgroups),
-      () => if (graft.io.Layout.pathExists(spark, s"$art/tombstones"))
-        graft.io.Layout.copyArtifact(spark, s"$art/tombstones",
-          s"$stage/tombstones"),
+      () => Layout.carryUnchanged(spark, art, stage, tombstones = true),
       // recorded-count maintenance: one column-pruned count of the
       // delta (every admitted vector lands exactly one cell) shifts
       // meta.n_vecs
       () => carryMetaShifted(spark, indexDir, art, stage, fresh.count()),
-      () => writeVecManifest(spark, stage, oldDirs :+ s"$segName/codes",
-        applied :+ segName)))
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-      gen, art, sideRenames = Seq(segStaged -> segName))
+      () => Layout.writeSegments(spark, stage,
+        (seg.dirs("codes") :+ s"$segName/codes").map(("codes", _)),
+        seg.applied :+ segName)))
+    Layout.commitGenerationAndRetire(spark, indexDir, stage, next.gen, art,
+      sideRenames = next.sides)
   }
 
   /** Maintenance compactor for the stored layout's cell-partitioned
@@ -2087,33 +1950,18 @@ object SimilarityQueries {
   private def compactIvfPqIndexImpl(spark: SparkSession,
       indexDir: String): (Long, Long, Long) = {
     import spark.implicits._
-    vecGcUnreferenced(spark, indexDir)
-    val art = vectorArtifactDir(spark, indexDir)
+    Layout.sweepUnreferenced(spark, indexDir, Seq("codes"))
+    val art = liveArtifactDir(spark, indexDir)
     val tombPath = s"$art/tombstones"
-    val hasTomb = graft.io.Layout.pathExists(spark, tombPath)
+    val hasTomb = Layout.pathExists(spark, tombPath)
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def countFiles(dirs: Seq[String]): Long = {
-      var n = 0L
-      dirs.foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(s"$indexDir/$d")
-        if (fs.exists(p)) {
-          val it = fs.listFiles(p, true)
-          while (it.hasNext)
-            if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-        }
-      }
-      n
-    }
-    val before = countFiles(codesDirs(spark, indexDir, art))
-    val gen = graft.io.Layout.liveGeneration(spark, indexDir)
-      .getOrElse(0L) + 1
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    val newCodes = s"codes-v$gen"
-    val stCodes = graft.io.Layout.stagedSideName(spark, indexDir, newCodes)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$newCodes"), true)
-    val base = codesFrame(spark, indexDir)
+    val seg = Layout.readSegments(spark, art)
+    val before = Layout.countDataFiles(spark, indexDir, seg.dirs("codes"))
+    val next = Layout.openGeneration(spark, indexDir, gen => Seq(s"codes-v$gen"))
+    val stage = next.dir
+    val (stCodes, newCodes) = next.sides.head
+    val base = Layout.readDirs(spark, indexDir, seg.dirs("codes"))
     val folded0 =
       if (hasTomb)
         base.join(spark.read.parquet(tombPath)
@@ -2149,7 +1997,7 @@ object SimilarityQueries {
         // re-group; rewrite such baselines with current code to pin.
         def occupied: Long = {
           val names = scala.collection.mutable.HashSet[String]()
-          codesDirs(spark, indexDir, art).foreach { d =>
+          seg.dirs("codes").foreach { d =>
             val p = new org.apache.hadoop.fs.Path(s"$indexDir/$d")
             if (fs.exists(p))
               fs.listStatus(p).foreach { st =>
@@ -2189,14 +2037,13 @@ object SimilarityQueries {
     }
     // no tombstones in the new generation: physically applied; the
     // applied-segments registry carries forward past the fold
-    writeVecManifest(spark, stage, Seq(newCodes),
-      vecAppliedSegments(spark, indexDir, art))
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-      gen, art, sideRenames = Seq(stCodes -> newCodes))
+    Layout.writeSegments(spark, stage, Seq(("codes", newCodes)), seg.applied)
+    Layout.commitGenerationAndRetire(spark, indexDir, stage, next.gen, art,
+      sideRenames = next.sides)
     // the ROOT codes dir reclaims through the liveness check too —
     // a retained older generation's manifest may still reference it
-    vecGcUnreferenced(spark, indexDir)
-    (before, countFiles(Seq(newCodes)), rows)
+    Layout.sweepUnreferenced(spark, indexDir, Seq("codes"))
+    (before, Layout.countDataFiles(spark, indexDir, Seq(newCodes)), rows)
   }
 
   /** Tombstone DELETE from the stored vector index — the text twin
@@ -2245,7 +2092,7 @@ object SimilarityQueries {
   private def deleteFromIvfPqIndexImpl(spark: SparkSession,
       indexDir: String, ids: DataFrame): Unit = {
     import spark.implicits._
-    val art = vectorArtifactDir(spark, indexDir)
+    val art = liveArtifactDir(spark, indexDir)
     val hadTomb = graft.io.Layout.pathExists(spark, s"$art/tombstones")
     val oldTomb =
       if (hadTomb)
@@ -2276,34 +2123,25 @@ object SimilarityQueries {
        else present).localCheckpoint()
     val nFresh = fresh.count()
     if (nFresh == 0L) { graft.ops.Checkpoints.unpersist(fresh); return }
-    // tombstones + the carried manifest commit as ONE generation
-    // (the text twin's staging discipline) — never half-visible
-    val gen = graft.io.Layout.liveGeneration(spark, indexDir)
-      .getOrElse(0L) + 1
-    val stage = graft.io.Layout.stageGenerationDir(spark, indexDir, gen)
-    locally {
-      val p = new org.apache.hadoop.fs.Path(stage)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    }
+    // tombstones + the carried manifest commit as ONE generation —
+    // never half-visible
+    val next = Layout.openGeneration(spark, indexDir)
+    val stage = next.dir
     val nOld =
       if (hadTomb)
         graft.io.Layout.tombstoneRowCount(spark, s"$art/tombstones",
           oldTomb)
       else 0L
-    // tombstone rewrite, meta carry, and manifest carry are
-    // independent staged artifacts — fan out (guide §2.6)
+    // tombstone rewrite, meta carry, and manifest carry (a byte copy:
+    // a delete moves no codes) are independent staged artifacts — fan
+    // out (guide §2.6)
     graft.ops.Jobs.par(Seq[() => Any](
       () => graft.io.Layout.writeTombstoneArtifact(spark,
         if (hadTomb) oldTomb.unionByName(fresh) else fresh,
         s"$stage/tombstones", nOld + nFresh),
       () => carryMeta(spark, indexDir, art, stage),
-      () => {
-        val (dirs, applied) = vecManifestState(spark, indexDir, art)
-        writeVecManifest(spark, stage, dirs, applied)
-      }))
-    graft.io.Layout.commitGenerationAndRetire(spark, indexDir, stage,
-      gen, art)
+      () => Layout.carryUnchanged(spark, art, stage, manifest = true)))
+    Layout.commitGenerationAndRetire(spark, indexDir, stage, next.gen, art)
     graft.ops.Checkpoints.unpersist(fresh)
   }
 
@@ -2348,7 +2186,7 @@ object SimilarityQueries {
         graft.io.TinyParquet.readFrame(spark, s"$indexDir/imi_codebooks"), cGrid)
       case _ => graft.io.TinyParquet.readFrame(spark, s"$indexDir/cells")
     }
-    val vart = vectorArtifactDir(spark, indexDir)
+    val vart = liveArtifactDir(spark, indexDir)
     val codes1 = prunedCodes(
       codesFrame(spark, indexDir), probedCells, pgroups)
     // PRE-filter semantics for the ES 8.x `knn.filter` clause served
@@ -2585,7 +2423,7 @@ object SimilarityQueries {
     }
     val probedCells = probed.select($"cell_id").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val vart = vectorArtifactDir(spark, indexDir)
+    val vart = liveArtifactDir(spark, indexDir)
     val codes1 = prunedCodes(
       codesFrame(spark, indexDir), probedCells, pgroups)
     // the same PRE-filter semi-join as the single-query face — one

@@ -641,13 +641,13 @@ object Streams {
           // scan node per stored read (~75-80 ms measured,
           // ProbeSegments) — fold inside the stream's own
           // single-writer serialization once the manifest unions
-          // `compactEvery` segments, bounding search cost across an
-          // unbounded stream. Counting SEGMENTS (not batch ids)
+          // `compactEvery` segments (Layout.segmentCount, the count
+          // the text and vector streams share), bounding search cost
+          // across an unbounded stream. Counting SEGMENTS (not batch ids)
           // makes the cadence restart-proof: replayed no-op batches
           // don't advance it. 0 = off (maintenance-window cadence).
-          if (compactEvery > 0 && graft.ops.FullText
-              .liveSegmentCount(batch.sparkSession, indexDir)
-              >= compactEvery)
+          if (compactEvery > 0 && graft.io.Layout
+              .segmentCount(batch.sparkSession, indexDir) >= compactEvery)
             graft.ops.FullText.compactTextIndex(
               batch.sparkSession, indexDir)
           ()
@@ -675,9 +675,8 @@ object Streams {
           graft.ops.FullText.appendToMultiFieldTextIndex(
             batch.sparkSession, batch, idCol, fields, indexDir,
             segmentId = Some(s"b$batchId"))
-          if (compactEvery > 0 && graft.ops.FullText
-              .liveSegmentCount(batch.sparkSession, indexDir)
-              >= compactEvery)
+          if (compactEvery > 0 && graft.io.Layout
+              .segmentCount(batch.sparkSession, indexDir) >= compactEvery)
             graft.ops.FullText.compactTextIndex(
               batch.sparkSession, indexDir)
           ()
@@ -707,9 +706,8 @@ object Streams {
           graft.queries.SimilarityQueries.appendToIvfPqIndex(
             batch.sparkSession, indexDir, batch, m, subdim,
             segmentId = Some(s"b$batchId"))
-          if (compactEvery > 0 && graft.queries.SimilarityQueries
-              .liveSegmentCount(batch.sparkSession, indexDir)
-              >= compactEvery)
+          if (compactEvery > 0 && graft.io.Layout
+              .segmentCount(batch.sparkSession, indexDir) >= compactEvery)
             graft.queries.SimilarityQueries.compactIvfPqIndex(
               batch.sparkSession, indexDir)
           ()

@@ -99,7 +99,7 @@ object ProbeScaleCurve {
         FullText.bm25SearchStored(spark, idx, terms).collect()
       }
       // the claim's denominators: dictionary size and matched postings
-      val art = FullText.liveArtifactDir(spark, idx)
+      val art = graft.io.Layout.liveArtifactDir(spark, idx)
       val dict = spark.read.parquet(s"$art/df").count()
       val matched = FullText.postingsFrame(spark, idx)
         .filter($"term".isInCollection(terms)).count()

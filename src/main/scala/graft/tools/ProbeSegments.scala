@@ -90,7 +90,7 @@ object ProbeSegments {
       FullText.appendToTextIndex(spark,
         docsOf(spark, baseN + b2 * batchN, batchN), "doc_id", "text",
         idxA, segmentId = Some(s"b$b2"))
-      if (FullText.liveSegmentCount(spark, idxA) >= 8)
+      if (graft.io.Layout.segmentCount(spark, idxA) >= 8)
         FullText.compactTextIndex(spark, idxA)
       b2 += 1
     }
@@ -99,7 +99,7 @@ object ProbeSegments {
     }
     println(s"""{"probe":"segments","at":"compactEvery=8 after """ +
       s"""$batches batches (live=${
-        FullText.liveSegmentCount(spark, idxA)})",""" +
+        graft.io.Layout.segmentCount(spark, idxA)})",""" +
       s""""query_s":${f"$tAuto%.3f"}}""")
 
     // ---- the vector face's segment curve -----------------------------

@@ -66,7 +66,7 @@ object RunCompact {
         graft.ops.Dedup.liveBandDirs(spark, indexDir)._1)) "band"
     else {
       // the stats artifact is metadata-class: read on the driver
-      val art = FullText.liveArtifactDir(spark, indexDir)
+      val art = graft.io.Layout.liveArtifactDir(spark, indexDir)
       if (graft.io.TinyParquet.readFrame(spark, s"$art/stats")
           .schema.fieldNames.contains("field")) "multifield"
       else "text"

@@ -10,8 +10,10 @@ import graft.io.Layout
   * `gen-N.<token>` / side directories (a writer that crashed or was
   * fenced out mid-stage), and unmarked `gen-N` dirs above the live
   * generation with their finally-named side dirs (a commit that died
-  * after its renames, before the marker). Those are invisible to
-  * every reader by construction, but [[graft.io.Layout
+  * after its renames, before the marker): a fold's `<kind>-v<gen>`,
+  * and an append's `seg-<id>` that no retained segment manifest
+  * references. Those are invisible to every reader by
+  * construction, but [[graft.io.Layout
   * .dropSupersededGenerations]] runs only AFTER a committed mutation
   * — an index that crashes and then goes idle leaks them forever,
   * and `RunStatus` reports exactly that leak (`orphaned_staging`).

@@ -17,10 +17,13 @@ import graft.ops.FullText
   *
   * Fields common to all families: `family`, `generation` (-1 = no
   * committed generation, the legacy root layout), `generations`
-  * retained, `segments` (manifest entries beyond the base),
+  * retained, `segments` (append segments the live manifest unions
+  * beyond the base — [[graft.io.Layout.segmentCount]], one count for
+  * the text and vector families),
   * `tombstone_rows` (recorded count; 0 when physically applied),
   * `orphaned_staging` (count + bytes of crashed/fenced writers'
-  * leftover staging dirs — the leak [[RunGc]] reclaims), and
+  * leftover staging dirs, and of `seg-<id>` dirs no retained
+  * manifest references — the leak [[RunGc]] reclaims), and
   * `lease` (holder epoch/owner plus `silent_s` — the SAME staleness
   * clock the takeover check reads, so comparing it against
   * `graft.index.leaseStaleMs` shows exactly how close a silent
@@ -58,7 +61,7 @@ object RunStatus {
     sb ++= s""","committed_generations":[${gens.mkString(",")}]"""
     fam match {
       case "text" | "multifield" =>
-        val art = FullText.liveArtifactDir(spark, indexDir)
+        val art = Layout.liveArtifactDir(spark, indexDir)
         // metadata-class artifact: read on the driver, no Spark job
         val st = graft.io.TinyParquet.readFrame(spark, s"$art/stats")
         val tombs = tombRows(spark, s"$art/tombstones")
@@ -101,11 +104,10 @@ object RunStatus {
           if (r.schema.fieldNames.contains("buckets"))
             sb ++= s""","buckets":${r.getAs[Int]("buckets")}"""
         }
-        sb ++= s""","segments":${FullText.liveSegmentCount(spark, indexDir)}"""
+        sb ++= s""","segments":${Layout.segmentCount(spark, indexDir)}"""
         sb ++= s""","tombstone_rows":$tombs"""
       case "vector" =>
-        val art = graft.queries.SimilarityQueries
-          .vectorArtifactDir(spark, indexDir)
+        val art = Layout.liveArtifactDir(spark, indexDir)
         val metaPath =
           if (Layout.pathExists(spark, s"$art/meta")) s"$art/meta"
           else s"$indexDir/meta"
@@ -117,14 +119,7 @@ object RunStatus {
         sb ++= s""","coarse":${jstr(opt("coarse", m.getAs[String]("coarse"), "flat"))}"""
         sb ++= s""","pgroups":${opt("pgroups", m.getAs[Int]("pgroups"), 0)}"""
         sb ++= s""","pgroups_forced":${opt("pgroups_forced", m.getAs[Boolean]("pgroups_forced"), false)}"""
-        val segPath = s"$art/segments"
-        val segs =
-          if (Layout.pathExists(spark, segPath))
-            graft.io.TinyParquet.read(spark, segPath)._2
-              .count(r => r.getAs[String]("kind") == "codes" &&
-                r.getAs[String]("dir").startsWith("seg-"))
-          else 0
-        sb ++= s""","segments":$segs"""
+        sb ++= s""","segments":${Layout.segmentCount(spark, indexDir)}"""
         val vTombs = tombRows(spark, s"$art/tombstones")
         // recorded at write, shifted at append, trued at fold — the
         // vector twin of the text family's n_docs/n_docs_live pair.

@@ -243,7 +243,7 @@ class CrossJvmLeaseSpec extends SparkSpecBase {
       try {
         FullText.deleteFromTextIndex(spark, idx, dead)
         assert(spark.read
-          .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+          .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
           .head().getAs[Long]("n_docs") == docs.count() - dead.size,
           "the takeover mutation must land exactly")
       } finally spark.conf.unset("graft.index.leaseStaleMs")

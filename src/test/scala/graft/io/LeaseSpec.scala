@@ -60,7 +60,7 @@ class LeaseSpec extends SparkSpecBase {
     fs.delete(new Path(s"$idx/_mutation.lock"), false)
     FullText.appendToTextIndex(spark, extra, "doc_id", "text", idx)
     assert(spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
       .head().getAs[Long]("n_docs") == docs.count() + 1)
     // and a clean mutation releases its own lease
     assert(!Layout.pathExists(spark, s"$idx/_mutation.lock"),
@@ -92,7 +92,7 @@ class LeaseSpec extends SparkSpecBase {
         .collect().map(_.getLong(0)).toSeq
       FullText.deleteFromTextIndex(spark, idx, dead) // takes over
       assert(spark.read
-        .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+        .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
         .head().getAs[Long]("n_docs") == docs.count() - dead.size,
         "the takeover mutation must land")
     } finally spark.conf.unset("graft.index.leaseStaleMs")
@@ -372,7 +372,7 @@ class LeaseSpec extends SparkSpecBase {
       FullText.deleteFromTextIndex(spark, idx, dead) // must land
       Await.result(releaser, 2.minutes)
       assert(spark.read
-        .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+        .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
         .head().getAs[Long]("n_docs") == docs.count() - 1)
     } finally spark.conf.unset("graft.index.leaseWaitMs")
   }
@@ -761,7 +761,7 @@ class LeaseSpec extends SparkSpecBase {
     }
     assert(fired, "the pin must have exercised the race window")
     assert(spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
       .head().getAs[Long]("n_docs") == docs.count() - 1,
       "the retried acquisition must run the mutation exactly once")
     // and WITHOUT a wait window the same race surfaces as the typed

@@ -95,6 +95,31 @@ class BlameSpec extends SparkSpecBase {
     assert(out.getAs[Long]("ranges_count") == 8L)
   }
 
+  test("repoBlameDoc over a 2-file refresh runs within its job budget") {
+    // the live refresh's shape: the one or two re-blamed files, each
+    // range stamped with its file's root commit
+    val rootT = StructType(StructField("root_commit_oid", StringType) +:
+      rangeT.fields.toIndexedSeq)
+    val ranges = df(rootT,
+      Row.fromSeq("r1" +: rangeRow("b.txt", 1, 5, "s1", "alice").toSeq),
+      Row.fromSeq("r1" +: rangeRow("b.txt", 6, 7, "s2", "bob").toSeq),
+      Row.fromSeq("r2" +: rangeRow("a.txt", 1, 3, "s3", "bob").toSeq))
+    val group = s"blame-doc-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, "repoBlameDoc job count")
+    val doc =
+      try Blame.repoBlameDoc("o/r", "main", Some("h"), "2026-01-01T00:00:00Z",
+        ranges, df(detailT)).collect()
+      finally spark.sparkContext.clearJobGroup()
+    val files = doc.head.getAs[scala.collection.Seq[Row]]("files")
+    assert(files.map(f => (f.getAs[String]("path"),
+      f.getAs[String]("root_commit_oid"), f.getAs[Long]("total_lines"))) ==
+      Seq(("a.txt", "r2", 3L), ("b.txt", "r1", 7L)))
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    // budget = the measured 9 jobs; the root commit rides the per-file
+    // aggregation instead of a groupBy + join of its own
+    assert(jobs <= 9, s"repoBlameDoc ran $jobs Spark jobs")
+  }
+
   test("rechunk fans one repo_blame doc out to one row per file") {
     val fileT = StructType(Seq(
       StructField("path", StringType), StructField("total_lines", LongType)))

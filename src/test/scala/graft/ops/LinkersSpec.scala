@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import graft.SparkSpecBase
 
@@ -110,8 +111,9 @@ class LinkersSpec extends SparkSpecBase {
     // reflects every triggered job by the time composition returns
     val tracker = spark.sparkContext.statusTracker
     val before = tracker.getJobIdsForGroup(null).length
-    Linkers.newestPrs(prs, 5)
-    Linkers.newestPrs(prs, 0)
+    val stamped = prs.withColumn("repo_name", lit("o/r"))
+    Linkers.newestPrsAll(stamped, 5)
+    Linkers.newestPrsAll(stamped, 0)
     Linkers.prsWithLinkedIssues("o/r", prs, issues,
       df(prCommitsT), df(commitDetailT), df(emptyExt))
     assert(tracker.getJobIdsForGroup(null).length == before,
@@ -123,7 +125,8 @@ class LinkersSpec extends SparkSpecBase {
       pr(1, "old", "", "2019-01-01T00:00:00Z"),
       pr(2, "mid", "", "2020-01-01T00:00:00Z"),
       pr(3, "new", "", "2021-01-01T00:00:00Z"))
-    val kept = Linkers.newestPrs(prs, 2).select("number").collect()
+    val kept = Linkers.newestPrsAll(prs.withColumn("repo_name", lit("o/r")), 2)
+      .select("number").collect()
       .map(_.getInt(0)).toSet
     assert(kept == Set(2, 3))
   }

@@ -194,7 +194,7 @@ class TinyParquetSpec extends SparkSpecBase {
     val docs = Seq((1L, "alpha beta gamma"), (2L, "beta delta"),
       (3L, "gamma gamma epsilon")).toDF("doc_id", "text")
     FullText.writeTextIndex(docs, "doc_id", "text", dir, buckets = 2)
-    val art = FullText.liveArtifactDir(spark, dir)
+    val art = graft.io.Layout.liveArtifactDir(spark, dir)
     val viaSpark = spark.read.parquet(s"$art/stats")
     val (schema, rows) = TinyParquet.read(spark, s"$art/stats")
     assert(schema === viaSpark.schema, "stats schema")

@@ -430,14 +430,14 @@ class TextIndexLayoutSpec extends SparkSpecBase {
       .toFile.getAbsolutePath
     FullText.writeTextIndex(docs, "doc_id", "text", idxB)
     def dfOf(idx: String) = spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/df")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/df")
       .collect().map(r => (r.getAs[String]("term"), r.getAs[Long]("df")))
       .sortBy(_._1).toSeq
     assert(dfOf(idxA) == dfOf(idxB),
       "additive dictionary merge must equal a rebuild's df")
     def statsOf(idx: String) = {
       val r = spark.read
-        .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats").head()
+        .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats").head()
       (r.getAs[Long]("n_docs"), r.getAs[Double]("avgdl"),
         r.getAs[Long]("sum_doclen"))
     }
@@ -463,13 +463,13 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     FullText.writeMultiFieldTextIndex(docs, "doc_id",
       Seq("title", "body"), idxB)
     def dfOf(idx: String) = spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/df")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/df")
       .collect().map(r => (r.getAs[String]("field"),
         r.getAs[String]("term"), r.getAs[Long]("df")))
       .sortBy(r => (r._1, r._2)).toSeq
     assert(dfOf(idxA) == dfOf(idxB))
     def statsOf(idx: String) = spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
       .collect().map(r => (r.getAs[String]("field"),
         r.getAs[Long]("n_docs"), r.getAs[Double]("avgdl"),
         r.getAs[Long]("sum_doclen"))).sortBy(_._1).toSeq
@@ -494,7 +494,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
       idxB)
     def statsOf(idx: String) = {
       val r = spark.read
-        .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats").head()
+        .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats").head()
       (r.getAs[Long]("n_docs"), r.getAs[Double]("avgdl"),
         r.getAs[Long]("sum_doclen"))
     }
@@ -516,7 +516,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     FullText.writeMultiFieldTextIndex(mOld.unionByName(mFresh),
       "doc_id", Seq("title", "body"), mB)
     def mStats(idx: String) = spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
       .collect().map(r => (r.getAs[String]("field"),
         r.getAs[Long]("n_docs"), r.getAs[Double]("avgdl"),
         r.getAs[Long]("sum_doclen"))).sortBy(_._1).toSeq
@@ -556,7 +556,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     // has no row) — resolved through the live generation, since the
     // delete commits df/stats/tombstones as one generation dir
     def dfOf(idx: String) = spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/df")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/df")
       .collect().map(r => (r.getAs[String]("term"), r.getAs[Long]("df")))
       .sortBy(_._1).toSeq
     assert(dfOf(idxD) == dfOf(idxR))
@@ -587,7 +587,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     val pre = s1(idxD)
     FullText.compactTextIndex(spark, idxD)
     assert(!graft.io.Layout.pathExists(spark,
-      s"${FullText.liveArtifactDir(spark, idxD)}/tombstones"),
+      s"${graft.io.Layout.liveArtifactDir(spark, idxD)}/tombstones"),
       "compaction must reclaim the tombstone set")
     assert(FullText.postingsFrame(spark, idxD).count() ==
       FullText.postingsFrame(spark, idxR).count(),
@@ -627,7 +627,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
       "delete → append must equal a rebuild of survivors ∪ fresh")
     def statsOf(i: String) = {
       val r = spark.read
-        .parquet(s"${FullText.liveArtifactDir(spark, i)}/stats").head()
+        .parquet(s"${graft.io.Layout.liveArtifactDir(spark, i)}/stats").head()
       (r.getAs[Long]("n_docs"), r.getAs[Double]("avgdl"),
         r.getAs[Long]("sum_doclen"))
     }
@@ -755,7 +755,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
       "a deleted doc must never be served from any field face")
     FullText.compactTextIndex(spark, idxD)
     assert(!graft.io.Layout.pathExists(spark,
-      s"${FullText.liveArtifactDir(spark, idxD)}/tombstones"))
+      s"${graft.io.Layout.liveArtifactDir(spark, idxD)}/tombstones"))
     val idxR = java.nio.file.Files.createTempDirectory("mf-del-r")
       .toFile.getAbsolutePath
     FullText.writeMultiFieldTextIndex(docs.filter($"doc_id" =!= hit),
@@ -818,7 +818,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$stage/tombstones")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(stage, "df"), "garbage".getBytes)
-    assert(FullText.liveArtifactDir(spark, idx) == idx,
+    assert(graft.io.Layout.liveArtifactDir(spark, idx) == idx,
       "an uncommitted generation must not resolve as live")
     assert(search() == pre,
       "a crashed delete's partial staging must be invisible to search")
@@ -859,7 +859,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$mstage/tombstones")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(mstage, "df"), "garbage".getBytes)
-    assert(FullText.liveArtifactDir(spark, midx) == midx,
+    assert(graft.io.Layout.liveArtifactDir(spark, midx) == midx,
       "an uncommitted multi-field generation must not resolve as live")
     assert(msearch(midx) == mpre,
       "a crashed multi-field delete's staging must be invisible")
@@ -1009,7 +1009,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     val multi = ("field" -> "string") +:
       single.filterNot(_._1 == "has_positions")
     def schemaOf(idx: String) = spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
       .schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
     val docs = Seq(
       (1L, "fast vector engines win races", "fast vector"),
@@ -1113,7 +1113,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
       s"the fold must land in the NEW bucket space (got ${bks.toSeq})")
     // the committed stats record the new count
     assert(spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
       .head().getAs[Int]("buckets") == 10)
     // subsequent appends + searches follow the RECORDED 10 (callers
     // still pass the default 16): equal to a rebuild AT 10 BUCKETS
@@ -1149,7 +1149,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     assert(mpage() == mBefore,
       "multi-field rebucket must serve the same page")
     assert(spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, midx)}/stats")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, midx)}/stats")
       .collect().forall(_.getAs[Int]("buckets") == 8),
       "every field's stats row must record the new bucket count")
   }
@@ -1182,7 +1182,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
         "rebuild without the deleted docs (all three modes)")
     // per-(field, term) dictionary decrements exactly
     def dfOf(idx: String) = spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/df")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/df")
       .collect().map(r => (r.getAs[String]("field"),
         r.getAs[String]("term"), r.getAs[Long]("df")))
       .sortBy(t => (t._1, t._2)).toSeq
@@ -1208,7 +1208,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     val pre = search(idxD)
     FullText.compactTextIndex(spark, idxD)
     assert(!graft.io.Layout.pathExists(spark,
-      s"${FullText.liveArtifactDir(spark, idxD)}/tombstones"))
+      s"${graft.io.Layout.liveArtifactDir(spark, idxD)}/tombstones"))
     assert(FullText.termVectorsFrame(spark, idxD).count() ==
       FullText.termVectorsFrame(spark, idxR2).count(),
       "compacted term vectors must match the rebuild's row count")
@@ -1288,7 +1288,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
       .toFile.getAbsolutePath
     FullText.writeTextIndex(docs, "doc_id", "text", idx)
     def stats() = spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats").head()
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats").head()
     val n0 = stats().getAs[Long]("n_docs")
     val s0 = stats().getAs[Long]("sum_doclen")
     val postRows = FullText.postingsFrame(spark, idx).count()
@@ -1370,7 +1370,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
     assert(page(idxA) == page(idxB),
       "DataFrame delete face must equal the Seq face bit-for-bit")
     def dfOf(idx: String) = spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/df")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/df")
       .collect().map(r => (r.getAs[String]("term"), r.getAs[Long]("df")))
       .sortBy(_._1).toSeq
     assert(dfOf(idxA) == dfOf(idxB))
@@ -1384,7 +1384,7 @@ class TextIndexLayoutSpec extends SparkSpecBase {
         .repartition(4)
       FullText.deleteFromTextIndex(spark, idxB, more, buckets = 16)
       val tombDir = new java.io.File(
-        s"${FullText.liveArtifactDir(spark, idxB)}/tombstones")
+        s"${graft.io.Layout.liveArtifactDir(spark, idxB)}/tombstones")
       val parts = tombDir.listFiles()
         .count(_.getName.endsWith(".parquet"))
       assert(parts > 1,

@@ -132,7 +132,7 @@ class VectorIndexLayoutSpec extends SparkSpecBase {
     val preSearch = search()
     SimilarityQueries.compactIvfPqIndex(spark, idx)
     assert(!graft.io.Layout.pathExists(spark,
-      s"${SimilarityQueries.vectorArtifactDir(spark, idx)}/tombstones"),
+      s"${graft.io.Layout.liveArtifactDir(spark, idx)}/tombstones"),
       "compaction must reclaim the tombstone set")
     assert(SimilarityQueries.codesFrame(spark, idx).count() ==
       rowsBefore - deadRows,
@@ -657,7 +657,7 @@ class VectorIndexLayoutSpec extends SparkSpecBase {
       assert(page() == before,
         "the re-grouped fold must serve the same page bit-for-bit")
       // the staged meta records the new layout in the LIVE generation
-      val art = SimilarityQueries.vectorArtifactDir(spark, idx)
+      val art = graft.io.Layout.liveArtifactDir(spark, idx)
       assert(art != idx && graft.io.Layout.pathExists(spark, s"$art/meta"))
       assert(spark.read.parquet(s"$art/meta").head()
         .getAs[Int]("pgroups") == 4,
@@ -721,7 +721,7 @@ class VectorIndexLayoutSpec extends SparkSpecBase {
     // as a generation like every other meta change
     val pinned = graft.tools.RunCompact.pin(spark, idx)
     assert(pinned == 0, "pinning must keep the recorded pgroup count")
-    val art = SimilarityQueries.vectorArtifactDir(spark, idx)
+    val art = graft.io.Layout.liveArtifactDir(spark, idx)
     assert(art != idx, "the pin must commit through a generation")
     val metaRow = spark.read.parquet(s"$art/meta").head()
     assert(metaRow.getAs[Boolean]("pgroups_forced") &&
@@ -836,7 +836,7 @@ class VectorIndexLayoutSpec extends SparkSpecBase {
     // the folded codes dir is pgroup-partitioned (listed through the
     // Hadoop FS — java.io.File cannot see nost:// paths) and the
     // LIVE generation's meta records the re-resolved count
-    val art = SimilarityQueries.vectorArtifactDir(spark, nIdx)
+    val art = graft.io.Layout.liveArtifactDir(spark, nIdx)
     assert(art != nIdx, "the fold must have committed a generation")
     val hfs = new org.apache.hadoop.fs.Path(nIdx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -927,7 +927,7 @@ class VectorIndexLayoutSpec extends SparkSpecBase {
         .filter($"vec_id" % 3 === 2).select($"vec_id").repartition(4)
       SimilarityQueries.deleteFromIvfPqIndex(spark, idxB, more)
       val tombDir = new java.io.File(
-        s"${SimilarityQueries.vectorArtifactDir(spark, idxB)}/tombstones")
+        s"${graft.io.Layout.liveArtifactDir(spark, idxB)}/tombstones")
       val parts = tombDir.listFiles()
         .count(_.getName.endsWith(".parquet"))
       assert(parts > 1,

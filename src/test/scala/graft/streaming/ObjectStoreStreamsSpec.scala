@@ -95,8 +95,8 @@ class ObjectStoreStreamsSpec extends SparkSpecBase {
       "the blind-store index must serve the streamed appends")
     assert(page(nIdx) == page(lIdx),
       "the streamed lifecycle must be page-equal across schemes")
-    assert(FullText.liveSegmentCount(spark, nIdx) ==
-      FullText.liveSegmentCount(spark, lIdx),
+    assert(graft.io.Layout.segmentCount(spark, nIdx) ==
+      graft.io.Layout.segmentCount(spark, lIdx),
       "the in-stream fold must have run identically on both schemes")
     assert(Layout.liveGeneration(spark, nIdx) ==
       Layout.liveGeneration(spark, lIdx),
@@ -217,8 +217,8 @@ class ObjectStoreStreamsSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(vpage(nIdx).nonEmpty && vpage(nIdx) == vpage(lIdx),
       "the streamed vector lifecycle must be page-equal across schemes")
-    assert(SimilarityQueries.liveSegmentCount(spark, nIdx) ==
-      SimilarityQueries.liveSegmentCount(spark, lIdx),
+    assert(graft.io.Layout.segmentCount(spark, nIdx) ==
+      graft.io.Layout.segmentCount(spark, lIdx),
       "the in-stream vector fold must have run identically")
     // rebuild at FIXED artifacts (base-trained cells/codebooks) over
     // the surviving corpus — the append ≡ rebuild contract, now with

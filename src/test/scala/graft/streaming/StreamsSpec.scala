@@ -711,11 +711,11 @@ class StreamsSpec extends SparkSpecBase {
       batches.foreach { b =>
         src.addData(b: _*)
         q.processAllAvailable()
-        assert(graft.ops.FullText.liveSegmentCount(spark, idx) <= 2,
+        assert(graft.io.Layout.segmentCount(spark, idx) <= 2,
           "auto-compaction must bound the live segment count")
       }
     } finally q.stop()
-    assert(graft.ops.FullText.liveSegmentCount(spark, idx) == 0,
+    assert(graft.io.Layout.segmentCount(spark, idx) == 0,
       "the 6th batch hits the threshold: the index ends compacted")
     def search(i: String) = graft.ops.FullText
       .bm25SearchStored(spark, i, Seq("fast", "vector", "query"))
@@ -749,13 +749,11 @@ class StreamsSpec extends SparkSpecBase {
       (0 until 4).foreach { i =>
         vSrc.addData(vBase(i)._1)
         vq.processAllAvailable()
-        assert(graft.queries.SimilarityQueries
-          .liveSegmentCount(spark, vIdx) <= 2,
+        assert(graft.io.Layout.segmentCount(spark, vIdx) <= 2,
           "vector auto-compaction must bound the segment count")
       }
     } finally vq.stop()
-    assert(graft.queries.SimilarityQueries
-      .liveSegmentCount(spark, vIdx) == 0)
+    assert(graft.io.Layout.segmentCount(spark, vIdx) == 0)
   }
 
   test("multiFieldRefreshStream: streamed appends equal a rebuild; committed batch ids skip") {
@@ -939,7 +937,7 @@ class StreamsSpec extends SparkSpecBase {
     // the tombstone artifact holds each id once (idempotent delete)
     // tombstones resolve through the committed generation now
     val tombs = spark.read.parquet(
-        s"${SimilarityQueries.vectorArtifactDir(spark, idx)}/tombstones")
+        s"${graft.io.Layout.liveArtifactDir(spark, idx)}/tombstones")
       .collect().map(_.getLong(0)).toSeq
     assert(tombs.sorted == top.toSeq.sorted,
       "replayed takedown ids must not bloat the tombstone artifact")

@@ -26,11 +26,11 @@ class RunCompactSpec extends SparkSpecBase {
       .bm25SearchStored(spark, tIdx, Seq("fast", "vector", "query"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val tBefore = tPage()
-    assert(FullText.liveSegmentCount(spark, tIdx) == 1)
+    assert(graft.io.Layout.segmentCount(spark, tIdx) == 1)
     val (tf, tb, ta, _) = RunCompact.run(spark, tIdx)
     assert(tf == "text" && ta < tb,
       s"text compaction must shrink files ($tb -> $ta)")
-    assert(FullText.liveSegmentCount(spark, tIdx) == 0)
+    assert(graft.io.Layout.segmentCount(spark, tIdx) == 0)
     assert(tPage() == tBefore, "text page must be fold-invariant")
     // vector index with an appended segment
     val vIdx = java.nio.file.Files.createTempDirectory("compact-v")
@@ -58,7 +58,7 @@ class RunCompactSpec extends SparkSpecBase {
     val (rf, _, _, _) = RunCompact.run(spark, tIdx, rebucket = Some(9))
     assert(rf == "text")
     assert(spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, tIdx)}/stats")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, tIdx)}/stats")
       .head().getAs[Int]("buckets") == 9)
     assert(tPage() == tBefore,
       "a CLI rebucket must keep the page invariant")
@@ -204,7 +204,7 @@ class RunCompactSpec extends SparkSpecBase {
     // zeroed stats row (an empty stats artifact would crash every
     // later stats read, including family detection)
     val stats = spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
       .collect().map(r => (r.getAs[String]("field"),
         r.getAs[Long]("n_docs"), r.getAs[Double]("avgdl"))).sortBy(_._1)
     assert(stats.toSeq == Seq(("body", 0L, 0.0), ("title", 0L, 0.0)),

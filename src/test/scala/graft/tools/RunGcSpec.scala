@@ -131,8 +131,70 @@ class RunGcSpec extends SparkSpecBase {
     assert(Layout.pathExists(spark, s"$idx/seg-keepme"),
       "a manifest-referenced segment dir must survive the sweep")
     assert(page() == before, "vector search must be GC-invariant")
-    assert(SimilarityQueries.liveSegmentCount(spark, idx) == 1,
+    assert(Layout.segmentCount(spark, idx) == 1,
       "the committed segment must still be live after GC")
+  }
+
+  /** Run `append` with a crash injected between the commit's renames
+    * and its `_COMMITTED` marker: the segment dir and the generation
+    * dir are left under their final names, and no manifest names
+    * either. */
+  private def crashBeforeMarker(append: => Unit): Unit = {
+    Layout.beforeMarkerHook = () => {
+      Layout.beforeMarkerHook = () => ()
+      throw new IllegalStateException("simulated crash before marker")
+    }
+    try {
+      val e = intercept[IllegalStateException](append)
+      assert(e.getMessage.contains("simulated crash before marker"))
+    } finally Layout.beforeMarkerHook = () => ()
+  }
+
+  /** The finally-named leftovers of an append that died before its
+    * marker: RunStatus counts both, RunGc reclaims both, and the
+    * replay of the same segment id then commits. */
+  private def assertRenamedAppendReclaimed(idx: String, seg: String,
+      replay: => Unit): Unit = {
+    val live = Layout.liveGeneration(spark, idx)
+    val unmarked = s"gen-${live.getOrElse(0L) + 1}"
+    assert(Layout.pathExists(spark, s"$idx/$seg") &&
+      Layout.pathExists(spark, s"$idx/$unmarked"),
+      "the crash must leave the renamed segment and generation dirs")
+    val st = RunStatus.describe(spark, idx)
+    assert(st.contains("\"orphaned_staging\":{\"count\":2,"),
+      s"the status face must count the unreferenced $seg (got $st)")
+    val (n, b) = RunGc.run(spark, idx)
+    assert(n == 2 && b > 0,
+      s"the sweep must reclaim $seg and $unmarked (got $n)")
+    assert(!Layout.pathExists(spark, s"$idx/$seg"))
+    assert(Layout.liveGeneration(spark, idx) == live,
+      "GC must not cut a generation")
+    replay
+    assert(Layout.segmentCount(spark, idx) == 1,
+      "the replayed append must commit its segment")
+  }
+
+  test("text append that died after its renames: the finally-named seg dir is reported and reclaimed") {
+    val docs = graft.io.Tables.documents(spark, dir).limit(40)
+    val idx = tmp("gc-tseg")
+    FullText.writeTextIndex(docs, "doc_id", "text", idx)
+    def append() = FullText.appendToTextIndex(spark,
+      Seq((9400001L, "fast vector crash probe")).toDF("doc_id", "text"),
+      "doc_id", "text", idx, segmentId = Some("x1"))
+    crashBeforeMarker(append())
+    assertRenamedAppendReclaimed(idx, "seg-x1", append())
+  }
+
+  test("vector append that died after its renames: the finally-named seg dir is reported and reclaimed") {
+    val idx = tmp("gc-vseg")
+    SimilarityQueries.writeIvfPqIndex(spark, dir, idx)
+    val delta = graft.io.Tables.embeddings(spark, dir)
+      .filter($"vec_id" % 13 === 4)
+      .select(($"vec_id" + 910000L).as("vec_id"), $"embedding")
+    def append() = SimilarityQueries.appendToIvfPqIndex(spark, idx, delta,
+      segmentId = Some("x1"))
+    crashBeforeMarker(append())
+    assertRenamedAppendReclaimed(idx, "seg-x1", append())
   }
 
   test("the GC faces run on a URI-schemed object-store filesystem") {

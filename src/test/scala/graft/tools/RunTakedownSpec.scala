@@ -52,7 +52,7 @@ class RunTakedownSpec extends SparkSpecBase {
     RunTakedown.run(spark, more.toString, Some(tIdx), None,
       compact = true)
     assert(!graft.io.Layout.pathExists(spark,
-      s"${FullText.liveArtifactDir(spark, tIdx)}/tombstones"),
+      s"${graft.io.Layout.liveArtifactDir(spark, tIdx)}/tombstones"),
       "--compact must reclaim the tombstone artifact")
     assert(!tPage().exists(_._1 == more))
   }
@@ -87,7 +87,7 @@ class RunTakedownSpec extends SparkSpecBase {
     Await.result(releaser, 2.minutes)
     assert(n == 1 && t && !v)
     assert(spark.read
-      .parquet(s"${FullText.liveArtifactDir(spark, idx)}/stats")
+      .parquet(s"${graft.io.Layout.liveArtifactDir(spark, idx)}/stats")
       .head().getAs[Long]("n_docs") == docs.count() - 1)
     assert(spark.conf.getOption("graft.index.leaseWaitMs").isEmpty,
       "the CLI must not leak the wait knob into the session")
